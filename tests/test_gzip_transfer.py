@@ -173,6 +173,40 @@ def test_capped_inflate_fuzz_truncation_points():
                     capped_inflate(enc, encoding, cap)
 
 
+def test_corrupt_stream_fails_the_row_instead_of_salvaging():
+    """A body corrupted mid-stream is not a truncation: partial=True
+    must not return its decodable prefix as a page, and the fetch pass
+    marks the row FAILED so it keeps its retry budget."""
+    from webcollector_spark.functions.regex_rule import RegexRule
+    from webcollector_spark.operators.fetch import _fetch_one
+    from webcollector_spark.schema import STATUS_DB_FAILED
+    from webcollector_spark.sources.requester import capped_inflate
+
+    import random
+
+    # incompressible text, so the corruption lands past the first 64 KiB
+    # chunk of the encoded stream with a decoded prefix already out
+    words = random.Random(7).randbytes(150_000).hex().encode()
+    body = b"<html>" + words + b"</html>"
+    enc = bytearray(gzip.compress(body))
+    at = len(enc) * 3 // 4
+    enc[at : at + 16] = b"\xff" * 16
+    for partial in (False, True):
+        with pytest.raises(zlib.error):
+            capped_inflate(bytes(enc), "gzip", 1 << 20, partial=partial)
+
+    class CorruptWeb:
+        def fetch(self, url, attempt=1, etag=None, last_modified=None):
+            return Response(200, content=bytes(enc), content_type="text/html",
+                            content_encoding="gzip")
+
+    row = {"key": "http://h/a", "url": "http://h/a", "host": "h",
+           "execute_count": 0, "meta": None}
+    out = _fetch_one(row, CorruptWeb(), None, RegexRule([]), CrawlerConfig())
+    assert out["status"] == STATUS_DB_FAILED and out["code"] == 200
+    assert out["execute_count"] == 1 and out["links"] is None
+
+
 def test_capped_inflate_garbage_never_succeeds_strict():
     import random
 

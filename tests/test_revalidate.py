@@ -209,3 +209,36 @@ def test_crawl_recrawl_304_via_last_modified_only(spark, web):
             assert row.code == 304, key
             assert row.meta["last_modified"] == lms[key]
             assert row.meta["not_modified"] == "1"
+
+
+def test_mixed_304_and_image_batch_keeps_exact_phash(spark, web):
+    """One fetch batch mixing 304 rows (phash null) with changed image
+    pages: every harvested phash survives the batch exactly (a float64
+    column would round 64-bit phashes) and passes verify_payload."""
+    from webcollector_spark.operators.fetch import fetch, verify_payload
+    from webcollector_spark.schema import FRONTIER_SCHEMA, host_of
+
+    graph, corpus = web
+    req = _requester(web)
+    pages = graph[(graph["http_code"] == 200) & graph["image_id"].notna()]["url"]
+    rows = []
+    for url in pages:
+        etag = req.fetch(url).etag
+        rows.append((url, url, 0, None, 1, 200, None, {"etag": etag},
+                     host_of(url), 0, 1.0))
+    bumped = list(pages)[::3]
+    for url in bumped:
+        req.bump_page(url)
+    generated = spark.createDataFrame(rows, FRONTIER_SCHEMA)
+    fetched = fetch(
+        generated, req, CrawlerConfig(revalidate=True), n_rows=len(rows)
+    ).cache()
+    assert fetched.rdd.getNumPartitions() == 1  # one task, one Arrow batch
+    codes = {r.key: r.code for r in fetched.select("key", "code").collect()}
+    assert {k for k, c in codes.items() if c == 200} == set(bumped)
+    assert {c for k, c in codes.items() if k not in bumped} == {304}
+    dim = spark.createDataFrame(corpus[["image_id", "caption", "phash"]])
+    checked = verify_payload(fetched.filter(F.col("code") == 200), dim).collect()
+    assert len(checked) == len(bumped)
+    assert all(r.caption_ok and r.phash_ok for r in checked)
+    fetched.unpersist()

@@ -15,6 +15,7 @@ Everything is DataFrame + pandas/Arrow UDF; no RDD hot paths, no custom
 Catalyst rules (SURVEY.md section 4 shows none are needed).
 """
 
+from webcollector_spark import _zipguard
 from webcollector_spark.config import CrawlerConfig
 from webcollector_spark.crawler import BreadthCrawler, RamCrawler
 from webcollector_spark.datum import CrawlDatum, CrawlDatums
@@ -41,3 +42,7 @@ __all__ = [
     "LsmParquetFrontierStore",
     "__version__",
 ]
+
+# Inside a Python worker, unpickling any engine UDF lands here first, so
+# every later task in that worker skips the zip-directory re-reads.
+_zipguard.install()

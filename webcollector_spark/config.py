@@ -206,7 +206,11 @@ class CrawlerConfig:
     # Target generated rows per fetch task: the fetch stage uses
     # min(fetch_parallelism, ceil(n_gen / rows_per_fetch_task)) partitions
     # so small rounds don't pay per-task Python-worker setup for empty
-    # partitions (each Python stage task costs ~100 ms to stand up).
+    # partitions. An empty engine task costs ~120-150 ms on a 4-core box
+    # (tools/worker_task_cost.py); without _zipguard.py, pyspark's
+    # per-task importlib.invalidate_caches() would add ~190-360 ms by
+    # re-reading the pyspark/py4j/spark-core zip directories once per
+    # zipimporter.
     rows_per_fetch_task: int = 500
 
     # RegexRule seeds: "+regex" positive / "-regex" negative

@@ -23,6 +23,12 @@ _CAPTION_RE = re.compile(
 _DATA_URI_RE = re.compile(
     r"""src\s*=\s*["']data:image/[a-z]+;base64,([A-Za-z0-9+/=]+)["']""", re.IGNORECASE
 )
+# The same pattern for lower-cased ASCII text. Case-insensitive matching
+# of the ~100 KB payload class is most of the scan's cost; an ASCII page
+# lower-cases to the same length, so the offsets slice the original.
+_DATA_URI_LOWER_RE = re.compile(
+    r"""src\s*=\s*["']data:image/[a-z]+;base64,([a-z0-9+/=]+)["']"""
+)
 
 
 def extract_links(
@@ -58,6 +64,9 @@ def extract_caption(html: str) -> str | None:
 
 def extract_data_uri_image(html: str) -> bytes | None:
     """First base64 data-URI image payload in the page, decoded."""
+    if html.isascii():
+        m = _DATA_URI_LOWER_RE.search(html.lower())
+        return base64.b64decode(html[m.start(1) : m.end(1)]) if m else None
     m = _DATA_URI_RE.search(html)
     return base64.b64decode(m.group(1)) if m else None
 

@@ -372,9 +372,12 @@ def fetch(
                     # clamp learns from it (crawler._learn_host_delays)
                     rec["robots_delay_ms"] = int(round(delay * 1000))
                 out_rows.append(rec)
-            yield pd.DataFrame(out_rows, columns=cols) if out_rows else pd.DataFrame(
-                columns=cols
-            )
+            out = pd.DataFrame(out_rows, columns=cols)
+            # nullable Int64: a None (304 rows, no Crawl-delay) next to
+            # ints would make the column float64 and round 64-bit phashes
+            for c in ("phash", "robots_delay_ms"):
+                out[c] = pd.array([r[c] for r in out_rows], dtype="Int64")
+            yield out
 
     # Partition count adapts to the round size (`n_rows` hint): tiny
     # rounds don't pay Python-worker setup for near-empty partitions.

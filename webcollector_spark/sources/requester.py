@@ -43,7 +43,9 @@ def capped_inflate(
     partial=False: raise ValueError the moment the cap is hit.
     partial=True: degrade to truncation — return the first ``max_out``
     inflated bytes; also salvage the decodable prefix of a TRUNCATED
-    encoded stream (the byte-capped fetch case) instead of raising."""
+    encoded stream (the byte-capped fetch case) instead of raising.
+    A CORRUPT stream (any zlib.error) is never salvaged, in either
+    mode: the next decoder is tried, and the last error raises."""
     if encoding == "gzip":
         makers = [lambda: zlib.decompressobj(16 + zlib.MAX_WBITS)]
     elif encoding == "deflate":
@@ -72,8 +74,6 @@ def capped_inflate(
                         f"inflated body exceeds {max_out}-byte guard"
                     )
         except zlib.error as e:
-            if partial and out:
-                return bytes(out)
             last_err = e
             continue
         if not d.eof and not partial:
