@@ -1,4 +1,4 @@
-"""First-principles DEFLATE decoder (webcollector_spark.inflate):
+"""First-principles DEFLATE decoder (tests/inflate.py):
 round trips against zlib across block types and levels, hand-checked
 block structures, corruption detection, and the PNG entropy layer
 decoded without zlib."""
@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 
 from webcollector_spark import codecs
-from webcollector_spark.inflate import _adler32, inflate, zlib_inflate
+from inflate import _adler32, inflate, zlib_inflate
 
 
 def _payloads():

@@ -70,44 +70,33 @@ def test_crawl_with_bloom_path_matches_oracle(spark, small_web):
 
 
 class TestShardedBloom:
-    """ShardedBloom (the 10^10-key layout): must return exactly the
+    """Bloom(shards=S) (the 10^10-key layout): must return exactly the
     exact-anti-join rows, agree between distributed and local builds,
     and actually spread keys across shards."""
 
     def test_sharded_filter_matches_exact(self, spark):
-        from webcollector_spark.operators.seen import (
-            build_sharded_bloom,
-            seen_filter_sharded,
-        )
-
         seen = spark.createDataFrame(
             [(f"http://h.test/{i}",) for i in range(0, 1000, 2)], "key string"
         )
         cand = spark.createDataFrame(
             [(f"http://h.test/{i}",) for i in range(500, 1500)], "key string"
         )
-        sb = build_sharded_bloom(seen, "key", capacity=2000, fpp=0.01, shards=8)
-        got = {
-            r.key for r in seen_filter_sharded(cand, seen, "key", sb).collect()
-        }
-        exact = {
-            r.key for r in seen_filter_sharded(cand, seen, "key", None).collect()
-        }
+        sb = build_bloom(seen, "key", capacity=2000, fpp=0.01, shards=8)
+        got = {r.key for r in seen_filter(cand, seen, "key", sb).collect()}
+        exact = {r.key for r in seen_filter(cand, seen, "key", None).collect()}
         assert got == exact
 
     def test_distributed_build_equals_local(self, spark):
-        from webcollector_spark.operators.seen import ShardedBloom, build_sharded_bloom
-
         keys = [f"http://h{i % 7}.test/p{i}" for i in range(2000)]
         df = spark.createDataFrame([(k,) for k in keys], "key string").repartition(6)
-        dist = build_sharded_bloom(df, "key", capacity=4000, shards=8)
-        local = ShardedBloom(4000, 0.01, 8)
+        dist = build_bloom(df, "key", capacity=4000, shards=8)
+        local = Bloom(4000, 0.01, 8)
         local.add_series(pd.Series(keys))
-        for a, b in zip(dist.blooms, local.blooms):
-            assert a.bits.tobytes() == b.bits.tobytes()
+        for s in range(8):
+            assert dist.shard(s).tobytes() == local.shard(s).tobytes()
         # no false negatives; shards genuinely used
         assert local.maybe_contains(pd.Series(keys)).all()
-        occupied = sum(1 for b in dist.blooms if b.bits.any())
+        occupied = sum(1 for s in range(8) if dist.shard(s).any())
         assert occupied >= 6
 
     def test_crawl_with_sharded_bloom_matches_oracle(self, spark, small_web):
@@ -150,9 +139,20 @@ def test_false_positive_rate_near_configured():
     assert b.maybe_contains(keys).all()  # no false negatives
     assert b.maybe_contains(new).mean() < 0.02
 
-    from webcollector_spark.operators.seen import ShardedBloom
-
-    sb = ShardedBloom(100_000, fpp=0.01, shards=16)
+    sb = Bloom(100_000, fpp=0.01, shards=16)
     sb.add_series(keys)
     assert sb.maybe_contains(keys).all()
     assert sb.maybe_contains(new).mean() < 0.02
+
+
+def test_single_shard_bits_pinned():
+    """Pin the shards=1 layout — m, k and the bits for fixed keys — so a
+    change to the hashing or the bit layout cannot pass unnoticed."""
+    import hashlib
+
+    b = Bloom(1000, fpp=0.01)
+    b.add_series(pd.Series([f"k{i}" for i in range(500)]))
+    assert (b.m, b.k) == (9600, 7)
+    assert hashlib.sha256(b.bits.tobytes()).hexdigest() == (
+        "bd50787f46cc6a477f9b8673a95ceab3f7530dfb9f0f9d9c13c5c281b7e26ca8"
+    )

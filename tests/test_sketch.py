@@ -1,5 +1,5 @@
-"""HyperLogLog sketch (operators/sketch.py): estimate accuracy, register
-determinism, and the LSM store's fold-free cheap_count wiring."""
+"""HyperLogLog sketch (operators/sketch.py): estimate accuracy and
+register determinism; count-min hot items; adaptive salting."""
 
 from pyspark.sql import functions as F
 
@@ -29,36 +29,6 @@ def test_hll_small_range_linear_counting(spark):
     assert abs(est - 37) <= 2, est
 
 
-def test_lsm_cheap_count_estimates_without_fold(spark, tmp_path):
-    """track_new_links=False + estimate_counts=True: cheap_count answers
-    from the raw union (no precedence fold) within HLL error; with the
-    flag explicitly off it stays None (the default is now ON so the
-    10^10 configuration keeps the crawler's bloom gate alive)."""
-    from webcollector_spark.crawler import seed_rows
-    from webcollector_spark.store import LsmParquetFrontierStore
-
-    urls = [f"http://h{i % 5}.test/p{i}" for i in range(3000)]
-    seeds = seed_rows(spark, urls)
-
-    s1 = LsmParquetFrontierStore(
-        spark, str(tmp_path / "a"), track_new_links=False,
-        estimate_counts=False,
-    )
-    s1.inject(seeds)
-    assert s1.cheap_count() is None
-
-    s2 = LsmParquetFrontierStore(
-        spark, str(tmp_path / "b"), track_new_links=False, estimate_counts=True
-    )
-    s2.inject(seeds)
-    # overlapping delta: updates for the first 1000 keys (same keys —
-    # distinct count must not double-count across base and delta)
-    s2.merge(seeds.limit(1000).withColumn("status", F.lit(5)), None)
-    est = s2.cheap_count()
-    assert est is not None
-    assert abs(est - 3000) / 3000 < 0.08, est
-
-
 def test_hll_width_tracks_b(spark):
     """Regression: a fixed 50-bit rank width made every b != 10 estimate
     wrong by ~4x (b=12) / ~0.25x (b=8); the width must be 60 - b."""
@@ -71,27 +41,6 @@ def test_hll_width_tracks_b(spark):
     for b in (8, 12):
         est = hll_estimate(df, "key", b=b)
         assert abs(est - n) / n < 0.15, (b, est)
-
-
-def test_estimate_counts_avoids_fold_with_tracking_on(spark, tmp_path):
-    """estimate_counts must take effect regardless of tracking mode —
-    with tracking ON and no memoized count, cheap_count should estimate
-    rather than run the exact precedence fold."""
-    from webcollector_spark.crawler import seed_rows
-    from webcollector_spark.store import LsmParquetFrontierStore
-
-    s = LsmParquetFrontierStore(
-        spark, str(tmp_path / "c"), track_new_links=True, estimate_counts=True
-    )
-    s.inject(seed_rows(spark, [f"http://h/p{i}" for i in range(2000)]))
-    s._count = None  # simulate a fresh process with no memoized count
-    est = s.cheap_count()
-    assert est is not None and abs(est - 2000) / 2000 < 0.08
-    # the ESTIMATE path must have answered, not the exact fold (an exact
-    # count would also satisfy the tolerance, masking a regression)
-    assert s._approx is not None and s._count is None
-    # memoized: second call returns the identical object without rescan
-    assert s.cheap_count() == est
 
 
 class TestCountMin:

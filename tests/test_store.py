@@ -76,6 +76,83 @@ def test_merge_intra_round_dedup(spark, store):
     assert row.status == 1 and row.execute_time == 2000
 
 
+def _row(key, status=0, count=0, etime=None, depth=0):
+    return (
+        key, f"http://h.test/{key}", status, etime, count, -1, None,
+        None, "h.test", depth, 0.0,
+    )
+
+
+def test_merge_rules_across_rounds(spark, store):
+    """Three rounds of (fetched, links) segments: a later fetch beats an
+    older one, a re-discovered link never displaces an existing row, and
+    a URL first discovered at depth 1 keeps depth 1."""
+    from webcollector_spark.schema import FRONTIER_SCHEMA
+
+    def df(rows):
+        return spark.createDataFrame(rows, FRONTIER_SCHEMA)
+
+    rounds = [
+        ([_row("a", 5, 1, 1000)], [_row("b", depth=1), _row("c", depth=1)]),
+        # c re-discovered deeper -> keeps depth 1
+        ([_row("b", 1, 1, 2000, depth=1)], [_row("c", depth=2), _row("d", depth=2)]),
+        # re-discovery of a fetched key loses
+        ([_row("b", 5, 2, 3000, depth=1), _row("c", 5, 1, 3000, depth=1)],
+         [_row("a", depth=3)]),
+    ]
+    store.inject(df([_row("a")]))
+    for fetched, links in rounds:
+        store.merge(df(fetched), df(links))
+    got = {
+        r.key: (r.status, r.execute_count, r.depth)
+        for r in store.load().collect()
+    }
+    assert got == {
+        "a": (5, 1, 0),  # later link re-discovery lost
+        "b": (5, 2, 1),  # latest fetch won over the older FAILED fetch
+        "c": (5, 1, 1),  # first-wins kept depth 1, then fetched
+        "d": (0, 0, 2),
+    }
+    assert store.count() == 4
+
+
+def test_crawler_with_injected_store(spark, small_web, tmp_path):
+    """End to end through the `store=` seam (the DBManager plugin
+    contract): BreadthCrawler(store=ParquetFrontierStore) equals the RAM
+    backend on the same crawl."""
+    from webcollector_spark import fixtures
+    from webcollector_spark.config import CrawlerConfig
+    from webcollector_spark.crawler import BreadthCrawler, RamCrawler
+    from webcollector_spark.sources.requester import SyntheticRequester
+
+    graph, corpus = small_web
+    seeds = fixtures.seeds_for(graph, 3)
+
+    def req():
+        return SyntheticRequester(
+            graph.to_dict("records"), corpus.to_dict("records")
+        )
+
+    def state(crawler):
+        return {
+            r.key: (r.status, r.execute_count, r.depth)
+            for r in crawler.frontier().collect()
+        }
+
+    cfg = CrawlerConfig(bloom_capacity=10_000)
+    ram = RamCrawler(spark, req(), config=cfg)
+    ram.add_seed(list(seeds))
+    ram.start(3)
+
+    store = ParquetFrontierStore(spark, str(tmp_path / "db"))
+    injected = BreadthCrawler(spark, req(), config=cfg, store=store)
+    injected.add_seed(list(seeds))
+    injected.start(3)
+
+    assert injected.store is store
+    assert state(injected) == state(ram)
+
+
 def test_parquet_store_ignores_uncommitted_snapshot(spark, tmp_path):
     """Crash-resume: a partially written snapshot (no _SUCCESS marker)
     must be invisible to resume — the store loads the last COMMITTED

@@ -102,21 +102,14 @@ def main() -> None:
 
     # sharded variant (the 10^10 layout): same semantics, one extra
     # shard-routing shuffle in the build; probe cost is unchanged
-    from webcollector_spark.operators.seen import (
-        build_sharded_bloom,
-        seen_filter_sharded,
-    )
-
     t0 = time.monotonic()
-    sb = build_sharded_bloom(
-        seen, "key", capacity=FRONTIER_N, fpp=0.01, shards=16
-    )
+    sb = build_bloom(seen, "key", capacity=FRONTIER_N, fpp=0.01, shards=16)
     out["sharded_build_sec"] = round(time.monotonic() - t0, 3)
     out["sharded_filter_sec"] = timed(
-        lambda: seen_filter_sharded(links, seen, sharded=sb).count()
+        lambda: seen_filter(links, seen, bloom=sb).count()
     )
     out["sharded_results_match"] = (
-        seen_filter_sharded(links, seen, sharded=sb).count() == n_fresh_exact
+        seen_filter(links, seen, bloom=sb).count() == n_fresh_exact
     )
 
     Path("BENCH_BLOOM.json").write_text(json.dumps(out, indent=2) + "\n")

@@ -15,9 +15,10 @@ and reports, for each registry entry,
 
 The invariant enforced by tests/test_snapshot_staleness.py: any entry
 whose staleness (latest_round - last_round, or "never") is >= 2 rounds
-MUST be scheduled for the next snapshot. This converts the manual
-rotation discipline into a failing test the moment registrations
-outpace rotation again.
+MUST be scheduled for the next snapshot. ``queries()`` derives its order
+from the same snapshots (never-checked, then stalest first —
+plans/queries.py ``_snapshot_ordered``), so the invariant holds by
+construction until stale entries outnumber the snapshot slots.
 """
 
 from __future__ import annotations
@@ -61,11 +62,7 @@ def audit(ordering: list[str] | None = None) -> tuple[int, list[Entry]]:
 
     if REPO not in sys.path:
         sys.path.insert(0, REPO)
-    from webcollector_spark.plans.queries import (
-        Q,
-        REGISTRATION_ROUND,
-        _snapshot_ordered,
-    )
+    from webcollector_spark.plans.queries import Q, _snapshot_ordered
 
     if ordering is None:
         ordering = list(_snapshot_ordered(Q))
@@ -74,15 +71,8 @@ def audit(ordering: list[str] | None = None) -> tuple[int, list[Entry]]:
     entries = []
     for pos, name in enumerate(ordering):
         last = max((r for r, keys in rounds.items() if name in keys), default=None)
-        if last is not None:
-            staleness = latest - last
-        else:
-            # never driver-checked: age from registration (entries
-            # registered before round tracking began count as r<=4 and
-            # are immediately stale; a this-round registration cannot
-            # have a row yet and gets one round of grace)
-            registered = REGISTRATION_ROUND.get(name, latest)
-            staleness = MAX_STALENESS if latest >= registered else 1
+        # never driver-checked counts as stale
+        staleness = MAX_STALENESS if last is None else latest - last
         scheduled = pos < SNAPSHOT_CAP
         entries.append(
             Entry(name, pos, last, scheduled, staleness >= MAX_STALENESS)

@@ -36,14 +36,6 @@ def main() -> None:
     p.add_argument("--max-execute-count", type=int, default=10)
     p.add_argument("--resume", action="store_true")
     p.add_argument("--regex", action="append", default=[])
-    p.add_argument(
-        "--store",
-        choices=["cow", "lsm"],
-        default="cow",
-        help="frontier backend: cow = snapshot-per-round rewrite, "
-        "lsm = merge-on-read deltas + compaction (O(round) writes)",
-    )
-    p.add_argument("--compact-every", type=int, default=8)
     args = p.parse_args()
 
     from pyspark.sql import SparkSession
@@ -81,16 +73,8 @@ def main() -> None:
         resumable=args.resume,
         regex_rules=list(args.regex),
     )
-    store = None
-    if args.store == "lsm":
-        from webcollector_spark import LsmParquetFrontierStore
-
-        store = LsmParquetFrontierStore(
-            spark, args.crawl_path, resumable=args.resume,
-            compact_every=args.compact_every,
-        )
     crawler = BreadthCrawler(
-        spark, requester, crawl_path=args.crawl_path, config=cfg, store=store
+        spark, requester, crawl_path=args.crawl_path, config=cfg
     )
     if seeds:
         crawler.add_seed(seeds)

@@ -21,11 +21,7 @@ from webcollector_spark.crawler import BreadthCrawler, RamCrawler
 from webcollector_spark.datum import CrawlDatum, CrawlDatums
 from webcollector_spark.functions.page import Page
 from webcollector_spark.operators.dispatch import Visitor
-from webcollector_spark.store import (
-    LsmParquetFrontierStore,
-    ParquetFrontierStore,
-    RamFrontierStore,
-)
+from webcollector_spark.store import ParquetFrontierStore, RamFrontierStore
 
 __version__ = "0.2.0"
 
@@ -39,7 +35,6 @@ __all__ = [
     "Visitor",
     "RamFrontierStore",
     "ParquetFrontierStore",
-    "LsmParquetFrontierStore",
     "__version__",
 ]
 

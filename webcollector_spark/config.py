@@ -130,10 +130,11 @@ class CrawlerConfig:
     # Python-worker job per round).
     bloom_min_frontier: int = 2_000_000
     # Shard the URL-seen bloom into this many independent bitsets keyed
-    # by key-hash (operators/seen.py ShardedBloom). 0 = single bitset.
-    # At 10^10 keys a monolithic 12 GB bitset cannot broadcast; sharding
-    # keeps each piece broadcastable and lets co-partitioned probes
-    # touch one shard per task. Semantics are identical either way.
+    # by key-hash (operators/seen.py Bloom(shards=)). 0 or 1 = single
+    # bitset. At 10^10 keys a monolithic 12 GB bitset cannot broadcast;
+    # sharding keeps each piece broadcastable and a probe task loads
+    # only the shards its keys hash to. Semantics are identical either
+    # way.
     bloom_shards: int = 0
     # Canonicalize URL keys (lowercase scheme/host, strip default port,
     # drop fragment, sort query params — functions/urls.py). The

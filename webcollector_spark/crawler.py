@@ -261,13 +261,9 @@ class BreadthCrawler:
 
             # O2 generate; persisted so the fetch stage reads the ranked
             # rows instead of re-running both window phases.
-            # cheap_count: best-effort size for the salt/bloom gates —
-            # None (unknown, e.g. LSM with new-links tracking off) means
-            # assume LARGE for the SALT defense (activation needs no
-            # sizing) but SKIP the bloom (sizing a filter needs the
-            # count; see the bloom gate below). Never pay an exact fold
-            # just for a heuristic.
-            approx = self.store.cheap_count()
+            # cheap_count: the frontier size for the salt/bloom gates,
+            # memoized by the store (no extra job after a merge).
+            n_frontier = self.store.cheap_count()
             if cfg.per_host_top_k > 0:
                 if cfg.adaptive_salt and self._link_hosts is not None:
                     # MEASURED skew, not assumed: probe last round's
@@ -284,7 +280,7 @@ class BreadthCrawler:
                 else:
                     salt = (
                         cfg.host_salt_buckets
-                        if approx is None or approx >= cfg.salt_min_frontier
+                        if n_frontier >= cfg.salt_min_frontier
                         else 1
                     )
                 self.salt_history.append(salt)
@@ -414,62 +410,19 @@ class BreadthCrawler:
                         "key", canonical_url_col(F.col("url"))
                     )
                 links = links.unionByName(sm)
-            if (
-                0 < cfg.bloom_capacity
-                and approx is not None
-                and cfg.bloom_min_frontier <= approx
-            ):
+            if 0 < cfg.bloom_capacity and cfg.bloom_min_frontier <= n_frontier:
                 # size from the LIVE frontier count (memoized — no extra
                 # job): a fixed capacity below the activation threshold
                 # would load the filter at >1x capacity and blow the
                 # configured fpp exactly when the pre-prune first
-                # matters. When the count is UNKNOWN (LSM store with
-                # track_new_links=False) the bloom is skipped outright:
-                # an unsizable filter over a large frontier saturates to
-                # fpp~1 and the round would pay the build for zero
-                # pruning — the exact anti-join is always correct.
-                cap = max(cfg.bloom_capacity, approx)
-                if cfg.bloom_shards > 0:
-                    from webcollector_spark.operators.seen import (
-                        build_sharded_bloom,
-                        seen_filter_sharded,
-                    )
-
-                    sb = build_sharded_bloom(
-                        frontier.select("key"), "key", cap,
-                        cfg.bloom_fpp, cfg.bloom_shards,
-                    )
-                    fresh = seen_filter_sharded(
-                        links, frontier.select("key"), "key", sb
-                    )
-                else:
-                    bloom = build_bloom(
-                        frontier.select("key"), "key", cap, cfg.bloom_fpp
-                    )
-                    fresh = seen_filter(
-                        links, frontier.select("key"), "key", bloom
-                    )
+                # matters.
+                bloom = build_bloom(
+                    frontier.select("key"), "key",
+                    max(cfg.bloom_capacity, n_frontier), cfg.bloom_fpp,
+                    max(1, cfg.bloom_shards),
+                )
+                fresh = seen_filter(links, frontier.select("key"), "key", bloom)
             else:
-                if (
-                    0 < cfg.bloom_capacity
-                    and approx is None
-                    and not getattr(self, "_warned_bloom_skip", False)
-                ):
-                    # One-time operator hint: the gate above silently
-                    # skips the bloom when the frontier size is unknown
-                    # (an unsizable filter saturates to fpp~1). At the
-                    # 10^10 configuration that is exactly where the
-                    # pre-prune pays — enable estimate_counts on the
-                    # store (one cheap HLL++ scan/round) to restore it.
-                    self._warned_bloom_skip = True
-                    import logging
-
-                    logging.getLogger(__name__).warning(
-                        "bloom pre-prune skipped: frontier size unknown "
-                        "(store.cheap_count() is None). Enable "
-                        "estimate_counts=True on the frontier store to "
-                        "size the filter without an exact count."
-                    )
                 fresh = links
 
             # Optional fetched-history write (O(round) rows, content

@@ -1,10 +1,9 @@
 """IcebergFrontierStore — the production frontier backend.
 
-The sandbox ships no Iceberg runtime jars (verified), so tests run the
-semantically identical `ParquetFrontierStore` (store.py). This module
-is the real deployment path: the same FrontierStore contract expressed
-as Iceberg DDL/MERGE, activated when a Spark session has an Iceberg
-catalog configured, e.g.:
+This module is the deployment path for frontiers too large to rewrite
+every round: the FrontierStore contract expressed as Iceberg DDL/MERGE
+(merge-on-read with the table's own compaction), activated when a Spark
+session has an Iceberg catalog configured, e.g.:
 
     spark-submit \
       --packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<ver> \
@@ -26,17 +25,24 @@ Semantic mapping (identical to store.py, SURVEY §2.1):
 Bucket-partitioning by host keeps a host's frontier rows co-located so
 the per-host generate window shuffles minimally and politeness
 co-location is storage-aligned.
+
+Without Iceberg jars, the SQL text and the MERGE source (built by the
+same `_fold` as store.py) are unit-tested; the fold itself runs in every
+crawl through `ParquetFrontierStore`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from webcollector_spark.store import (
+    SRC_FETCH,
+    SRC_LINK,
     RamFrontierStore,
-    _core,
-    _dedup_last_wins,
-    _dedup_links_first_wins,
+    _dedup_seeds,
+    _fold,
+    _union_tagged,
 )
 
 DDL_COLUMNS = """
@@ -90,30 +96,18 @@ def merge_sql(table: str) -> str:
 def build_merge_source(
     fetched: DataFrame | None, links: DataFrame | None
 ) -> DataFrame | None:
-    """The MERGE source: fetch segment deduped last-wins, links segment
-    deduped first-wins with the SAME deterministic (depth asc, url asc)
-    tiebreak as RamFrontierStore.merge, fetch beating link on a shared
-    key within the round."""
-    from pyspark.sql import functions as F
-
-    src = []
-    if fetched is not None:
-        src.append(
-            _core(_dedup_last_wins(fetched)).withColumn("is_fetch", F.lit(True))
-        )
-    if links is not None:
-        links = _core(_dedup_links_first_wins(links))
-        if fetched is not None:
-            links = links.join(
-                src[0].select("key"), "key", "left_anti"
-            )  # fetch beats link on the same key within a round
-        src.append(links.withColumn("is_fetch", F.lit(False)))
-    if not src:
+    """The MERGE source: one row per key of fetch ∪ links by store.py's
+    `_fold` — fetch deduped last-wins, links first-wins with the same
+    deterministic (depth asc, url asc) tiebreak, a fetch row beating a
+    link row on a shared key. `is_fetch` gates the MERGE's update."""
+    tagged = _union_tagged((fetched, SRC_FETCH), (links, SRC_LINK))
+    if tagged is None:
         return None
-    merged = src[0]
-    for s in src[1:]:
-        merged = merged.unionByName(s)
-    return merged
+    return (
+        _fold(tagged)
+        .withColumn("is_fetch", F.col("__src") == SRC_FETCH)
+        .drop("__src")
+    )
 
 
 class IcebergFrontierStore(RamFrontierStore):
@@ -150,7 +144,7 @@ class IcebergFrontierStore(RamFrontierStore):
 
     # -- O1 -------------------------------------------------------------
     def inject(self, seeds: DataFrame, force: bool = False) -> None:
-        _core(_dedup_last_wins(seeds)).createOrReplaceTempView("__seeds")
+        _dedup_seeds(seeds, force).createOrReplaceTempView("__seeds")
         self.spark.sql(inject_sql(self.table, force))
         # the MERGE may have inserted/updated rows — a memoized count
         # taken before inject would feed stale salt/bloom gates and skew

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Iterator
+from dataclasses import replace
 from urllib.parse import urljoin
 
 import pandas as pd
@@ -322,17 +323,10 @@ def fetch(
             from pyspark import cloudpickle
 
             bc_disp = spark.sparkContext.broadcast(cloudpickle.dumps(dispatcher))
-    rules = list(cfg.regex_rules)
-    per_host_rate, interval_ms = cfg.per_host_rate, cfg.execute_interval_ms
-    robots_ttl, auto = cfg.robots_ttl_s, (cfg.auto_parse, cfg.auto_detect_img)
-    cfg_small = CrawlerConfig(
-        auto_parse=auto[0], auto_detect_img=auto[1],
-        max_receive_size=cfg.max_receive_size, regex_rules=rules,
-        keep_content=cfg.keep_content, next_filter=cfg.next_filter,
-        parse_sitemaps=cfg.parse_sitemaps,
-        min_image_quality=cfg.min_image_quality,
-        revalidate=cfg.revalidate,
-    )
+    # the closure ships a snapshot of the whole config, so no knob can be
+    # dropped on the way to the executors and later edits to the
+    # caller's config (setters between rounds) do not reach this pass
+    cfg = replace(cfg, regex_rules=list(cfg.regex_rules))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pickle
@@ -342,9 +336,9 @@ def fetch(
         if bc_disp is not None:
             v = bc_disp.value
             disp = pickle.loads(v) if isinstance(v, bytes) else v
-        robots = RobotsCache(req, robots_ttl) if robots_ttl > 0 else None
-        bucket = _HostBucket(per_host_rate, interval_ms)
-        rule = RegexRule(rules)
+        robots = RobotsCache(req, cfg.robots_ttl_s) if cfg.robots_ttl_s > 0 else None
+        bucket = _HostBucket(cfg.per_host_rate, cfg.execute_interval_ms)
+        rule = RegexRule(cfg.regex_rules)
         cols = [f.name for f in FETCHED_SCHEMA.fields]
         for pdf in batches:
             out_rows = []
@@ -365,7 +359,7 @@ def fetch(
                     )
                     bucket.wait(row["host"], delay)
                 rec = _fetch_one(
-                    row, req, robots, rule, cfg_small, disp, robots_ok=ok
+                    row, req, robots, rule, cfg, disp, robots_ok=ok
                 )
                 if delay:
                     # observed politeness gap — next round's host-budget
@@ -396,9 +390,9 @@ def fetch(
     # guarantee (see config.py — otherwise the delay is enforced
     # per-partition, i.e. a partitions/delay aggregate bound).
     polite = (
-        per_host_rate > 0
-        or interval_ms > 0
-        or (robots_ttl > 0 and cfg.strict_robots_delay)
+        cfg.per_host_rate > 0
+        or cfg.execute_interval_ms > 0
+        or (cfg.robots_ttl_s > 0 and cfg.strict_robots_delay)
     )
     repartitioned = (
         generated.repartition(parts, F.col("host"))

@@ -15,12 +15,14 @@ definitely hasn't seen skip the shuffle entirely; only bloom-positives
 (true hits + fpp false positives) go through the exact anti-join.
 
 Scale note (10^10 keys): one bitset at 1% fpp is ~12 GB — too big to
-broadcast. `ShardedBloom` / `build_sharded_bloom` / `seen_filter_sharded`
-below implement the production layout: S independent bitsets sharded by
-key hash, each built by the partitions that own its key range after one
-repartition on the shard id; correctness is identical because a key's
-shard assignment is a pure function of the key (verified equal to the
-exact anti-join in test_seen.py).
+broadcast. `shards=S` splits the filter into S independent bitsets
+sharded by key hash: the build routes keys to their shard's partition
+after one repartition on the shard id, and the probe ships each shard
+as its own broadcast, so a task deserializes only the shards its keys
+hash to. Correctness is identical because a key's shard is a pure
+function of the key (verified equal to the exact anti-join in
+test_seen.py). At `shards=1` there is no routing shuffle and no shard
+hash.
 """
 
 from __future__ import annotations
@@ -52,52 +54,114 @@ def _hash2(keys: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     return h1, h2 | 1  # odd step for double hashing
 
 
+def _shard_of(keys: pd.Series, shards: int) -> np.ndarray:
+    """A key's shard under a THIRD SipHash key, independent of the h1/h2
+    bit probes (shard = h1 % S would correlate: m is a multiple of 64,
+    so for power-of-two S the shard residue survives into h1 % m and
+    concentrates probe-0 bits at S-fold density — measured 1.45% fpp vs
+    1.0% configured before the fix)."""
+    h3 = pd.util.hash_array(keys.to_numpy(dtype=object), hash_key=_KEY3.decode("latin1"))
+    return (h3 % np.uint64(shards)).astype(np.int64)
+
+
+def _by_shard(keys: pd.Series, shards: int):
+    """(shard, row selector) groups of `keys`; one group and no shard
+    hash at shards == 1."""
+    if shards == 1:
+        return [(0, slice(None))]
+    sh = _shard_of(keys, shards)
+    return [(int(s), sh == s) for s in np.unique(sh)]
+
+
+def _probes(keys: pd.Series, m: int, k: int):
+    """The k double-hashing bit positions of each key within a shard."""
+    h1, h2 = _hash2(keys)
+    for i in range(k):
+        yield (h1 + i * h2) % m
+
+
+def _add(bits: np.ndarray, keys: pd.Series, m: int, k: int) -> None:
+    """Set the k bits of each key in one shard's bitset."""
+    for idx in _probes(keys, m, k):
+        np.bitwise_or.at(bits, idx >> 3, (1 << (idx & 7)).astype(np.uint8))
+
+
+def _contains(keys: pd.Series, m: int, k: int, shards: int, shard_bits) -> np.ndarray:
+    """Bloom membership of `keys`; `shard_bits(s)` returns shard s's
+    bitset, so a probe touches only the shards its keys hash to."""
+    out = np.zeros(len(keys), dtype=bool)
+    for s, sel in _by_shard(keys, shards):
+        ks, bits = keys[sel], shard_bits(s)
+        hit = np.ones(len(ks), dtype=bool)
+        for idx in _probes(ks, m, k):
+            hit &= (bits[idx >> 3] & (1 << (idx & 7)).astype(np.uint8)) != 0
+        out[sel] = hit
+    return out
+
+
 class Bloom:
-    def __init__(self, capacity: int, fpp: float = 0.01):
-        m = max(64, int(-capacity * math.log(fpp) / (math.log(2) ** 2)))
+    """`shards` bitsets of `m` bits each, laid end to end in `bits`; a
+    key sets/probes k bits of its shard. `shards=1` is the plain bloom."""
+
+    def __init__(self, capacity: int, fpp: float = 0.01, shards: int = 1):
+        per_shard = -(-capacity // shards)
+        m = max(64, int(-per_shard * math.log(fpp) / (math.log(2) ** 2)))
         self.m = (m + 63) // 64 * 64
-        self.k = max(1, round(self.m / max(1, capacity) * math.log(2)))
-        self.bits = np.zeros(self.m // 8, dtype=np.uint8)
+        self.k = max(1, round(self.m / max(1, per_shard) * math.log(2)))
+        self.shards = shards
+        self.bits = np.zeros(shards * self.m // 8, dtype=np.uint8)
+
+    def shard(self, s: int) -> np.ndarray:
+        """Shard s's bitset (a view into `bits`)."""
+        n = self.m // 8
+        return self.bits[s * n : (s + 1) * n]
 
     def add_series(self, keys: pd.Series) -> None:
-        h1, h2 = _hash2(keys)
-        for i in range(self.k):
-            idx = (h1 + i * h2) % self.m
-            np.bitwise_or.at(self.bits, idx >> 3, (1 << (idx & 7)).astype(np.uint8))
+        for s, sel in _by_shard(keys, self.shards):
+            _add(self.shard(s), keys[sel], self.m, self.k)
 
     def maybe_contains(self, keys: pd.Series) -> np.ndarray:
-        h1, h2 = _hash2(keys)
-        out = np.ones(len(keys), dtype=bool)
-        for i in range(self.k):
-            idx = (h1 + i * h2) % self.m
-            out &= (self.bits[idx >> 3] & (1 << (idx & 7)).astype(np.uint8)) != 0
-        return out
-
-    def union(self, other: "Bloom") -> "Bloom":
-        assert self.m == other.m and self.k == other.k
-        self.bits |= other.bits
-        return self
+        return _contains(keys, self.m, self.k, self.shards, self.shard)
 
 
 def build_bloom(
-    keys_df: DataFrame, key_col: str = "key", capacity: int = 1_000_000, fpp: float = 0.01
+    keys_df: DataFrame,
+    key_col: str = "key",
+    capacity: int = 1_000_000,
+    fpp: float = 0.01,
+    shards: int = 1,
 ) -> Bloom:
-    """Distributed bloom build: per-partition partial bitsets, OR-merged."""
-    proto = Bloom(capacity, fpp)
-    m, k = proto.m, proto.k
+    """Distributed bloom build: per-partition partial bitsets, OR-merged
+    per shard on the driver. At shards > 1 the keys first shuffle once
+    to their shard's partition, so a task folds one or a few shards."""
+    out = Bloom(capacity, fpp, shards)
+    m, k = out.m, out.k
+    keys = keys_df.select(key_col)
+    if shards > 1:
+
+        @F.pandas_udf(T.LongType())
+        def shard_id(ks: pd.Series) -> pd.Series:
+            return pd.Series(_shard_of(ks.astype(str), shards))
+
+        keys = (
+            keys.select(F.col(key_col).cast("string").alias(key_col))
+            .withColumn("__shard", shard_id(F.col(key_col)))
+            .repartition(shards, "__shard")
+        )
 
     def partial(batches):
-        b = Bloom(capacity, fpp)
+        local: dict[int, np.ndarray] = {}
         for pdf in batches:
-            if len(pdf):
-                b.add_series(pdf[key_col].astype(str))
-        yield pd.DataFrame({"bits": [b.bits.tobytes()]})
+            groups = pdf.groupby("__shard")[key_col] if shards > 1 else [(0, pdf[key_col])]
+            for s, ks in groups:
+                if s not in local:  # setdefault would zero a bitset per batch
+                    local[s] = np.zeros(m // 8, dtype=np.uint8)
+                _add(local[s], ks.astype(str), m, k)
+        for s, bits in local.items():
+            yield pd.DataFrame({"shard": [int(s)], "bits": [bits.tobytes()]})
 
-    parts = keys_df.select(key_col).mapInPandas(partial, schema="bits binary").collect()
-    out = Bloom(capacity, fpp)
-    assert out.m == m and out.k == k
-    for row in parts:
-        out.bits |= np.frombuffer(row["bits"], dtype=np.uint8)
+    for row in keys.mapInPandas(partial, schema="shard long, bits binary").collect():
+        out.shard(row["shard"])[:] |= np.frombuffer(row["bits"], dtype=np.uint8)
     return out
 
 
@@ -117,175 +181,25 @@ def seen_filter(
     if bloom is None:
         return candidates.join(seen_keys.select(key_col), key_col, "left_anti")
 
-    spark = candidates.sparkSession
-    bc = spark.sparkContext.broadcast((bloom.bits.tobytes(), bloom.m, bloom.k))
+    sc = candidates.sparkSession.sparkContext
+    m, k, shards = bloom.m, bloom.k, bloom.shards
+    # one broadcast per shard; Broadcast.value is lazy per handle
+    bcs = [sc.broadcast(bloom.shard(s).tobytes()) for s in range(shards)]
 
     @F.pandas_udf(T.BooleanType())
     def maybe_seen(keys: pd.Series) -> pd.Series:
-        bits, m, k = bc.value
-        b = Bloom.__new__(Bloom)
-        b.bits, b.m, b.k = np.frombuffer(bits, dtype=np.uint8), m, k
-        return pd.Series(b.maybe_contains(keys.astype(str)))
+        return pd.Series(
+            _contains(
+                keys.astype(str), m, k, shards,
+                lambda s: np.frombuffer(bcs[s].value, dtype=np.uint8),
+            )
+        )
 
     flagged = candidates.withColumn("__maybe", maybe_seen(F.col(key_col)))
     fresh = flagged.filter(~F.col("__maybe")).drop("__maybe")
     suspect = (
         flagged.filter(F.col("__maybe"))
         .drop("__maybe")
-        .join(seen_keys.select(key_col), key_col, "left_anti")
-    )
-    return fresh.unionByName(suspect)
-
-
-# ---------------------------------------------------------------------------
-# Sharded bloom — the 10^10-key layout. One bitset at 1% fpp over 10^10
-# keys is ~12 GB (not broadcastable); S independent bitsets of the same
-# total size are, shard-by-shard, each its OWN broadcast. A key's shard
-# is a pure function of the key under a THIRD SipHash key, independent
-# of the h1/h2 bit probes (shard = h1 % S would correlate: m is a
-# multiple of 64, so for power-of-two S the shard residue survives into
-# h1 % m and concentrates probe-0 bits at S-fold density — measured
-# 1.45% fpp vs 1.0% configured before the fix). Build: route keys to
-# their shard partition (one shuffle of just the key column), fold each
-# partition's resident shards, OR-merge per shard on the driver
-# (S x m/S bytes total — the same volume as the single bitset, arriving
-# pre-partitioned). Probe: candidates repartition by shard and each
-# task deserializes ONLY its shard's broadcast (Broadcast.value is
-# per-handle lazy), so no executor ever materializes the full 12 GB.
-
-
-class ShardedBloom:
-    def __init__(self, capacity: int, fpp: float = 0.01, shards: int = 16):
-        self.shards = shards
-        self.blooms = [
-            Bloom(max(64, capacity // shards), fpp) for _ in range(shards)
-        ]
-
-    @staticmethod
-    def shard_of(keys: pd.Series, shards: int) -> np.ndarray:
-        h3 = pd.util.hash_array(
-            keys.to_numpy(dtype=object), hash_key=_KEY3.decode("latin1")
-        )
-        return (h3 % np.uint64(shards)).astype(np.int64)
-
-    def add_series(self, keys: pd.Series) -> None:
-        sh = self.shard_of(keys, self.shards)
-        for s in np.unique(sh):
-            self.blooms[int(s)].add_series(keys[sh == s])
-
-    def maybe_contains(self, keys: pd.Series) -> np.ndarray:
-        sh = self.shard_of(keys, self.shards)
-        out = np.zeros(len(keys), dtype=bool)
-        for s in np.unique(sh):
-            mask = sh == s
-            out[mask] = self.blooms[int(s)].maybe_contains(keys[mask])
-        return out
-
-
-def build_sharded_bloom(
-    keys_df: DataFrame,
-    key_col: str = "key",
-    capacity: int = 1_000_000,
-    fpp: float = 0.01,
-    shards: int = 16,
-) -> ShardedBloom:
-    """Distributed sharded build: keys shuffle ONCE to their shard's
-    partition, each partition folds its resident shards, the driver
-    OR-merges per shard (most shards arrive as a single partial)."""
-
-    def shard_udf(keys: pd.Series) -> pd.Series:
-        return pd.Series(ShardedBloom.shard_of(keys.astype(str), shards))
-
-    shard_col = F.pandas_udf(shard_udf, T.LongType())(F.col(key_col))
-    routed = (
-        keys_df.select(F.col(key_col).cast("string").alias(key_col))
-        .withColumn("__shard", shard_col)
-        .repartition(shards, "__shard")
-    )
-    cap = max(64, capacity // shards)
-
-    def partial(batches):
-        local: dict[int, Bloom] = {}
-        for pdf in batches:
-            for s, grp in pdf.groupby("__shard"):
-                s = int(s)
-                if s not in local:  # setdefault would alloc+zero a
-                    local[s] = Bloom(cap, fpp)  # bitset per batch
-                local[s].add_series(grp[key_col].astype(str))
-        for s, b in local.items():
-            yield pd.DataFrame({"shard": [s], "bits": [b.bits.tobytes()]})
-
-    out = ShardedBloom(capacity, fpp, shards)
-    for row in routed.mapInPandas(partial, schema="shard long, bits binary").collect():
-        out.blooms[int(row["shard"])].bits |= np.frombuffer(
-            row["bits"], dtype=np.uint8
-        )
-    return out
-
-
-def seen_filter_sharded(
-    candidates: DataFrame,
-    seen_keys: DataFrame,
-    key_col: str = "key",
-    sharded: ShardedBloom | None = None,
-    co_partition: bool = False,
-) -> DataFrame:
-    """`seen_filter` with a sharded bloom: identical semantics (no false
-    negatives — bloom-positives still go through the exact anti-join).
-
-    Each shard ships as its OWN broadcast; the probe UDF deserializes
-    only the shards present in its batch (Broadcast.value is lazy per
-    handle). `co_partition=True` additionally range-repartitions
-    candidates by shard id so a task holds one (or a few contiguous)
-    shards — that is what bounds per-executor resident bloom memory
-    near m/S instead of m, the property that makes a 12 GB aggregate
-    bitset workable on a cluster.
-    It costs one extra shuffle of the candidate rows, so enable it only
-    when the aggregate bitset actually exceeds executor memory; on a
-    single box (or small bitsets) the default leaves candidates where
-    they are and lets each worker lazily load the shards it meets."""
-    if sharded is None:
-        return candidates.join(seen_keys.select(key_col), key_col, "left_anti")
-
-    spark = candidates.sparkSession
-    m, k, shards = sharded.blooms[0].m, sharded.blooms[0].k, sharded.shards
-    bcs = [spark.sparkContext.broadcast(b.bits.tobytes()) for b in sharded.blooms]
-
-    @F.pandas_udf(T.LongType())
-    def shard_id(keys: pd.Series) -> pd.Series:
-        return pd.Series(ShardedBloom.shard_of(keys.astype(str), shards))
-
-    @F.pandas_udf(T.BooleanType())
-    def maybe_seen(keys: pd.Series) -> pd.Series:
-        ks = keys.astype(str)
-        sh = ShardedBloom.shard_of(ks, shards)
-        out = np.zeros(len(ks), dtype=bool)
-        for s in np.unique(sh):
-            b = Bloom.__new__(Bloom)
-            b.bits = np.frombuffer(bcs[int(s)].value, dtype=np.uint8)
-            b.m, b.k = m, k
-            mask = sh == s
-            out[mask] = b.maybe_contains(ks[mask])
-        return pd.Series(out)
-
-    probe = candidates
-    drop = ["__maybe"]
-    if co_partition:
-        # repartitionByRange, NOT hash repartition: hash partitioning of
-        # S distinct shard ids scatters several shards into one task and
-        # leaves ~1/e of partitions empty (murmur3 % N is not identity);
-        # range partitioning of the integer ids gives each task one (or
-        # a few contiguous) shards, which is what bounds resident bloom
-        # memory near m/S per task
-        probe = probe.withColumn(
-            "__shard", shard_id(F.col(key_col))
-        ).repartitionByRange(shards, "__shard")
-        drop.append("__shard")
-    flagged = probe.withColumn("__maybe", maybe_seen(F.col(key_col)))
-    fresh = flagged.filter(~F.col("__maybe")).drop(*drop)
-    suspect = (
-        flagged.filter(F.col("__maybe"))
-        .drop(*drop)
         .join(seen_keys.select(key_col), key_col, "left_anti")
     )
     return fresh.unionByName(suspect)

@@ -6,13 +6,11 @@ Why it exists: the register computation is integer-exact (bit ops +
 binary-string position, no floats), so the registry twin
 `hll_registers` value-checks the full sketch pipeline against DuckDB
 bit-for-bit — something Spark's built-in `approx_count_distinct`
-(HLL++, opaque binary state) cannot offer an oracle for. Production
-call sites that only need the NUMBER — e.g. the LSM store's fold-free
-frontier-size estimate (store.py `cheap_count`, `estimate_counts=True`)
-— use the built-in aggregate instead (executor-side merge, no
-driver-side register fold); this module is the transparent,
-cross-engine-checkable formulation of the same estimator at
-±~1.04/sqrt(2^b) relative error.
+(HLL++, opaque binary state) cannot offer an oracle for. A call site
+that only needs the NUMBER should use the built-in aggregate instead
+(executor-side merge, no driver-side register fold); this module is the
+transparent, cross-engine-checkable formulation of the same estimator
+at ±~1.04/sqrt(2^b) relative error.
 """
 
 from __future__ import annotations

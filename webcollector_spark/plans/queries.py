@@ -14,6 +14,8 @@ value-hashing). Float aggregates are rounded in BOTH engines.
 
 from __future__ import annotations
 
+import functools
+import json
 from collections.abc import Callable
 from pathlib import Path
 
@@ -3723,10 +3725,10 @@ SQL["hits_scores"] = _hits_sql()
 # ---------------------------------------------------------------------------
 # HyperLogLog registers (operators/sketch.py) — the transparent,
 # cross-engine-checkable formulation of the estimator family behind
-# the LSM store's fold-free frontier-size estimate. The
-# register math is integer-exact (bit ops + binary-string first-1
-# position), so the oracle checks the sketch computation itself; the
-# float estimate is a tiny driver-side fold tested in test_sketch.py.
+# Spark's approx_count_distinct. The register math is integer-exact
+# (bit ops + binary-string first-1 position), so the oracle checks the
+# sketch computation itself; the float estimate is a tiny driver-side
+# fold tested in test_sketch.py.
 
 @register(
     "hll_registers",
@@ -6572,90 +6574,38 @@ def q_lsh_incremental_dedup(spark, sf):
 
 # ---------------------------------------------------------------------------
 # Driver snapshot ordering. The driver's CORRECTNESS_r{N}.json snapshot
-# covers only the FIRST ~50 queries() entries (observed cap across
-# r01-r03: the r03 snapshot has exactly 50 rows while the registry held
-# 74, and 20 registry entries had never appeared in ANY round's
-# snapshot). Dict insertion order is what the driver enumerates, so the
-# never-driver-checked entries must come FIRST this round (VERDICT r3
-# item 1). All entries — both lists — pass tools/check_oracle.py at
-# sf0.001 and sf0.01 locally regardless of snapshot position.
+# covers only the FIRST ~50 queries() entries, in dict order (observed
+# cap across r01-r05). So the order is derived from the snapshots at the
+# repo root: entries never driver-checked first, then stalest first (the
+# oldest round with a row), ties in registry order. Where no snapshot can
+# be read — e.g. a packaged zip — it is plain registry order. All entries
+# pass tools/check_oracle.py locally regardless of position.
 
-# Registration round of entries added AFTER the r05 reorder/freeze;
-# anything absent was registered r01-r04. tools/snapshot_staleness.py
-# exempts an entry from never-driver-checked violations until a full
-# driver round has passed since its registration (a new entry CANNOT
-# have a row yet, and the freeze keeps it out of the top-50 until r06).
-REGISTRATION_ROUND: dict[str, int] = {
-    "exact_substr_spans": 5,
-}
 
-_SNAPSHOT_FIRST = [
-    # r05 backlog: the 40 registry entries that have never appeared in any
-    # driver CORRECTNESS snapshot (r01-r04). 40 < 50-row cap, so this round
-    # clears the whole backlog (VERDICT r4 item 1).
-    "image_decode_verify_jpeg420",
-    "image_decode_verify_jpegprog",
-    "image_progressive_preview",
-    "image_decode_verify_pngi",
-    "image_decode_verify_bmp",
-    "image_decode_verify_ico",
-    "image_decode_verify_tiff",
-    "image_decode_verify_webp",
-    "audio_features_ulaw",
-    "audio_features_flac",
-    "audio_fingerprint",
-    "audio_neardup_pairs",
-    "video_frames_avi",
-    "video_frames_gif",
-    "video_frames_apng",
-    "kn_bigram_logprob",
-    "substring_span_dedup",
-    "anchor_text_agg",
-    "anchor_caption_candidates",
-    "sitemap_extract",
-    "image_exif_meta",
-    "image_jpeg_quality",
-    "image_exif_upright",
-    "soft404_hosts",
-    "soft404_filter",
-    "frontier_delta",
-    "frontier_delta_summary",
-    "frontier_backlog",
-    "link_degree_stats",
-    "opic_scores",
-    "bm25_rank",
-    "perplexity_bucket",
-    "host_fetch_latency",
-    "revalidation_savings",
-    "bpe_merges",
-    "bpe_token_counts",
-    "ucb_host_priority",
-    "registrable_domain_rollup",
-    "warc_revisit_plan",
-    "lsh_incremental_dedup",
-    # rotation slots 41-50: the stalest previously-green rows (last driver
-    # row r02/r03) so long-green entries keep getting re-verified.
-    "video_frame_sample",
-    "audio_features",
-    "video_scene_cuts",
-    "sample_hash_stratified",
-    "generate_topn",
-    "inject_antijoin",
-    "merge_lastwins",
-    "perhost_topk",
-    "regex_rule_filter",
-    "dispatch_routing",
-    # ---- positions 51+ fall out of the observed 50-row snapshot cap.
-    # Registrations made after this reorder are FROZEN out of the top-50
-    # until r06: _snapshot_ordered appends unlisted keys after this list,
-    # so new entries cannot displace the backlog above.
-]
+@functools.cache
+def _last_checked() -> dict[str, int]:
+    """Registry name -> latest round whose CORRECTNESS snapshot has it
+    (read once per process: queries() is called per lookup)."""
+    last: dict[str, int] = {}
+    for path in Path(__file__).resolve().parents[2].glob("CORRECTNESS_r*.json"):
+        rnd = path.stem.removeprefix("CORRECTNESS_r")
+        if not rnd.isdigit():
+            continue
+        try:
+            names = json.loads(path.read_text())
+        except (OSError, ValueError):
+            continue
+        for name in names:
+            last[name] = max(last.get(name, 0), int(rnd))
+    return last
 
 
 def _snapshot_ordered(d: dict) -> dict:
-    first = [k for k in _SNAPSHOT_FIRST if k in d]
-    seen = set(first)
-    return {k: d[k] for k in [*first, *(k for k in d if k not in seen)]}
+    last, pos = _last_checked(), {k: i for i, k in enumerate(Q)}
+    return {
+        k: d[k]
+        for k in sorted(d, key=lambda k: (last.get(k, -1), pos.get(k, len(pos))))
+    }
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -1,26 +1,25 @@
 """FrontierStore — the CrawlDB (reference: crawldb/DBManager.java contract,
 RocksDB impl plugin/rocks/RocksDBManager.java:40-220).
 
-Two backends behind one semantic contract (O1 inject / O9 merge / resume):
+Two stores behind one semantic contract (O1 inject / O9 merge / resume),
+sharing one merge implementation:
 
-* `ParquetFrontierStore` — persistent, snapshot-per-round parquet layout
-  (`<path>/frontier_v{N}/`). The sandbox has no Iceberg jars; in
-  production the same dataflow is a single `MERGE INTO frontier` on an
-  Iceberg table bucket-partitioned by host, and each `frontier_v{N}`
-  corresponds to an Iceberg snapshot id. Copy-on-write here is explicit:
-  new_version = old.anti(fetched) UNION fetched UNION links.anti(all-keys),
-  which is exactly the row-level operation Iceberg CoW performs.
 * `RamFrontierStore` — in-memory DataFrame with localCheckpoint() per
   merge (truncates the iterative plan lineage), mirroring the reference's
   RamDB (plugin/ram/RamDB.java:30-36) for one-shot crawls and tests.
+* `ParquetFrontierStore` — the persistent store: copy-on-write, one
+  parquet snapshot per round (`<path>/frontier_v{N}/`, committed by its
+  `_SUCCESS` marker) plus a JSON-lines rounds manifest. Each snapshot
+  corresponds to an Iceberg snapshot id; the Iceberg form of the same
+  fold is one `MERGE INTO frontier` (iceberg_store.py), which is also
+  the merge-on-read path for frontiers too large to rewrite per round.
 
 MERGE conflict rules (the part that is easy to get subtly wrong —
-RocksDBManager.java:160-197):
+RocksDBManager.java:160-197), all in `_fold`:
   * fetch segment:  put() unconditionally  -> LAST-WINS overwrite-or-insert
   * link  segment:  put() only if absent   -> FIRST-WINS across rounds
   * within a round, the KV segment itself dedups by key (last write wins
-    for fetch, any-single-row for links) -> we dedup both sides by key
-    before merging.
+    for fetch, any-single-row for links, made deterministic here).
 """
 
 from __future__ import annotations
@@ -29,6 +28,7 @@ import json
 import os
 import shutil
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -37,17 +37,23 @@ from webcollector_spark.schema import FRONTIER_SCHEMA
 
 _CORE_COLS = [f.name for f in FRONTIER_SCHEMA.fields]
 
+# `__src` precedence tags for `_fold`
+SRC_FETCH, SRC_FRONTIER, SRC_LINK = 2, 1, 0
+
 
 def _core(df: DataFrame) -> DataFrame:
     """Project to the persisted CrawlDatum columns in canonical order."""
     return df.select(*_CORE_COLS)
 
 
-def _dedup_last_wins(df: DataFrame, order_col: str = "execute_time") -> DataFrame:
-    w = Window.partitionBy("key").orderBy(
-        F.col(order_col).desc_nulls_last(), F.col("execute_count").desc()
-    )
-    return df.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
+def _tagged(df: DataFrame, src: int) -> DataFrame:
+    return _core(df).withColumn("__src", F.lit(src))
+
+
+def _union_tagged(*segments: tuple[DataFrame | None, int]) -> DataFrame | None:
+    """Union of the non-None `(df, __src tag)` segments; None if none."""
+    parts = [_tagged(df, src) for df, src in segments if df is not None]
+    return reduce(DataFrame.unionByName, parts) if parts else None
 
 
 def _meta_order() -> F.Column:
@@ -64,21 +70,31 @@ def _meta_order() -> F.Column:
     )
 
 
-def _dedup_links_first_wins(df: DataFrame) -> DataFrame:
-    """Deterministic single row per key for a links segment: same
-    tiebreak as RamFrontierStore.merge applies to link rows
-    (execute_time desc nulls last, execute_count desc, depth asc,
-    url asc, canonical meta asc), so a URL discovered at several depths
-    keeps its minimal depth on every backend — an arbitrary
-    dropDuplicates pick would change generate order across runs."""
+def _fold(df: DataFrame) -> DataFrame:
+    """Keep the highest-precedence row per key of rows tagged `__src`
+    (SRC_FETCH > SRC_FRONTIER > SRC_LINK): one shuffle by key, each
+    input scanned once. This is the row-level operation an Iceberg
+    `MERGE INTO frontier` performs (fetch ≙ WHEN MATCHED UPDATE, links ≙
+    WHEN NOT MATCHED INSERT). Within one tag: last-wins by
+    (execute_time, execute_count) (RocksDBManager.java:167-171), then
+    (depth, url) so a URL discovered at several depths keeps its minimal
+    depth, then the canonical meta — for link rows only, which skips
+    the to_json for the non-link majority of rows. Keeps `__src`."""
     w = Window.partitionBy("key").orderBy(
+        F.col("__src").desc(),
         F.col("execute_time").desc_nulls_last(),
         F.col("execute_count").desc(),
         F.col("depth").asc(),
         F.col("url").asc(),
-        _meta_order().asc(),
+        F.when(F.col("__src") == SRC_LINK, _meta_order()).otherwise(F.lit("")).asc(),
     )
     return df.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
+
+
+def _dedup_seeds(seeds: DataFrame, force: bool) -> DataFrame:
+    """One seed row per key: forced seeds take the fetch slot (they
+    overwrite), plain seeds the link slot (they insert if absent)."""
+    return _core(_fold(_tagged(seeds, SRC_FETCH if force else SRC_LINK)))
 
 
 class RamFrontierStore:
@@ -93,7 +109,7 @@ class RamFrontierStore:
     def inject(self, seeds: DataFrame, force: bool = False) -> None:
         """Insert seeds; skip keys already present unless `force`
         (DBManager.inject contract, RocksDBManager.java:72-100)."""
-        seeds = _core(_dedup_last_wins(seeds))
+        seeds = _dedup_seeds(seeds, force)
         if self._df is None:
             self._set(seeds)
             return
@@ -107,52 +123,16 @@ class RamFrontierStore:
 
     # -- O9: merge -----------------------------------------------------
     def merge(self, fetched: DataFrame | None, links: DataFrame | None) -> int:
-        """Fold a round's segments: fetch last-wins, link first-wins.
-
-        Single-pass formulation: union the three sources tagged by
-        precedence (fetch=2 > frontier=1 > links=0) and keep the
-        highest-precedence row per key — ONE shuffle by key, each input
-        scanned exactly once. This is the row-level operation an Iceberg
-        `MERGE INTO frontier` performs (fetch ≙ WHEN MATCHED UPDATE,
-        links ≙ WHEN NOT MATCHED INSERT); the anti-join formulation it
-        replaces executed the frontier twice per round. Within-segment
-        ties: fetch side last-wins by (execute_time, execute_count)
-        (RocksDBManager.java:167-171), link side any-single-row
-        (":176-183") — broken deterministically by (depth, url).
-
-        Returns the number of newly inserted link rows (frontier
-        row-count delta: the fetch side only updates in place)."""
-        cur = self._df
-        assert cur is not None, "inject before merge"
+        """Fold a round's segments into the frontier with `_fold`: fetch
+        last-wins, link first-wins. Returns the number of newly inserted
+        link rows (frontier row-count delta: the fetch side only updates
+        in place)."""
+        assert self._df is not None, "inject before merge"
         before = self.count()
-        src = []
-        if fetched is not None:
-            src.append(_core(fetched).withColumn("__src", F.lit(2)))
-        src.append(_core(cur).withColumn("__src", F.lit(1)))
-        if links is not None:
-            src.append(_core(links).withColumn("__src", F.lit(0)))
-        merged = src[0]
-        for s in src[1:]:
-            merged = merged.unionByName(s)
-        # the meta tiebreak only matters for link rows (frontier and the
-        # deduped fetch segment are key-unique), so skip the to_json
-        # canonicalization for the non-link majority of rows
-        link_meta_order = F.when(F.col("__src") == 0, _meta_order()).otherwise(
-            F.lit("")
+        tagged = _union_tagged(
+            (fetched, SRC_FETCH), (self._df, SRC_FRONTIER), (links, SRC_LINK)
         )
-        w = Window.partitionBy("key").orderBy(
-            F.col("__src").desc(),
-            F.col("execute_time").desc_nulls_last(),
-            F.col("execute_count").desc(),
-            F.col("depth").asc(),
-            F.col("url").asc(),
-            link_meta_order.asc(),
-        )
-        self._set(
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter("__rn = 1")
-            .drop("__rn", "__src")
-        )
+        self._set(_core(_fold(tagged)))
         return self.count() - before
 
     def load(self) -> DataFrame:
@@ -176,11 +156,9 @@ class RamFrontierStore:
             self._count = 0 if self._df is None else self._df.count()
         return self._count
 
-    def cheap_count(self) -> int | None:
-        """Best-effort frontier size for heuristics (the crawler's
-        salt/bloom gates). None = unknown; callers must then assume
-        LARGE (enable the scale defenses) rather than trigger an
-        expensive exact count."""
+    def cheap_count(self) -> int:
+        """Frontier size for the crawler's salt/bloom gates: the
+        memoized exact count, so a gate costs no job after a merge."""
         return self.count()
 
     # -- lineage -------------------------------------------------------
@@ -256,257 +234,6 @@ class ParquetFrontierStore(RamFrontierStore):
 
     def log_round(self, **metrics) -> None:
         metrics.setdefault("snapshot_id", self._version)
-        metrics.setdefault("wall_ts", int(time.time() * 1000))
-        super().log_round(**metrics)
-        with open(os.path.join(self.path, "rounds.jsonl"), "a") as fh:
-            fh.write(json.dumps(metrics) + "\n")
-
-    def destroy(self) -> None:
-        super().destroy()
-        if os.path.exists(self.path):
-            shutil.rmtree(self.path)
-
-
-class LsmParquetFrontierStore(RamFrontierStore):
-    """Merge-on-read (LSM) frontier: per-round segment deltas instead of
-    full-frontier rewrites.
-
-    The CoW `ParquetFrontierStore` rewrites the whole frontier every
-    round — O(frontier) write amplification that cannot survive a 10^10
-    -row frontier (r01 verdict, perf note 3). This backend writes each
-    round's segments as a small delta file — O(round) — and resolves
-    state at READ time with one per-key precedence window over
-    base + deltas, exactly the reference's LSM deferral (segments folded
-    later, Fetcher.java:268-270 + RocksDB itself being an LSM tree).
-    Iceberg merge-on-read with periodic compaction is the managed form
-    of the same layout (iceberg_store.py is that deployment path).
-
-    Precedence per key (one window, single shuffle per read):
-      1. fetch rows (src 2), latest round first        — last-wins
-      2. the compacted base row (src 1)
-      3. link rows (src 0), EARLIEST round first       — insert-if-absent
-         across rounds, (depth asc, url asc) tiebreak within one
-    Read amplification is bounded by compacting every `compact_every`
-    deltas (fold -> new base, drop deltas). Commit protocol: delta dirs
-    are invisible until manifest.json is atomically replaced, so a crash
-    mid-round resumes from the last committed round with no partial
-    state.
-
-    Trade-off vs CoW, stated honestly: writes drop from O(frontier) to
-    O(round), while every read folds base+deltas (the window shuffle the
-    CoW backend paid once at write). Net win whenever frontier >> round
-    x compact_every — the 10^10 regime this engine targets.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        resumable: bool = False,
-        compact_every: int = 8,
-        track_new_links: bool = True,
-        estimate_counts: bool = True,
-    ):
-        super().__init__(spark)
-        self.path = path
-        self.compact_every = compact_every
-        # new-links metrics need a before/after state count — a full
-        # merge-on-read fold per round. At 10^10 keys turn this off
-        # (merge returns -1) and derive the figure from the merge job's
-        # output statistics / Iceberg snapshot summary instead.
-        self.track_new_links = track_new_links
-        # cheap_count() answers approximately via one HLL++ distinct
-        # pass over the RAW base∪delta keys (no precedence fold needed —
-        # distinct keys = final frontier size), which keeps the
-        # crawler's bloom-sizing gate alive without exact counting.
-        # Default ON: one ~3%-rsd HLL++ scan per round is cheap relative
-        # to a crawl round, and without it the 10^10 configuration
-        # (track_new_links=False) would silently disable the bloom
-        # pre-prune at exactly the scale it exists for.
-        self.estimate_counts = estimate_counts
-        self._base = -1  # base version, -1 = empty
-        self._deltas: list[int] = []
-        self._next_gen = 1
-        if not resumable and os.path.exists(path):
-            shutil.rmtree(path)
-        os.makedirs(path, exist_ok=True)
-        m = self._read_manifest()
-        if m is not None:
-            self._base = m["base"]
-            self._deltas = list(m["deltas"])
-            self._next_gen = m["next_gen"]
-        manifest = os.path.join(path, "rounds.jsonl")
-        if os.path.exists(manifest):
-            with open(manifest) as fh:
-                self.rounds = [json.loads(line) for line in fh]
-
-    # -- layout ----------------------------------------------------------
-    def _base_dir(self, v: int) -> str:
-        return os.path.join(self.path, f"base_v{v}")
-
-    def _delta_dir(self, gen: int) -> str:
-        return os.path.join(self.path, f"delta_{gen:06d}")
-
-    def _read_manifest(self) -> dict | None:
-        p = os.path.join(self.path, "manifest.json")
-        if not os.path.exists(p):
-            return None
-        with open(p) as fh:
-            return json.load(fh)
-
-    def _commit_manifest(self) -> None:
-        p = os.path.join(self.path, "manifest.json")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "base": self._base,
-                    "deltas": self._deltas,
-                    "next_gen": self._next_gen,
-                },
-                fh,
-            )
-        os.replace(tmp, p)  # atomic commit: uncommitted deltas stay invisible
-
-    # -- state resolution (the merge-on-read fold) -----------------------
-    def _tagged_sources(self) -> DataFrame | None:
-        srcs = []
-        if self._base >= 0:
-            srcs.append(
-                self.spark.read.parquet(self._base_dir(self._base))
-                .withColumn("__src", F.lit(1))
-                .withColumn("__gen", F.lit(0))
-            )
-        for gen in self._deltas:
-            d = self.spark.read.parquet(self._delta_dir(gen))
-            srcs.append(d.withColumn("__gen", F.lit(gen)))
-        if not srcs:
-            return None
-        out = srcs[0]
-        for s in srcs[1:]:
-            out = out.unionByName(s)
-        return out
-
-    def _resolve(self, tagged: DataFrame) -> DataFrame:
-        w = Window.partitionBy("key").orderBy(
-            F.col("__src").desc(),
-            # fetch rows: latest gen wins; link rows: earliest gen wins
-            F.when(F.col("__src") == 2, -F.col("__gen"))
-            .otherwise(F.col("__gen"))
-            .asc(),
-            F.col("depth").asc(),
-            F.col("url").asc(),
-            # link-only tiebreak (deltas are key-unique within a source)
-            F.when(F.col("__src") == 0, _meta_order()).otherwise(F.lit("")).asc(),
-        )
-        return (
-            tagged.withColumn("__rn", F.row_number().over(w))
-            .filter("__rn = 1")
-            .drop("__rn", "__src", "__gen")
-        )
-
-    def load(self) -> DataFrame:
-        tagged = self._tagged_sources()
-        assert tagged is not None, "store is empty"
-        return self._resolve(tagged)
-
-    def is_empty(self) -> bool:
-        return self._base < 0 and not self._deltas
-
-    def count(self) -> int:
-        if getattr(self, "_count", None) is None:
-            self._count = 0 if self.is_empty() else self.load().count()
-        return self._count
-
-    def cheap_count(self) -> int | None:
-        """Unlike the RAM/CoW stores, an exact count here is a full
-        merge-on-read fold; return the memoized value when one exists.
-        With `estimate_counts`: an approximate distinct-key count over
-        the unresolved base∪delta union (one scan, no precedence window
-        — distinct keys equal the final frontier size because nothing
-        deletes; Spark's native HLL++ aggregate, executor-merged, ~3%
-        rsd; memoized until the next write). The estimate applies
-        whatever the tracking mode — with tracking ON it spares the
-        exact fold that would otherwise run here before any merge has
-        memoized a count. Without it: None when tracking is off
-        (unknown -> salt heuristics assume large, bloom is skipped),
-        exact fold when on."""
-        if getattr(self, "_count", None) is not None:
-            return self._count
-        if self.estimate_counts:
-            if self.is_empty():
-                return 0
-            if getattr(self, "_approx", None) is None:
-                self._approx = (
-                    self._tagged_sources()
-                    .agg(F.approx_count_distinct("key", 0.03).alias("n"))
-                    .collect()[0]["n"]
-                )
-            return self._approx
-        if not self.track_new_links:
-            return None
-        return self.count()
-
-    # -- writes ----------------------------------------------------------
-    def _write_delta(self, df: DataFrame) -> None:
-        gen = self._next_gen
-        df.write.mode("overwrite").parquet(self._delta_dir(gen))
-        self._next_gen = gen + 1
-        self._deltas.append(gen)
-        self._commit_manifest()
-        self._count = None
-        self._approx = None  # distinct-key estimate is stale too
-        if len(self._deltas) >= self.compact_every:
-            self._compact()
-
-    def _compact(self) -> None:
-        """Fold base+deltas into a new base (one O(state) write per
-        `compact_every` rounds — the amortized cost the CoW backend paid
-        every round); old dirs dropped after the manifest commit."""
-        resolved = self.load()
-        v = self._base + 1
-        resolved.write.mode("overwrite").parquet(self._base_dir(v))
-        old_base, old_deltas = self._base, list(self._deltas)
-        self._base, self._deltas = v, []
-        self._commit_manifest()
-        if old_base >= 0:
-            shutil.rmtree(self._base_dir(old_base), ignore_errors=True)
-        for gen in old_deltas:
-            shutil.rmtree(self._delta_dir(gen), ignore_errors=True)
-
-    def inject(self, seeds: DataFrame, force: bool = False) -> None:
-        """Seeds as a delta: forced seeds ride the fetch slot (src 2,
-        overwrite-matched), plain seeds the link slot (src 0,
-        insert-if-absent) — O1 without touching existing state."""
-        seeds = _core(_dedup_last_wins(seeds))
-        self._write_delta(seeds.withColumn("__src", F.lit(2 if force else 0)))
-
-    def merge(self, fetched: DataFrame | None, links: DataFrame | None) -> int:
-        before = self.count() if self.track_new_links else 0
-        parts = []
-        if fetched is not None:
-            parts.append(
-                _core(_dedup_last_wins(fetched)).withColumn("__src", F.lit(2))
-            )
-        if links is not None:
-            parts.append(
-                _core(_dedup_links_first_wins(links)).withColumn(
-                    "__src", F.lit(0)
-                )
-            )
-        if not parts:
-            return 0
-        seg = parts[0]
-        for p in parts[1:]:
-            seg = seg.unionByName(p)
-        self._write_delta(seg)
-        if not self.track_new_links:
-            return -1
-        return self.count() - before
-
-    # -- lineage ---------------------------------------------------------
-    def log_round(self, **metrics) -> None:
-        metrics.setdefault("snapshot_id", self._next_gen - 1)
         metrics.setdefault("wall_ts", int(time.time() * 1000))
         super().log_round(**metrics)
         with open(os.path.join(self.path, "rounds.jsonl"), "a") as fh:
