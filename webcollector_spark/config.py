@@ -207,11 +207,14 @@ class CrawlerConfig:
     # Target generated rows per fetch task: the fetch stage uses
     # min(fetch_parallelism, ceil(n_gen / rows_per_fetch_task)) partitions
     # so small rounds don't pay per-task Python-worker setup for empty
-    # partitions. An empty engine task costs ~120-150 ms on a 4-core box
-    # (tools/worker_task_cost.py); without _zipguard.py, pyspark's
-    # per-task importlib.invalidate_caches() would add ~190-360 ms by
-    # re-reading the pyspark/py4j/spark-core zip directories once per
-    # zipimporter.
+    # partitions. A one-task empty engine job costs ~130-150 ms on a
+    # 4-core box (tools/worker_task_cost.py): ~40-50 ms from collect()
+    # to the function's first line, ~40 ms for it to read its one-row
+    # Arrow batch, ~15-18 ms back to the driver. Worker-side set-up is
+    # under 1 ms of that: invalidate_caches 0.1 ms, UDF unpickle
+    # 0.04 ms (without _zipguard.py, pyspark's per-task
+    # importlib.invalidate_caches() would add ~190-360 ms by re-reading
+    # the pyspark/py4j/spark-core zip directories once per zipimporter).
     rows_per_fetch_task: int = 500
 
     # RegexRule seeds: "+regex" positive / "-regex" negative

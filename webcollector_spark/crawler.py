@@ -27,6 +27,7 @@ from dataclasses import dataclass, field
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from webcollector_spark.config import CrawlerConfig
 from webcollector_spark.operators.fetch import CODE_ROBOTS_DENIED
@@ -43,9 +44,13 @@ from webcollector_spark.schema import (
     host_of,
 )
 from webcollector_spark.sources.requester import Requester
+from webcollector_spark.session import local_frame
 from webcollector_spark.store import ParquetFrontierStore, RamFrontierStore
 
 _CORE_COLS = [f.name for f in FRONTIER_SCHEMA.fields]
+_CANDIDATE_SCHEMA = T.StructType(
+    [T.StructField("host", T.StringType()), T.StructField("is_cand", T.BooleanType())]
+)
 
 
 def seed_rows(
@@ -56,7 +61,8 @@ def seed_rows(
 ) -> DataFrame:
     """Build frontier rows for seeds: URL strings, (key, url) pairs, or
     CrawlDatum objects (key != url tasks with type/meta — the
-    DemoBingCrawler pattern, CrawlDatum.java:54-59 + meta plumbing)."""
+    DemoBingCrawler pattern, CrawlDatum.java:54-59 + meta plumbing).
+    The frame is a `LocalRelation` (`session.local_frame`)."""
     from webcollector_spark.datum import CrawlDatum
 
     rows = []
@@ -69,7 +75,7 @@ def seed_rows(
             (key, url, STATUS_DB_UNEXECUTED, None, 0, CODE_NOT_SET, None, None,
              host_of(url), depth, priority)
         )
-    return spark.createDataFrame(rows, schema=FRONTIER_SCHEMA)
+    return local_frame(spark, rows, FRONTIER_SCHEMA)
 
 
 @dataclass
@@ -616,9 +622,9 @@ class BreadthCrawler:
         AFTER the scan (watchlists, repeated probes of one sketch)."""
         if not self._link_hosts:
             return False
-        cand = self.spark.createDataFrame(
-            [(h,) for h in self._link_hosts], "host string"
-        ).withColumn("is_cand", F.lit(True))
+        cand = local_frame(
+            self.spark, [(h, True) for h in self._link_hosts], _CANDIDATE_SCHEMA
+        )
         per_host = (
             frontier.join(F.broadcast(cand), "host", "left")
             .groupBy(

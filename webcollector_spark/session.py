@@ -5,13 +5,43 @@ set per-executor: AQE on (runtime skew-join + partition coalescing),
 Arrow on (every hot UDF is iterator-of-Arrow-batches), shuffle
 partitions sized to cores (not the 200 default), UTC session timezone so
 DuckDB-oracle comparisons are stable.
+
+PySpark 4's DataFrame query-context capture
+(`spark.python.sql.dataFrameDebugging.enabled`) is off: with it on,
+every DataFrame and Column call pays a `getActiveSession`, a conf read
+and an origin set/clear over py4j to record its Python call site for
+error messages. A crawl round builds its plans from thousands of such
+calls: in one `crawl` benchmark pass, turning the capture off cut the
+driver's py4j round trips by about 36% (tools/round_cost.py).
+`extra_conf` can turn it back on.
+
+`local_frame` builds small driver-side frames (seeds, probe candidates,
+the rounds manifest) as a `LocalRelation` through Arrow. A frame built
+from a Python list is a pickled Python RDD instead, and every scan of it
+starts a Python worker.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def driver_memory(total_mb: int) -> str:
+    """Driver heap for a machine with `total_mb` of memory: a quarter of
+    it, between 1 and 8 GiB. In local mode the driver JVM is the only
+    JVM; the rest is left to the Python workers and the page cache."""
+    return f"{max(1, min(8, total_mb // 4 // 1024))}g"
+
+
+def _mem_total_mb() -> int:
+    with open("/proc/meminfo") as fh:
+        for line in fh:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) // 1024
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
 
 
 def get_spark(
@@ -26,10 +56,12 @@ def get_spark(
     core count (local mode: one JVM, shuffles hit local disk — more
     partitions than cores just adds scheduling overhead; on a real
     cluster this conf is sized to total executor cores and AQE coalesces
-    from there).
+    from there). The driver heap is ``SPARK_GRAFT_DRIVER_MEM`` when set,
+    else `driver_memory` of this machine's MemTotal.
     """
     if shuffle_partitions is None:
         shuffle_partitions = os.cpu_count() or 8 if cores == "*" else int(cores)
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory(_mem_total_mb())
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -41,12 +73,26 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """`rows` (tuples in `schema`'s field order) as a `LocalRelation`,
+    built through one Arrow table; a null in a non-nullable field raises.
+    Unlike `createDataFrame(pandas_df)`, this path has no silent
+    non-Arrow fallback and keeps an empty frame local too."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in schema.fields]
+    table = pa.Table.from_arrays(cols, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

@@ -20,6 +20,14 @@ RocksDBManager.java:160-197), all in `_fold`:
   * link  segment:  put() only if absent   -> FIRST-WINS across rounds
   * within a round, the KV segment itself dedups by key (last write wins
     for fetch, any-single-row for links, made deterministic here).
+
+Row counts come from the commit itself: the committing action (the
+eager `localCheckpoint`, or the parquet write) carries a
+`count(1)` Observation, so `count()`/`cheap_count()` and the
+`merge` row-count delta start no Spark job of their own. Only a store
+that has not committed in this process (a resumed snapshot) counts
+once. Snapshots are read with `FRONTIER_SCHEMA`, so opening one runs
+no schema-inference job either.
 """
 
 from __future__ import annotations
@@ -30,10 +38,11 @@ import shutil
 import time
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from webcollector_spark.schema import FRONTIER_SCHEMA
+from webcollector_spark.session import local_frame
 
 _CORE_COLS = [f.name for f in FRONTIER_SCHEMA.fields]
 
@@ -91,6 +100,12 @@ def _fold(df: DataFrame) -> DataFrame:
     return df.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
 
 
+def _observed(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """`df` with a row-count Observation that the next action fills."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
 def _dedup_seeds(seeds: DataFrame, force: bool) -> DataFrame:
     """One seed row per key: forced seeds take the fetch slot (they
     overwrite), plain seeds the link slot (they insert if absent)."""
@@ -103,6 +118,7 @@ class RamFrontierStore:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._df: DataFrame | None = None
+        self._count: int | None = None
         self.rounds: list[dict] = []
 
     # -- O1: inject ----------------------------------------------------
@@ -146,13 +162,14 @@ class RamFrontierStore:
         # localCheckpoint truncates the iterative-loop lineage; eager so
         # each round's plan is materialized once (the reference's
         # per-round segment fold is likewise eager, Fetcher.java:310).
+        df, obs = _observed(df)
         self._df = df.localCheckpoint(eager=True)
-        self._count: int | None = None
+        self._count = obs.get["n"]
 
     def count(self) -> int:
-        """Frontier row count; memoized per snapshot (counting a
-        checkpointed/persisted DataFrame is cheap but still a job)."""
-        if getattr(self, "_count", None) is None:
+        """Frontier row count: the last commit's observed count, or one
+        count job for a snapshot this process did not commit."""
+        if self._count is None:
             self._count = 0 if self._df is None else self._df.count()
         return self._count
 
@@ -177,7 +194,7 @@ class RamFrontierStore:
         rows = [
             tuple(int(r.get(c, -1)) for c in cols) for r in self.rounds
         ]
-        return self.spark.createDataFrame(rows, schema=ROUNDS_SCHEMA)
+        return local_frame(self.spark, rows, ROUNDS_SCHEMA)
 
     def destroy(self) -> None:
         self._df = None
@@ -205,7 +222,7 @@ class ParquetFrontierStore(RamFrontierStore):
         )
         if versions:
             self._version = versions[-1]
-            self._df = spark.read.parquet(self._vdir(self._version))
+            self._df = self._read(self._version)
         manifest = os.path.join(path, "rounds.jsonl")
         if os.path.exists(manifest):
             with open(manifest) as fh:
@@ -213,6 +230,9 @@ class ParquetFrontierStore(RamFrontierStore):
 
     def _vdir(self, v: int) -> str:
         return os.path.join(self.path, f"frontier_v{v}")
+
+    def _read(self, v: int) -> DataFrame:
+        return self.spark.read.schema(FRONTIER_SCHEMA).parquet(self._vdir(v))
 
     def _set(self, df: DataFrame) -> None:
         v = self._version + 1
@@ -223,10 +243,11 @@ class ParquetFrontierStore(RamFrontierStore):
         # repays. The production path clusters by bucket(host) via the
         # Iceberg DDL (iceberg_store.py) where the layout IS visible to
         # the per-host generate window and the politeness co-location.
-        _core(df).write.mode("overwrite").parquet(self._vdir(v))
+        df, obs = _observed(_core(df))
+        df.write.mode("overwrite").parquet(self._vdir(v))
         self._version = v
-        self._df = self.spark.read.parquet(self._vdir(v))
-        self._count = None
+        self._df = self._read(v)
+        self._count = obs.get["n"]
         # retain last 2 snapshots (resume needs only the latest)
         old = self._vdir(v - 2)
         if v >= 2 and os.path.exists(old):
