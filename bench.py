@@ -128,7 +128,7 @@ def crawl_bench(
     cfg = CrawlerConfig(
         per_host_top_k=50_000,
         bloom_capacity=200_000,
-        fetch_partitions=cpus,
+        threads=cpus,
     )
     # warm-up (untimed): spin up Python workers + JIT the round's
     # codegen so the timed figure is sustained throughput, not

@@ -84,7 +84,7 @@ def test_politeness_rate_bounds_fetch(spark, small_web):
     req = SyntheticRequester(graph.to_dict("records"), corpus.to_dict("records"))
     one_host = [u for u in graph["url"] if u.startswith("http://h000")][:8]
     assert len(one_host) >= 5
-    cfg = CrawlerConfig(per_host_rate=20.0, fetch_partitions=8)
+    cfg = CrawlerConfig(per_host_rate=20.0, threads=8)
     gen = seed_rows(spark, one_host)
     t0 = time.monotonic()
     n = fetch_op(gen, req, cfg).count()
@@ -301,7 +301,7 @@ Crawl-delay: 0.05
         )
         # strict mode forces host co-location so the robots delay is a
         # true per-host cap (no separate rate budget needed)
-        cfg = CrawlerConfig(fetch_partitions=4, strict_robots_delay=True)
+        cfg = CrawlerConfig(threads=4, strict_robots_delay=True)
         gen = seed_rows(spark, urls)
         import time as _t
 
@@ -421,7 +421,7 @@ class TestHostBudgetLiveClamp:
 
     def test_learn_folds_max_and_skips_zero(self, spark, small_web):
         from webcollector_spark.config import CrawlerConfig
-        from webcollector_spark.crawler import BreadthCrawler
+        from webcollector_spark.crawler import BreadthCrawler, host_round_stats
         from webcollector_spark.sources.requester import SyntheticRequester
 
         graph, corpus = small_web
@@ -431,42 +431,47 @@ class TestHostBudgetLiveClamp:
         cfg = CrawlerConfig(host_budget_target_ms=1000)
         c = BreadthCrawler(spark, req, config=cfg)
 
-        def fetched(rows):
-            return spark.createDataFrame(
-                rows, "host string, robots_delay_ms long"
-            )
+        def learn(rows):
+            # one fetched row per (host, robots_delay_ms): a success
+            # with one link, so every fetch is a trial and a yield
+            c._fold_host_state(host_round_stats(spark.createDataFrame(
+                [(h, d, 5, 200, 1, ["http://x/"], None) for h, d in rows],
+                "host string, robots_delay_ms long, status int, code int,"
+                " execute_count int, links array<string>,"
+                " next_datums array<string>",
+            )))
+            state = {r.host: r for r in c._host_state.collect()}
+            return state, {
+                h: r.delay_ms for h, r in state.items() if r.delay_ms is not None
+            }
 
-        c._learn_host_delays(
-            fetched([("a.test", 500), ("a.test", 200), ("z.test", 0),
-                     ("n.test", None)])
-        )
-        got = {r.host: r.delay_ms for r in c._host_delays.collect()}
-        # per-round max; 0/null rows never enter (DIV-by-zero guard)
+        state, got = learn([("a.test", 500), ("a.test", 200), ("z.test", 0),
+                            ("n.test", None)])
+        # per-round max; 0/null rows never learn a delay (DIV-by-zero
+        # guard) — they keep a null one, which means the full k
         assert got == {"a.test": 500}
+        assert state["z.test"].delay_ms is None
+        assert state["n.test"].delay_ms is None
         # later rounds fold MAX, never last-wins (conservative politeness)
-        c._learn_host_delays(fetched([("a.test", 100), ("b.test", 300)]))
-        got = {r.host: r.delay_ms for r in c._host_delays.collect()}
+        state, got = learn([("a.test", 100), ("b.test", 300)])
         assert got == {"a.test": 500, "b.test": 300}
+        # trials and yields are summed across the two rounds
+        assert (state["a.test"].n_trials, state["a.test"].n_yield) == (3, 3)
+        assert (state["b.test"].n_trials, state["b.test"].n_yield) == (1, 1)
 
-    def test_configured_gap_is_max_of_rate_and_interval(self, spark, small_web):
-        from webcollector_spark.config import CrawlerConfig
-        from webcollector_spark.crawler import BreadthCrawler
-        from webcollector_spark.sources.requester import SyntheticRequester
+    def test_configured_gap_is_max_of_rate_and_interval(self):
+        from webcollector_spark.operators.fetch import _HostBucket, min_gap_ms
 
-        graph, corpus = small_web
-        req = SyntheticRequester(
-            graph.to_dict("records"), corpus.to_dict("records")
-        )
-
-        def gap(**kw):
-            return BreadthCrawler(
-                spark, req, config=CrawlerConfig(**kw)
-            )._configured_gap_ms()
+        def gap(rate=0.0, interval=0):
+            ms = min_gap_ms(rate, interval)
+            # the fetch bucket enforces the same gap the clamp prices
+            assert _HostBucket(rate, interval).min_gap == ms / 1000.0
+            return ms
 
         assert gap() == 0                              # unlimited
-        assert gap(per_host_rate=4.0) == 250           # 1000/rate
-        assert gap(execute_interval_ms=400) == 400
-        assert gap(per_host_rate=4.0, execute_interval_ms=400) == 400
+        assert gap(rate=4.0) == 250                    # 1000/rate
+        assert gap(interval=400) == 400
+        assert gap(rate=4.0, interval=400) == 400
 
     def test_learned_delay_clamps_next_round(self, spark):
         """End-to-end: round 1 fetches a Crawl-delay-0.4s host unclamped,
@@ -499,15 +504,103 @@ class TestHostBudgetLiveClamp:
         cfg = CrawlerConfig(
             per_host_top_k=10,
             host_budget_target_ms=1000,
-            fetch_partitions=2,
+            threads=2,
         )
         c = RamCrawler(spark, req, config=cfg)
         c.add_seed(urls[:4])
         c.start(2)
         # round 1 ran unclamped (no learned delays yet) and learned 400ms
         assert c.metrics[0].generated == 4
-        got = {r.host: r.delay_ms for r in c._host_delays.collect()}
+        got = {r.host: r.delay_ms for r in c._host_state.collect()}
         assert got == {host: 400}
         # round 2: fit_k = 1000 DIV 400 = 2, despite k_per_host=10 and
         # >2 pending links (pages 04..06 discovered by round 1)
         assert len(c.metrics) >= 2 and c.metrics[1].generated == 2
+
+    @staticmethod
+    def _hub_crawler(spark, tmp_path, hosts, robots, **kw):
+        """A hub seed linking to 12 pages on each of `hosts`; pages of a
+        host named rich*/slow* link back to their host's first page (a
+        yield), the others link nowhere. Returns the crawler and a
+        function giving {host: rows fetched} for one round."""
+        from webcollector_spark.config import CrawlerConfig
+        from webcollector_spark.crawler import RamCrawler
+        from webcollector_spark.sources.requester import SyntheticRequester
+
+        def page(url, links):
+            return {"url": url, "http_code": 200, "location": None,
+                    "image_id": None, "out_links": links}
+
+        seed = "http://hub.test/seed"
+        pages = {h: [f"http://{h}/p{i:02d}" for i in range(12)] for h in hosts}
+        graph = [page(seed, [u for us in pages.values() for u in us])]
+        for h, us in pages.items():
+            back = [us[0]] if h.startswith(("rich", "slow")) else []
+            graph += [page(u, back) for u in us]
+        hist = str(tmp_path / "hist")
+        cfg = CrawlerConfig(fetched_history_path=hist, **kw)
+        c = RamCrawler(spark, SyntheticRequester(graph, [], robots=robots),
+                       config=cfg)
+        c.add_seed([seed])
+
+        def fetched_in(r):
+            rows = spark.read.parquet(hist).filter(F.col("round") == r)
+            return {x["host"]: x["count"]
+                    for x in rows.groupBy("host").count().collect()}
+
+        return c, fetched_in
+
+    def test_host_without_delay_keeps_full_k(self, spark, tmp_path):
+        """Only slow.test declares a Crawl-delay; fast.test has no
+        learned delay and must keep the full k in round 2 — a null fit,
+        never the floor of 1 (greatest() skips nulls)."""
+        c, fetched_in = self._hub_crawler(
+            spark, tmp_path, ["slow.test", "fast.test"],
+            {"slow.test": "User-agent: *\nCrawl-delay: 0.4"},
+            per_host_top_k=3, host_budget_target_ms=1000,
+        )
+        c.start(3)
+        # round 1: nothing learned yet about either host -> full k
+        assert fetched_in(1) == {"slow.test": 3, "fast.test": 3}
+        # round 2: slow.test clamped to 1000 DIV 400 = 2, fast.test not
+        assert fetched_in(2) == {"slow.test": 2, "fast.test": 3}
+
+    def test_delay_and_ucb_budgets_take_the_per_host_minimum(
+        self, spark, tmp_path
+    ):
+        """host_budget_target_ms with ucb_host_budget: each host's round-2
+        budget is the least of its Crawl-delay fit and its UCB budget.
+        dead.test (delayed, unproductive) is bound by UCB, slow.test
+        (heavily delayed, productive) by its delay, rich.test (no delay)
+        by UCB alone."""
+        from webcollector_spark.operators.rank import ucb_budget_k
+
+        k = 6
+        c, fetched_in = self._hub_crawler(
+            spark, tmp_path, ["dead.test", "slow.test", "rich.test"],
+            {"dead.test": "User-agent: *\nCrawl-delay: 0.2",
+             "slow.test": "User-agent: *\nCrawl-delay: 0.5"},
+            per_host_top_k=k, host_budget_target_ms=1000,
+            ucb_host_budget=True,
+        )
+        c.start(2)  # round 0: the hub; round 1: k pages of every host
+        assert fetched_in(1) == {"dead.test": k, "slow.test": k,
+                                 "rich.test": k}
+        state = c._host_state
+        ucb = {r["host"]: r["__fit_k"]
+               for r in ucb_budget_k(state, k).collect()}
+        delay = {r["host"]: 1000 // r["delay_ms"]
+                 for r in state.collect() if r["delay_ms"] is not None}
+        assert delay == {"dead.test": 5, "slow.test": 2}
+        # the two budgets disagree in both directions, so neither one
+        # alone (nor their max) reproduces the schedule
+        assert ucb["dead.test"] < delay["dead.test"]
+        assert delay["slow.test"] < ucb["slow.test"]
+        assert ucb["rich.test"] < k
+
+        c.start(3)
+        assert fetched_in(2) == {
+            "dead.test": min(ucb["dead.test"], delay["dead.test"]),
+            "slow.test": min(ucb["slow.test"], delay["slow.test"]),
+            "rich.test": ucb["rich.test"],
+        }

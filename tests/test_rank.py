@@ -178,10 +178,9 @@ def test_priorities_from_ranks(spark):
 def test_rank_ordering_survives_adaptive_salting(spark, tmp_path):
     """VERDICT r3 item 6: pagerank -> merge -> SALTED generate ->
     ordering, end to end at skew. One host owns the whole pending
-    frontier, so the adaptive probe (_frontier_has_hot_host) activates
-    the two-phase salted window — and the salted top-k must still emit
-    the highest-rank pages first (the phase-1 per-bucket supersets must
-    never drop a true top-k row). As in
+    frontier, and salt_min_frontier=0 forces the two-phase salted window
+    — the salted top-k must still emit the highest-rank pages first (the
+    phase-1 per-bucket supersets must never drop a true top-k row). As in
     test_pagerank_scheduling_through_start, rank order and key order
     disagree, so the schedule can only be explained by the rank-driven
     priorities surviving the salted path."""
@@ -215,8 +214,7 @@ def test_rank_ordering_survives_adaptive_salting(spark, tmp_path):
         rank_priorities_every=1,
         fetched_history_path=hist,
         pagerank_iters=3,
-        adaptive_salt=True,
-        hot_host_frac=0.2,
+        salt_min_frontier=0,
         host_salt_buckets=4,
     )
     c = RamCrawler(spark, SyntheticRequester(graph, []), config=cfg)
@@ -505,7 +503,7 @@ def test_ucb_budget_through_start_throttles_dead_host(spark):
     # round 1: both hosts unseen -> full k each (optimistic init)
     assert sched[(1, "dead.test")] == 3 and sched[(1, "rich.test")] == 3
     # round 2: dead.test sampled 3x with 0 yield -> throttled below the
-    # productive host, but NOT starved (floor >= ucb_min_k)
+    # productive host, but NOT starved (floor of 1 pick)
     assert 1 <= sched[(2, "dead.test")] < sched[(2, "rich.test")]
     # still pending dead rows -> it was the budget, not exhaustion
     pending_dead = (
@@ -515,7 +513,7 @@ def test_ucb_budget_through_start_throttles_dead_host(spark):
     )
     assert pending_dead > 0
     # bandit state accumulated across rounds
-    state = {r["host"]: r for r in c._host_bandit.collect()}
+    state = {r["host"]: r for r in c._host_state.collect()}
     assert state["dead.test"]["n_yield"] == 0
     assert state["dead.test"]["n_trials"] >= 3
     assert state["rich.test"]["n_yield"] >= 3

@@ -83,81 +83,3 @@ class TestCountMin:
         # cold items are each 10/7000 = 0.14% -- far below threshold,
         # so at w=256 none should cross 50% even with collisions
         assert hot == {"hot"}
-
-
-class TestAdaptiveSalt:
-    """Measured-skew salting wired through the round loop: last round's
-    link hosts probed against the frontier with one exact bounded-output
-    scan decide whether the next generate window pays the salted
-    two-phase (crawler._frontier_has_hot_host)."""
-
-    @staticmethod
-    def _crawl(spark, graph, hot_frac):
-        from webcollector_spark.config import CrawlerConfig
-        from webcollector_spark.crawler import RamCrawler
-        from webcollector_spark.sources.requester import SyntheticRequester
-
-        cfg = CrawlerConfig(
-            per_host_top_k=100,
-            adaptive_salt=True,
-            hot_host_frac=hot_frac,
-            host_salt_buckets=8,
-        )
-        c = RamCrawler(spark, SyntheticRequester(graph, []), config=cfg)
-        c.add_seed(graph[0]["url"])
-        c.start(2)
-        return c
-
-    @staticmethod
-    def _graph(seed_host, leaf_hosts, n_leaves):
-        def page(url, links):
-            return {"url": url, "http_code": 200, "location": None,
-                    "image_id": None, "out_links": links}
-
-        leaves = [
-            f"http://{leaf_hosts[i % len(leaf_hosts)]}/p{i}"
-            for i in range(n_leaves)
-        ]
-        return [page(f"http://{seed_host}/seed", leaves)] + [
-            page(u, []) for u in leaves
-        ]
-
-    def test_salted_path_activates_on_skew(self, spark):
-        # all 40 discovered links land on ONE host -> it holds ~97% of
-        # the round-1 frontier, far above the 20% trigger
-        g = self._graph("seed.test", ["hot.test"], 40)
-        c = self._crawl(spark, g, hot_frac=0.2)
-        # round 0: no candidates yet -> size gate (tiny frontier) -> 1;
-        # round 1: hot.test detected -> salted window
-        assert c.salt_history == [1, 8], c.salt_history
-
-    def test_stays_unsalted_without_skew(self, spark):
-        # links spread over 10 hosts, each ~9% of the frontier -> below
-        # the 20% trigger; the salted phase is never paid
-        g = self._graph("seed.test", [f"h{i}.test" for i in range(10)], 40)
-        c = self._crawl(spark, g, hot_frac=0.2)
-        assert c.salt_history == [1, 1], c.salt_history
-
-    def test_candidate_set_is_bounded(self, spark):
-        # salt_candidates caps the driver collect: 10 link hosts but
-        # only the top 2 receivers are kept as candidates
-        from webcollector_spark.config import CrawlerConfig
-        from webcollector_spark.crawler import RamCrawler
-        from webcollector_spark.sources.requester import SyntheticRequester
-
-        g = self._graph("seed.test", [f"h{i}.test" for i in range(10)], 40)
-        cfg = CrawlerConfig(
-            per_host_top_k=100,
-            adaptive_salt=True,
-            hot_host_frac=0.2,
-            host_salt_buckets=8,
-            salt_candidates=2,
-        )
-        c = RamCrawler(spark, SyntheticRequester(g, []), config=cfg)
-        c.add_seed(g[0]["url"])
-        # after round 0 the candidate set reflects the seed's 40 links
-        # across 10 hosts — capped to the top 2 receivers
-        c.start(1)
-        assert len(c._link_hosts) == 2
-        c.start(2)
-        assert c.salt_history == [1, 1]

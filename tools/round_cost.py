@@ -120,7 +120,7 @@ def instrument(meter: Meter) -> None:
         meter.wrap(store.RamFrontierStore, attr, f"store.{attr}")
     for attr in ("__init__", "_set", "log_round"):
         meter.wrap(store.ParquetFrontierStore, attr, f"parquet.{attr}")
-    for attr in ("__post_init__", "start", "_frontier_has_hot_host"):
+    for attr in ("__post_init__", "start"):
         meter.wrap(crawler.BreadthCrawler, attr, f"crawler.{attr}")
     for attr in ("seed_rows", "generate", "generate_per_host", "fetch_op",
                  "discovered_links", "build_bloom", "seen_filter"):

@@ -80,7 +80,7 @@ def run_single(cores: int) -> None:
     cfg = CrawlerConfig(
         per_host_top_k=N_URLS,
         bloom_capacity=0,
-        fetch_partitions=cores * 4,
+        threads=cores * 4,
         rows_per_fetch_task=1000,
     )
     crawler = RamCrawler(spark, req, config=cfg)

@@ -96,10 +96,10 @@ def main() -> None:
     )
     big.unpersist()
 
-    # 1b. adaptive-salt detection cost over the same 4M-row skewed
+    # 1b. hot-host detection cost over the same 4M-row skewed
     # frontier, three probes:
     #   detect_cm        - count-min hot_items with a small candidate
-    #                      set (what the round loop wires in)
+    #                      set
     #   detect_groupby   - naive full groupBy(host).count() skew scan
     #   detect_filtered  - exact candidate-filtered count (broadcast
     #                      semi-join + groupBy; bounded output too)
@@ -175,9 +175,9 @@ def main() -> None:
     )
     n_gen = gen.count()
     out["fetch_rows"] = n_gen
-    cfg_rr = CrawlerConfig(fetch_partitions=64, rows_per_fetch_task=500)
+    cfg_rr = CrawlerConfig(threads=64, rows_per_fetch_task=500)
     cfg_co = CrawlerConfig(
-        fetch_partitions=64, rows_per_fetch_task=500, per_host_rate=1e9
+        threads=64, rows_per_fetch_task=500, per_host_rate=1e9
     )
     out["fetch_roundrobin_sec"] = timed(
         lambda: fetch_op(gen, bc, cfg_rr, n_rows=n_gen).agg(F.count("*")).collect(),

@@ -23,7 +23,7 @@ class CrawlerConfig:
     # (util/Config.java:40, applied fetcher/Fetcher.java:275-281).
     execute_interval_ms: int = 0
     # Fetch pool parallelism (crawler/Crawler.java:60). In Spark this
-    # becomes the number of fetch partitions.
+    # becomes the most fetch partitions a round uses.
     threads: int = 50
     connect_timeout_ms: int = 3000   # util/Config.java:34
     read_timeout_ms: int = 10000     # util/Config.java:35
@@ -84,23 +84,8 @@ class CrawlerConfig:
     # Only salt once the frontier is big enough for one host's window
     # partition to matter (measured crossover ~10^6 rows — below it the
     # extra shuffle costs more than the skew, tools/skew_bench.py).
+    # Salting never changes which rows generate returns, only its cost.
     salt_min_frontier: int = 1_000_000
-    # Adaptive hot-host salting: instead of the size-only gate above,
-    # probe last round's link hosts (a small candidate set) against the
-    # frontier with ONE exact bounded-output scan
-    # (crawler._frontier_has_hot_host: broadcast-mark candidates, group
-    # by candidate-host-or-NULL — per-candidate counts + total in one
-    # job, output <= |candidates|+1 rows at any host cardinality) and
-    # salt the generate window only when some candidate actually holds
-    # > hot_host_frac of frontier rows. A naive groupBy(host).count()
-    # skew probe shuffles one row per distinct host (10^8 at web
-    # scale); the count-min alternative (operators/sketch.py hot_items)
-    # is also bounded but measured 3-4x slower here because exactness
-    # costs nothing when candidates are known up front
-    # (tools/skew_bench.py detect_* rows). Round 0 (no candidates yet)
-    # falls back to the size gate.
-    adaptive_salt: bool = False
-    hot_host_frac: float = 0.2
     # Politeness-aware round sizing (graft; the reference tunes topN
     # blind — a fixed number against a global executeInterval,
     # crawldb/Generator.java:49-78 + util/Config.java). When > 0 and
@@ -114,12 +99,6 @@ class CrawlerConfig:
     # no inter-request gap, so it can never overshoot the target, and
     # a slow host keeps making progress instead of starving forever.
     host_budget_target_ms: int = 0
-    # Cap on the adaptive-salt candidate set (top receivers by link
-    # count via TakeOrdered): bounds the driver collect and the next
-    # round's broadcast at any link-fan-out. A hot-enough host is
-    # overwhelmingly among the biggest link receivers; a miss degrades
-    # to the size-gate fallback, never to an error.
-    salt_candidates: int = 1024
     # Bloom filter sizing for the distributed URL-seen pre-prune.
     bloom_capacity: int = 1_000_000
     bloom_fpp: float = 0.01
@@ -194,18 +173,15 @@ class CrawlerConfig:
     # normalized so the best-scoring host keeps the full per_host_top_k.
     # Unseen hosts carry no history row and keep the full k (the
     # optimistic initialization UCB requires), well-sampled dead ends
-    # (link farms pointing nowhere, exhausted archives) decay toward
-    # ucb_min_k instead of burning politeness budget forever. Composes
-    # with host_budget_target_ms by taking the per-host MINIMUM of the
-    # two fit tables. State is an O(hosts-seen) frame folded per round
-    # (same lifecycle as the learned Crawl-delays); advisory on resume.
+    # (link farms pointing nowhere, exhausted archives) decay toward one
+    # pick per round instead of burning politeness budget forever
+    # (exploration constant c = 2). Composes with host_budget_target_ms
+    # by taking the per-host MINIMUM of the two budgets. Both read one
+    # O(hosts-seen) state frame the crawler folds per round; advisory on
+    # resume.
     ucb_host_budget: bool = False
-    ucb_c: float = 2.0
-    ucb_min_k: int = 1
-    # Number of partitions for the fetch stage (defaults to `threads`).
-    fetch_partitions: int = 0
     # Target generated rows per fetch task: the fetch stage uses
-    # min(fetch_parallelism, ceil(n_gen / rows_per_fetch_task)) partitions
+    # min(threads, ceil(n_gen / rows_per_fetch_task)) partitions
     # so small rounds don't pay per-task Python-worker setup for empty
     # partitions. A one-task empty engine job costs ~130-150 ms on a
     # 4-core box (tools/worker_task_cost.py): ~40-50 ms from collect()
@@ -233,6 +209,3 @@ class CrawlerConfig:
     # row-dict -> bool (Arrow-batched inside the generate scan, before
     # topN — the reference's filter-then-count order; must be picklable).
     generator_filter: object | None = None
-
-    def fetch_parallelism(self) -> int:
-        return self.fetch_partitions or self.threads

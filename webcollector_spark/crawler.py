@@ -27,10 +27,9 @@ from dataclasses import dataclass, field
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from webcollector_spark.config import CrawlerConfig
-from webcollector_spark.operators.fetch import CODE_ROBOTS_DENIED
+from webcollector_spark.operators.fetch import CODE_ROBOTS_DENIED, min_gap_ms
 from webcollector_spark.operators.fetch import fetch as fetch_op
 from webcollector_spark.operators.generate import generate, generate_per_host
 from webcollector_spark.operators.parse import discovered_datums, discovered_links
@@ -48,9 +47,11 @@ from webcollector_spark.session import local_frame
 from webcollector_spark.store import ParquetFrontierStore, RamFrontierStore
 
 _CORE_COLS = [f.name for f in FRONTIER_SCHEMA.fields]
-_CANDIDATE_SCHEMA = T.StructType(
-    [T.StructField("host", T.StringType()), T.StructField("is_cand", T.BooleanType())]
-)
+# the per-host metrics history row (config.host_metrics_path)
+_HOST_METRICS_COLS = [
+    "host", "fetched", "failed", "robots_denied", "avg_execute_count",
+    "links_emitted",
+]
 
 
 def seed_rows(
@@ -76,6 +77,49 @@ def seed_rows(
              host_of(url), depth, priority)
         )
     return local_frame(spark, rows, FRONTIER_SCHEMA)
+
+
+def _canonical_default_keys(df: DataFrame) -> DataFrame:
+    """Default-key rows (key == url) adopt the canonical key, so they
+    unify with canonicalized discovered links; explicit user keys
+    (key != url tasks) are untouched."""
+    from webcollector_spark.functions.urls import canonical_url_col
+
+    return df.withColumn(
+        "key",
+        F.when(
+            F.col("key") == F.col("url"), canonical_url_col(F.col("url"))
+        ).otherwise(F.col("key")),
+    )
+
+
+def host_round_stats(fetched: DataFrame) -> DataFrame:
+    """One round's per-host aggregate of the fetch pass: the metrics
+    history row (`_HOST_METRICS_COLS`) plus the scheduling observations
+    n_yield (fetches that emitted at least one link or visitor datum)
+    and delay_ms (the largest robots Crawl-delay honored; > 0, not
+    isNotNull — a sub-millisecond delay rounds to 0 ms and would make
+    the fit division NULL). O(hosts) rows."""
+
+    def size(col):  # null-safe element count
+        return F.when(F.col(col).isNull(), 0).otherwise(F.size(col))
+
+    # auto-parse emissions live in `links`, visitor emissions in
+    # `next_datums` — count both
+    emitted = size("links") + size("next_datums")
+    return fetched.groupBy("host").agg(
+        F.count("*").alias("fetched"),
+        F.sum((F.col("status") == STATUS_DB_FAILED).cast("long")).alias("failed"),
+        F.sum((F.col("code") == CODE_ROBOTS_DENIED).cast("long")).alias(
+            "robots_denied"
+        ),
+        F.avg("execute_count").alias("avg_execute_count"),
+        F.sum(emitted).alias("links_emitted"),
+        F.sum((emitted > 0).cast("long")).alias("n_yield"),
+        F.max(
+            F.when(F.col("robots_delay_ms") > 0, F.col("robots_delay_ms"))
+        ).alias("delay_ms"),
+    )
 
 
 @dataclass
@@ -118,23 +162,15 @@ class BreadthCrawler:
         self._seeds: list[str | tuple[str, str]] = []
         self._forced_seeds: list[str | tuple[str, str]] = []
         self.metrics: list[RoundMetrics] = []
-        # adaptive-salt state: hosts touched by last round's links (the
-        # count-min candidate set) + per-round salt decisions for
-        # introspection/tests
-        self._link_hosts: list[str] | None = None
+        # per-round salt decisions, for introspection/tests
         self.salt_history: list[int] = []
-        # host-budget state (config.host_budget_target_ms): per-host
-        # robots Crawl-delays learned from fetch passes so far — a tiny
-        # O(hosts-with-a-directive) frame, localCheckpointed so it
-        # survives the per-round fetched.unpersist(). Advisory: resets
-        # on resume (round 1 after restart runs unclamped until the
-        # first fetch re-learns the delays).
-        self._host_delays: DataFrame | None = None
-        # UCB bandit state (config.ucb_host_budget): running per-host
-        # (n_trials, n_yield) counts folded from each round's fetch
-        # pass — O(hosts-seen) rows, localCheckpointed like the delays.
-        # Advisory on resume, same as the delays.
-        self._host_bandit: DataFrame | None = None
+        # per-host scheduling state (config.host_budget_target_ms,
+        # ucb_host_budget): (host, n_trials, n_yield, delay_ms) folded
+        # from every fetch pass so far — O(hosts-seen) rows,
+        # localCheckpointed so it survives the per-round
+        # fetched.unpersist(). Advisory: resets on resume (the first
+        # round after a restart runs unclamped until a fetch re-learns).
+        self._host_state: DataFrame | None = None
 
     # -- seeding (Crawler.java:169-284: strings, iterables, typed
     # CrawlDatum/CrawlDatums with meta; forced :72-78) ------------------
@@ -191,27 +227,10 @@ class BreadthCrawler:
                 "(the link-graph edge source)"
             )
 
-        def _seed_df(seeds):
-            df = seed_rows(self.spark, seeds)
-            if cfg.canonicalize_link_keys:
-                # default-key seeds (key == url) adopt the canonical key
-                # so they unify with canonicalized discovered links;
-                # explicit user keys (key != url tasks) are untouched
-                from webcollector_spark.functions.urls import canonical_url_col
-
-                df = df.withColumn(
-                    "key",
-                    F.when(
-                        F.col("key") == F.col("url"),
-                        canonical_url_col(F.col("url")),
-                    ).otherwise(F.col("key")),
-                )
-            return df
-
         if self._seeds:
-            self.store.inject(_seed_df(self._seeds), force=False)
+            self.store.inject(self._seed_df(self._seeds), force=False)
         if self._forced_seeds:
-            self.store.inject(_seed_df(self._forced_seeds), force=True)
+            self.store.inject(self._seed_df(self._forced_seeds), force=True)
         if cfg.parse_sitemaps and (self._seeds or self._forced_seeds):
             # robots.txt "Sitemap:" auto-discovery for SEED hosts only —
             # a driver-side loop bounded by the user's own seed list
@@ -234,7 +253,7 @@ class BreadthCrawler:
             }
             sm_urls = sitemaps_from_robots(self.requester, hosts)
             if sm_urls:
-                self.store.inject(_seed_df(sm_urls), force=False)
+                self.store.inject(self._seed_df(sm_urls), force=False)
         if self.store.is_empty():
             return self.metrics  # nothing injected -> zero-generate, done
         start_round = self.store.last_round() + 1  # resume point
@@ -270,94 +289,9 @@ class BreadthCrawler:
             # cheap_count: the frontier size for the salt/bloom gates,
             # memoized by the store (no extra job after a merge).
             n_frontier = self.store.cheap_count()
-            if cfg.per_host_top_k > 0:
-                if cfg.adaptive_salt and self._link_hosts is not None:
-                    # MEASURED skew, not assumed: probe last round's
-                    # link hosts (small candidate set) against the
-                    # frontier in one exact bounded-output scan
-                    # (_frontier_has_hot_host) — salt only when some
-                    # candidate actually holds > hot_host_frac of
-                    # frontier rows.
-                    salt = (
-                        cfg.host_salt_buckets
-                        if self._frontier_has_hot_host(frontier)
-                        else 1
-                    )
-                else:
-                    salt = (
-                        cfg.host_salt_buckets
-                        if n_frontier >= cfg.salt_min_frontier
-                        else 1
-                    )
-                self.salt_history.append(salt)
-                # Politeness-aware round sizing: clamp k so no host's
-                # serial drain (picks x gap) overshoots the target —
-                # scalar clamp from the configured gap, per-host clamp
-                # from learned robots Crawl-delays (config.py
-                # host_budget_target_ms; operators/generate.py
-                # host_budget_plan documents the floor math).
-                k = cfg.per_host_top_k
-                fit = None
-                if cfg.host_budget_target_ms > 0:
-                    gap_ms = self._configured_gap_ms()
-                    if gap_ms > 0:
-                        k = max(1, min(k, cfg.host_budget_target_ms // gap_ms))
-                    if self._host_delays is not None:
-                        fit = self._host_delays.select(
-                            "host",
-                            F.greatest(
-                                F.lit(1).cast("long"),
-                                F.expr(
-                                    f"CAST({cfg.host_budget_target_ms}"
-                                    " DIV delay_ms AS BIGINT)"
-                                ),
-                            ).alias("__fit_k"),
-                        )
-                # UCB bandit budgets: proven-productive hosts keep the
-                # full k, well-sampled dead ends decay toward ucb_min_k,
-                # unseen hosts (no state row) default to full k through
-                # the generate left join. Composes with the politeness
-                # fit by per-host MINIMUM — a host must satisfy BOTH its
-                # Crawl-delay drain budget and its bandit score.
-                if cfg.ucb_host_budget and self._host_bandit is not None:
-                    from webcollector_spark.operators.rank import (
-                        ucb_budget_k,
-                    )
-
-                    ub = ucb_budget_k(
-                        self._host_bandit, k, c=cfg.ucb_c,
-                        k_min=cfg.ucb_min_k,
-                    )
-                    if fit is None:
-                        fit = ub
-                    else:
-                        kl = F.lit(int(k)).cast("long")
-                        fit = (
-                            fit.withColumnRenamed("__fit_k", "__fit_a")
-                            .join(
-                                ub.withColumnRenamed("__fit_k", "__fit_b"),
-                                "host",
-                                "outer",
-                            )
-                            .select(
-                                "host",
-                                F.least(
-                                    F.coalesce(F.col("__fit_a"), kl),
-                                    F.coalesce(F.col("__fit_b"), kl),
-                                ).alias("__fit_k"),
-                            )
-                        )
-                gen = generate_per_host(
-                    frontier, k, cfg.max_execute_count,
-                    cfg.top_n, salt, cfg.generator_filter,
-                    fit_k_by_host=fit,
-                )
-            else:
-                gen = generate(
-                    frontier, cfg.top_n, cfg.max_execute_count,
-                    cfg.generator_filter,
-                )
-            gen = gen.persist(StorageLevel.MEMORY_AND_DISK)
+            gen = self._generate(frontier, n_frontier).persist(
+                StorageLevel.MEMORY_AND_DISK
+            )
             n_gen = gen.count()
             if n_gen == 0:  # Crawler.java:142-144
                 gen.unpersist()
@@ -408,13 +342,7 @@ class BreadthCrawler:
 
                 sm = sitemap_datums(sitemap_entries(fetched))
                 if cfg.canonicalize_link_keys:
-                    from webcollector_spark.functions.urls import (
-                        canonical_url_col,
-                    )
-
-                    sm = sm.withColumn(
-                        "key", canonical_url_col(F.col("url"))
-                    )
+                    sm = _canonical_default_keys(sm)
                 links = links.unionByName(sm)
             if 0 < cfg.bloom_capacity and cfg.bloom_min_frontier <= n_frontier:
                 # size from the LIVE frontier count (memoized — no extra
@@ -440,71 +368,22 @@ class BreadthCrawler:
                     fetched.drop("content"), cfg.fetched_history_path, r
                 )
 
-            # Optional per-host (= per frontier partition) metrics
-            # history: one row per (round, host) with execute/byte/code
-            # aggregates — the "per-partition lineage + metrics" table.
-            # O(hosts) rows per round; idempotent on crash-resume re-run
-            # of a round (dynamic partition overwrite replaces round r).
-            if cfg.host_metrics_path:
-                def _emitted(col):  # null-safe element count
-                    return F.sum(
-                        F.when(F.col(col).isNull(), 0).otherwise(F.size(col))
+            # One per-host aggregate of the fetch pass feeds both the
+            # optional per-host (= per frontier partition) metrics history
+            # — one row per (round, host), the "per-partition lineage +
+            # metrics" table, idempotent on crash-resume re-run of a
+            # round — and the per-host scheduling state.
+            learn = cfg.host_budget_target_ms > 0 or cfg.ucb_host_budget
+            if cfg.host_metrics_path or learn:
+                per_host = host_round_stats(fetched)
+                if cfg.host_metrics_path:
+                    self._write_round_partition(
+                        per_host.select(*_HOST_METRICS_COLS),
+                        cfg.host_metrics_path,
+                        r,
                     )
-
-                self._write_round_partition(
-                    fetched.groupBy("host").agg(
-                        F.count("*").alias("fetched"),
-                        F.sum(
-                            (F.col("status") == STATUS_DB_FAILED).cast("long")
-                        ).alias("failed"),
-                        F.sum(
-                            (F.col("code") == CODE_ROBOTS_DENIED).cast("long")
-                        ).alias("robots_denied"),
-                        F.avg("execute_count").alias("avg_execute_count"),
-                        # auto-parse emissions live in `links`, visitor
-                        # emissions in `next_datums` — count both
-                        (_emitted("links") + _emitted("next_datums")).alias(
-                            "links_emitted"
-                        ),
-                    ),
-                    cfg.host_metrics_path,
-                    r,
-                )
-
-            # adaptive-salt candidates: the hosts this round's links
-            # touch, HARD-BOUNDED to the top salt_candidates receivers
-            # by link count (TakeOrdered — no full sort). A round's
-            # links can touch millions of distinct hosts at web scale,
-            # so an uncapped distinct().collect() would be the exact
-            # O(n)-driver-collect hazard this engine bans elsewhere; a
-            # host hot enough to hold > hot_host_frac of the NEXT
-            # frontier is overwhelmingly among this round's biggest
-            # link receivers, and a miss only means salt=1 (the
-            # size-gate fallback still applies). Collected while
-            # `fetched` is still persisted.
-            if cfg.adaptive_salt:
-                self._link_hosts = [
-                    row["host"]
-                    for row in links.groupBy("host")
-                    .agg(F.count("*").alias("n"))
-                    .orderBy(F.col("n").desc(), F.col("host"))
-                    .limit(cfg.salt_candidates)
-                    .collect()
-                ]
-
-            # host-budget learning: fold this round's observed robots
-            # Crawl-delays into the running per-host max. Opt-in only
-            # (one extra O(hosts-with-a-directive) job per round);
-            # localCheckpoint materializes the tiny frame before
-            # fetched.unpersist() severs its lineage.
-            if cfg.host_budget_target_ms > 0:
-                self._learn_host_delays(fetched)
-
-            # UCB bandit learning: fold this round's per-host
-            # (trials, yields) into the running state (config.
-            # ucb_host_budget). Same lifecycle as the learned delays.
-            if cfg.ucb_host_budget:
-                self._learn_host_yields(fetched)
+                if learn:
+                    self._fold_host_state(per_host)
 
             # O9 merge: one snapshot commit; inserted-links count derived
             # from the frontier row-count delta (no extra count job).
@@ -536,108 +415,97 @@ class BreadthCrawler:
                 self._reprioritize_from_ranks()
         return self.metrics
 
-    def _configured_gap_ms(self) -> int:
-        """The politeness gap (ms) the fetch token bucket enforces from
-        config alone — per_host_rate and execute_interval_ms, the same
-        max the bucket applies (operators/fetch.py _HostBucket). Robots
-        Crawl-delays tighten it per host on top (learned, not here)."""
+    def _seed_df(self, seeds: list) -> DataFrame:
+        df = seed_rows(self.spark, seeds)
+        if self.config.canonicalize_link_keys:
+            df = _canonical_default_keys(df)
+        return df
+
+    def _generate(self, frontier: DataFrame, n_frontier: int) -> DataFrame:
+        """O2: reference-exact global topN, or the per-host top-k window
+        salted once the frontier is big enough for skew to matter
+        (salting never changes the rows, only the cost) and clamped by
+        the per-host k plan."""
         cfg = self.config
-        gap = 0.0
-        if cfg.per_host_rate > 0:
-            gap = 1000.0 / cfg.per_host_rate
-        if cfg.execute_interval_ms > 0:
-            gap = max(gap, float(cfg.execute_interval_ms))
-        return int(gap)
-
-    def _learn_host_delays(self, fetched: DataFrame) -> None:
-        """Fold this round's observed robots Crawl-delays (ms) into the
-        running per-host max. Max, not last: a host that once declared
-        Crawl-delay 30 stays clamped even if a later robots fetch fails
-        open — the conservative side of politeness. The frame is
-        O(hosts-with-a-directive) rows; eager localCheckpoint both
-        materializes it before fetched.unpersist() and truncates the
-        union-of-unions lineage that would otherwise grow per round."""
-        d = (
-            # > 0, not isNotNull: a sub-millisecond Crawl-delay rounds
-            # to 0 ms and would turn the fit_k division into NULL
-            fetched.filter(F.col("robots_delay_ms") > 0)
-            .groupBy("host")
-            .agg(F.max("robots_delay_ms").alias("delay_ms"))
-        )
-        if self._host_delays is not None:
-            d = (
-                d.unionByName(self._host_delays)
-                .groupBy("host")
-                .agg(F.max("delay_ms").alias("delay_ms"))
+        if cfg.per_host_top_k <= 0:
+            return generate(
+                frontier, cfg.top_n, cfg.max_execute_count, cfg.generator_filter
             )
-        self._host_delays = d.localCheckpoint(eager=True)
-
-    def _learn_host_yields(self, fetched: DataFrame) -> None:
-        """Fold this round's per-host bandit observations into the
-        running (host, n_trials, n_yield) state: trial = a fetch
-        attempt, reward = the fetch emitted at least one outlink or
-        visitor datum (the cheap per-row proxy for "discovered new
-        frontier keys" — exact new-key attribution would need the merge
-        delta joined back per host, one extra O(links) join per round;
-        the proxy over-counts only links that all turn out seen, which
-        the decaying bonus self-corrects on later pulls). O(hosts-seen)
-        rows; eager localCheckpoint materializes before
-        fetched.unpersist() and truncates per-round union lineage."""
-
-        def _n(col: str):
-            return F.when(F.col(col).isNull(), 0).otherwise(F.size(col))
-
-        d = fetched.groupBy("host").agg(
-            F.count("*").alias("n_trials"),
-            F.sum(
-                ((_n("links") + _n("next_datums")) > 0).cast("long")
-            ).alias("n_yield"),
+        salt = cfg.host_salt_buckets if n_frontier >= cfg.salt_min_frontier else 1
+        self.salt_history.append(salt)
+        # Politeness-aware round sizing: clamp k so no host's serial
+        # drain (picks x gap) overshoots the target — scalar clamp from
+        # the configured gap here, per-host clamps in _fit_k (config.py
+        # host_budget_target_ms; operators/generate.py host_budget_plan
+        # documents the floor math).
+        k = cfg.per_host_top_k
+        if cfg.host_budget_target_ms > 0:
+            gap_ms = int(min_gap_ms(cfg.per_host_rate, cfg.execute_interval_ms))
+            if gap_ms > 0:
+                k = max(1, min(k, cfg.host_budget_target_ms // gap_ms))
+        return generate_per_host(
+            frontier, k, cfg.max_execute_count, cfg.top_n, salt,
+            cfg.generator_filter, fit_k_by_host=self._fit_k(k),
         )
-        if self._host_bandit is not None:
+
+    def _fit_k(self, k: int) -> DataFrame | None:
+        """The per-host k plan (host, __fit_k) over `_host_state`: the
+        least of the Crawl-delay fit (target DIV delay, floor 1) and,
+        with ucb_host_budget, the UCB budget — a host must satisfy both.
+        A null fit means the full k (generate_per_host coalesces it): a
+        host with no learned Crawl-delay keeps it while UCB is off, and
+        hosts with no state row get it through the generate left join
+        (UCB's optimistic initialization)."""
+        cfg = self.config
+        if self._host_state is None:
+            return None
+        plan = self._host_state
+        delay_k = ucb_k = F.lit(None).cast("long")
+        if cfg.host_budget_target_ms > 0:
+            # when(): greatest skips nulls, so without it a host with no
+            # Crawl-delay would be clamped to 1 instead of keeping k
+            delay_k = F.when(
+                F.col("delay_ms").isNotNull(),
+                F.greatest(
+                    F.lit(1).cast("long"),
+                    F.expr(
+                        f"CAST({cfg.host_budget_target_ms} DIV delay_ms AS BIGINT)"
+                    ),
+                ),
+            )
+        if cfg.ucb_host_budget:
+            from webcollector_spark.operators.rank import ucb_budget_k
+
+            plan = ucb_budget_k(plan, k)
+            ucb_k = F.col("__fit_k")
+        return plan.select("host", F.least(delay_k, ucb_k).alias("__fit_k"))
+
+    def _fold_host_state(self, per_host: DataFrame) -> None:
+        """Fold one round's `host_round_stats` into `_host_state`:
+        trials and yields are summed (trial = a fetch attempt, reward =
+        it emitted at least one link or visitor datum — the cheap
+        per-row proxy for "discovered new frontier keys"; it over-counts
+        only links that all turn out seen, which the decaying UCB bonus
+        self-corrects on later pulls), Crawl-delays take the max — a
+        host that once declared Crawl-delay 30 stays clamped even if a
+        later robots fetch fails open, the conservative side of
+        politeness. The eager localCheckpoint both materializes the
+        frame before fetched.unpersist() and truncates the
+        union-of-unions lineage that would otherwise grow per round."""
+        d = per_host.select(
+            "host", F.col("fetched").alias("n_trials"), "n_yield", "delay_ms"
+        )
+        if self._host_state is not None:
             d = (
-                d.unionByName(self._host_bandit)
+                d.unionByName(self._host_state)
                 .groupBy("host")
                 .agg(
                     F.sum("n_trials").alias("n_trials"),
                     F.sum("n_yield").alias("n_yield"),
+                    F.max("delay_ms").alias("delay_ms"),
                 )
             )
-        self._host_bandit = d.localCheckpoint(eager=True)
-
-    def _frontier_has_hot_host(self, frontier: DataFrame) -> bool:
-        """True when one of last round's link hosts holds more than
-        hot_host_frac of the frontier.
-
-        Detection is an EXACT one-scan probe: broadcast-mark the
-        candidate hosts, then a single aggregation whose grouping key is
-        the host for candidates and NULL for everything else — per-
-        candidate counts AND the frontier total come out of one job with
-        output bounded by |candidates|+1 at ANY host cardinality (a full
-        groupBy(host).count() shuffles one row per distinct host, 10^8
-        at web scale). Measured (tools/skew_bench.py, 4M-row frontier):
-        0.8s for this probe vs 2.5-3s for the count-min hot_items probe
-        (operators/sketch.py) — the sketch pays an md5 pass to build
-        counters that exactness makes unnecessary when the candidate set
-        is known up front; it remains the right tool when probes arrive
-        AFTER the scan (watchlists, repeated probes of one sketch)."""
-        if not self._link_hosts:
-            return False
-        cand = local_frame(
-            self.spark, [(h, True) for h in self._link_hosts], _CANDIDATE_SCHEMA
-        )
-        per_host = (
-            frontier.join(F.broadcast(cand), "host", "left")
-            .groupBy(
-                F.when(F.col("is_cand"), F.col("host")).alias("h")
-            )
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        )
-        total = sum(r["cnt"] for r in per_host)
-        if total == 0:
-            return False
-        thresh = self.config.hot_host_frac * total
-        return any(r["cnt"] > thresh for r in per_host if r["h"] is not None)
+        self._host_state = d.localCheckpoint(eager=True)
 
     def _reprioritize_from_ranks(self) -> None:
         from webcollector_spark.operators.rank import (
@@ -647,11 +515,6 @@ class BreadthCrawler:
         )
 
         cfg = self.config
-        if not cfg.fetched_history_path:
-            raise ValueError(
-                "rank_priorities_every requires fetched_history_path "
-                "(the link-graph edge source)"
-            )
         hist = self.spark.read.parquet(cfg.fetched_history_path)
         edges = edges_from_history(
             hist, canonical=cfg.canonicalize_link_keys
@@ -660,16 +523,9 @@ class BreadthCrawler:
         if cfg.rank_trusted_only:
             # the crawl's seed keys, under the same canonicalization the
             # frontier keys got, so teleport mass lands on real nodes
-            from webcollector_spark.functions.urls import canonical_url_col
-
-            sdf = seed_rows(self.spark, self._seeds + self._forced_seeds)
-            key = F.col("key")
-            if cfg.canonicalize_link_keys:
-                key = F.when(
-                    F.col("key") == F.col("url"),
-                    canonical_url_col(F.col("url")),
-                ).otherwise(F.col("key"))
-            seeds = sdf.select(key.alias("node"))
+            seeds = self._seed_df(self._seeds + self._forced_seeds).select(
+                F.col("key").alias("node")
+            )
         ranks = pagerank(edges, iters=cfg.pagerank_iters, seeds=seeds)
         self.store.inject(
             priorities_from_ranks(self.store.load(), ranks), force=True

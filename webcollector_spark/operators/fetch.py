@@ -48,17 +48,21 @@ from pyspark.sql import functions as F
 CODE_ROBOTS_DENIED = -2
 
 
+def min_gap_ms(rate_per_s: float, fixed_interval_ms: int) -> float:
+    """The per-host politeness gap (ms) the configuration alone sets: the
+    larger of 1/per_host_rate and execute_interval_ms, 0 = unlimited.
+    Robots Crawl-delays tighten it per host on top."""
+    gap = 1000.0 / rate_per_s if rate_per_s > 0 else 0.0
+    return max(gap, float(fixed_interval_ms))
+
+
 class _HostBucket:
     """Per-host politeness token bucket (graft; the reference's politeness
     is a fixed per-thread sleep, Fetcher.java:275-281). A per-host
     `extra_gap` (robots Crawl-delay) tightens the configured budget."""
 
     def __init__(self, rate_per_s: float, fixed_interval_ms: int):
-        self.min_gap = 0.0
-        if rate_per_s > 0:
-            self.min_gap = 1.0 / rate_per_s
-        if fixed_interval_ms > 0:
-            self.min_gap = max(self.min_gap, fixed_interval_ms / 1000.0)
+        self.min_gap = min_gap_ms(rate_per_s, fixed_interval_ms) / 1000.0
         self.last: dict[str, float] = {}
 
     def wait(self, host: str, extra_gap: float | None = None) -> None:
@@ -363,7 +367,7 @@ def fetch(
                 )
                 if delay:
                     # observed politeness gap — next round's host-budget
-                    # clamp learns from it (crawler._learn_host_delays)
+                    # clamp learns from it (crawler._fold_host_state)
                     rec["robots_delay_ms"] = int(round(delay * 1000))
                 out_rows.append(rec)
             out = pd.DataFrame(out_rows, columns=cols)
@@ -375,7 +379,7 @@ def fetch(
 
     # Partition count adapts to the round size (`n_rows` hint): tiny
     # rounds don't pay Python-worker setup for near-empty partitions.
-    parts = cfg.fetch_parallelism()
+    parts = cfg.threads
     if n_rows is not None:
         parts = max(1, min(parts, -(-n_rows // max(1, cfg.rows_per_fetch_task))))
     # Politeness co-location (all URLs of one host in one partition) is

@@ -381,8 +381,8 @@ def ucb_budget_k(
     k_min: int = 1,
 ) -> DataFrame:
     """Turn accumulated (host, n_trials, n_yield) bandit state into the
-    per-host generate budget table `generate_per_host` consumes
-    (columns host + __fit_k).
+    per-host generate budget table `generate_per_host` consumes: the
+    input's columns plus __fit_k, so other per-host state rides along.
 
     k_h = clamp(k_min, k_max, ceil(k_max * ucb_h / max(ucb))) — the
     best-scoring host keeps the full budget, proven dead ends decay
@@ -402,7 +402,7 @@ def ucb_budget_k(
     k = (
         scored.crossJoin(F.broadcast(mx))
         .select(
-            "host",
+            *bandit.columns,
             F.when(
                 F.col("__mx") <= 0.0, F.lit(int(k_max)).cast("long")
             )
@@ -425,12 +425,11 @@ def ucb_host_scores_from_counts(per_host: DataFrame, c: float = 2.0) -> DataFram
     """UCB1 over an ALREADY-AGGREGATED (host, n_trials, n_yield) frame —
     the round-loop form, where the crawler folds per-round counts into a
     running O(hosts-seen) state table instead of re-scanning the full
-    fetch log (`ucb_host_scores` is the from-the-log twin)."""
+    fetch log (`ucb_host_scores` is the from-the-log twin). Other input
+    columns pass through ahead of `ucb`."""
     total = per_host.agg(F.sum("n_trials").cast("double").alias("__t"))
     return per_host.crossJoin(F.broadcast(total)).select(
-        "host",
-        "n_trials",
-        "n_yield",
+        *per_host.columns,
         (
             F.col("n_yield") / F.col("n_trials").cast("double")
             + F.sqrt(F.lit(float(c)) * F.log(F.col("__t")) / F.col("n_trials"))
