@@ -381,6 +381,26 @@ def test_host_metrics_history(spark, small_web, tmp_path):
     )
 
 
+def test_round_partition_rewrite_replaces_only_that_round(spark, tmp_path):
+    """A crash-resume re-run of round 1 replaces round 1's history
+    partition, leaves round 0's alone, and does not change the session's
+    partitionOverwriteMode."""
+    from webcollector_spark.crawler import _write_round_partition
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(key)
+    path = str(tmp_path / "hist")
+    _write_round_partition(spark.range(3), path, 0)
+    _write_round_partition(spark.range(5), path, 1)
+    _write_round_partition(spark.range(2), path, 1)
+    counts = {
+        r["round"]: r["count"]
+        for r in spark.read.parquet(path).groupBy("round").count().collect()
+    }
+    assert counts == {0: 3, 1: 2}
+    assert spark.conf.get(key) == mode
+
+
 class TestRobotsWildcards:
     """RFC 9309 2.2.3 metacharacters: '*' any-sequence, trailing '$'."""
 

@@ -1,5 +1,5 @@
 """HyperLogLog sketch (operators/sketch.py): estimate accuracy and
-register determinism; count-min hot items; adaptive salting."""
+register determinism."""
 
 from pyspark.sql import functions as F
 
@@ -41,45 +41,3 @@ def test_hll_width_tracks_b(spark):
     for b in (8, 12):
         est = hll_estimate(df, "key", b=b)
         assert abs(est - n) / n < 0.15, (b, est)
-
-
-class TestCountMin:
-    """Count-min: one-sided error (never undercounts) and hot-item
-    detection with zero false negatives."""
-
-    def test_never_undercounts_and_close_on_hot(self, spark):
-        from webcollector_spark.operators.sketch import cm_estimate_counts
-
-        # skewed stream: 'hot' appears 5000x, 200 cold items 10x each
-        df = spark.range(5000).select(F.lit("hot").alias("host")).unionByName(
-            spark.range(2000).select(
-                F.concat(F.lit("cold"), (F.col("id") % 200)).alias("host")
-            )
-        )
-        truth = {r["host"]: r["c"] for r in
-                 df.groupBy("host").agg(F.count("*").alias("c")).collect()}
-        est = {
-            r["host"]: r["est_count"]
-            for r in cm_estimate_counts(
-                df, df.select("host").distinct(), "host"
-            ).collect()
-        }
-        for h, t in truth.items():
-            assert est[h] >= t, h  # one-sided
-        # hot estimate within the eps*N bound (w=256 -> ~2.7% of N=7000)
-        assert est["hot"] - truth["hot"] <= 0.03 * 7000
-
-    def test_hot_items_no_false_negatives(self, spark):
-        from webcollector_spark.operators.sketch import hot_items
-
-        df = spark.range(5000).select(F.lit("hot").alias("host")).unionByName(
-            spark.range(2000).select(
-                F.concat(F.lit("cold"), (F.col("id") % 200)).alias("host")
-            )
-        )
-        hot = {r["host"] for r in hot_items(df, "host", 0.5).collect()}
-        assert "hot" in hot
-        assert all(h == "hot" or h.startswith("cold") for h in hot)
-        # cold items are each 10/7000 = 0.14% -- far below threshold,
-        # so at w=256 none should cross 50% even with collisions
-        assert hot == {"hot"}

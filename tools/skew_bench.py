@@ -97,20 +97,15 @@ def main() -> None:
     big.unpersist()
 
     # 1b. hot-host detection cost over the same 4M-row skewed
-    # frontier, three probes:
-    #   detect_cm        - count-min hot_items with a small candidate
-    #                      set
+    # frontier, two probes:
     #   detect_groupby   - naive full groupBy(host).count() skew scan
     #   detect_filtered  - exact candidate-filtered count (broadcast
     #                      semi-join + groupBy; bounded output too)
-    # At 24 hosts everything is scan-dominated; the structural
-    # difference is the shuffle-OUTPUT bound (d*w counter rows per
-    # partition vs one row per distinct host per partition), so the
-    # same three are re-measured at 1M and 4M (all-unique) distinct
-    # hosts, where the naive probe's partial-agg hash map and shuffle
-    # grow with cardinality and the sketch's don't.
-    from webcollector_spark.operators.sketch import hot_items
-
+    # At 24 hosts both are scan-dominated; the structural difference
+    # is the shuffle-OUTPUT bound (one row per distinct host per
+    # partition vs at most one per candidate), so both are re-measured
+    # at 1M and 4M (all-unique) distinct hosts, where the naive probe's
+    # partial-agg hash map and shuffle grow with cardinality.
     big.persist(StorageLevel.MEMORY_AND_DISK).count()
     cand = spark.createDataFrame(
         [("h000.test",), ("h5",), ("h9",)], "host string"
@@ -153,9 +148,6 @@ def main() -> None:
         if tag:
             df = df.persist(StorageLevel.MEMORY_AND_DISK)
             df.count()
-        out[f"detect_cm{tag}_sec"] = timed(
-            lambda d=df: hot_items(d, "host", 0.2, items=cand).count()
-        )
         out[f"detect_groupby{tag}_sec"] = timed(
             lambda d=df: d.groupBy("host").count()
             .filter(F.col("count") > 0.2 * big_n).count()

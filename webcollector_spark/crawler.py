@@ -122,6 +122,20 @@ def host_round_stats(fetched: DataFrame) -> DataFrame:
     )
 
 
+def _write_round_partition(df: DataFrame, path: str, r: int) -> None:
+    """Append df as partition round=r of a history table, replacing
+    that partition if it exists (crash-resume idempotence) without
+    touching other rounds. Dynamic partition overwrite is this writer's
+    own option, so the session's setting is left as it is."""
+    (
+        df.withColumn("round", F.lit(r))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("round")
+        .parquet(path)
+    )
+
+
 @dataclass
 class RoundMetrics:
     round: int
@@ -364,7 +378,7 @@ class BreadthCrawler:
             # Dynamic partition overwrite makes a crash-and-resume
             # re-run of round r replace (not duplicate) its partition.
             if cfg.fetched_history_path:
-                self._write_round_partition(
+                _write_round_partition(
                     fetched.drop("content"), cfg.fetched_history_path, r
                 )
 
@@ -377,7 +391,7 @@ class BreadthCrawler:
             if cfg.host_metrics_path or learn:
                 per_host = host_round_stats(fetched)
                 if cfg.host_metrics_path:
-                    self._write_round_partition(
+                    _write_round_partition(
                         per_host.select(*_HOST_METRICS_COLS),
                         cfg.host_metrics_path,
                         r,
@@ -530,26 +544,6 @@ class BreadthCrawler:
         self.store.inject(
             priorities_from_ranks(self.store.load(), ranks), force=True
         )
-
-    def _write_round_partition(self, df: DataFrame, path: str, r: int) -> None:
-        """Append df as partition round=r of a history table, replacing
-        that partition if it exists (crash-resume idempotence) without
-        touching other rounds (dynamic partition overwrite)."""
-        prev_mode = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                df.withColumn("round", F.lit(r))
-                .write.mode("overwrite")
-                .partitionBy("round")
-                .parquet(path)
-            )
-        finally:
-            self.spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
 
     # -- inspection ------------------------------------------------------
     def frontier(self) -> DataFrame:

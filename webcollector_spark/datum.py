@@ -16,13 +16,11 @@ import json
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# model/CrawlDatum.java:35-37,40
-STATUS_DB_UNEXECUTED = 0
-STATUS_DB_FAILED = 1
-STATUS_DB_SUCCESS = 5
-CODE_NOT_SET = -1
-
-META_KEY_TYPE = "s_t"  # CrawlDatum.java:125
+from webcollector_spark.schema import (
+    CODE_NOT_SET,
+    META_KEY_TYPE,
+    STATUS_DB_UNEXECUTED,
+)
 
 
 class CrawlDatum:

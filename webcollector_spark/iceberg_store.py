@@ -170,7 +170,7 @@ class IcebergFrontierStore(RamFrontierStore):
         return self.count() == 0
 
     def count(self) -> int:
-        if getattr(self, "_count", None) is None:
+        if self._count is None:
             self._count = self.spark.table(self.table).count()
         return self._count
 

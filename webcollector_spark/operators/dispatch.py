@@ -28,17 +28,12 @@ url-regex-rule -> default visit; then autoParse link harvesting (only
 when a RegexRule is configured, ":221-223"); then afterParse.
 
 Spark shape: the whole dispatcher runs inside the fetch stage's Arrow
-batches (a Visitor is a row->rows UDTF, SURVEY §2.5); `visit_fetched`
-applies it over a fetched DataFrame via mapInPandas and returns the
-handler-emitted next-links as exploded rows.
+batches (a Visitor is a row->rows UDTF, SURVEY §2.5): `fetch` calls
+`dispatch` on each fetched page and carries the handler-emitted datums
+out as its `next_datums` column.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-
-from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
 from webcollector_spark.datum import CrawlDatums
 from webcollector_spark.functions.page import Page
@@ -177,57 +172,3 @@ class VisitorDispatcher:
                     next.add(u)
         if self.after_method is not None:
             self.after_method(page, next)
-
-
-_NEXT_SCHEMA = T.StructType(
-    [
-        T.StructField("parent_key", T.StringType()),
-        T.StructField("key", T.StringType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("depth", T.IntegerType()),
-    ]
-)
-
-
-def visit_fetched(fetched: DataFrame, dispatcher: VisitorDispatcher) -> DataFrame:
-    """Run the dispatcher over a fetched DataFrame (rows must carry
-    url/code/content/content_type/meta/depth). Returns the next-links
-    the handlers emitted, one row per discovered datum. Requires
-    keep_content=True on the fetch config (pages re-parse from bytes)."""
-    import pandas as pd
-
-    spark = fetched.sparkSession
-    bc = spark.sparkContext.broadcast(dispatcher)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        disp: VisitorDispatcher = bc.value
-        cols = [f.name for f in _NEXT_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for row in pdf.to_dict("records"):
-                page = Page(
-                    url=row["url"],
-                    key=row.get("key"),
-                    code=row.get("code", -1),
-                    content=row.get("content"),
-                    content_type=row.get("content_type"),
-                    meta=row.get("meta") or {},
-                )
-                nxt = CrawlDatums()
-                disp.dispatch(page, nxt)
-                for d in nxt:
-                    out.append(
-                        {
-                            "parent_key": page.key,
-                            "key": d.key(),
-                            "url": d.url(),
-                            "meta": d.meta_data or None,
-                            "depth": int(row.get("depth", 0)) + 1,
-                        }
-                    )
-            yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-                columns=cols
-            )
-
-    return fetched.mapInPandas(run, schema=_NEXT_SCHEMA)

@@ -59,31 +59,13 @@ def hll_registers(
     )
 
 
-def py_hash60(value: str) -> int:
-    """Driver/UDF-side twin of `_hash60` (md5 hex prefix -> 60-bit int);
-    one definition keeps Python folds bit-identical to the JVM scan."""
-    import hashlib
-
-    return int(hashlib.md5(value.encode("utf-8")).hexdigest()[:15], 16)
-
-
-def py_bucket_rho(h: int, b: int = 10) -> tuple[int, int]:
-    """(bucket, rho) of a 60-bit hash — the Python twin of the column
-    expressions in `hll_registers` (verified register-identical by
-    test_sketch.py)."""
-    width = 60 - b
-    w = h >> b
-    rho = width + 1 if w == 0 else width - w.bit_length() + 1
-    return h & ((1 << b) - 1), rho
-
-
 def estimate_from_registers(regs: dict[int, int], b: int = 10) -> int:
     """Deterministic HLL estimate from a register table (standard HLL
     with the small-range linear-counting correction; the 2^60 hash
     space makes large-range collisions negligible at crawl scales).
     Registers are an order-free max-fold, and this sums them in fixed
     bucket order, so the estimate is bit-stable no matter how the
-    input was partitioned or micro-batched."""
+    input was partitioned."""
     m = 1 << b
     alpha = 0.7213 / (1 + 1.079 / m) if m >= 128 else 0.709
     s = sum(2.0 ** -regs.get(j, 0) for j in range(m))
@@ -102,30 +84,24 @@ def hll_estimate(df: DataFrame, col: str = "key", b: int = 10) -> int:
 
 # ---------------------------------------------------------------------------
 # Count-min sketch (Cormode & Muthukrishnan 2005) — frequency estimates
-# with one-sided error (never undercounts), d x w integer counters. The
-# crawl use: hot-HOST detection feeding the skew defenses
-# (host_salt_buckets / politeness co-location) without a full
-# groupBy(host) when the host cardinality is huge. Registers are
-# integer-exact (derived double hashing from one md5, the
+# with one-sided error (never undercounts), d x w integer counters.
+# Registers are integer-exact (derived double hashing from one md5, the
 # Kirsch-Mitzenmacher trick the MinHash path also uses), so the
-# registry twin value-checks the counter table bit-for-bit.
+# registry twin `cm_registers` value-checks the counter table
+# bit-for-bit. The crawler finds hot hosts with an exact filtered scan
+# instead: it beat a count-min probe at every host count measured
+# (BENCH.md, skew defenses).
 
 
 def _slots_from_h(h: Column, d: int, w: int) -> Column:
-    """Array of the d counter slots from a precomputed 60-bit hash — the
-    ONE definition of the derivation shared by build and probe (a
-    divergence between copies would break the never-undercounts
-    guarantee silently): slot_i = (h1 + i*h2) mod w with h1/h2 the two
-    30-bit halves, h2 forced odd (Kirsch-Mitzenmacher double hashing)."""
+    """Array of the d counter slots from a precomputed 60-bit hash:
+    slot_i = (h1 + i*h2) mod w with h1/h2 the two 30-bit halves, h2
+    forced odd (Kirsch-Mitzenmacher double hashing)."""
     h1 = F.shiftright(h, 30)
     h2 = h.bitwiseAND((1 << 30) - 1).bitwiseOR(1)
     return F.array(
         *[F.pmod(h1 + i * h2, F.lit(w)).cast("int") for i in range(d)]
     )
-
-
-def _cm_slots(col: Column, d: int, w: int) -> Column:
-    return _slots_from_h(_hash60(col), d, w)
 
 
 def cm_registers(
@@ -136,8 +112,8 @@ def cm_registers(
     would read the input d times). The md5 hash is materialized into a
     projected column BEFORE the slot array is built: Catalyst does not
     CSE the md5->conv subtree across array elements + posexplode, so
-    inlining `_cm_slots` here evaluates the hash ~4d times per row
-    (measured 45x slower at 4M rows: 66.8s -> 1.5s with this split)."""
+    inlining `_hash60` into the slot array evaluates the hash ~4d
+    times per row (measured 45x slower at 4M rows: 66.8s -> 1.5s with this split)."""
     hashed = df.select(_hash60(F.col(col)).alias("h"))
     return (
         hashed.select(
@@ -146,62 +122,3 @@ def cm_registers(
         .groupBy("row", "slot")
         .agg(F.count("*").cast("long").alias("cnt"))
     )
-
-
-def cm_estimate_counts(
-    df: DataFrame,
-    items: DataFrame,
-    col: str = "host",
-    d: int = 4,
-    w: int = 256,
-    registers: DataFrame | None = None,
-) -> DataFrame:
-    """Estimated frequency per item (min over the d counters) — always
-    >= the true count; within eps*N of it with the usual CM guarantees.
-    `items` is a small candidate set (e.g. distinct hosts of the current
-    round's links) joined against the broadcast counter table. Pass a
-    precomputed `registers` table to probe one sketch repeatedly."""
-    regs = cm_registers(df, col, d, w) if registers is None else registers
-    probes = items.select(
-        F.col(col), F.posexplode(_cm_slots(F.col(col), d, w)).alias("row", "slot")
-    )
-    return (
-        probes.join(F.broadcast(regs), ["row", "slot"], "left")
-        .groupBy(col)
-        .agg(F.min(F.coalesce("cnt", F.lit(0))).alias("est_count"))
-    )
-
-
-def hot_items(
-    df: DataFrame,
-    col: str = "host",
-    threshold_frac: float = 0.1,
-    d: int = 4,
-    w: int = 256,
-    items: DataFrame | None = None,
-) -> DataFrame:
-    """Items whose estimated frequency exceeds threshold_frac of the
-    total — the skew detector. One-sided error means no hot item is
-    ever missed (false positives possible at ~1/w density).
-
-    The sketch pays off when `items` is a SMALL known candidate set
-    (this round's link hosts, a watchlist) probed against counters
-    built in one pass over the big table; the default falls back to
-    df's distinct values, which costs a full-cardinality shuffle — at
-    that point a plain groupBy(col).count() is just as good, so pass
-    candidates whenever you have them. The stream total comes free from
-    the sketch itself (every counter row sums to N — no extra scan)."""
-    # Materialize the registers to the driver once (bounded: at most
-    # d*w rows, 1024 by default) and rebuild a local DataFrame — unlike
-    # .persist() this leaves nothing cached for the session lifetime,
-    # so repeated hot_items() calls don't accumulate pinned partitions.
-    reg_rows = cm_registers(df, col, d, w).collect()
-    regs = df.sparkSession.createDataFrame(
-        reg_rows, schema="row INT, slot INT, cnt BIGINT"
-    )
-    total = sum(r.cnt for r in reg_rows if r.row == 0)
-    if items is None:
-        items = df.select(col).distinct()
-    est = cm_estimate_counts(df, items, col, d, w, registers=regs)
-    out = est.filter(F.col("est_count") >= threshold_frac * total)
-    return out

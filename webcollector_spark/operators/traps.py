@@ -12,7 +12,7 @@ once the group is large enough. Real finite page sets are re-fetched
 
 Scale shape: `detect_traps` is one (host, template) groupBy with a
 two-phase distinct-count (or the bounded-register formulation,
-plans/queries.py `url_trap_hll` / streaming `url_trap_stream`);
+plans/queries.py `url_trap_hll`);
 `trap_filter` is a broadcast LEFT ANTI join — the flagged-template
 table is O(traps), genuinely tiny, while the frontier side never
 shuffles. The same flag table feeds the reference-faithful per-link

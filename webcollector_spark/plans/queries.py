@@ -333,7 +333,7 @@ def q_sessionize(spark, sf):
     )
 
 
-# hourly tumbling-window agg (batch analog of the streaming path)
+# hourly tumbling-window agg
 @register(
     "events_hourly",
     """
@@ -2719,9 +2719,9 @@ def q_url_trap_templates(spark, sf):
 
 def trap_url_rows(docs):
     """(host, url, template) synthetic fetch-log rows from a documents
-    table — ONE definition shared by the batch trap queries and the
-    streaming trap detector (streaming/pipelines.py url_trap_stream),
-    so the engines can never drift on the URL synthesis."""
+    table — ONE definition shared by the trap queries, so the exact
+    and the register formulations can never drift on the URL
+    synthesis."""
     did = F.col("doc_id")
     path = F.when(
         did % 3 == 0,
@@ -2815,8 +2815,7 @@ def q_recrawl_intervals(spark, sf):
 # bounded-state formulation of trap detection: per (host, template) the
 # distinct-URL count lives in 2^b integer registers instead of a
 # count(DISTINCT url) shuffle of every distinct URL, which is what a
-# 10^10-row frontier needs and exactly the state the streaming twin
-# (url_trap_stream) carries per key. Register math is integer-exact
+# 10^10-row frontier needs. Register math is integer-exact
 # (same derivation as hll_registers), so the oracle checks the full
 # sketch bit-for-bit; the estimate is a deterministic fold of these
 # registers (operators/sketch.py estimate_from_registers).
