@@ -59,8 +59,29 @@ def _docs(spark):
 
 def test_trainer_matches_independent_python_bpe(spark):
     golden, _, _ = _golden_bpe(TEXTS, 20)
-    got = bpe.train_bpe(_docs(spark), 20, checkpoint_every=5)
+    got = bpe.train_bpe(_docs(spark), 20)
     assert got == golden
+
+
+def _n_distinct_words() -> int:
+    return len({w for t in TEXTS for w in re.split(r"\s+", t.lower()) if w})
+
+
+def test_word_table_at_the_collect_bound_is_exact(spark, monkeypatch):
+    """A table of exactly `_MAX_WORDS` words trains on all of them: the
+    bounded collect returns the same merges as the golden trainer."""
+    monkeypatch.setattr(bpe, "_MAX_WORDS", _n_distinct_words())
+    golden, _, _ = _golden_bpe(TEXTS, 20)
+    assert bpe.train_bpe(_docs(spark), 20) == golden
+
+
+def test_word_table_over_the_collect_bound_raises(spark, monkeypatch):
+    """One word over `_MAX_WORDS` refuses to collect and names the knob
+    that bounds the table instead; the knob itself still trains."""
+    monkeypatch.setattr(bpe, "_MAX_WORDS", _n_distinct_words() - 1)
+    with pytest.raises(ValueError, match="max_distinct_words"):
+        bpe.train_bpe(_docs(spark), 20)
+    assert bpe.train_bpe(_docs(spark), 20, max_distinct_words=5)
 
 
 def test_apply_matches_golden_tokenization(spark):

@@ -202,7 +202,7 @@ def test_corrupt_stream_fails_the_row_instead_of_salvaging():
 
     row = {"key": "http://h/a", "url": "http://h/a", "host": "h",
            "execute_count": 0, "meta": None}
-    out = _fetch_one(row, CorruptWeb(), None, RegexRule([]), CrawlerConfig())
+    out = _fetch_one(row, CorruptWeb(), RegexRule([]), CrawlerConfig())
     assert out["status"] == STATUS_DB_FAILED and out["code"] == 200
     assert out["execute_count"] == 1 and out["links"] is None
 

@@ -309,15 +309,6 @@ def decode_qimg(data: bytes) -> np.ndarray:
     return np.minimum(arr.astype(np.uint16) * q + q // 2, 255).astype(np.uint8)
 
 
-def encode_jpeg(pixels: np.ndarray, quality: int = 98) -> bytes:
-    """REAL baseline JPEG bytes (DCT + Huffman, webcollector_spark.jpeg)
-    — the lossy path for real compressed payloads; QIMG remains only as
-    the labeled fast stand-in where tests pin its exact bytes."""
-    from webcollector_spark import jpeg
-
-    return jpeg.encode_baseline(pixels, quality)
-
-
 def encode_bmp(pixels: np.ndarray, top_down: bool = False) -> bytes:
     """RGB8 HxWx3 -> Windows BMP (BITMAPINFOHEADER, 24bpp BI_RGB).
     Lossless: BGR byte order, rows padded to 4 bytes, stored bottom-up

@@ -25,12 +25,10 @@ class CrawlerConfig:
     # Fetch pool parallelism (crawler/Crawler.java:60). In Spark this
     # becomes the most fetch partitions a round uses.
     threads: int = 50
-    connect_timeout_ms: int = 3000   # util/Config.java:34
-    read_timeout_ms: int = 10000     # util/Config.java:35
-    max_receive_size: int = 10 * 1024 * 1024  # util/Config.java:28
-    # Requester identity (conf/Configuration.java defaults).
-    user_agent: str | None = None
-    cookie: str | None = None
+    # Body cap for the fetch pass's transfer decode (util/Config.java:28).
+    # Timeouts, user agent and cookie belong to the requester
+    # (`HttpRequester`'s own arguments).
+    max_receive_size: int = 10 * 1024 * 1024
     # Resume: keep existing crawldb instead of wiping (Crawler.java:101-110).
     resumable: bool = False
     # Auto-parse: harvest a[href] (+ *[src] when detect_img) from HTML

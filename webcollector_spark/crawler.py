@@ -32,7 +32,11 @@ from webcollector_spark.config import CrawlerConfig
 from webcollector_spark.operators.fetch import CODE_ROBOTS_DENIED, min_gap_ms
 from webcollector_spark.operators.fetch import fetch as fetch_op
 from webcollector_spark.operators.generate import generate, generate_per_host
-from webcollector_spark.operators.parse import discovered_datums, discovered_links
+from webcollector_spark.operators.parse import (
+    canonical_default_keys,
+    discovered_datums,
+    discovered_links,
+)
 from webcollector_spark.operators.seen import build_bloom, seen_filter
 from webcollector_spark.schema import (
     CODE_NOT_SET,
@@ -77,20 +81,6 @@ def seed_rows(
              host_of(url), depth, priority)
         )
     return local_frame(spark, rows, FRONTIER_SCHEMA)
-
-
-def _canonical_default_keys(df: DataFrame) -> DataFrame:
-    """Default-key rows (key == url) adopt the canonical key, so they
-    unify with canonicalized discovered links; explicit user keys
-    (key != url tasks) are untouched."""
-    from webcollector_spark.functions.urls import canonical_url_col
-
-    return df.withColumn(
-        "key",
-        F.when(
-            F.col("key") == F.col("url"), canonical_url_col(F.col("url"))
-        ).otherwise(F.col("key")),
-    )
 
 
 def host_round_stats(fetched: DataFrame) -> DataFrame:
@@ -356,7 +346,7 @@ class BreadthCrawler:
 
                 sm = sitemap_datums(sitemap_entries(fetched))
                 if cfg.canonicalize_link_keys:
-                    sm = _canonical_default_keys(sm)
+                    sm = canonical_default_keys(sm)
                 links = links.unionByName(sm)
             if 0 < cfg.bloom_capacity and cfg.bloom_min_frontier <= n_frontier:
                 # size from the LIVE frontier count (memoized — no extra
@@ -432,7 +422,7 @@ class BreadthCrawler:
     def _seed_df(self, seeds: list) -> DataFrame:
         df = seed_rows(self.spark, seeds)
         if self.config.canonicalize_link_keys:
-            df = _canonical_default_keys(df)
+            df = canonical_default_keys(df)
         return df
 
     def _generate(self, frontier: DataFrame, n_frontier: int) -> DataFrame:

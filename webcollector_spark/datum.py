@@ -4,17 +4,14 @@
 The Python classes exist for the driver-side API (seeding, plugins,
 tests — the reference's user-facing surface); inside the engine a datum
 is a DataFrame row and meta a map<string,string> column. Typed meta
-accessors are provided twice: on the class (Gson metaAsInt/Long/Double/
-Boolean, CrawlDatum.java:193-217) and as Spark Column helpers that cast
-at read, preserving the stringly-typed storage model.
+accessors live on the class (Gson metaAsInt/Long/Double/Boolean,
+CrawlDatum.java:193-217) and cast at read, preserving the
+stringly-typed storage model.
 """
 
 from __future__ import annotations
 
 import json
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from webcollector_spark.schema import (
     CODE_NOT_SET,
@@ -166,32 +163,3 @@ class CrawlDatums(list):
 
 def _coerce(item) -> CrawlDatum:
     return item if isinstance(item, CrawlDatum) else CrawlDatum(item)
-
-
-# ---------------------------------------------------------------------------
-# Spark Column helpers: typed meta reads over the map<string,string>
-# column — the engine-side mirror of metaAsInt/Long/Double/Boolean.
-
-def meta_col(meta: Column | str, key: str) -> Column:
-    m = F.col(meta) if isinstance(meta, str) else meta
-    return m.getItem(key)
-
-
-def meta_int(meta: Column | str, key: str) -> Column:
-    return meta_col(meta, key).cast("int")
-
-
-def meta_long(meta: Column | str, key: str) -> Column:
-    return meta_col(meta, key).cast("long")
-
-
-def meta_double(meta: Column | str, key: str) -> Column:
-    return meta_col(meta, key).cast("double")
-
-
-def meta_boolean(meta: Column | str, key: str) -> Column:
-    return meta_col(meta, key) == "true"
-
-
-def type_col(meta: Column | str) -> Column:
-    return meta_col(meta, META_KEY_TYPE)

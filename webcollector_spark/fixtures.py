@@ -616,18 +616,6 @@ def seeds_for(graph: pd.DataFrame, n_seeds: int = 3) -> list[str]:
     return sorted(graph["url"].tolist())[:n_seeds]
 
 
-def html_for_page(url: str, links: list[str], caption: str | None) -> str:
-    """Render a page's HTML (what the synthetic requester serves): the
-    caption in a <p class=caption> plus anchor tags for each out-link."""
-    anchors = "\n".join(f'<a href="{u}">link</a>' for u in links)
-    cap = f'<p class="caption">{caption}</p>' if caption else ""
-    return (
-        f"<html><head><title>{url}</title>"
-        f'<meta http-equiv="Content-Type" content="text/html; charset=utf-8"/></head>'
-        f"<body>{cap}\n{anchors}</body></html>"
-    )
-
-
 def corpus_with_caption_noise(
     n: int = 200, dupes: int = 40, seed: int = SEED
 ) -> pd.DataFrame:

@@ -24,10 +24,7 @@ Reference anchor: fetched payloads are opaque bytes + typed metadata
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,6 +36,7 @@ from webcollector_spark.operators.media import (
     adpcm_waveform,
     encode_wav,
 )
+from webcollector_spark.session import map_rows
 
 N_SEGMENTS = 17
 N_BANDS = 5
@@ -87,23 +85,16 @@ def audio_fingerprints(audio: DataFrame) -> DataFrame:
     Arrow batches — one row in, one 64-bit row out; a pure map stage at
     any corpus size."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in FP_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                wave = _audio_decoder(r["fmt"])(
-                    r["audio_id"], bytes(r["bytes"]), r["n_samples"]
-                )
-                rows.append(
-                    {
-                        "audio_id": r["audio_id"],
-                        "afp": hk_fingerprint(wave, r["sample_rate"]),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def row(r):
+        wave = _audio_decoder(r["fmt"])(
+            r["audio_id"], bytes(r["bytes"]), r["n_samples"]
+        )
+        yield {
+            "audio_id": r["audio_id"],
+            "afp": hk_fingerprint(wave, r["sample_rate"]),
+        }
 
-    return audio.mapInPandas(run, schema=FP_SCHEMA)
+    return map_rows(audio, FP_SCHEMA, row)
 
 
 def audio_neardup_pairs(fps: DataFrame, max_hamming: int = 8) -> DataFrame:

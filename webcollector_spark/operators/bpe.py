@@ -43,6 +43,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 SEP = "\x1f"
+# the most distinct words `train_bpe` collects when no
+# `max_distinct_words` is given
+_MAX_WORDS = 10**7
 
 
 def enc_pattern(lhs: str, rhs: str) -> str:
@@ -193,7 +196,6 @@ def train_bpe(
     docs: DataFrame,
     k: int,
     text_col: str = "text",
-    checkpoint_every: int = 6,  # retained for API compat; unused
     max_distinct_words: int | None = None,
 ) -> list[tuple[int, str, str, int]]:
     """Learn the first k merges; returns [(rank, lhs, rhs, freq)].
@@ -202,7 +204,9 @@ def train_bpe(
 
     ONE distributed pass builds the word-frequency table — O(distinct
     words), Zipf-bounded to ~10^7 rows at ANY corpus size — which is
-    collected once and trained locally (train_local). A real tokenizer
+    collected once and trained locally (train_local). The collect is
+    bounded: a table of more than `_MAX_WORDS` (10^7) words raises a
+    ValueError instead of filling the driver. A real tokenizer
     is k=32,000-50,000 merges; the previous one-Spark-job-per-merge
     loop was the driver-side scale-killer class (VERDICT r4 item 2:
     30k+ sequential jobs = days of scheduler latency regardless of
@@ -214,10 +218,18 @@ def train_bpe(
     the tail is not worth driver memory; None (default) is exact."""
     wf = word_freqs(docs, text_col)
     if max_distinct_words is not None:
-        wf = wf.orderBy(F.desc("freq"), F.asc("word")).limit(
-            max_distinct_words
+        rows = (
+            wf.orderBy(F.desc("freq"), F.asc("word"))
+            .limit(max_distinct_words)
+            .collect()
         )
-    rows = wf.collect()
+    else:
+        rows = wf.limit(_MAX_WORDS + 1).collect()
+        if len(rows) > _MAX_WORDS:
+            raise ValueError(
+                f"train_bpe: more than {_MAX_WORDS} distinct words; pass "
+                "max_distinct_words= to train on the most frequent ones"
+            )
     return train_local([(r.word, int(r.freq)) for r in rows], k)
 
 

@@ -39,6 +39,7 @@ from webcollector_spark.schema import (
     STATUS_DB_FAILED,
     STATUS_DB_SUCCESS,
 )
+from webcollector_spark.session import rows_frame
 from webcollector_spark.sources.requester import SUCCESS_CODES, Requester, RobotsCache
 
 from pyspark.sql import DataFrame
@@ -80,13 +81,12 @@ class _HostBucket:
 def _fetch_one(
     row: dict,
     requester: Requester,
-    robots: RobotsCache | None,
     rule: RegexRule,
     cfg: CrawlerConfig,
     dispatcher=None,
-    robots_ok: bool | None = None,
+    robots_ok: bool = True,
 ) -> dict:
-    url, host = row["url"], row["host"]
+    url = row["url"]
     out = dict(row)
     out["execute_count"] = row["execute_count"] + 1
     out["execute_time"] = int(time.time() * 1000)
@@ -96,11 +96,9 @@ def _fetch_one(
         robots_delay_ms=None,
     )
 
-    # robots_ok: the run loop's pre-gate verdict (it must decide BEFORE
-    # the politeness wait). None = not pre-checked (direct callers).
-    if robots_ok is False or (
-        robots_ok is None and robots is not None and not robots.allowed(host, url)
-    ):
+    # robots_ok: the run loop's robots verdict, taken BEFORE the
+    # politeness wait
+    if not robots_ok:
         out["status"], out["code"] = STATUS_DB_FAILED, CODE_ROBOTS_DENIED
         return out
 
@@ -343,15 +341,13 @@ def fetch(
         robots = RobotsCache(req, cfg.robots_ttl_s) if cfg.robots_ttl_s > 0 else None
         bucket = _HostBucket(cfg.per_host_rate, cfg.execute_interval_ms)
         rule = RegexRule(cfg.regex_rules)
-        cols = [f.name for f in FETCHED_SCHEMA.fields]
         for pdf in batches:
             out_rows = []
             for row in pdf.to_dict("records"):
                 # robots gate FIRST: a disallowed row makes no request,
                 # so it must not consume the politeness budget (a
                 # Disallow-all host with Crawl-delay 30 would otherwise
-                # stall its partition 30 s per never-made request). The
-                # verdict is passed down so the rules scan runs ONCE.
+                # stall its partition 30 s per never-made request).
                 ok = robots is None or robots.allowed(row["host"], row["url"])
                 delay = None
                 if ok:
@@ -362,20 +358,13 @@ def fetch(
                         else None
                     )
                     bucket.wait(row["host"], delay)
-                rec = _fetch_one(
-                    row, req, robots, rule, cfg, disp, robots_ok=ok
-                )
+                rec = _fetch_one(row, req, rule, cfg, disp, robots_ok=ok)
                 if delay:
                     # observed politeness gap — next round's host-budget
                     # clamp learns from it (crawler._fold_host_state)
                     rec["robots_delay_ms"] = int(round(delay * 1000))
                 out_rows.append(rec)
-            out = pd.DataFrame(out_rows, columns=cols)
-            # nullable Int64: a None (304 rows, no Crawl-delay) next to
-            # ints would make the column float64 and round 64-bit phashes
-            for c in ("phash", "robots_delay_ms"):
-                out[c] = pd.array([r[c] for r in out_rows], dtype="Int64")
-            yield out
+            yield rows_frame(out_rows, FETCHED_SCHEMA)
 
     # Partition count adapts to the round size (`n_rows` hint): tiny
     # rounds don't pay Python-worker setup for near-empty partitions.

@@ -4,8 +4,9 @@
 The graft's payload work: decode, verify (PSNR vs ground truth),
 feature-extract (resize / phash), and near-dup by perceptual-hash
 hamming distance. Binary payloads stay opaque BinaryType columns; all
-pixel work happens inside iterator-of-Arrow-batches UDFs (mapInPandas)
-— no per-row Python at the Spark boundary (input_hint mandate).
+pixel work happens inside iterator-of-Arrow-batches UDFs
+(`session.map_rows`) — no per-row Python at the Spark boundary
+(input_hint mandate).
 
 Scale notes:
 * decode/resize/phash are embarrassingly parallel map stages — they
@@ -24,8 +25,6 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 
@@ -35,6 +34,7 @@ from pyspark.sql import types as T
 
 from webcollector_spark import codecs, fixtures
 from webcollector_spark.schema import CORPUS_SCHEMA
+from webcollector_spark.session import map_rows
 
 DECODE_META_SCHEMA = T.StructType(
     [
@@ -213,27 +213,21 @@ def decode_verify(corpus: DataFrame, psnr_gate_db: float = 40.0) -> DataFrame:
     input_hint: decoded pixels vs recomputed ground truth — exact for
     lossless (PSNR inf), >= 40 dB for lossy — plus phash equality."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                pixels = codecs.decode(bytes(r["bytes"]))
-                truth = fixtures.ground_truth_pixels(r["image_id"], r["w"], r["h"])
-                psnr = codecs.psnr_db(pixels, truth)
-                rows.append(
-                    {
-                        "image_id": r["image_id"],
-                        "w": int(r["w"]),
-                        "h": int(r["h"]),
-                        "fmt": r["fmt"],
-                        "psnr_db": float(min(psnr, 1e9)),
-                        "psnr_ok": bool(psnr >= psnr_gate_db),
-                        "phash_match": codecs.phash64(pixels) == int(r["phash"]),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in DECODE_META_SCHEMA])
+    def row(r):
+        pixels = codecs.decode(bytes(r["bytes"]))
+        truth = fixtures.ground_truth_pixels(r["image_id"], r["w"], r["h"])
+        psnr = codecs.psnr_db(pixels, truth)
+        yield {
+            "image_id": r["image_id"],
+            "w": int(r["w"]),
+            "h": int(r["h"]),
+            "fmt": r["fmt"],
+            "psnr_db": float(min(psnr, 1e9)),
+            "psnr_ok": bool(psnr >= psnr_gate_db),
+            "phash_match": codecs.phash64(pixels) == int(r["phash"]),
+        }
 
-    return corpus.mapInPandas(run, schema=DECODE_META_SCHEMA)
+    return map_rows(corpus, DECODE_META_SCHEMA, row)
 
 
 UPRIGHT_SCHEMA = T.StructType(
@@ -263,34 +257,27 @@ def exif_upright_decode(
     decode_verify: one Arrow pass, no shuffle."""
     from webcollector_spark.exif import normalize_orientation, parse_exif
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                data = bytes(r["bytes"])
-                tag = parse_exif(data)["orientation"]
-                stored = codecs.decode(data)
-                upright = normalize_orientation(stored, tag)
-                uh, uw = upright.shape[:2]
-                truth = fixtures.ground_truth_pixels(r["image_id"], uw, uh)
-                psnr = codecs.psnr_db(upright, truth)
-                rows.append(
-                    {
-                        "image_id": r["image_id"],
-                        "orientation": tag,
-                        "w_stored": stored.shape[1],
-                        "h_stored": stored.shape[0],
-                        "w_upright": uw,
-                        "h_upright": uh,
-                        "psnr_db": float(min(psnr, 1e9)),
-                        "psnr_ok": bool(psnr >= psnr_gate_db),
-                        "phash_match": codecs.phash64(upright)
-                        == int(r["phash"]),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in UPRIGHT_SCHEMA])
+    def row(r):
+        data = bytes(r["bytes"])
+        tag = parse_exif(data)["orientation"]
+        stored = codecs.decode(data)
+        upright = normalize_orientation(stored, tag)
+        uh, uw = upright.shape[:2]
+        truth = fixtures.ground_truth_pixels(r["image_id"], uw, uh)
+        psnr = codecs.psnr_db(upright, truth)
+        yield {
+            "image_id": r["image_id"],
+            "orientation": tag,
+            "w_stored": stored.shape[1],
+            "h_stored": stored.shape[0],
+            "w_upright": uw,
+            "h_upright": uh,
+            "psnr_db": float(min(psnr, 1e9)),
+            "psnr_ok": bool(psnr >= psnr_gate_db),
+            "phash_match": codecs.phash64(upright) == int(r["phash"]),
+        }
 
-    return corpus.mapInPandas(run, schema=UPRIGHT_SCHEMA)
+    return map_rows(corpus, UPRIGHT_SCHEMA, row)
 
 
 def resize_meanpool(corpus: DataFrame, out: int = 16) -> DataFrame:
@@ -299,32 +286,26 @@ def resize_meanpool(corpus: DataFrame, out: int = 16) -> DataFrame:
     thumbnail stage; the Spark plumbing (schema, batching, partitioning)
     is the real deliverable, the kernel is swappable."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                px = codecs.decode(bytes(r["bytes"])).astype(np.float64)
-                h, w, _ = px.shape
-                th, tw = (h // out) * out, (w // out) * out
-                if th == 0 or tw == 0:
-                    small = np.zeros((out, out, 3))
-                else:
-                    small = (
-                        px[:th, :tw]
-                        .reshape(out, th // out, out, tw // out, 3)
-                        .mean(axis=(1, 3))
-                    )
-                rows.append(
-                    {
-                        "image_id": r["image_id"],
-                        "out_w": out,
-                        "out_h": out,
-                        "pixel_sum": int(small.round().astype(np.int64).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZE_SCHEMA])
+    def row(r):
+        px = codecs.decode(bytes(r["bytes"])).astype(np.float64)
+        h, w, _ = px.shape
+        th, tw = (h // out) * out, (w // out) * out
+        if th == 0 or tw == 0:
+            small = np.zeros((out, out, 3))
+        else:
+            small = (
+                px[:th, :tw]
+                .reshape(out, th // out, out, tw // out, 3)
+                .mean(axis=(1, 3))
+            )
+        yield {
+            "image_id": r["image_id"],
+            "out_w": out,
+            "out_h": out,
+            "pixel_sum": int(small.round().astype(np.int64).sum()),
+        }
 
-    return corpus.mapInPandas(run, schema=RESIZE_SCHEMA)
+    return map_rows(corpus, RESIZE_SCHEMA, row)
 
 
 CHANNEL_PARTIALS_SCHEMA = T.StructType(
@@ -345,28 +326,20 @@ def channel_partials(corpus: DataFrame) -> DataFrame:
     partials integer means the global reduce is EXACT regardless of how
     many partitions contribute, unlike folding floating means."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                px = codecs.decode(bytes(r["bytes"])).astype(np.int64)
-                n = px.shape[0] * px.shape[1]
-                for ci, ch in enumerate("rgb"):
-                    lane = px[:, :, ci]
-                    rows.append(
-                        {
-                            "image_id": r["image_id"],
-                            "channel": ch,
-                            "n_px": int(n),
-                            "s": int(lane.sum()),
-                            "ss": int((lane * lane).sum()),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in CHANNEL_PARTIALS_SCHEMA]
-            )
+    def row(r):
+        px = codecs.decode(bytes(r["bytes"])).astype(np.int64)
+        n = px.shape[0] * px.shape[1]
+        for ci, ch in enumerate("rgb"):
+            lane = px[:, :, ci]
+            yield {
+                "image_id": r["image_id"],
+                "channel": ch,
+                "n_px": int(n),
+                "s": int(lane.sum()),
+                "ss": int((lane * lane).sum()),
+            }
 
-    return corpus.mapInPandas(run, schema=CHANNEL_PARTIALS_SCHEMA)
+    return map_rows(corpus, CHANNEL_PARTIALS_SCHEMA, row)
 
 
 def channel_stats(corpus: DataFrame) -> DataFrame:
@@ -406,20 +379,13 @@ def with_dhash(corpus: DataFrame) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [
-                    {
-                        "image_id": r["image_id"],
-                        "dhash": codecs.dhash64(codecs.decode(bytes(r["bytes"]))),
-                    }
-                    for r in pdf.to_dict("records")
-                ],
-                columns=["image_id", "dhash"],
-            )
+    def row(r):
+        yield {
+            "image_id": r["image_id"],
+            "dhash": codecs.dhash64(codecs.decode(bytes(r["bytes"]))),
+        }
 
-    return corpus.mapInPandas(run, schema=schema)
+    return map_rows(corpus, schema, row)
 
 
 def dhash_neardup_blocked(corpus: DataFrame, max_hamming: int = 4) -> DataFrame:
@@ -753,24 +719,11 @@ def sharpness_partials(corpus: DataFrame) -> DataFrame:
     partials make the downstream variance partition-independent and
     bit-reproducible between engines."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                n, s, ss = codecs.lap_partials(codecs.decode(bytes(r["bytes"])))
-                rows.append(
-                    {
-                        "image_id": r["image_id"],
-                        "n_lap": n,
-                        "s_lap": s,
-                        "ss_lap": ss,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in SHARPNESS_PARTIALS_SCHEMA]
-            )
+    def row(r):
+        n, s, ss = codecs.lap_partials(codecs.decode(bytes(r["bytes"])))
+        yield {"image_id": r["image_id"], "n_lap": n, "s_lap": s, "ss_lap": ss}
 
-    return corpus.mapInPandas(run, schema=SHARPNESS_PARTIALS_SCHEMA)
+    return map_rows(corpus, SHARPNESS_PARTIALS_SCHEMA, row)
 
 
 def image_sharpness(
@@ -854,45 +807,34 @@ def features_fused(corpus: DataFrame, exif_upright: bool = False) -> DataFrame:
     upload hashes >8 phash bits away from its upright original
     (tests/test_exif.py) and the dedup clusters silently split."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    from webcollector_spark.exif import normalize_orientation, parse_exif
+
+    def row(r):
+        data = bytes(r["bytes"])
+        px = codecs.decode(data)
         if exif_upright:
-            from webcollector_spark.exif import normalize_orientation, parse_exif
+            px = normalize_orientation(px, parse_exif(data)["orientation"])
+        lanes = px.astype(np.int64)
+        n_lap, s_lap, ss_lap = codecs.lap_partials(px)
+        yield {
+            "image_id": r["image_id"],
+            "w": int(px.shape[1]),
+            "h": int(px.shape[0]),
+            "n_px": int(px.shape[0] * px.shape[1]),
+            "s_r": int(lanes[:, :, 0].sum()),
+            "s_g": int(lanes[:, :, 1].sum()),
+            "s_b": int(lanes[:, :, 2].sum()),
+            "ss_r": int((lanes[:, :, 0] ** 2).sum()),
+            "ss_g": int((lanes[:, :, 1] ** 2).sum()),
+            "ss_b": int((lanes[:, :, 2] ** 2).sum()),
+            "n_lap": n_lap,
+            "s_lap": s_lap,
+            "ss_lap": ss_lap,
+            "phash": codecs.phash64(px),
+            "dhash": codecs.dhash64(px),
+        }
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                data = bytes(r["bytes"])
-                px = codecs.decode(data)
-                if exif_upright:
-                    px = normalize_orientation(
-                        px, parse_exif(data)["orientation"]
-                    )
-                lanes = px.astype(np.int64)
-                n_lap, s_lap, ss_lap = codecs.lap_partials(px)
-                rows.append(
-                    {
-                        "image_id": r["image_id"],
-                        "w": int(px.shape[1]),
-                        "h": int(px.shape[0]),
-                        "n_px": int(px.shape[0] * px.shape[1]),
-                        "s_r": int(lanes[:, :, 0].sum()),
-                        "s_g": int(lanes[:, :, 1].sum()),
-                        "s_b": int(lanes[:, :, 2].sum()),
-                        "ss_r": int((lanes[:, :, 0] ** 2).sum()),
-                        "ss_g": int((lanes[:, :, 1] ** 2).sum()),
-                        "ss_b": int((lanes[:, :, 2] ** 2).sum()),
-                        "n_lap": n_lap,
-                        "s_lap": s_lap,
-                        "ss_lap": ss_lap,
-                        "phash": codecs.phash64(px),
-                        "dhash": codecs.dhash64(px),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FUSED_FEATURES_SCHEMA]
-            )
-
-    return corpus.mapInPandas(run, schema=FUSED_FEATURES_SCHEMA)
+    return map_rows(corpus, FUSED_FEATURES_SCHEMA, row)
 
 
 def image_neardup_best_keepers(
@@ -970,29 +912,21 @@ def letterbox_geometry(corpus: DataFrame) -> DataFrame:
     any corpus size; feed its output to aspect_bucket_assign on
     (content_w, content_h) instead of the padded (w, h)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                px = codecs.decode(bytes(r["bytes"]))
-                h, w = px.shape[:2]
-                t, b, l, rt = codecs.border_geometry(px)
-                rows.append(
-                    {
-                        "image_id": r["image_id"],
-                        "w": w,
-                        "h": h,
-                        "top": t,
-                        "bottom": b,
-                        "left": l,
-                        "right": rt,
-                        "content_w": max(0, w - l - rt),
-                        "content_h": max(0, h - t - b),
-                        "boxed": (t + b + l + rt) > 0,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in LETTERBOX_SCHEMA.fields]
-            )
+    def row(r):
+        px = codecs.decode(bytes(r["bytes"]))
+        h, w = px.shape[:2]
+        t, b, l, rt = codecs.border_geometry(px)
+        yield {
+            "image_id": r["image_id"],
+            "w": w,
+            "h": h,
+            "top": t,
+            "bottom": b,
+            "left": l,
+            "right": rt,
+            "content_w": max(0, w - l - rt),
+            "content_h": max(0, h - t - b),
+            "boxed": (t + b + l + rt) > 0,
+        }
 
-    return corpus.mapInPandas(run, schema=LETTERBOX_SCHEMA)
+    return map_rows(corpus, LETTERBOX_SCHEMA, row)

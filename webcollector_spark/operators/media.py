@@ -32,14 +32,14 @@ around it is fixed.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from webcollector_spark.session import map_rows
 
 # input_hint generalized: opaque payload + typed metadata
 VIDEO_SCHEMA = T.StructType(
@@ -863,64 +863,40 @@ def sample_frames(videos: DataFrame, every_n: int = 4) -> DataFrame:
     rows out (the UDTF shape); partitioning is inherited — a pure map
     stage, no shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in FRAME_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                decode = _video_decoder(r["fmt"])
-                for idx, frame in decode(
-                    r["video_id"], bytes(r["bytes"]), r["n_frames"], r["w"], r["h"]
-                ):
-                    if idx % every_n:
-                        continue
-                    mean = float(frame.mean())
-                    rows.append(
-                        {
-                            "video_id": r["video_id"],
-                            "frame_idx": idx,
-                            "ts_sec": idx / r["fps"],
-                            "frame_mean": round(mean, 4),
-                            "frame_hash": int(
-                                np.int64(
-                                    int.from_bytes(
-                                        frame.tobytes()[:8], "big", signed=False
-                                    )
-                                    >> 1
-                                )
-                            ),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-                columns=cols
-            )
+    def row(r):
+        decode = _video_decoder(r["fmt"])
+        for idx, frame in decode(
+            r["video_id"], bytes(r["bytes"]), r["n_frames"], r["w"], r["h"]
+        ):
+            if idx % every_n:
+                continue
+            yield {
+                "video_id": r["video_id"],
+                "frame_idx": idx,
+                "ts_sec": idx / r["fps"],
+                "frame_mean": round(float(frame.mean()), 4),
+                "frame_hash": int.from_bytes(frame.tobytes()[:8], "big") >> 1,
+            }
 
-    return videos.mapInPandas(run, schema=FRAME_SCHEMA)
+    return map_rows(videos, FRAME_SCHEMA, row)
 
 
 def audio_features(audio: DataFrame) -> DataFrame:
     """Per-clip features over the stub-decoded waveform (rms, zero
     crossings) — the librosa-shaped pipeline with a fake kernel."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in AUDIO_FEAT_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                wave = _audio_decoder(r["fmt"])(
-                    r["audio_id"], bytes(r["bytes"]), r["n_samples"]
-                )
-                rows.append(
-                    {
-                        "audio_id": r["audio_id"],
-                        "duration_sec": round(r["n_samples"] / r["sample_rate"], 4),
-                        "rms": round(float(np.sqrt(np.mean(wave**2))), 6),
-                        "zero_crossings": int(np.sum(np.diff(np.sign(wave)) != 0)),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def row(r):
+        wave = _audio_decoder(r["fmt"])(
+            r["audio_id"], bytes(r["bytes"]), r["n_samples"]
+        )
+        yield {
+            "audio_id": r["audio_id"],
+            "duration_sec": round(r["n_samples"] / r["sample_rate"], 4),
+            "rms": round(float(np.sqrt(np.mean(wave**2))), 6),
+            "zero_crossings": int(np.sum(np.diff(np.sign(wave)) != 0)),
+        }
 
-    return audio.mapInPandas(run, schema=AUDIO_FEAT_SCHEMA)
+    return map_rows(audio, AUDIO_FEAT_SCHEMA, row)
 
 
 def scene_cuts(frames: DataFrame, threshold: float = 30.0) -> DataFrame:

@@ -43,6 +43,22 @@ def _mint_frontier_cols(key_col, url_col, meta_col):
     ]
 
 
+def canonical_default_keys(df: DataFrame) -> DataFrame:
+    """The one default-key canonicalization rule (O13): rows whose key is
+    the default (key == url) adopt the url's canonical form
+    (functions/urls.py), so seeds, sitemap rows, links and visitor
+    datums unify on one key; explicit user keys (key != url tasks) are
+    untouched. JVM-side expression — no Python."""
+    from webcollector_spark.functions.urls import canonical_url_col
+
+    return df.withColumn(
+        "key",
+        F.when(
+            F.col("key") == F.col("url"), canonical_url_col(F.col("url"))
+        ).otherwise(F.col("key")),
+    )
+
+
 def discovered_links(
     fetched: DataFrame, dedup: bool = True, canonical_keys: bool = False
 ) -> DataFrame:
@@ -54,22 +70,20 @@ def discovered_links(
     (depth asc, url asc) order — one less shuffle per round.
 
     `canonical_keys=True` keys each link on its canonical URL form
-    (functions/urls.py) instead of the raw string, collapsing
+    (`canonical_default_keys`) instead of the raw string, collapsing
     case/fragment/param-order aliases into one frontier row; the raw
-    url is preserved for fetching. JVM-side expression — no Python."""
+    url is preserved for fetching."""
     exploded = fetched.filter(F.col("links").isNotNull()).select(
         F.explode("links").alias("url"),
         (F.col("depth") + 1).alias("depth"),
         F.col("priority"),
     )
     # default key identity (O13): key = url (or its canonical form)
+    out = exploded.select(
+        *_mint_frontier_cols(F.col("url"), F.col("url"), F.lit(None))
+    )
     if canonical_keys:
-        from webcollector_spark.functions.urls import canonical_url_col
-
-        key_col = canonical_url_col(F.col("url"))
-    else:
-        key_col = F.col("url")
-    out = exploded.select(*_mint_frontier_cols(key_col, F.col("url"), F.lit(None)))
+        out = canonical_default_keys(out)
     if not dedup:
         return out
     # first-wins inside the round: keep the shallowest depth per key
@@ -89,26 +103,20 @@ def discovered_datums(fetched: DataFrame, canonical_keys: bool = False) -> DataF
     path. Intra-round/cross-round dedup is left to the merge window
     (first-wins per key, deterministic depth-asc/url-asc tiebreak).
 
-    `canonical_keys` applies ONLY to default-key datums — the fetch UDF
-    materializes key = url for those (a null key never reaches here), so
-    the default is detected as key == url, the same convention the seed
-    path uses; a user key that differs from the url is never rewritten."""
+    `canonical_keys` applies ONLY to default-key datums — a null key
+    defaults to the url, and `canonical_default_keys` detects the
+    default as key == url, the same rule the seed path uses; a user key
+    that differs from the url is never rewritten."""
     exploded = fetched.filter(F.col("next_datums").isNotNull()).select(
         F.explode("next_datums").alias("d"),
         (F.col("depth") + 1).alias("depth"),
         F.col("priority"),
     )
-    key_col = F.coalesce(F.col("d.key"), F.col("d.url"))
-    if canonical_keys:
-        from webcollector_spark.functions.urls import canonical_url_col
-
-        key_col = F.when(
-            key_col == F.col("d.url"), canonical_url_col(F.col("d.url"))
-        ).otherwise(key_col)
-    return exploded.select(
+    out = exploded.select(
         *_mint_frontier_cols(
-            key_col,
+            F.coalesce(F.col("d.key"), F.col("d.url")),
             F.col("d.url"),
             F.col("d.meta"),
         )
     )
+    return canonical_default_keys(out) if canonical_keys else out

@@ -28,15 +28,12 @@ lie (a third of real-crawl Content-Types disagree with payload magic).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from webcollector_spark import codecs
+from webcollector_spark.session import map_rows
 
 SNIFF_SCHEMA = T.StructType(
     [
@@ -62,25 +59,17 @@ def sniff_meta(corpus: DataFrame, prefix: int = 4096) -> DataFrame:
     from truncated/mislabeled payloads. Header bytes only; see module
     docstring for the plan shape."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                fmt, w, h = codecs.sniff_header(bytes(r["prefix"]))
-                fmt_ok = fmt == r["fmt"] or (r["fmt"], fmt) in _FMT_COMPAT
-                rows.append(
-                    {
-                        "image_id": r["image_id"],
-                        "n_bytes": int(r["n_bytes"]),
-                        "fmt_sniffed": fmt,
-                        "w_sniffed": w,
-                        "h_sniffed": h,
-                        "header_ok": bool(
-                            fmt_ok and w == r["w"] and h == r["h"]
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in SNIFF_SCHEMA])
+    def row(r):
+        fmt, w, h = codecs.sniff_header(bytes(r["prefix"]))
+        fmt_ok = fmt == r["fmt"] or (r["fmt"], fmt) in _FMT_COMPAT
+        yield {
+            "image_id": r["image_id"],
+            "n_bytes": int(r["n_bytes"]),
+            "fmt_sniffed": fmt,
+            "w_sniffed": w,
+            "h_sniffed": h,
+            "header_ok": bool(fmt_ok and w == r["w"] and h == r["h"]),
+        }
 
     sliced = corpus.select(
         "image_id",
@@ -90,7 +79,7 @@ def sniff_meta(corpus: DataFrame, prefix: int = 4096) -> DataFrame:
         F.octet_length("bytes").cast("long").alias("n_bytes"),
         F.substring("bytes", 1, prefix).alias("prefix"),
     )
-    return sliced.mapInPandas(run, schema=SNIFF_SCHEMA)
+    return map_rows(sliced, SNIFF_SCHEMA, row)
 
 
 EXIF_SCHEMA = T.StructType(
@@ -118,19 +107,13 @@ def exif_meta(corpus: DataFrame, prefix: int = 65536) -> DataFrame:
     rather than an error (triage, not validation)."""
     from webcollector_spark.exif import parse_exif
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                got = parse_exif(bytes(r["prefix"]))
-                got["image_id"] = r["image_id"]
-                rows.append(got)
-            yield pd.DataFrame(rows, columns=[f.name for f in EXIF_SCHEMA])
+    def row(r):
+        yield {**parse_exif(bytes(r["prefix"])), "image_id": r["image_id"]}
 
     sliced = corpus.select(
         "image_id", F.substring("bytes", 1, prefix).alias("prefix")
     )
-    return sliced.mapInPandas(run, schema=EXIF_SCHEMA)
+    return map_rows(sliced, EXIF_SCHEMA, row)
 
 
 JPEGQ_SCHEMA = T.StructType(
@@ -171,49 +154,35 @@ def jpeg_quality(corpus: DataFrame, prefix: int = 65536) -> DataFrame:
     derived quality triage that guess can never provide."""
     from webcollector_spark import jpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                data = bytes(r["prefix"])
-                tables = jpeg.parse_dqt(data)
-                is_jpeg = data[:2] == b"\xff\xd8"
-                ql = qc = qe = std = None
-                if tables:
-                    exact = []
-                    if 0 in tables:
-                        ql, ok = jpeg.estimate_quality(
-                            tables[0], jpeg.STD_LUMA_Q
-                        )
-                        exact.append(ok)
-                    if 1 in tables:
-                        qc, ok = jpeg.estimate_quality(
-                            tables[1], jpeg.STD_CHROMA_Q
-                        )
-                        exact.append(ok)
-                    present = [q for q in (ql, qc) if q is not None]
-                    qe = min(present) if present else None
-                    std = all(exact) if exact else None
-                rows.append(
-                    {
-                        "image_id": r["image_id"],
-                        "is_jpeg": is_jpeg,
-                        "n_tables": len(tables),
-                        "quality_luma": ql,
-                        "quality_chroma": qc,
-                        "quality_est": qe,
-                        "dqt_std": std,
-                    }
-                )
-            out = pd.DataFrame(rows, columns=[f.name for f in JPEGQ_SCHEMA])
-            for c in ("quality_luma", "quality_chroma", "quality_est"):
-                out[c] = out[c].astype("Int32")
-            yield out
+    def row(r):
+        data = bytes(r["prefix"])
+        tables = jpeg.parse_dqt(data)
+        ql = qc = qe = std = None
+        if tables:
+            exact = []
+            if 0 in tables:
+                ql, ok = jpeg.estimate_quality(tables[0], jpeg.STD_LUMA_Q)
+                exact.append(ok)
+            if 1 in tables:
+                qc, ok = jpeg.estimate_quality(tables[1], jpeg.STD_CHROMA_Q)
+                exact.append(ok)
+            present = [q for q in (ql, qc) if q is not None]
+            qe = min(present) if present else None
+            std = all(exact) if exact else None
+        yield {
+            "image_id": r["image_id"],
+            "is_jpeg": data[:2] == b"\xff\xd8",
+            "n_tables": len(tables),
+            "quality_luma": ql,
+            "quality_chroma": qc,
+            "quality_est": qe,
+            "dqt_std": std,
+        }
 
     sliced = corpus.select(
         "image_id", F.substring("bytes", 1, prefix).alias("prefix")
     )
-    return sliced.mapInPandas(run, schema=JPEGQ_SCHEMA)
+    return map_rows(sliced, JPEGQ_SCHEMA, row)
 
 
 PREVIEW_SCHEMA = T.StructType(
@@ -253,53 +222,32 @@ def progressive_preview(corpus: DataFrame, prefix: int = 1024) -> DataFrame:
         decode_progressive_prefix,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from webcollector_spark import codecs
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                data = bytes(r["prefix"])
-                out = {
-                    "image_id": r["image_id"],
-                    "is_progressive": jpeg.sof_marker(data) == 0xC2,
-                    "scans_done": None,
-                    "complete": None,
-                    "preview_ok": None,
-                    "phash_preview": None,
-                    "preview_hamming": None,
-                }
-                if out["is_progressive"]:
-                    pixels, scans, complete = decode_progressive_prefix(data)
-                    ph = codecs.phash64(pixels)
-                    out.update(
-                        scans_done=scans,
-                        complete=complete,
-                        preview_ok=scans >= 1,
-                        phash_preview=ph,
-                        preview_hamming=bin(
-                            (ph ^ int(r["phash"])) & ((1 << 64) - 1)
-                        ).count("1"),
-                    )
-                rows.append(out)
-            # int columns from the PYTHON ints: float64 inference over
-            # None rows would destroy int64 phash low bits
-            out_pdf = pd.DataFrame(
-                rows, columns=[f.name for f in PREVIEW_SCHEMA], dtype=object
+    def row(r):
+        data = bytes(r["prefix"])
+        out = {
+            "image_id": r["image_id"],
+            "is_progressive": jpeg.sof_marker(data) == 0xC2,
+        }
+        if out["is_progressive"]:
+            pixels, scans, complete = decode_progressive_prefix(data)
+            ph = codecs.phash64(pixels)
+            out.update(
+                scans_done=scans,
+                complete=complete,
+                preview_ok=scans >= 1,
+                phash_preview=ph,
+                preview_hamming=bin(
+                    (ph ^ int(r["phash"])) & ((1 << 64) - 1)
+                ).count("1"),
             )
-            for c in ("scans_done", "preview_hamming"):
-                out_pdf[c] = pd.array([r[c] for r in rows], dtype="Int32")
-            out_pdf["phash_preview"] = pd.array(
-                [r["phash_preview"] for r in rows], dtype="Int64"
-            )
-            yield out_pdf
+        yield out
 
     sliced = corpus.select(
         "image_id",
         "phash",
         F.substring("bytes", 1, prefix).alias("prefix"),
     )
-    return sliced.mapInPandas(run, schema=PREVIEW_SCHEMA)
+    return map_rows(sliced, PREVIEW_SCHEMA, row)
 
 
 def compression_stats(sniffed: DataFrame) -> DataFrame:

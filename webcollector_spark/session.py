@@ -19,14 +19,21 @@ driver's py4j round trips by about 36% (tools/round_cost.py).
 the rounds manifest) as a `LocalRelation` through Arrow. A frame built
 from a Python list is a pickled Python RDD instead, and every scan of it
 starts a Python worker.
+
+`map_rows` is the executor-side boundary for per-row Python kernels:
+it owns the `mapInPandas` batch loop, and `rows_frame` turns the
+kernel's output dicts into the pandas frame Spark converts to Arrow.
+Integer fields are typed from the Spark schema there, once, for every
+operator.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, LongType, StructType
 
 
 def driver_memory(total_mb: int) -> str:
@@ -96,3 +103,40 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> D
     cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in schema.fields]
     table = pa.Table.from_arrays(cols, schema=to_arrow_schema(schema))
     return spark.createDataFrame(table, schema)
+
+
+# pandas dtype of each Spark integer type: nullable, so a None next to
+# ints stays an int column instead of float64, which would round 64-bit
+# values (phashes) on the way back to Arrow
+_NULLABLE_INT = {IntegerType: "Int32", LongType: "Int64"}
+
+
+def rows_frame(rows: list[dict], schema: StructType):
+    """`rows` (dicts keyed by field name; a missing key is null) as a
+    pandas frame in `schema`'s column order. `IntegerType`/`LongType`
+    fields become nullable `Int32`/`Int64` arrays built from the Python
+    values; other columns keep pandas' inference."""
+    import pandas as pd
+
+    cols = {}
+    for f in schema.fields:
+        vals = [r.get(f.name) for r in rows]
+        dtype = _NULLABLE_INT.get(type(f.dataType))
+        cols[f.name] = pd.array(vals, dtype=dtype) if dtype else vals
+    return pd.DataFrame(cols)
+
+
+def map_rows(
+    df: DataFrame, schema: StructType, fn: Callable[[dict], Iterable[dict]]
+) -> DataFrame:
+    """`df` through a per-row Python kernel in one `mapInPandas` pass:
+    `fn(row)` gets each input row as a dict and yields zero or more
+    output dicts, which leave each Arrow batch through `rows_frame`."""
+
+    def run(batches: Iterator) -> Iterator:
+        for pdf in batches:
+            yield rows_frame(
+                [o for r in pdf.to_dict("records") for o in fn(r)], schema
+            )
+
+    return df.mapInPandas(run, schema=schema)
