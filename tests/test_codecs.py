@@ -1,3 +1,5 @@
+import struct
+
 import numpy as np
 import pytest
 
@@ -569,7 +571,7 @@ def test_bmp_rle8_roundtrip_and_escapes():
         np.repeat(rng.integers(0, 256, size=(23, 9)), 4, axis=1)[:, :31]
         .astype(np.uint8)
     )
-    enc = codecs.encode_bmp_rle8(idx, pal)
+    enc = encode_bmp_rle8(idx, pal)
     assert np.array_equal(codecs.decode_bmp(enc), pal[idx])
     assert codecs.sniff_header(enc[:64]) == ("bmp", 31, 23)
     # delta escape: skipped pixels stay palette[0]
@@ -577,7 +579,7 @@ def test_bmp_rle8_roundtrip_and_escapes():
     pal2 = np.zeros((256, 3), np.uint8)
     pal2[7] = (1, 2, 3)
     pal2[9] = (4, 5, 6)
-    hdr = codecs.encode_bmp_rle8(np.zeros((1, 8), np.uint8), pal2)
+    hdr = encode_bmp_rle8(np.zeros((1, 8), np.uint8), pal2)
     data_off = int.from_bytes(hdr[10:14], "little")
     crafted = bytearray(hdr[:data_off]) + body
     import struct as _s
@@ -596,7 +598,7 @@ def test_bmp_rle8_absolute_mode():
     pal = np.zeros((256, 3), np.uint8)
     for i in range(10):
         pal[i] = (i, i * 2, i * 3)
-    base = codecs.encode_bmp_rle8(np.zeros((1, 8), np.uint8), pal)
+    base = encode_bmp_rle8(np.zeros((1, 8), np.uint8), pal)
     data_off = int.from_bytes(base[10:14], "little")
     # absolute run of 5 (odd -> 1 pad byte), then a 3-run, then EOL+EOB
     body = bytes([0, 5, 1, 2, 3, 4, 5, 0, 3, 9, 0, 0, 0, 1])
@@ -615,7 +617,7 @@ def test_bmp_8bpp_uncompressed_palette():
     idx = rng.integers(0, 256, size=(6, 7)).astype(np.uint8)
     # build: take the RLE encoder's header/palette, swap compression 0
     # and a padded raw raster
-    base = codecs.encode_bmp_rle8(idx, pal)
+    base = encode_bmp_rle8(idx, pal)
     data_off = int.from_bytes(base[10:14], "little")
     stride = (7 + 3) & ~3
     raster = np.zeros((6, stride), np.uint8)
@@ -656,3 +658,42 @@ def test_ico_core_header_dib_decodes():
     _s.pack_into("<I", bad, 22, 16)
     with pytest.raises(NotImplementedError, match="header size 16"):
         codecs.decode_ico(bytes(bad))
+
+
+# -- fixture encoder (BI_RLE8 BMP) ---------------------------------------
+
+
+def encode_bmp_rle8(
+    indices: np.ndarray, palette: np.ndarray
+) -> bytes:
+    """8-bit index plane HxW + RGB palette (<=256x3) -> BI_RLE8 BMP
+    (r5 fixture encoder): per bottom-up row, maximal runs as (count,
+    index) pairs, end-of-line after each row, end-of-bitmap last."""
+    h, w = indices.shape
+    assert indices.dtype == np.uint8
+    n_pal, c = palette.shape
+    assert c == 3 and n_pal <= 256 and palette.dtype == np.uint8
+    body = bytearray()
+    for row in indices[::-1]:  # bottom-up
+        x = 0
+        while x < w:
+            run = 1
+            while x + run < w and run < 255 and row[x + run] == row[x]:
+                run += 1
+            body += bytes([run, int(row[x])])
+            x += run
+        body += b"\x00\x00"  # end of line
+    body += b"\x00\x01"  # end of bitmap
+    pal_quads = bytearray()
+    for r, g, b in palette:
+        pal_quads += bytes([b, g, r, 0])
+    pal_quads += b"\x00" * 4 * (256 - n_pal)
+    data_off = 14 + 40 + 4 * 256
+    out = b"BM" + struct.pack(
+        "<IHHI", data_off + len(body), 0, 0, data_off
+    )
+    out += struct.pack(
+        "<IiiHHIIiiII",
+        40, w, h, 1, 8, 1, len(body), 2835, 2835, 256, 0,
+    )
+    return out + bytes(pal_quads) + bytes(body)

@@ -172,9 +172,15 @@ def test_sql_generation():
     assert "MERGE INTO wc.db.frontier t USING __segments s ON t.key = s.key" in m
     assert "WHEN MATCHED AND s.is_fetch THEN UPDATE SET" in m
     assert "WHEN NOT MATCHED THEN INSERT" in m
-    # update branch touches exactly the fetch-mutable columns
-    update_set = m.split("UPDATE SET", 1)[1].split("WHEN NOT MATCHED", 1)[0]
-    for col in ("status", "execute_time", "execute_count", "code", "location", "meta"):
-        assert f"t.{col} = s.{col}" in update_set
-    for col in ("key", "url", "host", "depth", "priority"):
-        assert f"t.{col} = s.{col}" not in update_set
+    # a fetch row replaces every column of its key but the key itself,
+    # as `_fold` does on the RAM/parquet stores (a recrawl segment
+    # rewrites priority); the insert names every column
+    from webcollector_spark.schema import FRONTIER_SCHEMA
+
+    cols = [f.name for f in FRONTIER_SCHEMA.fields]
+    update_set = m.split("UPDATE SET ", 1)[1].split(" WHEN NOT MATCHED", 1)[0]
+    assert update_set == ", ".join(f"t.{c} = s.{c}" for c in cols if c != "key")
+    insert = m.split("THEN INSERT ", 1)[1]
+    assert insert == (
+        f"({', '.join(cols)}) VALUES ({', '.join('s.' + c for c in cols)})"
+    )

@@ -156,7 +156,7 @@ def test_mjpeg_video_through_sample_frames(spark):
             rng.integers(0, 256, size=(12, 16, 3), dtype=np.uint8)
             for _ in range(8)
         ]
-        data = media.encode_mjpeg_stream(frames)
+        data = encode_mjpeg_stream(frames)
         metas[vid] = data
         rows.append((vid, data, 8, 24.0, 16, 12, "mjpeg", f"caption of {vid}"))
     vids = spark.createDataFrame(rows, schema=media.VIDEO_SCHEMA)
@@ -173,7 +173,7 @@ def test_mjpeg_video_through_sample_frames(spark):
 
 def test_mjpeg_metadata_mismatch_raises():
     frames = [np.zeros((12, 16, 3), dtype=np.uint8)]
-    data = media.encode_mjpeg_stream(frames)
+    data = encode_mjpeg_stream(frames)
     with pytest.raises(ValueError, match="metadata"):
         list(media.decode_video_mjpeg("v", data, 1, 8, 8))
 
@@ -385,3 +385,14 @@ def test_subsampled_corpus_through_decode_verify(spark):
     ).collect()
     assert len(rows) == 24
     assert all(r["psnr_ok"] and r["phash_match"] for r in rows)
+
+
+# -- fixture encoder (MJPEG stream) --------------------------------------
+
+
+def encode_mjpeg_stream(frames: list[np.ndarray], quality: int = 98) -> bytes:
+    """Concatenated baseline-JPEG frames — the MJPEG wire shape (each
+    frame a complete SOI..EOI image, back to back). Fixture-side twin
+    of `decode_video_mjpeg`; REAL compression (DCT + Huffman), unlike
+    the zlib containers."""
+    return b"".join(jpeg.encode_baseline(f, quality) for f in frames)

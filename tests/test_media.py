@@ -7,6 +7,7 @@ from __future__ import annotations
 import numpy as np
 
 from webcollector_spark.operators import media
+from webcollector_spark.operators.media import AUDIO_SCHEMA, VIDEO_SCHEMA, encode_wav
 
 
 def test_sample_frames_fanout_and_determinism(spark):
@@ -73,7 +74,7 @@ def test_ppm_roundtrip_bit_exact():
     frames = [
         rng.integers(0, 256, size=(12, 16, 3), dtype=np.uint8) for _ in range(5)
     ]
-    data = media.encode_ppm_stream(frames)
+    data = encode_ppm_stream(frames)
     out = list(media.decode_video_real("v", data, 5, 16, 12))
     assert [i for i, _ in out] == [0, 1, 2, 3, 4]
     for (_, got), want in zip(out, frames):
@@ -117,7 +118,7 @@ def test_real_video_corpus_through_sample_frames(spark):
     """The REAL decode path produces the same downstream schema and
     ground-truth-recomputable features as the stub path — the seam is
     exercised end to end, not just declared."""
-    vids = media.make_real_video_corpus(spark, n=4, n_frames=8)
+    vids = make_real_video_corpus(spark, n=4, n_frames=8)
     out = media.sample_frames(vids, every_n=4)
     assert out.schema == media.FRAME_SCHEMA
     rows = out.collect()
@@ -134,7 +135,7 @@ def test_real_video_corpus_through_sample_frames(spark):
 
 
 def test_real_audio_corpus_through_audio_features(spark):
-    aud = media.make_real_audio_corpus(spark, n=4)
+    aud = make_real_audio_corpus(spark, n=4)
     out = media.audio_features(aud)
     assert out.schema == media.AUDIO_FEAT_SCHEMA
     feats = {r["audio_id"]: r for r in out.collect()}
@@ -150,9 +151,69 @@ def test_mixed_fmt_single_dataframe(spark):
     """One DataFrame mixing stub and real payloads: per-row dispatch,
     both decode correctly in the same Arrow batch."""
     mixed = media.make_video_corpus(spark, 3).unionByName(
-        media.make_real_video_corpus(spark, n=3, w=32, h=24)
+        make_real_video_corpus(spark, n=3, w=32, h=24)
     )
     rows = media.sample_frames(mixed, every_n=8).collect()
     vids = {r["video_id"] for r in rows}
     assert any(v.startswith("vid") for v in vids)
     assert any(v.startswith("rvid") for v in vids)
+
+
+# -- fixture encoders and corpora (real PPM video, real WAV audio) --------
+
+
+def encode_ppm_stream(frames: list[np.ndarray]) -> bytes:
+    """Concatenated binary-P6 stream — the `ffmpeg -f image2pipe
+    -vcodec ppm` wire format (header `P6\\n{w} {h}\\n255\\n` + raw RGB
+    raster per frame). Fixture-side twin of `decode_video_real`."""
+    out = bytearray()
+    for fr in frames:
+        h, w, c = fr.shape
+        assert c == 3 and fr.dtype == np.uint8
+        out += f"P6\n{w} {h}\n255\n".encode()
+        out += fr.tobytes()
+    return bytes(out)
+
+
+def make_real_video_corpus(
+    spark, n: int = 6, seed: int = 44, n_frames: int = 8,
+    w: int = 16, h: int = 12,
+):
+    """Video table whose payloads are REAL concatenated-P6 streams
+    (fmt='ppm'): the real decoder path, end to end, with recomputable
+    ground-truth frames from a seeded RNG."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for i in range(n):
+        frames = [
+            rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
+            for _ in range(n_frames)
+        ]
+        rows.append(
+            (
+                f"rvid{i:06d}",
+                encode_ppm_stream(frames),
+                n_frames,
+                24.0,
+                w,
+                h,
+                "ppm",
+                f"caption of rvid{i:06d}",
+            )
+        )
+    return spark.createDataFrame(rows, schema=VIDEO_SCHEMA)
+
+
+def make_real_audio_corpus(
+    spark, n: int = 6, seed: int = 45
+):
+    """Audio table whose payloads are REAL RIFF/WAVE PCM16 bytes
+    (fmt='wav')."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for i in range(n):
+        sr = int(rng.choice([8000, 16000]))
+        ns = int(rng.integers(sr // 2, sr))
+        wave = (rng.random(ns, dtype=np.float32) * 2.0 - 1.0)
+        rows.append((f"raud{i:06d}", encode_wav(wave, sr), sr, ns, "wav"))
+    return spark.createDataFrame(rows, schema=AUDIO_SCHEMA)

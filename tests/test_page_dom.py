@@ -257,6 +257,14 @@ class TestHtmlHelpers:
             "http://h.test/a",
         ]
 
+    def test_extract_links_decodes_entities_like_page_links(self):
+        from webcollector_spark.functions import html as H
+
+        doc = '<a href="/p?a=1&amp;b=2">x</a>'
+        want = ["http://h.test/p?a=1&b=2"]
+        assert H.extract_links(doc, "http://h.test/") == want
+        assert Page(url="http://h.test/", html=doc).links() == want
+
 
 def test_extract_news_pandas_udf_builds_and_runs(spark):
     """The Arrow-batched extractor UDF must construct under postponed

@@ -11,6 +11,24 @@ import numpy as np
 import pytest
 
 from webcollector_spark import codecs, fixtures, tiff
+from webcollector_spark.tiff import (
+    _COMP_LZW,
+    _COMP_NONE,
+    _COMP_PACKBITS,
+    _TAG_BITS,
+    _TAG_COLORMAP,
+    _TAG_COMPRESSION,
+    _TAG_LENGTH,
+    _TAG_PHOTOMETRIC,
+    _TAG_ROWS_PER_STRIP,
+    _TAG_SPP,
+    _TAG_STRIP_COUNTS,
+    _TAG_STRIP_OFFSETS,
+    _TAG_WIDTH,
+    _entry,
+    packbits_encode,
+    tiff_lzw_encode,
+)
 
 
 @pytest.mark.parametrize("byte_order", ["<", ">"], ids=["II", "MM"])
@@ -229,13 +247,13 @@ def test_palette_roundtrips_and_high_byte_rule():
     idx = rng.integers(0, 256, size=(29, 41)).astype(np.uint8)
     cmap = rng.integers(0, 256, size=(256, 3)).astype(np.uint8)
     for comp in (1, 5, 32773):
-        enc = tiff.encode_tiff_palette(idx, cmap, "<", comp)
+        enc = encode_tiff_palette(idx, cmap, "<", comp)
         assert np.array_equal(tiff.decode_tiff(enc), cmap[idx]), comp
     # the 16-bit map scales by 257, so the round trip is exact at the
     # high byte for EVERY 8-bit value (0xFF -> 0xFFFF >> 8 == 0xFF)
     full = np.arange(256, dtype=np.uint8).reshape(16, 16)
     gray = np.stack([np.arange(256)] * 3, axis=1).astype(np.uint8)
-    got = tiff.decode_tiff(tiff.encode_tiff_palette(full, gray))
+    got = tiff.decode_tiff(encode_tiff_palette(full, gray))
     assert np.array_equal(got[:, :, 0], full)
 
 
@@ -243,7 +261,7 @@ def test_palette_missing_colormap_raises():
     rng = np.random.default_rng(10)
     idx = rng.integers(0, 256, size=(8, 8)).astype(np.uint8)
     cmap = rng.integers(0, 256, size=(256, 3)).astype(np.uint8)
-    data = bytearray(tiff.encode_tiff_palette(idx, cmap))
+    data = bytearray(encode_tiff_palette(idx, cmap))
     # zero out the ColorMap tag id (320 -> 0) in the sorted IFD
     import struct as _s
 
@@ -262,10 +280,160 @@ def test_grayscale_both_photometrics_roundtrip():
     want = np.repeat(g[:, :, None], 3, axis=2)
     for comp in (1, 5, 32773):
         # BlackIsZero: stored as-is
-        enc = tiff.encode_tiff_gray(g, "<", comp)
+        enc = encode_tiff_gray(g, "<", comp)
         assert np.array_equal(tiff.decode_tiff(enc), want), comp
         # WhiteIsZero: stored inverted, decode re-inverts
-        enc0 = tiff.encode_tiff_gray(g, ">", comp, white_is_zero=True)
+        enc0 = encode_tiff_gray(g, ">", comp, white_is_zero=True)
         assert np.array_equal(tiff.decode_tiff(enc0), want), comp
         # really inverted on disk: the raster bytes differ
         assert enc[-g.size :] != enc0[-g.size :] or comp != 1
+
+
+# -- fixture encoders (palette / grayscale TIFF) -------------------------
+
+
+def encode_tiff_palette(
+    indices: np.ndarray,
+    colormap: np.ndarray,
+    byte_order: str = "<",
+    compression: int = _COMP_NONE,
+    rows_per_strip: int = 16,
+) -> bytes:
+    """8-bit index plane HxW + RGB8 colormap (256x3) -> palette-color
+    TIFF (photometric 3, r5). ColorMap stores 3*256 16-bit values (all
+    red, all green, all blue); baseline viewers take the high byte, so
+    the 8-bit map scales by 257 (0xFF -> 0xFFFF)."""
+    h, w = indices.shape
+    assert indices.dtype == np.uint8
+    assert colormap.shape == (256, 3) and colormap.dtype == np.uint8
+    assert byte_order in ("<", ">")
+    if compression not in (_COMP_NONE, _COMP_LZW, _COMP_PACKBITS):
+        raise ValueError(f"unsupported compression {compression}")
+    e = byte_order
+    strips = []
+    for y0 in range(0, h, rows_per_strip):
+        raw = indices[y0 : y0 + rows_per_strip].tobytes()
+        if compression == _COMP_PACKBITS:
+            raw = packbits_encode(raw)
+        elif compression == _COMP_LZW:
+            raw = tiff_lzw_encode(raw)
+        strips.append(raw)
+    n_strips = len(strips)
+    cmap16 = (colormap.astype(np.uint16) * 257).T.reshape(-1)  # r*256,g,b
+
+    n_entries = 10
+    ifd_off = 8
+    ifd_size = 2 + 12 * n_entries + 4
+    cmap_off = ifd_off + ifd_size
+    offsets_off = cmap_off + 2 * 768
+    counts_off = offsets_off + 4 * n_strips
+    data_off = counts_off + 4 * n_strips
+    strip_offsets = []
+    pos = data_off
+    for s in strips:
+        strip_offsets.append(pos)
+        pos += len(s)
+
+    entry_list = [
+        _entry(e, _TAG_WIDTH, 4, 1, w),
+        _entry(e, _TAG_LENGTH, 4, 1, h),
+        _entry(e, _TAG_BITS, 3, 1, 8),
+        _entry(e, _TAG_COMPRESSION, 3, 1, compression),
+        _entry(e, _TAG_PHOTOMETRIC, 3, 1, 3),  # palette-color
+        _entry(
+            e, _TAG_STRIP_OFFSETS, 4, n_strips,
+            strip_offsets[0] if n_strips == 1 else offsets_off,
+        ),
+        _entry(e, _TAG_SPP, 3, 1, 1),
+        _entry(e, _TAG_ROWS_PER_STRIP, 4, 1, rows_per_strip),
+        _entry(
+            e, _TAG_STRIP_COUNTS, 4, n_strips,
+            len(strips[0]) if n_strips == 1 else counts_off,
+        ),
+        _entry(e, _TAG_COLORMAP, 3, 768, cmap_off),
+    ]
+    entry_list.sort(key=lambda b: struct.unpack(e + "H", b[:2])[0])
+    out = bytearray()
+    out += (b"II" if e == "<" else b"MM") + struct.pack(e + "HI", 42, ifd_off)
+    out += struct.pack(e + "H", n_entries)
+    out += b"".join(entry_list) + struct.pack(e + "I", 0)
+    out += struct.pack(e + "768H", *cmap16)
+    if n_strips > 1:
+        out += struct.pack(e + f"{n_strips}I", *strip_offsets)
+        out += struct.pack(e + f"{n_strips}I", *(len(s) for s in strips))
+    else:
+        out += b"\x00" * 8
+    for s in strips:
+        out += s
+    return bytes(out)
+
+
+def encode_tiff_gray(
+    gray: np.ndarray,
+    byte_order: str = "<",
+    compression: int = _COMP_NONE,
+    rows_per_strip: int = 16,
+    white_is_zero: bool = False,
+) -> bytes:
+    """8-bit grayscale HxW -> photometric 1 (BlackIsZero) or 0
+    (WhiteIsZero — stored inverted, the fax/scanner legacy scale) TIFF
+    (r5). Decode replicates to RGB."""
+    h, w = gray.shape
+    assert gray.dtype == np.uint8
+    assert byte_order in ("<", ">")
+    if compression not in (_COMP_NONE, _COMP_LZW, _COMP_PACKBITS):
+        raise ValueError(f"unsupported compression {compression}")
+    e = byte_order
+    stored = (255 - gray.astype(np.int16)).astype(np.uint8) if white_is_zero else gray
+    strips = []
+    for y0 in range(0, h, rows_per_strip):
+        raw = stored[y0 : y0 + rows_per_strip].tobytes()
+        if compression == _COMP_PACKBITS:
+            raw = packbits_encode(raw)
+        elif compression == _COMP_LZW:
+            raw = tiff_lzw_encode(raw)
+        strips.append(raw)
+    n_strips = len(strips)
+
+    n_entries = 9
+    ifd_off = 8
+    ifd_size = 2 + 12 * n_entries + 4
+    offsets_off = ifd_off + ifd_size
+    counts_off = offsets_off + 4 * n_strips
+    data_off = counts_off + 4 * n_strips
+    strip_offsets = []
+    pos = data_off
+    for s in strips:
+        strip_offsets.append(pos)
+        pos += len(s)
+
+    entry_list = [
+        _entry(e, _TAG_WIDTH, 4, 1, w),
+        _entry(e, _TAG_LENGTH, 4, 1, h),
+        _entry(e, _TAG_BITS, 3, 1, 8),
+        _entry(e, _TAG_COMPRESSION, 3, 1, compression),
+        _entry(e, _TAG_PHOTOMETRIC, 3, 1, 0 if white_is_zero else 1),
+        _entry(
+            e, _TAG_STRIP_OFFSETS, 4, n_strips,
+            strip_offsets[0] if n_strips == 1 else offsets_off,
+        ),
+        _entry(e, _TAG_SPP, 3, 1, 1),
+        _entry(e, _TAG_ROWS_PER_STRIP, 4, 1, rows_per_strip),
+        _entry(
+            e, _TAG_STRIP_COUNTS, 4, n_strips,
+            len(strips[0]) if n_strips == 1 else counts_off,
+        ),
+    ]
+    entry_list.sort(key=lambda b: struct.unpack(e + "H", b[:2])[0])
+    out = bytearray()
+    out += (b"II" if e == "<" else b"MM") + struct.pack(e + "HI", 42, ifd_off)
+    out += struct.pack(e + "H", n_entries)
+    out += b"".join(entry_list) + struct.pack(e + "I", 0)
+    if n_strips > 1:
+        out += struct.pack(e + f"{n_strips}I", *strip_offsets)
+        out += struct.pack(e + f"{n_strips}I", *(len(s) for s in strips))
+    else:
+        out += b"\x00" * 8
+    for s in strips:
+        out += s
+    return bytes(out)

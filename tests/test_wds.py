@@ -86,6 +86,35 @@ def test_webdataset_resume_skips_existing(spark, tmp_path):
         assert row["n_rows"] == first[s]["n_rows"]
 
 
+def test_webdataset_crash_mid_shard_resumes_to_clean_export(spark, tmp_path):
+    """A writer killed inside a shard leaves no file under that shard's
+    final name, and rerunning the export on the same directory yields
+    the clean export's digests for every shard."""
+    import pytest
+
+    assigned = _assigned_corpus(spark, n=40)
+    clean = {
+        r["shard"]: r["sha256"]
+        for r in shards.write_webdataset(assigned, str(tmp_path / "clean")).collect()
+    }
+    victim = assigned.orderBy("image_id").first()
+    # a NULL payload makes the tar member write raise mid-shard
+    broken = assigned.withColumn(
+        "bytes",
+        F.when(F.col("image_id") == victim["image_id"], F.lit(None)).otherwise(
+            F.col("bytes")
+        ),
+    )
+    out = str(tmp_path / "wds")
+    with pytest.raises(Exception):
+        shards.write_webdataset(broken, out).collect()
+    assert not os.path.exists(os.path.join(out, f"shard-{victim['shard']:06d}.tar"))
+
+    resumed = {r["shard"]: r for r in shards.write_webdataset(assigned, out).collect()}
+    assert resumed[victim["shard"]]["written"] is True
+    assert {s: r["sha256"] for s, r in resumed.items()} == clean
+
+
 def test_webdataset_member_layout(spark, tmp_path):
     out = str(tmp_path / "wds")
     assigned = _assigned_corpus(spark, n=30)

@@ -433,42 +433,6 @@ def decode_bmp(data: bytes) -> np.ndarray:
     return np.ascontiguousarray(rgb)
 
 
-def encode_bmp_rle8(
-    indices: np.ndarray, palette: np.ndarray
-) -> bytes:
-    """8-bit index plane HxW + RGB palette (<=256x3) -> BI_RLE8 BMP
-    (r5 fixture encoder): per bottom-up row, maximal runs as (count,
-    index) pairs, end-of-line after each row, end-of-bitmap last."""
-    h, w = indices.shape
-    assert indices.dtype == np.uint8
-    n_pal, c = palette.shape
-    assert c == 3 and n_pal <= 256 and palette.dtype == np.uint8
-    body = bytearray()
-    for row in indices[::-1]:  # bottom-up
-        x = 0
-        while x < w:
-            run = 1
-            while x + run < w and run < 255 and row[x + run] == row[x]:
-                run += 1
-            body += bytes([run, int(row[x])])
-            x += run
-        body += b"\x00\x00"  # end of line
-    body += b"\x00\x01"  # end of bitmap
-    pal_quads = bytearray()
-    for r, g, b in palette:
-        pal_quads += bytes([b, g, r, 0])
-    pal_quads += b"\x00" * 4 * (256 - n_pal)
-    data_off = 14 + 40 + 4 * 256
-    out = b"BM" + struct.pack(
-        "<IHHI", data_off + len(body), 0, 0, data_off
-    )
-    out += struct.pack(
-        "<IiiHHIIiiII",
-        40, w, h, 1, 8, 1, len(body), 2835, 2835, 256, 0,
-    )
-    return out + bytes(pal_quads) + bytes(body)
-
-
 def encode_ico(images: list[np.ndarray], png_from: int = 64) -> bytes:
     """RGB8 images (each <= 256x256) -> Windows ICO favicon.
 

@@ -10,13 +10,12 @@ the batch level.
 from __future__ import annotations
 
 import base64
-import json
 import re
+from html import unescape
 from urllib.parse import urldefrag, urljoin
 
 _HREF_RE = re.compile(r"""<a\s[^>]*?href\s*=\s*["']?([^"'\s>]+)""", re.IGNORECASE)
 _SRC_RE = re.compile(r"""<[^>]+\ssrc\s*=\s*["']?([^"'\s>]+)""", re.IGNORECASE)
-_TITLE_RE = re.compile(r"<title[^>]*>(.*?)</title>", re.IGNORECASE | re.DOTALL)
 _CAPTION_RE = re.compile(
     r"""<p\s+class=["']?caption["']?[^>]*>(.*?)</p>""", re.IGNORECASE | re.DOTALL
 )
@@ -36,13 +35,15 @@ def extract_links(
 ) -> list[str]:
     """Absolute out-links in document order, de-duplicated (Links is an
     ordered list; dedup happens downstream by key). Skips fragments,
-    javascript:, mailto:, and data: URIs."""
+    javascript:, mailto:, and data: URIs. Attribute values are
+    entity-decoded before resolution (`&amp;` -> `&`), as a DOM parser
+    hands them to jsoup's `abs:href` and to `Page.links`."""
     raw = _HREF_RE.findall(html)
     if detect_img:
         raw += [u for u in _SRC_RE.findall(html) if not u.startswith("data:")]
     seen: set[str] = set()
     out: list[str] = []
-    for u in raw:
+    for u in map(unescape, raw):
         if u.startswith(("javascript:", "mailto:", "#", "data:")):
             continue
         absu = urldefrag(urljoin(base_url, u))[0]
@@ -50,11 +51,6 @@ def extract_links(
             seen.add(absu)
             out.append(absu)
     return out
-
-
-def extract_title(html: str) -> str | None:
-    m = _TITLE_RE.search(html)
-    return m.group(1).strip() if m else None
 
 
 def extract_caption(html: str) -> str | None:
@@ -69,21 +65,3 @@ def extract_data_uri_image(html: str) -> bytes | None:
         return base64.b64decode(html[m.start(1) : m.end(1)]) if m else None
     m = _DATA_URI_RE.search(html)
     return base64.b64decode(m.group(1)) if m else None
-
-
-def page_regex(html: str, pattern: str, group: int = 0, default: str | None = None) -> str | None:
-    """Page.regex(re, group, default) — Page.java:287-313 (first match,
-    chosen group, default when no match)."""
-    m = re.search(pattern, html, re.DOTALL)
-    return m.group(group) if m else default
-
-
-def regex_json_object(html: str, pattern: str, group: int = 0) -> dict | None:
-    """Page.regexJSONObject — Page.java:112-121."""
-    s = page_regex(html, pattern, group)
-    return json.loads(s) if s else None
-
-
-def regex_json_array(html: str, pattern: str, group: int = 0) -> list | None:
-    s = page_regex(html, pattern, group)
-    return json.loads(s) if s else None

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from webcollector_spark.schema import FRONTIER_SCHEMA, ROUNDS_SCHEMA
 from webcollector_spark.store import (
     SRC_FETCH,
     SRC_LINK,
@@ -45,11 +46,16 @@ from webcollector_spark.store import (
     _union_tagged,
 )
 
-DDL_COLUMNS = """
-  key string, url string, status int, execute_time long,
-  execute_count int, code int, location string,
-  meta map<string,string>, host string, depth int, priority double
-"""
+
+def _ddl_columns(schema) -> str:
+    """`schema` as a CREATE TABLE column list."""
+    return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
+
+
+_COLS = [f.name for f in FRONTIER_SCHEMA.fields]
+# a fetch row replaces the whole row of its key, as `_fold` does on the
+# RAM/parquet stores (a `schedule_recrawl` segment rewrites `priority`)
+_UPDATE_COLS = [c for c in _COLS if c != "key"]
 
 
 def iceberg_available(spark: SparkSession, catalog: str) -> bool:
@@ -82,14 +88,12 @@ def merge_sql(table: str) -> str:
     return (
         f"MERGE INTO {table} t USING __segments s ON t.key = s.key "
         "WHEN MATCHED AND s.is_fetch THEN UPDATE SET "
-        "t.status = s.status, t.execute_time = s.execute_time, "
-        "t.execute_count = s.execute_count, t.code = s.code, "
-        "t.location = s.location, t.meta = s.meta "
-        "WHEN NOT MATCHED THEN INSERT "
-        "(key, url, status, execute_time, execute_count, code, location,"
-        " meta, host, depth, priority) VALUES "
-        "(s.key, s.url, s.status, s.execute_time, s.execute_count, s.code,"
-        " s.location, s.meta, s.host, s.depth, s.priority)"
+        + ", ".join(f"t.{c} = s.{c}" for c in _UPDATE_COLS)
+        + " WHEN NOT MATCHED THEN INSERT ("
+        + ", ".join(_COLS)
+        + ") VALUES ("
+        + ", ".join(f"s.{c}" for c in _COLS)
+        + ")"
     )
 
 
@@ -133,13 +137,13 @@ class IcebergFrontierStore(RamFrontierStore):
             spark.sql(f"DROP TABLE IF EXISTS {self.table}")
             spark.sql(f"DROP TABLE IF EXISTS {self.rounds_table}")
         spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {self.table} ({DDL_COLUMNS}) "
+            f"CREATE TABLE IF NOT EXISTS {self.table} "
+            f"({_ddl_columns(FRONTIER_SCHEMA)}) "
             f"USING iceberg PARTITIONED BY (bucket({host_buckets}, host))"
         )
         spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {self.rounds_table} ("
-            "round int, snapshot_id long, generated long, fetched long,"
-            "failed long, new_links long, wall_ms long) USING iceberg"
+            f"CREATE TABLE IF NOT EXISTS {self.rounds_table} "
+            f"({_ddl_columns(ROUNDS_SCHEMA)}) USING iceberg"
         )
 
     # -- O1 -------------------------------------------------------------
@@ -184,11 +188,8 @@ class IcebergFrontierStore(RamFrontierStore):
     def log_round(self, **m) -> None:
         m.setdefault("snapshot_id", self._current_snapshot_id())
         super().log_round(**m)
-        self.spark.sql(
-            f"INSERT INTO {self.rounds_table} VALUES "
-            f"({m['round']}, {m['snapshot_id']}, {m['generated']}, "
-            f"{m['fetched']}, {m['failed']}, {m['new_links']}, {m['wall_ms']})"
-        )
+        vals = ", ".join(str(m[f.name]) for f in ROUNDS_SCHEMA.fields)
+        self.spark.sql(f"INSERT INTO {self.rounds_table} VALUES ({vals})")
 
     def last_round(self) -> int:
         row = self.spark.sql(

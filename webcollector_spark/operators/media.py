@@ -105,25 +105,12 @@ def _decode_audio_stub(audio_id: str, data: bytes, n_samples: int) -> np.ndarray
     return (rng.random(n_samples, dtype=np.float32) * 2.0 - 1.0)
 
 
-def encode_ppm_stream(frames: list[np.ndarray]) -> bytes:
-    """Concatenated binary-P6 stream — the `ffmpeg -f image2pipe
-    -vcodec ppm` wire format (header `P6\\n{w} {h}\\n255\\n` + raw RGB
-    raster per frame). Fixture-side twin of `decode_video_real`."""
-    out = bytearray()
-    for fr in frames:
-        h, w, c = fr.shape
-        assert c == 3 and fr.dtype == np.uint8
-        out += f"P6\n{w} {h}\n255\n".encode()
-        out += fr.tobytes()
-    return bytes(out)
-
-
 def decode_video_real(video_id: str, data: bytes, n_frames: int, w: int, h: int):
     """REAL decoder for a concatenated binary-P6 (PPM) frame stream.
 
     Pure Python/numpy, no external libs; parses exactly what ffmpeg's
-    image2pipe/ppm output (or `encode_ppm_stream`) produces: per frame
-    a `P6`, whitespace-separated width/height, maxval 255, single
+    image2pipe/ppm output produces: per frame a `P6`,
+    whitespace-separated width/height, maxval 255, single
     whitespace byte, then w*h*3 bytes of raw RGB. Yields
     (frame_idx, HxWx3 uint8) like the stub, and cross-checks the frame
     dimensions against the row's typed metadata.
@@ -157,16 +144,6 @@ def decode_video_real(video_id: str, data: bytes, n_frames: int, w: int, h: int)
         raster = np.frombuffer(data, dtype=np.uint8, count=fh * fw * 3, offset=pos)
         pos += fh * fw * 3
         yield i, raster.reshape(fh, fw, 3).copy()
-
-
-def encode_mjpeg_stream(frames: list[np.ndarray], quality: int = 98) -> bytes:
-    """Concatenated baseline-JPEG frames — the MJPEG wire shape (each
-    frame a complete SOI..EOI image, back to back). Fixture-side twin
-    of `decode_video_mjpeg`; REAL compression (DCT + Huffman), unlike
-    the zlib containers."""
-    from webcollector_spark import jpeg
-
-    return b"".join(jpeg.encode_baseline(f, quality) for f in frames)
 
 
 def decode_video_mjpeg(video_id: str, data: bytes, n_frames: int, w: int, h: int):
@@ -762,50 +739,6 @@ def make_audio_corpus(spark: SparkSession, n: int = 20, seed: int = 43) -> DataF
                 "fakeaud",
             )
         )
-    return spark.createDataFrame(rows, schema=AUDIO_SCHEMA)
-
-
-def make_real_video_corpus(
-    spark: SparkSession, n: int = 6, seed: int = 44, n_frames: int = 8,
-    w: int = 16, h: int = 12,
-) -> DataFrame:
-    """Video table whose payloads are REAL concatenated-P6 streams
-    (fmt='ppm'): the real decoder path, end to end, with recomputable
-    ground-truth frames from a seeded RNG."""
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        frames = [
-            rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-            for _ in range(n_frames)
-        ]
-        rows.append(
-            (
-                f"rvid{i:06d}",
-                encode_ppm_stream(frames),
-                n_frames,
-                24.0,
-                w,
-                h,
-                "ppm",
-                f"caption of rvid{i:06d}",
-            )
-        )
-    return spark.createDataFrame(rows, schema=VIDEO_SCHEMA)
-
-
-def make_real_audio_corpus(
-    spark: SparkSession, n: int = 6, seed: int = 45
-) -> DataFrame:
-    """Audio table whose payloads are REAL RIFF/WAVE PCM16 bytes
-    (fmt='wav')."""
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        sr = int(rng.choice([8000, 16000]))
-        ns = int(rng.integers(sr // 2, sr))
-        wave = (rng.random(ns, dtype=np.float32) * 2.0 - 1.0)
-        rows.append((f"raud{i:06d}", encode_wav(wave, sr), sr, ns, "wav"))
     return spark.createDataFrame(rows, schema=AUDIO_SCHEMA)
 
 

@@ -66,8 +66,6 @@ def recrawl_candidates(
     if only_success:
         cand = cand.filter(F.col("status") == STATUS_DB_SUCCESS)
     # stalest-first within host: rank by execute_time ascending
-    from pyspark.sql import Window
-
     w = Window.partitionBy("host").orderBy(F.col("execute_time").asc(), "key")
     return (
         cand.withColumn("__age_rank", F.row_number().over(w))

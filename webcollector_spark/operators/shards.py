@@ -33,8 +33,18 @@ deterministic and cluster-wide.
 
 from __future__ import annotations
 
+import hashlib
+import io
+import os
+import re
+import tarfile
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from webcollector_spark.session import map_rows
 
 
 def pack_shards(
@@ -114,8 +124,6 @@ def shard_manifest(assigned: DataFrame) -> DataFrame:
 
 
 def _shard_path(out_dir: str, shard: int) -> str:
-    import os
-
     return os.path.join(out_dir, f"shard-{shard:06d}.tar")
 
 
@@ -246,11 +254,9 @@ def fetch_samples(index: DataFrame, out_dir: str) -> DataFrame:
 
 class _HashingWriter:
     """Sequential-write file wrapper that tees into sha256 (so the
-    lineage digest costs no second read of the tar)."""
+    lineage digest costs no second read of the shard)."""
 
     def __init__(self, f):
-        import hashlib
-
         self._f = f
         self.sha = hashlib.sha256()
         self.n = 0
@@ -262,6 +268,124 @@ class _HashingWriter:
 
     def close(self):
         self._f.close()
+
+
+def _commit_shards(
+    df: DataFrame,
+    out_dir: str,
+    *,
+    key: str,
+    shard_col: str,
+    path_for: Callable[[str, int], str],
+    open_container: Callable,
+    overwrite: bool,
+    rows_name: str,
+    bytes_name: str,
+) -> DataFrame:
+    """The crash-safe shard commit protocol both archive sinks
+    (`write_webdataset`, `warc.write_warc`) run; returns the per-shard
+    lineage manifest (shard, <rows_name>, <bytes_name>, sha256, path,
+    written).
+
+    * one shuffle (`repartition(shard)`) puts every row of a shard in
+      exactly one task, so no shard spans writers; the task writes its
+      shards in turn as `sortWithinPartitions(shard, key)` hands them
+      over, so the order inside a shard is deterministic;
+    * a shard whose final file `path_for(out_dir, shard)` exists is
+      skipped (written=false, digest re-read from disk) unless
+      `overwrite`;
+    * a shard is written to an attempt-unique `.inprogress.{pid}` file
+      through a sha256-teeing handle and `os.replace`d into place once
+      complete, so a killed export never leaves a truncated shard under
+      the final name (needs a rename-capable FS; on object stores
+      deploy the existence check as a conditional PUT).
+
+    The container is the caller's: `open_container(fh, shard)` starts
+    one shard's container on the hashing handle `fh` and returns
+    `(add, close)`; `add(row)` writes one row (a dict of `df`'s
+    columns) and `close()` ends the container. Neither sees the file,
+    the digest or the rename."""
+    schema = (
+        f"shard bigint, {rows_name} bigint, {bytes_name} bigint, "
+        "sha256 string, path string, written boolean"
+    )
+
+    def write_partition(batches):
+        import pandas as pd
+
+        os.makedirs(out_dir, exist_ok=True)
+        done, cur = [], None
+
+        def start(shard):
+            st = {"shard": shard, "final": path_for(out_dir, shard),
+                  "rows": 0, "fh": None}
+            if os.path.exists(st["final"]) and not overwrite:
+                return st  # skipped: no handle, the digest is re-read
+            # attempt-unique temp name: concurrent speculative attempts
+            # must never interleave writes into one file; whichever
+            # os.replace lands last wins with a complete shard either way
+            st["tmp"] = f"{st['final']}.inprogress.{os.getpid()}"
+            st["fh"] = _HashingWriter(open(st["tmp"], "wb"))
+            st["add"], st["close"] = open_container(st["fh"], shard)
+            return st
+
+        def finish(st):
+            final, fh = st["final"], st["fh"]
+            if fh is None:
+                h = hashlib.sha256()
+                with open(final, "rb") as f:
+                    for chunk in iter(lambda: f.read(1 << 20), b""):
+                        h.update(chunk)
+                done.append((st["shard"], st["rows"], os.path.getsize(final),
+                             h.hexdigest(), final, False))
+                return
+            st["close"]()
+            fh.close()
+            os.replace(st["tmp"], final)
+            done.append((st["shard"], st["rows"], fh.n, fh.sha.hexdigest(),
+                         final, True))
+
+        try:
+            for pdf in batches:
+                for row in pdf.to_dict("records"):
+                    sid = int(row[shard_col])
+                    if cur is None or cur["shard"] != sid:
+                        if cur is not None:
+                            finish(cur)
+                        cur = start(sid)
+                    cur["rows"] += 1
+                    if cur["fh"] is not None:
+                        cur["add"](row)
+            if cur is not None:
+                finish(cur)
+        finally:
+            # a failed attempt leaves its `.inprogress` file, never a
+            # final one; its handle is closed here, not by the GC
+            if cur is not None and cur["fh"] is not None:
+                cur["fh"].close()
+        if done:
+            yield pd.DataFrame(
+                done,
+                columns=["shard", rows_name, bytes_name, "sha256", "path", "written"],
+            )
+
+    return (
+        df.repartition(F.col(shard_col))
+        .sortWithinPartitions(shard_col, key)
+        .mapInPandas(write_partition, schema=schema)
+    )
+
+
+def _add_member(tar, name: str, data: bytes) -> None:
+    ti = tarfile.TarInfo(name=name)
+    ti.size = len(data)
+    ti.mtime = 0
+    ti.uid = 0
+    ti.gid = 0
+    ti.mode = 0o644
+    ti.uname = ""
+    ti.gname = ""
+    tar.addfile(ti, io.BytesIO(data))
 
 
 def write_webdataset(
@@ -285,143 +409,55 @@ def write_webdataset(
     `<id>.txt` caption) — the WebDataset sample convention. NULL
     captions surface as empty .txt members (tar has no null).
 
-    Scale + determinism contract:
-    * one shuffle (`repartition(shard)`) puts every row of a shard in
-      exactly one task — no shard ever spans writers; a task writes
-      its shards sequentially as `sortWithinPartitions(shard, key)`
-      hands them over, so member order is deterministic;
-    * tar bytes are BIT-REPRODUCIBLE across reruns and cluster sizes:
-      USTAR stream mode, zeroed mtime/uid/gid/uname/gname, fixed
-      0o644 mode, sorted members — rerunning an export yields
-      byte-identical shards and therefore identical sha256 lineage;
-    * resume is idempotent: a shard whose final file already exists is
-      skipped (written=false, digest re-read from disk) unless
-      `overwrite=True`; in-flight files use `.inprogress` + atomic
-      os.replace, so a killed export never leaves a truncated shard
-      under the final name (same crash-resume stance as the crawler's
-      rounds manifest; needs a rename-capable FS — on object stores
-      deploy the final-name existence check as a conditional PUT);
-    * the per-row Python here is tar *header assembly* around an
-      I/O-bound byte copy — the sink analogue of the reference's
-      single-node segment writer (fetcher/Fetcher.java segmentWriter),
-      not an expression hot path; everything upstream of the sink
-      stays JVM-side.
+    Scale, resume and crash safety are `_commit_shards`'s: one
+    writer per shard, existing shards skipped unless `overwrite=True`,
+    `.inprogress` + atomic rename. Tar bytes are BIT-REPRODUCIBLE
+    across reruns and cluster sizes: USTAR stream mode, zeroed
+    mtime/uid/gid/uname/gname, fixed 0o644 mode, members in key order,
+    so rerunning an export yields byte-identical shards and therefore
+    identical sha256 lineage. The per-row Python here is tar *header
+    assembly* around an I/O-bound byte copy — the sink analogue of the
+    reference's single-node segment writer (fetcher/Fetcher.java
+    segmentWriter), not an expression hot path; everything upstream of
+    the sink stays JVM-side.
     """
-    import pandas as pd
 
-    out_schema = (
-        "shard bigint, n_rows bigint, tar_bytes bigint, "
-        "sha256 string, path string, written boolean"
+    def open_tar(fh, shard):
+        tar = tarfile.open(fileobj=fh, mode="w|", format=tarfile.USTAR_FORMAT)
+
+        def add(row):
+            k, cap = row[key], row[caption_col]
+            _add_member(tar, f"{k}.{row[fmt_col] or 'bin'}", bytes(row[bytes_col]))
+            _add_member(tar, f"{k}.txt", (cap or "").encode("utf-8"))
+
+        return add, tar.close
+
+    return _commit_shards(
+        df.select(shard_col, key, bytes_col, caption_col, fmt_col),
+        out_dir,
+        key=key,
+        shard_col=shard_col,
+        path_for=_shard_path,
+        open_container=open_tar,
+        overwrite=overwrite,
+        rows_name="n_rows",
+        bytes_name="tar_bytes",
     )
 
-    def write_partition(batches):
-        import io
-        import os
-        import tarfile
 
-        os.makedirs(out_dir, exist_ok=True)
-        state = {}  # shard -> open writer state
-        results = []
-
-        def start(shard):
-            final = _shard_path(out_dir, shard)
-            if os.path.exists(final) and not overwrite:
-                return {"shard": shard, "skip": True, "final": final, "rows": 0}
-            # attempt-unique temp name: concurrent speculative attempts
-            # must never interleave writes into one file; whichever
-            # os.replace lands last wins with a complete tar either way
-            tmp = f"{final}.inprogress.{os.getpid()}"
-            hw = _HashingWriter(open(tmp, "wb"))
-            tar = tarfile.open(
-                fileobj=hw, mode="w|", format=tarfile.USTAR_FORMAT
-            )
-            return {
-                "shard": shard,
-                "skip": False,
-                "final": final,
-                "tmp": tmp,
-                "hw": hw,
-                "tar": tar,
-                "rows": 0,
-            }
-
-        def finish(st):
-            import hashlib
-
-            if st["skip"]:
-                h = hashlib.sha256()
-                with open(st["final"], "rb") as f:
-                    for chunk in iter(lambda: f.read(1 << 20), b""):
-                        h.update(chunk)
-                results.append(
-                    (
-                        st["shard"],
-                        st["rows"],
-                        os.path.getsize(st["final"]),
-                        h.hexdigest(),
-                        st["final"],
-                        False,
-                    )
-                )
-                return
-            st["tar"].close()
-            st["hw"].close()
-            os.replace(st["tmp"], st["final"])
-            results.append(
-                (
-                    st["shard"],
-                    st["rows"],
-                    st["hw"].n,
-                    st["hw"].sha.hexdigest(),
-                    st["final"],
-                    True,
-                )
-            )
-
-        def add_member(tar, name, data):
-            ti = tarfile.TarInfo(name=name)
-            ti.size = len(data)
-            ti.mtime = 0
-            ti.uid = 0
-            ti.gid = 0
-            ti.mode = 0o644
-            ti.uname = ""
-            ti.gname = ""
-            tar.addfile(ti, io.BytesIO(data))
-
-        cur = None
-        for pdf in batches:
-            for sid, k, data, cap, fmt in zip(
-                pdf[shard_col], pdf[key], pdf[bytes_col],
-                pdf[caption_col], pdf[fmt_col],
-            ):
-                sid = int(sid)
-                if cur is None or cur["shard"] != sid:
-                    if cur is not None:
-                        finish(cur)
-                    cur = start(sid)
-                cur["rows"] += 1
-                if cur["skip"]:
-                    continue
-                ext = fmt if fmt else "bin"
-                add_member(cur["tar"], f"{k}.{ext}", bytes(data))
-                cap_b = (cap if cap is not None else "").encode("utf-8")
-                add_member(cur["tar"], f"{k}.txt", cap_b)
-        if cur is not None:
-            finish(cur)
-        if results:
-            yield pd.DataFrame(
-                results,
-                columns=["shard", "n_rows", "tar_bytes", "sha256", "path", "written"],
-            )
-
-    cols = [shard_col, key, bytes_col, caption_col, fmt_col]
+def _tar_files(spark, out_dir: str) -> DataFrame:
+    """An export's shard files as a `binaryFile` frame."""
     return (
-        df.select(*cols)
-        .repartition(F.col(shard_col))
-        .sortWithinPartitions(shard_col, key)
-        .mapInPandas(write_partition, schema=out_schema)
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "shard-*.tar")
+        .load(out_dir)
     )
+
+
+def _shard_of(path: str) -> int:
+    """Shard id in a `shard-NNNNNN.tar` path; -1 for any other name."""
+    m = re.search(r"shard-(\d+)\.tar$", path)
+    return int(m.group(1)) if m else -1
 
 
 def verify_export(
@@ -470,58 +506,32 @@ def verify_export(
     segment integrity (crawldb/DbUpdater.java); a distributed export
     onto a plain object store has to carry its own audit.
     """
-    import pandas as pd  # noqa: F401  (mapInPandas body below)
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "shard-*.tar")
-        .load(out_dir)
-    )
-
+    files = _tar_files(spark, out_dir)
     if deep:
-        disk_schema = (
-            "shard bigint, disk_bytes bigint, disk_sha256 string, "
-            "disk_rows bigint"
-        )
 
-        def audit_partition(batches):
-            import hashlib
-            import io
-            import re
-            import tarfile
+        def audit(r):
+            data = bytes(r["content"])
+            # member count: .txt caption members pair 1:1 with payload
+            # members, so samples = members / 2
+            try:
+                with tarfile.open(fileobj=io.BytesIO(data), mode="r:") as tar:
+                    n_samples = sum(1 for _ in tar) // 2
+            except tarfile.TarError:
+                n_samples = -1  # unreadable == rows_mismatch
+            yield {
+                "shard": _shard_of(r["path"]),
+                "disk_bytes": len(data),
+                "disk_sha256": hashlib.sha256(data).hexdigest(),
+                "disk_rows": n_samples,
+            }
 
-            import pandas as pd
-
-            for pdf in batches:
-                rows = []
-                for path, content in zip(pdf["path"], pdf["content"]):
-                    m = re.search(r"shard-(\d+)\.tar$", path)
-                    shard = int(m.group(1)) if m else -1
-                    data = bytes(content)
-                    sha = hashlib.sha256(data).hexdigest()
-                    # member count: .txt caption members pair 1:1 with
-                    # payload members, so samples = members / 2
-                    n_members = 0
-                    try:
-                        with tarfile.open(
-                            fileobj=io.BytesIO(data), mode="r:"
-                        ) as tar:
-                            for _ in tar:
-                                n_members += 1
-                        n_samples = n_members // 2
-                    except tarfile.TarError:
-                        n_samples = -1  # unreadable == rows_mismatch
-                    rows.append((shard, len(data), sha, n_samples))
-                if rows:
-                    yield pd.DataFrame(
-                        rows,
-                        columns=[
-                            "shard", "disk_bytes", "disk_sha256", "disk_rows",
-                        ],
-                    )
-
-        disk = files.select("path", "content").mapInPandas(
-            audit_partition, schema=disk_schema
+        disk = map_rows(
+            files.select("path", "content"),
+            T.StructType.fromDDL(
+                "shard bigint, disk_bytes bigint, disk_sha256 string, "
+                "disk_rows bigint"
+            ),
+            audit,
         )
     else:
         # metadata-only: content column pruned away at the source
@@ -572,44 +582,27 @@ def read_webdataset(spark, out_dir: str) -> DataFrame:
     `binaryFile` hands each tar to one task whole — the same
     shard-fits-in-worker-memory contract WebDataset sample loaders
     assume (target_bytes is the knob that keeps it true) — and the tar
-    member pairing happens in an Arrow-batched pass."""
-    out_schema = "image_id string, data binary, caption string, shard bigint"
+    member pairing happens per file on `map_rows`."""
 
-    def parse_partition(batches):
-        import io
-        import re
-        import tarfile
+    def samples(r):
+        payload, caption = {}, {}
+        with tarfile.open(fileobj=io.BytesIO(bytes(r["content"])), mode="r:") as tar:
+            for ti in tar:
+                stem, _, ext = ti.name.rpartition(".")
+                data = tar.extractfile(ti).read()
+                if ext == "txt":
+                    caption[stem] = data.decode("utf-8")
+                else:
+                    payload[stem] = data
+        shard = _shard_of(r["path"])
+        for stem, data in payload.items():
+            yield {"image_id": stem, "data": data,
+                   "caption": caption.get(stem, ""), "shard": shard}
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = re.search(r"shard-(\d+)\.tar$", path)
-                shard = int(m.group(1)) if m else -1
-                payload, caption = {}, {}
-                with tarfile.open(
-                    fileobj=io.BytesIO(bytes(content)), mode="r:"
-                ) as tar:
-                    for ti in tar:
-                        stem, dot, ext = ti.name.rpartition(".")
-                        data = tar.extractfile(ti).read()
-                        if ext == "txt":
-                            caption[stem] = data.decode("utf-8")
-                        else:
-                            payload[stem] = data
-                for stem, data in payload.items():
-                    rows.append((stem, data, caption.get(stem, ""), shard))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "data", "caption", "shard"]
-                )
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "shard-*.tar")
-        .load(out_dir)
-    )
-    return files.select("path", "content").mapInPandas(
-        parse_partition, schema=out_schema
+    return map_rows(
+        _tar_files(spark, out_dir).select("path", "content"),
+        T.StructType.fromDDL(
+            "image_id string, data binary, caption string, shard bigint"
+        ),
+        samples,
     )

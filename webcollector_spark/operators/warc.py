@@ -3,10 +3,11 @@
 WebCollector persists fetched pages only as CrawlDatum metadata in its
 KV store (content is transient, model/Page.java:43-61); real crawl
 infrastructure archives the payload bytes as WARC (ISO 28500), the
-format Common Crawl / Internet Archive tooling consumes. This is the
-archive-side twin of the WebDataset training sink (operators/shards.py):
-same shard assignment (`pack_shards`), same determinism + resume
-contract, different container.
+format Common Crawl / Internet Archive tooling consumes. It is the
+archive-side sink next to the WebDataset training sink: both take their
+shard assignment from `pack_shards` and both commit through one writer,
+`shards._commit_shards` (skip-existing, `.inprogress` + atomic rename,
+sha256 manifest); only the container written into each shard differs.
 
 Format (WARC/1.1):
 * a file is a sequence of records: `WARC/1.1\\r\\n` + named headers +
@@ -27,15 +28,20 @@ Determinism contract (same stance as write_webdataset):
   yields BYTE-IDENTICAL .warc.gz shards at any parallelism, and the
   manifest's sha256 column is stable lineage;
 * resume is idempotent: existing final files are skipped, in-flight
-  files use attempt-unique `.inprogress` names + atomic os.replace.
+  files use attempt-unique `.inprogress` names + an atomic rename.
 """
 
 from __future__ import annotations
 
 import uuid
+import zlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from webcollector_spark.operators.shards import _commit_shards
+from webcollector_spark.session import map_rows
 
 _GZ_LEVEL = 6
 
@@ -77,6 +83,21 @@ def _record(headers: list[tuple[str, str]], payload: bytes) -> bytes:
         + payload
         + b"\r\n\r\n"
     )
+
+
+def _parse_record(raw: bytes, pos: int, src: str) -> tuple[dict, bytes, int]:
+    """The record at `raw[pos:]` as (named headers, payload, offset just
+    past its closing CRLF CRLF); `src` names the file in the error."""
+    if raw[pos : pos + 5] != b"WARC/":
+        raise ValueError(f"bad record start at {pos} in {src}")
+    hdr_end = raw.index(b"\r\n\r\n", pos)
+    headers = {}
+    for line in raw[pos:hdr_end].split(b"\r\n")[1:]:
+        hk, _, hv = line.decode("utf-8").partition(":")
+        headers[hk.strip()] = hv.strip()
+    body = hdr_end + 4
+    end = body + int(headers["Content-Length"])
+    return headers, raw[body:end], end + 4
 
 
 def _gzip_member(raw: bytes) -> bytes:
@@ -213,9 +234,10 @@ def write_warc(
 ) -> DataFrame:
     """Write shard-assigned fetched rows as .warc.gz files; returns the
     per-shard lineage manifest (shard, n_records, warc_bytes, sha256,
-    path, written). One repartition(shard) — no shard spans writers —
-    then per-row Python is header assembly around an I/O-bound copy
-    (the sink seam, not an expression hot path).
+    path, written), committed by `shards._commit_shards` (one
+    repartition(shard), so no shard spans writers). The per-row Python
+    is header assembly around an I/O-bound copy (the sink seam, not an
+    expression hot path).
 
     With `revisit_of_col` (from `revisit_plan`): rows whose value is
     non-null are written as `revisit` records — identical-payload-
@@ -231,141 +253,77 @@ def write_warc(
     transferred — a 304 is the server's word, not a hash we computed),
     and takes a capture-unique record id (`key@date`) so it cannot
     collide with the prior capture of the same key it refers to."""
-    import pandas as pd
 
-    out_schema = (
-        "shard bigint, n_records bigint, warc_bytes bigint, "
-        "sha256 string, path string, written boolean"
-    )
-
-    def write_partition(batches):
-        import hashlib
-        import os
-
-        os.makedirs(out_dir, exist_ok=True)
-        results = []
-
-        def start(shard):
-            final = _warc_path(out_dir, shard)
-            if os.path.exists(final) and not overwrite:
-                return {"shard": shard, "skip": True, "final": final, "rows": 0}
-            tmp = f"{final}.inprogress.{os.getpid()}"
-            f = open(tmp, "wb")
-            sha = hashlib.sha256()
-            head = _gzip_member(_warcinfo(shard, software))
-            f.write(head)
-            sha.update(head)
-            return {
-                "shard": shard, "skip": False, "final": final, "tmp": tmp,
-                "f": f, "sha": sha, "n": len(head), "rows": 0,
-            }
-
-        def finish(st):
-            import hashlib as hl
-
-            if st["skip"]:
-                h = hl.sha256()
-                with open(st["final"], "rb") as f:
-                    for chunk in iter(lambda: f.read(1 << 20), b""):
-                        h.update(chunk)
-                results.append(
-                    (st["shard"], st["rows"], os.path.getsize(st["final"]),
-                     h.hexdigest(), st["final"], False)
-                )
-                return
-            st["f"].close()
-            os.replace(st["tmp"], st["final"])
-            results.append(
-                (st["shard"], st["rows"], st["n"],
-                 st["sha"].hexdigest(), st["final"], True)
+    def record(row) -> bytes:
+        k, url, ms = row[key], str(row[url_col]), row[date_ms_col]
+        data, ct = row[bytes_col], row[content_type_col]
+        payload = bytes(data) if data is not None else b""
+        ctype = str(ct) if ct else "application/octet-stream"
+        rof = row[revisit_of_col] if revisit_of_col else None
+        if rof is None:
+            return _record(
+                [
+                    ("WARC-Type", "resource"),
+                    ("WARC-Record-ID", record_id_for(str(k))),
+                    ("WARC-Date", _iso_date(ms)),
+                    ("WARC-Target-URI", url),
+                    ("WARC-Payload-Digest", _payload_digest(payload)),
+                    ("Content-Type", ctype),
+                ],
+                payload,
             )
+        # duplicate capture: bytes elided either way; the identical-
+        # payload profile records OUR digest of the bytes, server-not-
+        # modified records none (a 304 transferred no bytes to hash) and
+        # takes a capture-unique id so it can refer to the same key's
+        # earlier record without colliding
+        snm = profile_col is not None and row[profile_col] == "server-not-modified"
+        headers = [
+            ("WARC-Type", "revisit"),
+            ("WARC-Record-ID",
+             record_id_for(f"{k}@{int(ms)}" if snm else str(k))),
+            ("WARC-Date", _iso_date(ms)),
+            ("WARC-Target-URI", url),
+            ("WARC-Profile",
+             "http://netpreserve.org/warc/1.1/revisit/"
+             + ("server-not-modified" if snm else "identical-payload-digest")),
+            ("WARC-Refers-To", record_id_for(str(rof))),
+            ("WARC-Refers-To-Target-URI", str(row["refers_to_url"])),
+            ("WARC-Refers-To-Date", _iso_date(row["refers_to_ms"])),
+        ]
+        if not snm:
+            headers.append(("WARC-Payload-Digest", _payload_digest(payload)))
+        headers.append(("Content-Type", ctype))
+        return _record(headers, b"")
 
-        cur = None
-        for pdf in batches:
-            rev = pdf[revisit_of_col] if revisit_of_col else [None] * len(pdf)
-            r_url = pdf["refers_to_url"] if revisit_of_col else rev
-            r_ms = pdf["refers_to_ms"] if revisit_of_col else rev
-            prof = pdf[profile_col] if profile_col else [None] * len(pdf)
-            for sid, k, url, data, ct, ms, rof, ruri, rms, pr in zip(
-                pdf[shard_col], pdf[key], pdf[url_col],
-                pdf[bytes_col], pdf[content_type_col], pdf[date_ms_col],
-                rev, r_url, r_ms, prof,
-            ):
-                sid = int(sid)
-                if cur is None or cur["shard"] != sid:
-                    if cur is not None:
-                        finish(cur)
-                    cur = start(sid)
-                cur["rows"] += 1
-                if cur["skip"]:
-                    continue
-                payload = bytes(data) if data is not None else b""
-                if rof is not None:
-                    # duplicate capture: bytes elided either way; the
-                    # identical-payload profile records OUR digest of
-                    # the bytes, server-not-modified records none (a
-                    # 304 transferred no bytes to hash) and takes a
-                    # capture-unique id so it can refer to the same
-                    # key's earlier record without colliding
-                    snm = pr == "server-not-modified"
-                    headers = [
-                        ("WARC-Type", "revisit"),
-                        ("WARC-Record-ID",
-                         record_id_for(f"{k}@{int(ms)}" if snm else str(k))),
-                        ("WARC-Date", _iso_date(ms)),
-                        ("WARC-Target-URI", str(url)),
-                        ("WARC-Profile",
-                         "http://netpreserve.org/warc/1.1/revisit/"
-                         + ("server-not-modified" if snm
-                            else "identical-payload-digest")),
-                        ("WARC-Refers-To", record_id_for(str(rof))),
-                        ("WARC-Refers-To-Target-URI", str(ruri)),
-                        ("WARC-Refers-To-Date", _iso_date(rms)),
-                    ]
-                    if not snm:
-                        headers.append(
-                            ("WARC-Payload-Digest", _payload_digest(payload))
-                        )
-                    headers.append(
-                        ("Content-Type",
-                         str(ct) if ct else "application/octet-stream")
-                    )
-                    rec = _record(headers, b"")
-                else:
-                    rec = _record(
-                        [
-                            ("WARC-Type", "resource"),
-                            ("WARC-Record-ID", record_id_for(str(k))),
-                            ("WARC-Date", _iso_date(ms)),
-                            ("WARC-Target-URI", str(url)),
-                            ("WARC-Payload-Digest", _payload_digest(payload)),
-                            ("Content-Type",
-                             str(ct) if ct else "application/octet-stream"),
-                        ],
-                        payload,
-                    )
-                member = _gzip_member(rec)
-                cur["f"].write(member)
-                cur["sha"].update(member)
-                cur["n"] += len(member)
-        if cur is not None:
-            finish(cur)
-        if results:
-            yield pd.DataFrame(
-                results,
-                columns=["shard", "n_records", "warc_bytes", "sha256", "path", "written"],
-            )
+    def open_warc(fh, shard):
+        fh.write(_gzip_member(_warcinfo(shard, software)))
+        return (lambda row: fh.write(_gzip_member(record(row)))), (lambda: None)
 
     cols = [shard_col, key, url_col, bytes_col, content_type_col, date_ms_col]
     if revisit_of_col:
         cols += [revisit_of_col, "refers_to_url", "refers_to_ms"]
     if profile_col:
         cols.append(profile_col)
+    return _commit_shards(
+        df.select(*cols),
+        out_dir,
+        key=key,
+        shard_col=shard_col,
+        path_for=_warc_path,
+        open_container=open_warc,
+        overwrite=overwrite,
+        rows_name="n_records",
+        bytes_name="warc_bytes",
+    )
+
+
+def _warc_files(spark, out_dir: str) -> DataFrame:
+    """An export's .warc.gz files as (path, content), one row per file."""
     return (
-        df.select(*cols)
-        .repartition(F.col(shard_col))
-        .sortWithinPartitions(shard_col, key)
-        .mapInPandas(write_partition, schema=out_schema)
+        spark.read.format("binaryFile")
+        .load(f"{out_dir}/*.warc.gz")
+        .select("path", "content")
     )
 
 
@@ -377,56 +335,33 @@ def index_warc(spark, out_dir: str) -> DataFrame:
     Offsets come from the member boundaries the gzip stream itself
     declares; one task per file, headers parsed from the inflated
     member, payload bytes never retained."""
-    out_schema = (
-        "path string, offset bigint, length bigint, record_type string, "
-        "record_id string, url string"
-    )
 
-    def index_partition(batches):
-        import zlib
+    def members(r):
+        data, pos = bytes(r["content"]), 0
+        while pos < len(data):
+            # inflate exactly ONE gzip member: decompressobj(31) stops at
+            # the member trailer and hands back the remainder in
+            # unused_data — gzip.GzipFile would run through every member
+            d = zlib.decompressobj(31)
+            headers, _, _ = _parse_record(d.decompress(data[pos:]), 0, r["path"])
+            length = len(data) - pos - len(d.unused_data)
+            yield {
+                "path": r["path"],
+                "offset": pos,
+                "length": length,
+                "record_type": headers.get("WARC-Type"),
+                "record_id": headers.get("WARC-Record-ID"),
+                "url": headers.get("WARC-Target-URI"),
+            }
+            pos += length
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                data = bytes(blob)
-                pos = 0
-                while pos < len(data):
-                    # inflate exactly ONE gzip member: decompressobj(31)
-                    # stops at the member trailer and hands back the
-                    # remainder in unused_data — gzip.GzipFile would run
-                    # through every member in the stream
-                    d = zlib.decompressobj(31)
-                    raw = d.decompress(data[pos:])
-                    member_len = len(data) - pos - len(d.unused_data)
-                    hdr_end = raw.index(b"\r\n\r\n")
-                    headers = {}
-                    for line in raw[:hdr_end].split(b"\r\n")[1:]:
-                        hk, _, hv = line.decode("utf-8").partition(":")
-                        headers[hk.strip()] = hv.strip()
-                    rows.append(
-                        {
-                            "path": path,
-                            "offset": pos,
-                            "length": member_len,
-                            "record_type": headers.get("WARC-Type"),
-                            "record_id": headers.get("WARC-Record-ID"),
-                            "url": headers.get("WARC-Target-URI"),
-                        }
-                    )
-                    pos += member_len
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "path", "offset", "length",
-                    "record_type", "record_id", "url",
-                ],
-            )
-
-    files = spark.read.format("binaryFile").load(f"{out_dir}/*.warc.gz")
-    return files.select("path", "content").mapInPandas(
-        index_partition, schema=out_schema
+    return map_rows(
+        _warc_files(spark, out_dir),
+        T.StructType.fromDDL(
+            "path string, offset bigint, length bigint, record_type string, "
+            "record_id string, url string"
+        ),
+        members,
     )
 
 
@@ -441,8 +376,6 @@ def fetch_warc_records(index: DataFrame) -> DataFrame:
     )
 
     def read_partition(batches):
-        import zlib
-
         import pandas as pd
 
         for pdf in batches:
@@ -455,18 +388,13 @@ def fetch_warc_records(index: DataFrame) -> DataFrame:
                         raw = zlib.decompressobj(31).decompress(
                             f.read(int(ln))
                         )
-                        hdr_end = raw.index(b"\r\n\r\n")
-                        headers = {}
-                        for line in raw[:hdr_end].split(b"\r\n")[1:]:
-                            hk, _, hv = line.decode("utf-8").partition(":")
-                            headers[hk.strip()] = hv.strip()
-                        n = int(headers["Content-Length"])
+                        headers, payload, _ = _parse_record(raw, 0, path)
                         rows.append(
                             {
                                 "record_id": headers.get("WARC-Record-ID"),
                                 "url": headers.get("WARC-Target-URI"),
                                 "content_type": headers.get("Content-Type"),
-                                "payload": raw[hdr_end + 4 : hdr_end + 4 + n],
+                                "payload": payload,
                             }
                         )
             yield pd.DataFrame(
@@ -483,74 +411,48 @@ def read_warc(spark, out_dir: str) -> DataFrame:
     source), per-record gzip members inflated in sequence; warcinfo
     records are surfaced with record_type='warcinfo' so audits see the
     whole file. digest_ok re-verifies WARC-Payload-Digest per record."""
-    out_schema = (
-        "path string, record_type string, record_id string, url string, "
-        "warc_date string, content_type string, payload binary, "
-        "digest_ok boolean, refers_to string, payload_digest string, "
-        "profile string"
-    )
 
-    def parse_partition(batches):
+    def records(r):
         import gzip
         import io
 
-        import pandas as pd
+        # multi-member gzip: GzipFile reads members back-to-back
+        raw = gzip.GzipFile(fileobj=io.BytesIO(bytes(r["content"]))).read()
+        pos = 0
+        while pos < len(raw):
+            headers, payload, pos = _parse_record(raw, pos, r["path"])
+            digest = headers.get("WARC-Payload-Digest")
+            rtype = headers.get("WARC-Type")
+            yield {
+                "path": r["path"],
+                "record_type": rtype,
+                "record_id": headers.get("WARC-Record-ID"),
+                "url": headers.get("WARC-Target-URI"),
+                "warc_date": headers.get("WARC-Date"),
+                "content_type": headers.get("Content-Type"),
+                "payload": payload,
+                # a revisit's digest describes the ORIGINAL payload (its
+                # own body is empty by design); it is re-verified against
+                # the original at resolve time (resolve_revisits), not here
+                "digest_ok": (
+                    digest is None
+                    or rtype == "revisit"
+                    or digest == _payload_digest(payload)
+                ),
+                "refers_to": headers.get("WARC-Refers-To"),
+                "payload_digest": digest,
+                "profile": headers.get("WARC-Profile"),
+            }
 
-        for pdf in batches:
-            rows = []
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                stream = io.BytesIO(bytes(blob))
-                # multi-member gzip: GzipFile reads members back-to-back
-                raw = gzip.GzipFile(fileobj=stream).read()
-                pos = 0
-                while pos < len(raw):
-                    if raw[pos : pos + 5] != b"WARC/":
-                        raise ValueError(f"bad record start at {pos} in {path}")
-                    hdr_end = raw.index(b"\r\n\r\n", pos)
-                    headers = {}
-                    for line in raw[pos:hdr_end].split(b"\r\n")[1:]:
-                        hk, _, hv = line.decode("utf-8").partition(":")
-                        headers[hk.strip()] = hv.strip()
-                    n = int(headers["Content-Length"])
-                    payload = raw[hdr_end + 4 : hdr_end + 4 + n]
-                    pos = hdr_end + 4 + n + 4  # skip \r\n\r\n
-                    digest = headers.get("WARC-Payload-Digest")
-                    rtype = headers.get("WARC-Type")
-                    rows.append(
-                        {
-                            "path": path,
-                            "record_type": rtype,
-                            "record_id": headers.get("WARC-Record-ID"),
-                            "url": headers.get("WARC-Target-URI"),
-                            "warc_date": headers.get("WARC-Date"),
-                            "content_type": headers.get("Content-Type"),
-                            "payload": payload,
-                            # a revisit's digest describes the ORIGINAL
-                            # payload (its own body is empty by design);
-                            # it is re-verified against the original at
-                            # resolve time (resolve_revisits), not here
-                            "digest_ok": (
-                                digest is None
-                                or rtype == "revisit"
-                                or digest == _payload_digest(payload)
-                            ),
-                            "refers_to": headers.get("WARC-Refers-To"),
-                            "payload_digest": digest,
-                            "profile": headers.get("WARC-Profile"),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "path", "record_type", "record_id", "url",
-                    "warc_date", "content_type", "payload", "digest_ok",
-                    "refers_to", "payload_digest", "profile",
-                ],
-            )
-
-    files = spark.read.format("binaryFile").load(f"{out_dir}/*.warc.gz")
-    return files.select("path", "content").mapInPandas(
-        parse_partition, schema=out_schema
+    return map_rows(
+        _warc_files(spark, out_dir),
+        T.StructType.fromDDL(
+            "path string, record_type string, record_id string, url string, "
+            "warc_date string, content_type string, payload binary, "
+            "digest_ok boolean, refers_to string, payload_digest string, "
+            "profile string"
+        ),
+        records,
     )
 
 
