@@ -147,11 +147,10 @@ def main() -> int:
     print("delta depth-1 -> depth-3:")
     delta_summary(d).show()
 
+    # the fingerprint is each fetched page's harvested image phash; every
+    # synthetic page serves its own image, so no host repeats one
     print("soft-404 audit (synthetic healthy web -> nothing flagged):")
-    log = crawler.frontier().filter("status = 5").select(
-        "host", "key", F.col("depth").cast("long").alias("phash")
-    )
-    soft404_hosts(log).filter("is_soft404").show()
+    soft404_hosts(fetched).filter("is_soft404").show()
     return 0
 
 

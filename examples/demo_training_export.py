@@ -25,6 +25,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 
+from webcollector_spark import corpora
 from webcollector_spark.session import get_spark
 
 
@@ -41,9 +42,9 @@ def main() -> None:
     # the sharpness stage) unioned with lossy near-dup re-encodes (for
     # the dedup stage), so every funnel stage has real work to do
     corpus = (
-        images.corpus_blurgate_df(spark, n=200, blurred=40)
+        corpora.corpus(spark, "blurgate")
         .unionByName(
-            images.corpus_with_neardups(spark, n=200, dupes=40).filter(
+            corpora.corpus(spark, "neardups").filter(
                 F.col("image_id").startswith("dup")
             )
         )

@@ -17,6 +17,7 @@ import numpy as np
 import pytest
 
 from webcollector_spark import adpcm
+from webcollector_spark.corpora import corpus
 
 with warnings.catch_warnings():
     warnings.simplefilter("ignore", DeprecationWarning)
@@ -149,7 +150,7 @@ def test_spark_end_to_end_matches_committed_oracle(spark):
     from webcollector_spark.plans.queries import _ORACLE_DIR
 
     got = (
-        media.audio_features(media.make_adpcm_audio_corpus(spark, 16))
+        media.audio_features(corpus(spark, "adpcm"))
         .toPandas()
         .sort_values("audio_id")
         .reset_index(drop=True)

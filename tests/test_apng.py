@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 
 from webcollector_spark import apng, codecs
+from webcollector_spark.corpora import corpus
 from webcollector_spark.operators import media
 
 
@@ -129,7 +130,7 @@ def test_spark_dataflow_matches_committed_oracle(spark):
     import pandas as pd
 
     got = (
-        media.sample_frames(media.make_apng_video_corpus(spark, 10), every_n=2)
+        media.sample_frames(corpus(spark, "apng"), every_n=2)
         .orderBy("video_id", "frame_idx")
         .toPandas()
     )
@@ -151,9 +152,9 @@ def test_oracle_rebuild_is_stable():
     import pandas as pd
 
     sys.path.insert(0, str(Path("tools").resolve()))
-    from build_multimodal_oracles import build_video_frames_apng
+    from build_multimodal_oracles import build_sample_frames
 
-    fresh = build_video_frames_apng(media.apng_corpus_rows(10), every_n=2)
+    fresh = build_sample_frames(media.apng_corpus_rows(10), every_n=2)
     committed = pd.read_parquet("oracles/video_frames_apng.parquet")
     pd.testing.assert_frame_equal(
         fresh.sort_values(["video_id", "frame_idx"]).reset_index(drop=True),

@@ -8,6 +8,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from webcollector_spark.corpora import corpus
 from webcollector_spark.operators import audiofp
 
 
@@ -63,8 +64,7 @@ def test_corpus_dup_variants_survive_pcm16_quantization():
 
 
 def test_banded_equals_exact_and_recall(spark):
-    corpus = audiofp.make_fp_audio_corpus(spark, 12, 6)
-    fps = audiofp.audio_fingerprints(corpus)
+    fps = audiofp.audio_fingerprints(corpus(spark, "audio_fp"))
     exact = {
         (r.aud_a, r.aud_b, r.hamming)
         for r in audiofp.audio_neardup_pairs(fps, max_hamming=8).collect()
@@ -85,7 +85,7 @@ def test_spark_matches_committed_oracle(spark):
     import pandas as pd
 
     got = (
-        audiofp.audio_fingerprints(audiofp.make_fp_audio_corpus(spark, 12, 6))
+        audiofp.audio_fingerprints(corpus(spark, "audio_fp"))
         .orderBy("audio_id")
         .toPandas()
     )

@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 
 from webcollector_spark import avi, codecs
+from webcollector_spark.corpora import corpus
 from webcollector_spark.operators import media
 
 
@@ -111,7 +112,7 @@ def test_spark_dataflow_matches_committed_oracle(spark):
     import pandas as pd
 
     got = (
-        media.sample_frames(media.make_avi_video_corpus(spark, 8), every_n=2)
+        media.sample_frames(corpus(spark, "avi"), every_n=2)
         .orderBy("video_id", "frame_idx")
         .toPandas()
     )
@@ -135,9 +136,9 @@ def test_oracle_rebuild_is_stable():
     from pathlib import Path
 
     sys.path.insert(0, str(Path("tools").resolve().parent / "tools"))
-    from build_multimodal_oracles import build_video_frames_avi
+    from build_multimodal_oracles import build_sample_frames
 
-    fresh = build_video_frames_avi(media.avi_corpus_rows(8), every_n=2)
+    fresh = build_sample_frames(media.avi_corpus_rows(8), every_n=2)
     committed = pd.read_parquet("oracles/video_frames_avi.parquet")
     pd.testing.assert_frame_equal(
         fresh.sort_values(["video_id", "frame_idx"]).reset_index(drop=True),

@@ -6,12 +6,14 @@ SEMANTICS directly against the known fixture pathologies."""
 
 from __future__ import annotations
 
+from conftest import corpus_frame
+
 from webcollector_spark import fixtures
-from webcollector_spark.operators import captions, images
+from webcollector_spark.operators import captions
 
 
 def _corpus(spark, n=120, dupes=24):
-    return images.caption_corpus_df(spark, n, dupes)
+    return corpus_frame(spark, fixtures.corpus_with_caption_noise(n, dupes))
 
 
 def test_caption_spam_finds_boilerplate(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from conftest import corpus_frame
 
 from webcollector_spark import fixtures
 from webcollector_spark.exif import (
@@ -97,12 +98,11 @@ def test_denormalize_inverts_normalize():
 
 
 def test_spark_exif_upright_decode(spark):
-    from webcollector_spark.operators.images import (
-        corpus_exif_rotated_df,
-        exif_upright_decode,
-    )
+    from webcollector_spark.operators.images import exif_upright_decode
 
-    got = exif_upright_decode(corpus_exif_rotated_df(spark, 24)).collect()
+    got = exif_upright_decode(
+        corpus_frame(spark, fixtures.make_corpus_exif_rotated(24))
+    ).collect()
     assert len(got) == 24
     assert sorted({r.orientation for r in got}) == list(range(1, 9))
     assert all(r.psnr_ok and r.phash_match for r in got)
@@ -175,17 +175,12 @@ def test_fused_features_exif_upright_mode(spark):
     """features_fused(exif_upright=True) hashes the CORRECTED buffer —
     its phash must equal the rotated corpus's committed upright-artifact
     identity exactly, and dims must be the upright ones."""
-    from webcollector_spark.operators.images import (
-        corpus_exif_rotated_df,
-        features_fused,
-    )
+    from webcollector_spark.operators.images import features_fused
 
     pdf = fixtures.make_corpus_exif_rotated(16)
     got = {
         r.image_id: r
-        for r in features_fused(
-            corpus_exif_rotated_df(spark, 16), exif_upright=True
-        ).collect()
+        for r in features_fused(corpus_frame(spark, pdf), exif_upright=True).collect()
     }
     for i, r in enumerate(pdf.to_dict("records")):
         g = got[r["image_id"]]

@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 
 from webcollector_spark import flac
+from webcollector_spark.corpora import corpus
 from webcollector_spark.operators import media
 
 
@@ -153,7 +154,7 @@ def test_spark_dataflow_matches_committed_oracle(spark):
     import pandas as pd
 
     got = (
-        media.audio_features(media.make_flac_audio_corpus(spark, 16))
+        media.audio_features(corpus(spark, "flac"))
         .orderBy("audio_id")
         .toPandas()
     )
@@ -175,9 +176,9 @@ def test_oracle_rebuild_is_stable():
     import pandas as pd
 
     sys.path.insert(0, str(Path("tools").resolve()))
-    from build_multimodal_oracles import build_audio_features_flac
+    from build_multimodal_oracles import build_audio_features
 
-    fresh = build_audio_features_flac(media.flac_corpus_rows(16))
+    fresh = build_audio_features(media.flac_corpus_rows(16))
     committed = pd.read_parquet("oracles/audio_features_flac.parquet")
     pd.testing.assert_frame_equal(
         fresh.sort_values("audio_id").reset_index(drop=True),

@@ -19,6 +19,7 @@ import numpy as np
 import pytest
 
 from webcollector_spark import codecs, fixtures, gif
+from webcollector_spark.corpora import corpus
 
 PALETTE216 = (
     np.stack(np.meshgrid(*[np.arange(6)] * 3, indexing="ij"), -1).reshape(-1, 3)
@@ -132,7 +133,7 @@ def test_spark_end_to_end_matches_committed_oracle(spark):
     from webcollector_spark.plans.queries import _ORACLE_DIR
 
     got = (
-        images.decode_verify(images.corpus_gif_df(spark, 100))
+        images.decode_verify(corpus(spark, "gif"))
         .toPandas()
         .sort_values("image_id")
         .reset_index(drop=True)

@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 
 from webcollector_spark import gif
+from webcollector_spark.corpora import corpus
 from webcollector_spark.operators import media
 
 
@@ -199,7 +200,7 @@ def test_spark_dataflow_matches_committed_oracle(spark):
     import pandas as pd
 
     got = (
-        media.sample_frames(media.make_gif_video_corpus(spark, 10), every_n=2)
+        media.sample_frames(corpus(spark, "gif_anim"), every_n=2)
         .orderBy("video_id", "frame_idx")
         .toPandas()
     )
@@ -222,9 +223,9 @@ def test_oracle_rebuild_is_stable():
     import pandas as pd
 
     sys.path.insert(0, str(Path("tools").resolve()))
-    from build_multimodal_oracles import build_video_frames_gif
+    from build_multimodal_oracles import build_sample_frames
 
-    fresh = build_video_frames_gif(media.gif_corpus_rows(10), every_n=2)
+    fresh = build_sample_frames(media.gif_corpus_rows(10), every_n=2)
     committed = pd.read_parquet("oracles/video_frames_gif.parquet")
     pd.testing.assert_frame_equal(
         fresh.sort_values(["video_id", "frame_idx"]).reset_index(drop=True),

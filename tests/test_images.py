@@ -6,12 +6,14 @@ from __future__ import annotations
 
 import numpy as np
 
+from conftest import corpus_frame
+
 from webcollector_spark import codecs, fixtures
 from webcollector_spark.operators import images
 
 
 def test_decode_verify_all_rows_pass(spark):
-    df = images.decode_verify(images.corpus_df(spark, 80))
+    df = images.decode_verify(corpus_frame(spark, fixtures.make_corpus(80)))
     rows = df.collect()
     assert len(rows) == 80
     assert all(r["psnr_ok"] for r in rows)
@@ -25,7 +27,7 @@ def test_decode_verify_all_rows_pass(spark):
 
 
 def test_resize_meanpool_deterministic(spark):
-    df = images.resize_meanpool(images.corpus_df(spark, 20))
+    df = images.resize_meanpool(corpus_frame(spark, fixtures.make_corpus(20)))
     rows = {r["image_id"]: r for r in df.collect()}
     assert len(rows) == 20
     # recompute one checksum locally
@@ -41,7 +43,7 @@ def test_resize_meanpool_deterministic(spark):
 
 
 def test_phash_banded_matches_exact(spark):
-    corpus = images.corpus_with_neardups(spark, 120, dupes=30)
+    corpus = corpus_frame(spark, fixtures.corpus_with_neardups(120, 30))
     exact = {
         (r["img_a"], r["img_b"], r["hamming"])
         for r in images.phash_neardup_pairs(corpus, max_hamming=16).collect()
@@ -67,7 +69,7 @@ def test_phash_blocked_matches_exact(spark):
     """Block-combination keys (the web-scale layout) return exactly the
     O(n^2) hamming-ball result — completeness by pigeonhole on intact
     8-bit blocks — at both the default and a non-default k."""
-    corpus = images.corpus_with_neardups(spark, 120, dupes=30)
+    corpus = corpus_frame(spark, fixtures.corpus_with_neardups(120, 30))
     for k, m in ((4, 8), (2, 4)):
         exact = {
             (r["img_a"], r["img_b"], r["hamming"])
@@ -153,7 +155,7 @@ def test_image_neardup_keepers_vs_union_find(spark):
     """Ensemble dedup decision (phash ∪ dhash hamming balls -> components
     -> keeper) against a straight-line numpy brute-force + union-find
     recomputation over the same corpus."""
-    corpus = images.corpus_with_neardups(spark, 120, 24)
+    corpus = corpus_frame(spark, fixtures.corpus_with_neardups(120, 24))
     got = {
         r["image_id"]: (r["cluster"], r["cluster_size"], r["is_keeper"])
         for r in images.image_neardup_keepers(corpus, max_hamming=4).collect()
@@ -202,7 +204,7 @@ def test_image_neardup_best_keepers_rule(spark):
     (lap_var, tiebreak min id) — recomputed from the operator's own
     cluster + sharpness columns, plus a spot check that the quality
     rule can disagree with the min-id rule on lossy re-encodes."""
-    corpus = images.corpus_with_neardups(spark, 120, 24)
+    corpus = corpus_frame(spark, fixtures.corpus_with_neardups(120, 24))
     rows = images.image_neardup_best_keepers(corpus, max_hamming=4).collect()
     by_cluster = {}
     for r in rows:
@@ -223,7 +225,7 @@ def test_best_keepers_from_fused_features(spark, tmp_path):
     decode-path result exactly, and its physical plan must contain NO
     Python stage at all — the decision layer is pure JVM once features
     exist."""
-    corpus = images.corpus_with_neardups(spark, 100, 20)
+    corpus = corpus_frame(spark, fixtures.corpus_with_neardups(100, 20))
     feats = images.features_fused(corpus)
     feats.write.mode("overwrite").parquet(str(tmp_path / "feats"))
     stored = spark.read.parquet(str(tmp_path / "feats"))

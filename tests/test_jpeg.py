@@ -12,7 +12,10 @@ input_hint invariant.
 import numpy as np
 import pytest
 
+from conftest import corpus_frame
+
 from webcollector_spark import codecs, fixtures, jpeg
+from webcollector_spark.corpora import corpus
 from webcollector_spark.operators import images, media
 
 
@@ -138,7 +141,7 @@ def test_make_corpus_jpeg_invariants():
 def test_jpeg_corpus_through_decode_verify(spark):
     # the registry row's dataflow: real DCT+Huffman bytes through the
     # Arrow-batched verify operator, every row passing both gates
-    out = images.decode_verify(images.corpus_jpeg_df(spark, n=24)).collect()
+    out = images.decode_verify(corpus_frame(spark, fixtures.make_corpus_jpeg(24))).collect()
     assert len(out) == 24
     assert all(r["psnr_ok"] and r["phash_match"] for r in out)
     assert all(r["fmt"] == "jpeg" for r in out)
@@ -238,8 +241,8 @@ def test_parse_dqt_truncated_prefix_and_non_jpeg():
 def test_jpeg_quality_operator_recovers_ladder(spark):
     from webcollector_spark.operators.sniff import jpeg_quality
 
-    df = images.corpus_mixed_df(spark).unionByName(
-        images.corpus_jpeg_quality_df(spark, 24)
+    df = corpus(spark, "mixed").unionByName(
+        corpus_frame(spark, fixtures.make_corpus_jpeg_quality(24))
     )
     rows = {r["image_id"]: r for r in jpeg_quality(df).collect()}
     assert len(rows) == 444
@@ -381,7 +384,7 @@ def test_make_corpus_jpeg_subsampled_invariants():
 
 def test_subsampled_corpus_through_decode_verify(spark):
     rows = images.decode_verify(
-        images.corpus_jpeg_subsampled_df(spark, 24)
+        corpus_frame(spark, fixtures.make_corpus_jpeg_subsampled(24))
     ).collect()
     assert len(rows) == 24
     assert all(r["psnr_ok"] and r["phash_match"] for r in rows)

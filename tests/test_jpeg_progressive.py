@@ -15,6 +15,8 @@ full-range-noise image.
 import numpy as np
 import pytest
 
+from conftest import corpus_frame
+
 from webcollector_spark import codecs, fixtures, jpeg
 from webcollector_spark.jpeg_progressive import (
     encode_progressive,
@@ -135,7 +137,7 @@ def test_make_corpus_jpeg_progressive_invariants():
 
 def test_progressive_corpus_through_decode_verify(spark):
     rows = images.decode_verify(
-        images.corpus_jpeg_progressive_df(spark, 24)
+        corpus_frame(spark, fixtures.make_corpus_jpeg_progressive(24))
     ).collect()
     assert len(rows) == 24
     assert all(r["psnr_ok"] and r["phash_match"] for r in rows)
@@ -203,8 +205,8 @@ def test_sof_marker_helper():
 def test_progressive_preview_operator(spark):
     from webcollector_spark.operators.sniff import progressive_preview
 
-    df = images.corpus_jpeg_progressive_df(spark, 24).unionByName(
-        images.corpus_jpeg_df(spark, 24)
+    df = corpus_frame(spark, fixtures.make_corpus_jpeg_progressive(24)).unionByName(
+        corpus_frame(spark, fixtures.make_corpus_jpeg(24))
     )
     rows = {r["image_id"]: r for r in progressive_preview(df).collect()}
     assert len(rows) == 48

@@ -5,13 +5,14 @@ batch shape, scene-cut window."""
 from __future__ import annotations
 
 import numpy as np
+from conftest import corpus_frame
 
 from webcollector_spark.operators import media
 from webcollector_spark.operators.media import AUDIO_SCHEMA, VIDEO_SCHEMA, encode_wav
 
 
 def test_sample_frames_fanout_and_determinism(spark):
-    vids = media.make_video_corpus(spark, 8)
+    vids = corpus_frame(spark, media.video_corpus_rows(8), VIDEO_SCHEMA)
     frames = media.sample_frames(vids, every_n=4).collect()
     meta = {r["video_id"]: r for r in vids.collect()}
     by_vid: dict[str, list] = {}
@@ -35,7 +36,7 @@ def test_sample_frames_fanout_and_determinism(spark):
 
 
 def test_audio_features(spark):
-    aud = media.make_audio_corpus(spark, 6)
+    aud = corpus_frame(spark, media.audio_corpus_rows(6), AUDIO_SCHEMA)
     feats = {r["audio_id"]: r for r in media.audio_features(aud).collect()}
     meta = {r["audio_id"]: r for r in aud.collect()}
     assert set(feats) == set(meta)
@@ -48,7 +49,7 @@ def test_audio_features(spark):
 
 
 def test_scene_cuts_runs(spark):
-    vids = media.make_video_corpus(spark, 5)
+    vids = corpus_frame(spark, media.video_corpus_rows(5), VIDEO_SCHEMA)
     frames = media.sample_frames(vids, every_n=2)
     cuts = media.scene_cuts(frames, threshold=0.0).collect()
     # with threshold 0 every consecutive pair with nonzero delta appears
@@ -150,7 +151,7 @@ def test_real_audio_corpus_through_audio_features(spark):
 def test_mixed_fmt_single_dataframe(spark):
     """One DataFrame mixing stub and real payloads: per-row dispatch,
     both decode correctly in the same Arrow batch."""
-    mixed = media.make_video_corpus(spark, 3).unionByName(
+    mixed = corpus_frame(spark, media.video_corpus_rows(3), VIDEO_SCHEMA).unionByName(
         make_real_video_corpus(spark, n=3, w=32, h=24)
     )
     rows = media.sample_frames(mixed, every_n=8).collect()

@@ -99,9 +99,14 @@ class TestShardedBloom:
         occupied = sum(1 for s in range(8) if dist.shard(s).any())
         assert occupied >= 6
 
-    def test_crawl_with_sharded_bloom_matches_oracle(self, spark, small_web):
-        """Sharded-bloom path forced on: final crawl state must equal
-        the replay oracle — sharding is invisible to semantics."""
+    def test_crawl_with_sharded_bloom_matches_oracle(self, spark, small_web, monkeypatch):
+        """Sharded-bloom path forced on (a per-shard cap that splits the
+        10k-key filter four ways): final crawl state must equal the
+        replay oracle — sharding is invisible to semantics."""
+        monkeypatch.setattr(
+            "webcollector_spark.operators.seen._MAX_SHARD_BYTES", 3_000
+        )
+        assert Bloom(10_000).shards == 4
         graph, corpus = small_web
         seeds = fixtures.seeds_for(graph, 3)
         req = SyntheticRequester(graph.to_dict("records"), corpus.to_dict("records"))
@@ -112,9 +117,7 @@ class TestShardedBloom:
         oracle.inject(seeds)
         oracle.start(4)
 
-        cfg = CrawlerConfig(
-            bloom_capacity=10_000, bloom_min_frontier=0, bloom_shards=4
-        )
+        cfg = CrawlerConfig(bloom_capacity=10_000, bloom_min_frontier=0)
         crawler = RamCrawler(spark, req, config=cfg)
         crawler.add_seed(list(seeds))
         crawler.start(4)

@@ -14,6 +14,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from conftest import corpus_frame
+
 from webcollector_spark import codecs, fixtures
 from webcollector_spark.operators import images, shards
 
@@ -141,7 +143,7 @@ def test_box_blur_reduces_laplacian_variance():
 
 def test_image_sharpness_gate_separates_blurred(spark):
     df = images.image_sharpness(
-        images.corpus_blurgate_df(spark, 60, 20), threshold=10_000.0
+        corpus_frame(spark, fixtures.make_corpus_blurgate(60, 20)), threshold=10_000.0
     )
     rows = {r["image_id"]: r for r in df.collect()}
     assert len(rows) == 80
@@ -153,7 +155,7 @@ def test_features_fused_equals_unfused_twins(spark):
     """The single-decode fused pass must reproduce, column for column,
     what the separate channel/sharpness/hash operators compute — fusing
     may only amortize the decode, never change a value."""
-    corpus = images.corpus_df(spark, 40)
+    corpus = corpus_frame(spark, fixtures.make_corpus(40))
     fused = {r["image_id"]: r for r in images.features_fused(corpus).collect()}
     assert len(fused) == 40
 

@@ -6,8 +6,12 @@ from __future__ import annotations
 
 import numpy as np
 
+from conftest import corpus_frame
+
 from webcollector_spark import codecs, fixtures
+from webcollector_spark.corpora import corpus
 from webcollector_spark.operators import captions, images, sniff
+from webcollector_spark.schema import CORPUS_SCHEMA
 
 
 # ---------------------------------------------------------------- kernels
@@ -59,7 +63,7 @@ def test_dhash64_gradient_invariance():
 
 
 def test_sniff_meta_mixed_corpus(spark):
-    rows = {r["image_id"]: r for r in sniff.sniff_meta(images.corpus_mixed_df(spark)).collect()}
+    rows = {r["image_id"]: r for r in sniff.sniff_meta(corpus(spark, "mixed")).collect()}
     assert len(rows) == 420
     assert all(r["header_ok"] for r in rows.values())
     fmts = {r["fmt_sniffed"] for r in rows.values()}
@@ -77,7 +81,7 @@ def test_sniff_meta_flags_mislabeled_and_truncated(spark):
     pdf.loc[0, "fmt"] = "gif"  # mislabel: payload is png/qimg
     pdf.loc[1, "w"] = int(pdf.loc[1, "w"]) + 1  # dims lie
     pdf.loc[2, "bytes"] = bytes(pdf.loc[2, "bytes"])[:10]  # truncated header
-    df = spark.createDataFrame(pdf, schema=images.CORPUS_SCHEMA)
+    df = spark.createDataFrame(pdf, schema=CORPUS_SCHEMA)
     got = {r["image_id"]: r["header_ok"] for r in sniff.sniff_meta(df).collect()}
     ids = pdf["image_id"].tolist()
     assert not got[ids[0]] and not got[ids[1]] and not got[ids[2]]
@@ -88,7 +92,7 @@ def test_compression_stats_recompute(spark):
     stats = {
         r["fmt_sniffed"]: r
         for r in sniff.compression_stats(
-            sniff.sniff_meta(images.corpus_mixed_df(spark))
+            sniff.sniff_meta(corpus(spark, "mixed"))
         ).collect()
     }
     assert stats["png"]["n_images"] + stats["qimg"]["n_images"] == 200
@@ -109,7 +113,7 @@ def test_compression_stats_recompute(spark):
 
 
 def test_dhash_blocked_matches_exact_bruteforce(spark):
-    corpus = images.corpus_with_neardups(spark, 120, dupes=30)
+    corpus = corpus_frame(spark, fixtures.corpus_with_neardups(120, 30))
     dh = images.with_dhash(corpus)
     exact = {
         (r["img_a"], r["img_b"], r["hamming"])
@@ -134,7 +138,7 @@ def test_dhash_blocked_matches_exact_bruteforce(spark):
 
 
 def test_channel_stats_match_numpy(spark):
-    got = {r["channel"]: r for r in images.channel_stats(images.corpus_df(spark, 60)).collect()}
+    got = {r["channel"]: r for r in images.channel_stats(corpus_frame(spark, fixtures.make_corpus(60))).collect()}
     pdf = fixtures.make_corpus(60)
     px = np.concatenate(
         [codecs.decode(bytes(b)).reshape(-1, 3).astype(np.int64) for b in pdf["bytes"]]
@@ -151,7 +155,7 @@ def test_channel_stats_match_numpy(spark):
 
 def test_channel_stats_partition_invariant(spark):
     """Integer partials make the reduce exact: 1 partition == 16."""
-    base = images.corpus_df(spark, 40)
+    base = corpus_frame(spark, fixtures.make_corpus(40))
     one = {tuple(r) for r in images.channel_stats(base.coalesce(1)).collect()}
     many = {tuple(r) for r in images.channel_stats(base.repartition(16)).collect()}
     assert one == many
@@ -192,7 +196,7 @@ def test_sniff_plan_slices_before_arrow(spark, tmp_path):
     import io
 
     path = str(tmp_path / "corpus")
-    images.corpus_df(spark, 20).write.parquet(path)
+    corpus_frame(spark, fixtures.make_corpus(20)).write.parquet(path)
     df = sniff.sniff_meta(spark.read.parquet(path))
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):

@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 
 from webcollector_spark import codecs, fixtures, tiff
+from webcollector_spark.corpora import corpus
 from webcollector_spark.tiff import (
     _COMP_LZW,
     _COMP_NONE,
@@ -192,7 +193,7 @@ def test_spark_dataflow_matches_committed_oracle(spark):
     from webcollector_spark.operators import images
 
     got = (
-        images.decode_verify(images.corpus_tiff_df(spark))
+        images.decode_verify(corpus(spark, "tiff"))
         .orderBy("image_id")
         .toPandas()
     )

@@ -10,6 +10,7 @@ import warnings
 import numpy as np
 import pytest
 
+from webcollector_spark.corpora import corpus
 from webcollector_spark.operators import media
 
 with warnings.catch_warnings():
@@ -63,7 +64,7 @@ def test_spark_features_match_committed_oracle(spark):
     import pandas as pd
 
     got = (
-        media.audio_features(media.make_ulaw_audio_corpus(spark, 16))
+        media.audio_features(corpus(spark, "ulaw"))
         .orderBy("audio_id")
         .toPandas()
     )

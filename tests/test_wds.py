@@ -10,13 +10,15 @@ from __future__ import annotations
 import os
 import tarfile
 
+from conftest import corpus_frame
 from pyspark.sql import functions as F
 
-from webcollector_spark.operators import images, shards
+from webcollector_spark import fixtures
+from webcollector_spark.operators import shards
 
 
 def _assigned_corpus(spark, n=60, target=12_000):
-    corpus = images.corpus_df(spark, n)
+    corpus = corpus_frame(spark, fixtures.make_corpus(n))
     sized = corpus.withColumn("nbytes", F.length("bytes"))
     assignment = shards.pack_shards(
         sized, key="image_id", size="nbytes", target_bytes=target, n_buckets=8
@@ -113,6 +115,7 @@ def test_webdataset_crash_mid_shard_resumes_to_clean_export(spark, tmp_path):
     resumed = {r["shard"]: r for r in shards.write_webdataset(assigned, out).collect()}
     assert resumed[victim["shard"]]["written"] is True
     assert {s: r["sha256"] for s, r in resumed.items()} == clean
+    assert not [f for f in os.listdir(out) if ".inprogress." in f]
 
 
 def test_webdataset_member_layout(spark, tmp_path):

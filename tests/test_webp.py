@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 
 from webcollector_spark import codecs, fixtures, webp
+from webcollector_spark.corpora import corpus
 
 
 def _posterize(a):
@@ -166,7 +167,7 @@ def test_spark_dataflow_matches_committed_oracle(spark):
     from webcollector_spark.operators import images
 
     got = (
-        images.decode_verify(images.corpus_webp_df(spark))
+        images.decode_verify(corpus(spark, "webp"))
         .orderBy("image_id")
         .toPandas()
     )

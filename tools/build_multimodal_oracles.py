@@ -12,10 +12,14 @@ row/schema/hash checks: the Spark-side mapInPandas plumbing (schemas,
 Arrow batching, partition fan-out, the window for scene cuts) is
 verified against a straight-line single-process recomputation.
 
-Determinism: fixtures.make_corpus / media.make_*_corpus are seeded;
-codecs.decode / phash64 / the stub media decoders are pure functions.
-Reusing those kernels here is intentional — they define the ground
-truth; what the oracle checks is the distributed dataflow around them.
+Determinism: every corpus is a seeded generator call, defined once in
+webcollector_spark/corpora.py and read here through `corpus_rows`, the
+same rows the registry loads; the per-format registry entries and
+their oracles come from the same shape tables (plans/queries.py
+DECODE_VERIFY / AUDIO_FEATURES / SAMPLE_FRAMES). codecs.decode /
+phash64 / the media decoders are pure functions. Reusing those kernels
+here is intentional — they define the ground truth; what the oracle
+checks is the distributed dataflow around them.
 
 Run from the repo root:  python tools/build_multimodal_oracles.py
 tests/test_images.py asserts the committed parquet matches a fresh
@@ -24,6 +28,7 @@ rebuild, so kernel drift cannot silently stale the oracle.
 
 from __future__ import annotations
 
+import struct
 import sys
 from pathlib import Path
 
@@ -35,10 +40,12 @@ import pyarrow.parquet as pq
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from webcollector_spark import codecs, fixtures  # noqa: E402
+from webcollector_spark.corpora import corpus_rows  # noqa: E402
 from webcollector_spark.operators import media  # noqa: E402
-from webcollector_spark.operators.media import (  # noqa: E402
-    _decode_audio_stub,
-    _decode_video_stub,
+from webcollector_spark.plans.queries import (  # noqa: E402
+    AUDIO_FEATURES,
+    DECODE_VERIFY,
+    SAMPLE_FRAMES,
 )
 
 OUT_DIR = Path(__file__).resolve().parents[1] / "oracles"
@@ -56,8 +63,28 @@ _DECODE_VERIFY_SCHEMA = pa.schema(
         ("phash_match", pa.bool_()),
     ]
 )
+_FRAMES_SCHEMA = pa.schema(
+    [
+        ("video_id", pa.string()),
+        ("frame_idx", pa.int32()),
+        ("ts_sec", pa.float64()),
+        ("frame_mean", pa.float64()),
+        ("frame_hash", pa.int64()),
+    ]
+)
+_AUDIO_FEATURES_SCHEMA = pa.schema(
+    [
+        ("audio_id", pa.string()),
+        ("duration_sec", pa.float64()),
+        ("rms", pa.float64()),
+        ("zero_crossings", pa.int64()),
+    ]
+)
 
 SCHEMAS = {
+    **dict.fromkeys(DECODE_VERIFY, _DECODE_VERIFY_SCHEMA),
+    **dict.fromkeys(SAMPLE_FRAMES, _FRAMES_SCHEMA),
+    **dict.fromkeys(AUDIO_FEATURES, _AUDIO_FEATURES_SCHEMA),
     "image_letterbox": pa.schema(
         [
             ("image_id", pa.string()),
@@ -72,20 +99,6 @@ SCHEMAS = {
             ("boxed", pa.bool_()),
         ]
     ),
-    "image_decode_verify": _DECODE_VERIFY_SCHEMA,
-    # same verify shape over the REAL-baseline-JPEG corpus
-    "image_decode_verify_jpeg": _DECODE_VERIFY_SCHEMA,
-    "image_decode_verify_gif": _DECODE_VERIFY_SCHEMA,
-    "image_decode_verify_bmp": _DECODE_VERIFY_SCHEMA,
-    "image_decode_verify_ico": _DECODE_VERIFY_SCHEMA,
-    "image_decode_verify_tiff": _DECODE_VERIFY_SCHEMA,
-    "image_decode_verify_webp": _DECODE_VERIFY_SCHEMA,
-    # same verify shape over the chroma-subsampled (4:2:0/4:2:2) corpus
-    "image_decode_verify_jpeg420": _DECODE_VERIFY_SCHEMA,
-    # same verify shape over the progressive (SOF2) corpus
-    "image_decode_verify_jpegprog": _DECODE_VERIFY_SCHEMA,
-    # same verify shape over the Adam7-interlaced PNG corpus
-    "image_decode_verify_pngi": _DECODE_VERIFY_SCHEMA,
     "image_progressive_preview": pa.schema(
         [
             ("image_id", pa.string()),
@@ -112,78 +125,10 @@ SCHEMAS = {
             ("hamming", pa.int32()),
         ]
     ),
-    "video_frame_sample": pa.schema(
-        [
-            ("video_id", pa.string()),
-            ("frame_idx", pa.int32()),
-            ("ts_sec", pa.float64()),
-            ("frame_mean", pa.float64()),
-            ("frame_hash", pa.int64()),
-        ]
-    ),
-    "video_frames_avi": pa.schema(
-        [
-            ("video_id", pa.string()),
-            ("frame_idx", pa.int32()),
-            ("ts_sec", pa.float64()),
-            ("frame_mean", pa.float64()),
-            ("frame_hash", pa.int64()),
-        ]
-    ),
-    "video_frames_apng": pa.schema(
-        [
-            ("video_id", pa.string()),
-            ("frame_idx", pa.int32()),
-            ("ts_sec", pa.float64()),
-            ("frame_mean", pa.float64()),
-            ("frame_hash", pa.int64()),
-        ]
-    ),
-    "video_frames_gif": pa.schema(
-        [
-            ("video_id", pa.string()),
-            ("frame_idx", pa.int32()),
-            ("ts_sec", pa.float64()),
-            ("frame_mean", pa.float64()),
-            ("frame_hash", pa.int64()),
-        ]
-    ),
-    "audio_features": pa.schema(
-        [
-            ("audio_id", pa.string()),
-            ("duration_sec", pa.float64()),
-            ("rms", pa.float64()),
-            ("zero_crossings", pa.int64()),
-        ]
-    ),
-    "audio_features_adpcm": pa.schema(
-        [
-            ("audio_id", pa.string()),
-            ("duration_sec", pa.float64()),
-            ("rms", pa.float64()),
-            ("zero_crossings", pa.int64()),
-        ]
-    ),
-    "audio_features_ulaw": pa.schema(
-        [
-            ("audio_id", pa.string()),
-            ("duration_sec", pa.float64()),
-            ("rms", pa.float64()),
-            ("zero_crossings", pa.int64()),
-        ]
-    ),
     "audio_fingerprint": pa.schema(
         [
             ("audio_id", pa.string()),
             ("afp", pa.int64()),
-        ]
-    ),
-    "audio_features_flac": pa.schema(
-        [
-            ("audio_id", pa.string()),
-            ("duration_sec", pa.float64()),
-            ("rms", pa.float64()),
-            ("zero_crossings", pa.int64()),
         ]
     ),
     "video_scene_cuts": pa.schema(
@@ -305,32 +250,6 @@ SCHEMAS = {
         ]
     ),
 }
-
-
-def corpus_frames(n: int = 200) -> pd.DataFrame:
-    return fixtures.make_corpus(n)
-
-
-def corpus_with_neardups(n: int = 200, dupes: int = 40) -> pd.DataFrame:
-    """Mirror of operators.images.corpus_with_neardups, Spark-free."""
-    pdf = fixtures.make_corpus(n)
-    dup_rows = []
-    for i in range(min(dupes, n)):
-        src = pdf.iloc[i]
-        pixels = fixtures.ground_truth_pixels(src["image_id"], src["w"], src["h"])
-        data = codecs.encode_lossy(pixels)
-        dup_rows.append(
-            {
-                "image_id": f"dup{i:08d}",
-                "bytes": data,
-                "w": src["w"],
-                "h": src["h"],
-                "fmt": "jpeg",
-                "caption": src["caption"],
-                "phash": codecs.phash64(codecs.decode(data)),
-            }
-        )
-    return pd.concat([pdf, pd.DataFrame(dup_rows)], ignore_index=True)
 
 
 def build_image_decode_verify(pdf: pd.DataFrame, psnr_gate_db: float = 40.0):
@@ -614,41 +533,17 @@ def build_image_channel_partials(pdf: pd.DataFrame):
     return pd.DataFrame(rows)
 
 
-def build_video_frame_sample(vids: list[dict], every_n: int = 4):
-    rows = []
-    for r in vids:
-        for idx, frame in _decode_video_stub(
-            r["video_id"], bytes(r["bytes"]), r["n_frames"], r["w"], r["h"]
-        ):
-            if idx % every_n:
-                continue
-            rows.append(
-                {
-                    "video_id": r["video_id"],
-                    "frame_idx": idx,
-                    "ts_sec": idx / r["fps"],
-                    "frame_mean": round(float(frame.mean()), 4),
-                    "frame_hash": int(
-                        np.int64(
-                            int.from_bytes(frame.tobytes()[:8], "big", signed=False)
-                            >> 1
-                        )
-                    ),
-                }
-            )
-    return pd.DataFrame(rows)
-
-
-def build_video_frames_avi(vids: list[dict], every_n: int = 2):
-    """Frame features over REAL RIFF/AVI + baseline-JPEG payloads,
-    decoded straight-line via the container walk (media.decode_video_avi
-    -> avi.decode_avi_mjpeg -> jpeg.decode_baseline). The codec itself
-    is checked against pre-encode ground truth in tests/test_avi.py
-    (PSNR >= 40 dB per frame); this oracle pins the distributed
+def build_sample_frames(vids: list[dict], every_n: int):
+    """Frame features, decoded straight-line through each row's video
+    decoder (media._video_decoder: the stub, or the AVI/GIF/APNG
+    container walks down to the real JPEG/LZW/PNG bitstreams). Codec
+    fidelity vs pre-encode frames is pinned in tests/test_avi.py,
+    test_gif_anim.py and test_apng.py; this oracle pins the distributed
     dataflow around it, per the module-docstring convention."""
     rows = []
     for r in vids:
-        for idx, frame in media.decode_video_avi(
+        decode = media._video_decoder(r["fmt"])
+        for idx, frame in decode(
             r["video_id"], bytes(r["bytes"]), r["n_frames"], r["w"], r["h"]
         ):
             if idx % every_n:
@@ -670,104 +565,82 @@ def build_video_frames_avi(vids: list[dict], every_n: int = 2):
     return pd.DataFrame(rows)
 
 
-def build_video_frames_gif(vids: list[dict], every_n: int = 2):
-    """Frame features over REAL animated GIF89a payloads, decoded
-    straight-line via the full rendering model (media.decode_video_gif
-    -> gif.decode_gif_frames: LZW + transparency delta sub-rects +
-    disposal composition). Codec fidelity (bit-exact composed frames
-    vs pre-encode ground truth) is pinned in tests/test_gif_anim.py;
-    this oracle pins the distributed dataflow around it."""
-    rows = []
-    for r in vids:
-        for idx, frame in media.decode_video_gif(
-            r["video_id"], bytes(r["bytes"]), r["n_frames"], r["w"], r["h"]
-        ):
-            if idx % every_n:
-                continue
-            rows.append(
-                {
-                    "video_id": r["video_id"],
-                    "frame_idx": idx,
-                    "ts_sec": idx / r["fps"],
-                    "frame_mean": round(float(frame.mean()), 4),
-                    "frame_hash": int(
-                        np.int64(
-                            int.from_bytes(frame.tobytes()[:8], "big", signed=False)
-                            >> 1
-                        )
-                    ),
-                }
-            )
-    return pd.DataFrame(rows)
+def _riff_chunks(data: bytes) -> dict[bytes, bytes]:
+    """A WAV file's top-level chunks by tag (the last one of a tag wins)."""
+    pos, chunks = 12, {}
+    while pos + 8 <= len(data):
+        tag = data[pos : pos + 4]
+        (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
+        chunks[tag] = data[pos + 8 : pos + 8 + size]
+        pos += 8 + size + (size & 1)
+    return chunks
 
 
-def build_video_frames_apng(vids: list[dict], every_n: int = 2):
-    """Frame features over REAL animated-PNG payloads, decoded
-    straight-line via the full rendering model (media.decode_video_apng
-    -> apng.decode_apng). Codec fidelity is pinned in tests/test_apng.py;
-    this oracle pins the distributed dataflow around it."""
-    rows = []
-    for r in vids:
-        for idx, frame in media.decode_video_apng(
-            r["video_id"], bytes(r["bytes"]), r["n_frames"], r["w"], r["h"]
-        ):
-            if idx % every_n:
-                continue
-            rows.append(
-                {
-                    "video_id": r["video_id"],
-                    "frame_idx": idx,
-                    "ts_sec": idx / r["fps"],
-                    "frame_mean": round(float(frame.mean()), 4),
-                    "frame_hash": int(
-                        np.int64(
-                            int.from_bytes(frame.tobytes()[:8], "big", signed=False)
-                            >> 1
-                        )
-                    ),
-                }
-            )
-    return pd.DataFrame(rows)
+def _wave_stub(r: dict) -> np.ndarray:
+    return media._decode_audio_stub(r["audio_id"], bytes(r["bytes"]), r["n_samples"])
+
+
+def _wave_ulaw(r: dict) -> np.ndarray:
+    """G.711 mu-law decoded with the STDLIB's independent expansion
+    (audioop.ulaw2lin): the engine's ulaw_decode never runs here, so a
+    driver match proves the engine's inverse table equals the stdlib's
+    over the real WAV bytes."""
+    import audioop  # deprecated in 3.11, removed in 3.13
+
+    body = _riff_chunks(bytes(r["bytes"]))[b"data"]
+    pcm = np.frombuffer(audioop.ulaw2lin(body[: r["n_samples"]], 2), dtype="<i2")
+    return pcm.astype(np.float32) / 32767.0
+
+
+def _wave_adpcm(r: dict) -> np.ndarray:
+    """IMA-ADPCM decoded with the STDLIB's independent DVI/IMA
+    implementation (audioop.adpcm2lin), so this oracle checks the codec
+    itself as well as the dataflow. audioop walks a contiguous
+    high-nibble-first stream from explicit (pred, index) state; the WAV
+    block layout is low-nibble-first with a per-block state header, so
+    swap nibbles and seed per block."""
+    import audioop  # deprecated in 3.11, removed in 3.13
+
+    chunks = _riff_chunks(bytes(r["bytes"]))
+    block_align = struct.unpack("<HHIIHH", chunks[b"fmt "][:16])[4]
+    body = chunks[b"data"]
+    pcm_parts = []
+    for off in range(0, len(body), block_align):
+        block = body[off : off + block_align]
+        pred, idx = struct.unpack("<hB", block[:3])
+        swapped = bytes(((b >> 4) | ((b & 0x0F) << 4)) for b in block[4:])
+        decoded, _ = audioop.adpcm2lin(swapped, 2, (pred, idx))
+        pcm_parts.append(struct.pack("<h", pred) + decoded)
+    pcm = np.frombuffer(b"".join(pcm_parts), dtype="<i2")[: r["n_samples"]]
+    return pcm.astype(np.float32) / 32767.0
+
+
+def _wave_flac(r: dict) -> np.ndarray:
+    """The PRE-ENCODE PCM (adpcm_waveform re-quantized exactly as
+    flac_corpus_rows does): the engine's decoder NEVER runs here, so a
+    driver match proves decode_flac reproduces the original samples
+    bit-exact through the fixed-predictor/Rice/CRC path — any
+    single-sample decode error flips zero_crossings or rms."""
+    pcm = np.round(
+        media.adpcm_waveform(int(r["audio_id"][3:]), r["sample_rate"], r["n_samples"])
+        * 32767.0
+    ).astype(np.int16)
+    return pcm.astype(np.float32) / 32767.0
+
+
+# fmt -> the oracle's own waveform for a clip
+_ORACLE_WAVES = {
+    "fakeaud": _wave_stub,
+    "ulaw": _wave_ulaw,
+    "adpcm": _wave_adpcm,
+    "flac": _wave_flac,
+}
 
 
 def build_audio_features(clips: list[dict]):
     rows = []
     for r in clips:
-        wave = _decode_audio_stub(r["audio_id"], bytes(r["bytes"]), r["n_samples"])
-        rows.append(
-            {
-                "audio_id": r["audio_id"],
-                "duration_sec": round(r["n_samples"] / r["sample_rate"], 4),
-                "rms": round(float(np.sqrt(np.mean(wave**2))), 6),
-                "zero_crossings": int(np.sum(np.diff(np.sign(wave)) != 0)),
-            }
-        )
-    return pd.DataFrame(rows)
-
-
-def build_audio_features_ulaw(clips: list[dict]):
-    """Features over G.711 mu-law clips, decoded with the STDLIB's
-    independent implementation (audioop.ulaw2lin) — codec-checking like
-    the ADPCM oracle: the engine's ulaw_decode never runs here, so a
-    driver match proves the engine's inverse table equals the stdlib's
-    over the real WAV bytes."""
-    import audioop  # deprecated in 3.11, removed 3.13; sandbox is 3.11
-    import struct
-
-    rows = []
-    for r in clips:
-        data = bytes(r["bytes"])
-        pos, body = 12, None
-        while pos + 8 <= len(data):
-            tag = data[pos : pos + 4]
-            (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-            if tag == b"data":
-                body = data[pos + 8 : pos + 8 + size]
-            pos += 8 + size + (size & 1)
-        pcm = np.frombuffer(
-            audioop.ulaw2lin(body[: r["n_samples"]], 2), dtype="<i2"
-        )
-        wave = pcm.astype(np.float32) / 32767.0
+        wave = _ORACLE_WAVES[r["fmt"]](r)
         rows.append(
             {
                 "audio_id": r["audio_id"],
@@ -800,79 +673,6 @@ def build_audio_fingerprint(clips: list[dict]):
     return pd.DataFrame(rows)
 
 
-def build_audio_features_flac(clips: list[dict]):
-    """Features over FLAC clips computed from the PRE-ENCODE PCM
-    (adpcm_waveform re-quantized exactly as flac_corpus_rows does) —
-    the engine's decoder NEVER runs here, so a driver match proves
-    decode_flac reproduces the original samples bit-exact through the
-    fixed-predictor/Rice/CRC path. Lossless-oracle convention: any
-    single-sample decode error flips zero_crossings or rms."""
-    rows = []
-    for r in clips:
-        pcm = np.round(
-            media.adpcm_waveform(
-                int(r["audio_id"][3:]), r["sample_rate"], r["n_samples"]
-            )
-            * 32767.0
-        ).astype(np.int16)
-        wave = pcm.astype(np.float32) / 32767.0
-        rows.append(
-            {
-                "audio_id": r["audio_id"],
-                "duration_sec": round(r["n_samples"] / r["sample_rate"], 4),
-                "rms": round(float(np.sqrt(np.mean(wave**2))), 6),
-                "zero_crossings": int(np.sum(np.diff(np.sign(wave)) != 0)),
-            }
-        )
-    return pd.DataFrame(rows)
-
-
-def build_audio_features_adpcm(clips: list[dict]):
-    """Features over IMA-ADPCM clips, decoded with the STDLIB's
-    independent DVI/IMA implementation (audioop.adpcm2lin) — unlike the
-    other oracles this one does NOT reuse the engine kernel, so it
-    checks the codec itself as well as the dataflow. audioop walks a
-    contiguous high-nibble-first stream from explicit (pred, index)
-    state; the WAV block layout is low-nibble-first with a per-block
-    state header, so swap nibbles and seed per block."""
-    import audioop  # deprecated in 3.11, removed 3.13; sandbox is 3.11
-    import struct
-
-    rows = []
-    for r in clips:
-        data = bytes(r["bytes"])
-        pos, block_align, body = 12, None, None
-        while pos + 8 <= len(data):
-            tag = data[pos : pos + 4]
-            (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-            payload = data[pos + 8 : pos + 8 + size]
-            if tag == b"fmt ":
-                block_align = struct.unpack("<HHIIHH", payload[:16])[4]
-            elif tag == b"data":
-                body = payload
-            pos += 8 + size + (size & 1)
-        pcm_parts = []
-        for off in range(0, len(body), block_align):
-            block = body[off : off + block_align]
-            pred, idx = struct.unpack("<hB", block[:3])
-            swapped = bytes(
-                ((b >> 4) | ((b & 0x0F) << 4)) for b in block[4:]
-            )
-            decoded, _ = audioop.adpcm2lin(swapped, 2, (pred, idx))
-            pcm_parts.append(struct.pack("<h", pred) + decoded)
-        pcm = np.frombuffer(b"".join(pcm_parts), dtype="<i2")[: r["n_samples"]]
-        wave = pcm.astype(np.float32) / 32767.0
-        rows.append(
-            {
-                "audio_id": r["audio_id"],
-                "duration_sec": round(r["n_samples"] / r["sample_rate"], 4),
-                "rms": round(float(np.sqrt(np.mean(wave**2))), 6),
-                "zero_crossings": int(np.sum(np.diff(np.sign(wave)) != 0)),
-            }
-        )
-    return pd.DataFrame(rows)
-
-
 def build_video_scene_cuts(frames: pd.DataFrame, threshold: float = 1.0):
     rows = []
     for _, grp in frames.groupby("video_id", sort=False):
@@ -891,42 +691,6 @@ def build_video_scene_cuts(frames: pd.DataFrame, threshold: float = 1.0):
                     )
             prev = r["frame_mean"]
     return pd.DataFrame(rows)
-
-
-def video_corpus_rows(n: int = 24, seed: int = 42) -> list[dict]:
-    """Same generation recipe as media.make_video_corpus, Spark-free."""
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        nf = int(rng.integers(8, 33))
-        rows.append(
-            {
-                "video_id": f"vid{i:06d}",
-                "bytes": rng.integers(0, 256, size=64, dtype=np.uint8).tobytes(),
-                "n_frames": nf,
-                "fps": float(rng.choice([12.0, 24.0, 30.0])),
-                "w": 32,
-                "h": 24,
-                "fmt": "fakevid",
-            }
-        )
-    return rows
-
-
-def audio_corpus_rows(n: int = 24, seed: int = 43) -> list[dict]:
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        sr = int(rng.choice([8000, 16000]))
-        rows.append(
-            {
-                "audio_id": f"aud{i:06d}",
-                "bytes": rng.integers(0, 256, size=64, dtype=np.uint8).tobytes(),
-                "sample_rate": sr,
-                "n_samples": int(rng.integers(sr // 2, sr * 2)),
-            }
-        )
-    return rows
 
 
 def build_image_letterbox(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -955,126 +719,39 @@ def build_image_letterbox(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def build_all() -> dict[str, pd.DataFrame]:
-    corpus = corpus_frames(200)
-    neardups = corpus_with_neardups(200, 40)
-    vids = video_corpus_rows(24)
-    auds = audio_corpus_rows(24)
-    frames2 = build_video_frame_sample(vids, every_n=2)
-    noisy_meta = fixtures.corpus_with_caption_noise(200, 40).drop(columns=["bytes"])
+    corpus = corpus_rows("base")
+    neardups = corpus_rows("neardups")
+    mixed = corpus_rows("mixed")
     return {
-        "image_decode_verify": build_image_decode_verify(corpus),
-        # real DCT+Huffman bytes through the same straight-line kernels
-        "image_decode_verify_jpeg": build_image_decode_verify(
-            fixtures.make_corpus_jpeg(120)
-        ),
-        # real palette+LZW bytes; lossless on the posterized truth
-        "image_decode_verify_gif": build_image_decode_verify(
-            fixtures.make_corpus_gif(100)
-        ),
-        "image_decode_verify_bmp": build_image_decode_verify(
-            fixtures.make_corpus_bmp(100)
-        ),
-        "image_decode_verify_ico": build_image_decode_verify(
-            fixtures.make_corpus_ico(100)
-        ),
-        "image_decode_verify_tiff": build_image_decode_verify(
-            fixtures.make_corpus_tiff(100)
-        ),
-        "image_decode_verify_webp": build_image_decode_verify(
-            fixtures.make_corpus_webp(100)
-        ),
-        # real 4:2:0/4:2:2 MCU-interleaved bytes over smooth truth
-        "image_decode_verify_jpeg420": build_image_decode_verify(
-            fixtures.make_corpus_jpeg_subsampled(120)
-        ),
-        # real SOF2 multi-scan streams (spectral selection + successive
-        # approximation, per-scan optimal Huffman tables)
-        "image_decode_verify_jpegprog": build_image_decode_verify(
-            fixtures.make_corpus_jpeg_progressive(120)
-        ),
-        # Adam7 seven-pass interlace; lossless -> bit-exact rows
-        "image_decode_verify_pngi": build_image_decode_verify(
-            fixtures.make_corpus_png_interlaced(100)
-        ),
+        **{e: build_image_decode_verify(corpus_rows(c)) for e, c in DECODE_VERIFY.items()},
+        **{e: build_sample_frames(corpus_rows(c), n) for e, (c, n) in SAMPLE_FRAMES.items()},
+        **{e: build_audio_features(corpus_rows(c)) for e, c in AUDIO_FEATURES.items()},
         # byte-capped preview triage over progressive + baseline rows
         "image_progressive_preview": build_image_progressive_preview(
-            pd.concat(
-                [
-                    fixtures.make_corpus_jpeg_progressive(120),
-                    fixtures.make_corpus_jpeg(120),
-                ],
-                ignore_index=True,
-            )
+            pd.concat([corpus_rows("jpegprog"), corpus_rows("jpeg")], ignore_index=True)
         ),
         "image_resize_meanpool": build_image_resize_meanpool(corpus),
         "phash_neardup": build_phash_neardup(neardups),
-        "video_frame_sample": build_video_frame_sample(vids, every_n=4),
-        "audio_features": build_audio_features(auds),
-        # real compressed bytes, decoded by the stdlib's independent
-        # IMA implementation — codec-checking, not just dataflow
-        "audio_features_adpcm": build_audio_features_adpcm(
-            media.adpcm_corpus_rows(16)
-        ),
-        # real G.711 mu-law bytes, decoded by the stdlib's independent
-        # expansion table — codec-checking, not just dataflow
-        "audio_features_ulaw": build_audio_features_ulaw(
-            media.ulaw_corpus_rows(16)
-        ),
-        # real FLAC bytes; oracle features come from the pre-encode
-        # PCM, so a match proves bit-exact lossless decode
-        "audio_features_flac": build_audio_features_flac(
-            media.flac_corpus_rows(16)
-        ),
         # acoustic fingerprints over the dup-variant WAV corpus
-        "audio_fingerprint": build_audio_fingerprint(
-            __import__("webcollector_spark.operators.audiofp",
-                       fromlist=["fp_corpus_rows"]).fp_corpus_rows(12, 6)
+        "audio_fingerprint": build_audio_fingerprint(corpus_rows("audio_fp")),
+        "video_scene_cuts": build_video_scene_cuts(
+            build_sample_frames(corpus_rows("video"), every_n=2), threshold=1.0
         ),
-        "video_scene_cuts": build_video_scene_cuts(frames2, threshold=1.0),
-        # real MJPEG-in-AVI container bytes through the container walk
-        "video_frames_avi": build_video_frames_avi(
-            media.avi_corpus_rows(8), every_n=2
-        ),
-        # real animated GIF89a through the full rendering model
-        "video_frames_gif": build_video_frames_gif(
-            media.gif_corpus_rows(10), every_n=2
-        ),
-        # real animated PNG through the full rendering model
-        "video_frames_apng": build_video_frames_apng(
-            media.apng_corpus_rows(10), every_n=2
-        ),
-        "caption_corpus_meta": noisy_meta,
+        "caption_corpus_meta": corpus_rows("captions").drop(columns=["bytes"]),
         # header-only triage over all four container formats
-        "image_meta_sniff": build_image_meta_sniff(
-            pd.concat(
-                [corpus, fixtures.make_corpus_jpeg(120), fixtures.make_corpus_gif(100)],
-                ignore_index=True,
-            )
-        ),
+        "image_meta_sniff": build_image_meta_sniff(mixed),
         # header-only DQT quality triage over all four containers plus
         # the quality-ladder re-encode corpus
         "image_jpeg_quality": build_image_jpeg_quality(
-            pd.concat(
-                [
-                    corpus,
-                    fixtures.make_corpus_jpeg(120),
-                    fixtures.make_corpus_gif(100),
-                    fixtures.make_corpus_jpeg_quality(120),
-                ],
-                ignore_index=True,
-            )
+            pd.concat([mixed, corpus_rows("jpeg_quality")], ignore_index=True)
         ),
-        "image_exif_meta": build_image_exif_meta(
-            fixtures.make_corpus_exif(120)
-        ),
-        "image_exif_upright": build_image_exif_upright(
-            fixtures.make_corpus_exif_rotated(80)
-        ),
+        "image_exif_meta": build_image_exif_meta(corpus_rows("exif")),
+        "image_exif_upright": build_image_exif_upright(corpus_rows("exif_rotated")),
         "dhash_neardup": build_dhash_neardup(neardups),
         "image_neardup_ids": neardups[["image_id"]],
         "image_channel_partials": build_image_channel_partials(corpus),
         "image_sharpness_partials": build_image_sharpness_partials(
-            fixtures.make_corpus_blurgate(200, 40)
+            corpus_rows("blurgate")
         ),
         # the quality-aware keeper decision needs per-image sharpness
         # over the SAME corpus the committed pair tables cover
@@ -1082,9 +759,7 @@ def build_all() -> dict[str, pd.DataFrame]:
             neardups
         ),
         # constant-border crop geometry over the padded corpus
-        "image_letterbox": build_image_letterbox(
-            fixtures.make_corpus_letterbox(160)
-        ),
+        "image_letterbox": build_image_letterbox(corpus_rows("letterbox")),
     }
 
 

@@ -106,13 +106,6 @@ class CrawlerConfig:
     # 10^8-10^10 scale; building it for a 10^4-row frontier just adds a
     # Python-worker job per round).
     bloom_min_frontier: int = 2_000_000
-    # Shard the URL-seen bloom into this many independent bitsets keyed
-    # by key-hash (operators/seen.py Bloom(shards=)). 0 or 1 = single
-    # bitset. At 10^10 keys a monolithic 12 GB bitset cannot broadcast;
-    # sharding keeps each piece broadcastable and a probe task loads
-    # only the shards its keys hash to. Semantics are identical either
-    # way.
-    bloom_shards: int = 0
     # Canonicalize URL keys (lowercase scheme/host, strip default port,
     # drop fragment, sort query params — functions/urls.py). The
     # reference keys on the raw url string (CrawlDatum.java:239-245), so

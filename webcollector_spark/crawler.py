@@ -357,7 +357,6 @@ class BreadthCrawler:
                 bloom = build_bloom(
                     frontier.select("key"), "key",
                     max(cfg.bloom_capacity, n_frontier), cfg.bloom_fpp,
-                    max(1, cfg.bloom_shards),
                 )
                 fresh = seen_filter(links, frontier.select("key"), "key", bloom)
             else:

@@ -648,8 +648,28 @@ def corpus_with_caption_noise(
         elif i % 11 == 5:
             caps[i] = "  " + caps[i].upper() + "  "
     pdf = pdf.assign(caption=caps)
+    return _with_lossy_dupes(
+        pdf, dupes,
+        lambda i, src: f"alternate view number {i}" if i % 2 else src["caption"],
+    )
+
+
+def corpus_with_neardups(
+    n: int = 200, dupes: int = 40, seed: int = SEED
+) -> pd.DataFrame:
+    """The base corpus plus `dupes` lossy re-encodes of its first images
+    under `dup*` ids — true near-duplicates (same pixels through the
+    lossy codec, so phash hamming is 0-4); independent random images
+    land ~32 bits apart and never collide."""
+    return _with_lossy_dupes(make_corpus(n, seed=seed), dupes)
+
+
+def _with_lossy_dupes(pdf: pd.DataFrame, dupes: int, caption=None) -> pd.DataFrame:
+    """`pdf` plus a lossy re-encode of each of its first `dupes` rows as
+    `dup{i:08d}`, captioned `caption(i, source_row)` (default: the
+    source's caption)."""
     dup_rows = []
-    for i in range(min(dupes, n)):
+    for i in range(min(dupes, len(pdf))):
         src = pdf.iloc[i]
         pixels = ground_truth_pixels(src["image_id"], src["w"], src["h"])
         data = codecs.encode_lossy(pixels)
@@ -660,9 +680,7 @@ def corpus_with_caption_noise(
                 "w": src["w"],
                 "h": src["h"],
                 "fmt": "jpeg",
-                "caption": (
-                    f"alternate view number {i}" if i % 2 else src["caption"]
-                ),
+                "caption": caption(i, src) if caption else src["caption"],
                 "phash": codecs.phash64(codecs.decode(data)),
             }
         )

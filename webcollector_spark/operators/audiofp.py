@@ -26,12 +26,11 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from webcollector_spark.operators.media import (
-    AUDIO_SCHEMA,
     _audio_decoder,
     adpcm_waveform,
     encode_wav,
@@ -168,7 +167,7 @@ def fp_corpus_rows(n: int = 12, dupes: int = 6, seed: int = 49) -> list[dict]:
     """n base WAV clips + `dupes` near-dup variants of the first
     `dupes` clips: gain-scaled to 55% (the loudness-normalized copy)
     and lightly re-noised — the duplicate classes a crawl actually
-    collects. Shared by the Spark fixture and the oracle rebuild."""
+    collects."""
     rng = np.random.default_rng(seed)
     rows = []
 
@@ -199,14 +198,3 @@ def fp_corpus_rows(n: int = 12, dupes: int = 6, seed: int = 49) -> list[dict]:
                 )
             add(f"afpdup{i:06d}", w.astype(np.float32), sr)
     return rows
-
-
-def make_fp_audio_corpus(spark: SparkSession, n: int = 12, dupes: int = 6) -> DataFrame:
-    rows = [
-        (
-            r["audio_id"], r["bytes"], r["sample_rate"],
-            r["n_samples"], r["fmt"],
-        )
-        for r in fp_corpus_rows(n, dupes)
-    ]
-    return spark.createDataFrame(rows, schema=AUDIO_SCHEMA)

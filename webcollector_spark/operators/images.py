@@ -26,14 +26,12 @@ Scale notes:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from webcollector_spark import codecs, fixtures
-from webcollector_spark.schema import CORPUS_SCHEMA
 from webcollector_spark.session import map_rows
 
 DECODE_META_SCHEMA = T.StructType(
@@ -56,156 +54,6 @@ RESIZE_SCHEMA = T.StructType(
         T.StructField("pixel_sum", T.LongType()),
     ]
 )
-
-
-def corpus_df(spark: SparkSession, n: int = 200) -> DataFrame:
-    """Deterministic image+caption corpus as a DataFrame (input_hint
-    shape). In production this is the Iceberg scan; here the fixtures
-    generator, exact same schema."""
-    pdf = fixtures.make_corpus(n)
-    return spark.createDataFrame(pdf, schema=CORPUS_SCHEMA)
-
-
-def corpus_with_neardups(
-    spark: SparkSession, n: int = 200, dupes: int = 40
-) -> DataFrame:
-    """Corpus plus `dupes` lossy re-encodes of its first images under
-    new ids — true near-duplicates (same pixels through the lossy
-    codec, so phash hamming is 0-4) for exercising near-dup detection;
-    independent random images land ~32 bits apart and never collide."""
-    pdf = fixtures.make_corpus(n)
-    dup_rows = []
-    for i in range(min(dupes, n)):
-        src = pdf.iloc[i]
-        pixels = fixtures.ground_truth_pixels(src["image_id"], src["w"], src["h"])
-        data = codecs.encode_lossy(pixels)
-        dup_rows.append(
-            {
-                "image_id": f"dup{i:08d}",
-                "bytes": data,
-                "w": src["w"],
-                "h": src["h"],
-                "fmt": "jpeg",
-                "caption": src["caption"],
-                "phash": codecs.phash64(codecs.decode(data)),
-            }
-        )
-    both = pd.concat([pdf, pd.DataFrame(dup_rows)], ignore_index=True)
-    return spark.createDataFrame(both, schema=CORPUS_SCHEMA)
-
-
-def corpus_jpeg_df(spark: SparkSession, n: int = 120) -> DataFrame:
-    """REAL-baseline-JPEG corpus (fixtures.make_corpus_jpeg) — the
-    decode operators run against genuine DCT+Huffman compressed bytes
-    here, PSNR-gated at 40 dB per input_hint."""
-    pdf = fixtures.make_corpus_jpeg(n)
-    return spark.createDataFrame(pdf, schema=CORPUS_SCHEMA)
-
-
-def corpus_jpeg_subsampled_df(spark: SparkSession, n: int = 120) -> DataFrame:
-    """Chroma-subsampled real-JPEG corpus (4:2:0 with 4:2:2 every third
-    row — the layouts the real web serves) over smooth photograph-like
-    ground truth; fixtures.make_corpus_jpeg_subsampled."""
-    pdf = fixtures.make_corpus_jpeg_subsampled(n)
-    return spark.createDataFrame(pdf, schema=CORPUS_SCHEMA)
-
-
-def corpus_png_interlaced_df(spark: SparkSession, n: int = 100) -> DataFrame:
-    """Adam7-interlaced PNG corpus — lossless, so decode must be
-    bit-exact; fixtures.make_corpus_png_interlaced."""
-    pdf = fixtures.make_corpus_png_interlaced(n)
-    return spark.createDataFrame(pdf, schema=CORPUS_SCHEMA)
-
-
-def corpus_jpeg_progressive_df(spark: SparkSession, n: int = 120) -> DataFrame:
-    """Progressive (SOF2) real-JPEG corpus — multi-scan spectral
-    selection + successive approximation streams across all three
-    chroma layouts; fixtures.make_corpus_jpeg_progressive."""
-    pdf = fixtures.make_corpus_jpeg_progressive(n)
-    return spark.createDataFrame(pdf, schema=CORPUS_SCHEMA)
-
-
-def corpus_jpeg_quality_df(spark: SparkSession, n: int = 120) -> DataFrame:
-    """REAL-JPEG corpus re-encoded across the fixture quality ladder
-    (fixtures.make_corpus_jpeg_quality) — every row's DQT segment
-    carries the IJG scaling fingerprint of jpeg_quality_for(i), the
-    construction-side ground truth for header-only quality triage."""
-    pdf = fixtures.make_corpus_jpeg_quality(n)
-    return spark.createDataFrame(pdf, schema=CORPUS_SCHEMA)
-
-
-def corpus_gif_df(spark: SparkSession, n: int = 100) -> DataFrame:
-    """REAL-GIF87a corpus (fixtures.make_corpus_gif) — palette+LZW
-    compressed bytes; posterized ground truth makes GIF lossless here,
-    so decode must be bit-exact (PSNR = inf)."""
-    pdf = fixtures.make_corpus_gif(n)
-    return spark.createDataFrame(pdf, schema=CORPUS_SCHEMA)
-
-
-def corpus_bmp_df(spark: SparkSession, n: int = 100) -> DataFrame:
-    """REAL-BMP corpus (fixtures.make_corpus_bmp) — 24bpp BI_RGB in
-    both row orders; lossless, so decode must be bit-exact."""
-    pdf = fixtures.make_corpus_bmp(n)
-    return spark.createDataFrame(pdf, schema=CORPUS_SCHEMA)
-
-
-def corpus_ico_df(spark: SparkSession, n: int = 100) -> DataFrame:
-    """REAL-ICO favicon corpus (fixtures.make_corpus_ico) — multi-size
-    directories mixing DIB and embedded-PNG payloads; decode serves
-    the largest entry, bit-exact."""
-    pdf = fixtures.make_corpus_ico(n)
-    return spark.createDataFrame(pdf, schema=CORPUS_SCHEMA)
-
-
-def corpus_tiff_df(spark: SparkSession, n: int = 100) -> DataFrame:
-    """REAL-TIFF corpus (fixtures.make_corpus_tiff) — both byte
-    orders, none/PackBits strips; lossless, decode must be bit-exact."""
-    pdf = fixtures.make_corpus_tiff(n)
-    return spark.createDataFrame(pdf, schema=CORPUS_SCHEMA)
-
-
-def corpus_webp_df(spark: SparkSession, n: int = 100) -> DataFrame:
-    """REAL lossless-WebP corpus (fixtures.make_corpus_webp) — VP8L
-    prefix codes + LZ77 + color cache; decode must be bit-exact."""
-    pdf = fixtures.make_corpus_webp(n)
-    return spark.createDataFrame(pdf, schema=CORPUS_SCHEMA)
-
-
-def corpus_exif_df(spark: SparkSession, n: int = 120) -> DataFrame:
-    """The real-JPEG corpus with APP1/EXIF segments spliced in
-    (fixtures.make_corpus_exif): both byte orders, all 8 orientations,
-    optional description/sub-IFD, and a no-EXIF slice."""
-    pdf = fixtures.make_corpus_exif(n)
-    return spark.createDataFrame(pdf, schema=CORPUS_SCHEMA)
-
-
-def corpus_exif_rotated_df(spark: SparkSession, n: int = 80) -> DataFrame:
-    """Camera-rotated corpus (fixtures.make_corpus_exif_rotated): pixels
-    stored under all 8 orientation tags, upright phash as identity."""
-    pdf = fixtures.make_corpus_exif_rotated(n)
-    return spark.createDataFrame(pdf, schema=CORPUS_SCHEMA)
-
-
-def corpus_mixed_df(spark: SparkSession) -> DataFrame:
-    """All four container formats in one table (PNG + QIMG from the
-    base corpus, real baseline JPEG, real GIF87a) — the input for the
-    header-sniff triage operators, which must dispatch on payload magic
-    rather than trust any declared format column."""
-    return (
-        corpus_df(spark, 200)
-        .unionByName(corpus_jpeg_df(spark, 120))
-        .unionByName(corpus_gif_df(spark, 100))
-    )
-
-
-def caption_corpus_df(
-    spark: SparkSession, n: int = 200, dupes: int = 40
-) -> DataFrame:
-    """Noisy-caption corpus (fixtures.corpus_with_caption_noise) as a
-    DataFrame — the input for the caption-curation operators
-    (operators/captions.py)."""
-    pdf = fixtures.corpus_with_caption_noise(n, dupes)
-    return spark.createDataFrame(pdf, schema=CORPUS_SCHEMA)
 
 
 def decode_verify(corpus: DataFrame, psnr_gate_db: float = 40.0) -> DataFrame:
@@ -701,17 +549,6 @@ SHARPNESS_PARTIALS_SCHEMA = T.StructType(
 )
 
 
-def corpus_blurgate_df(
-    spark: SparkSession, n: int = 200, blurred: int = 40
-) -> DataFrame:
-    """Sharpness-gate corpus (fixtures.make_corpus_blurgate): base
-    corpus + 5x5 box-blurred re-encodes — noise-like texture sits ~250x
-    above the blurred copies in Laplacian variance, so the gate has a
-    real decision boundary."""
-    pdf = fixtures.make_corpus_blurgate(n, blurred)
-    return spark.createDataFrame(pdf, schema=CORPUS_SCHEMA)
-
-
 def sharpness_partials(corpus: DataFrame) -> DataFrame:
     """Per-image integer moment partials of the 4-neighbour Laplacian
     over integer luma (codecs.lap_partials) — exact int64, emitted from
@@ -892,15 +729,6 @@ LETTERBOX_SCHEMA = T.StructType(
         T.StructField("boxed", T.BooleanType()),
     ]
 )
-
-
-def corpus_letterbox_df(spark: SparkSession, n: int = 160) -> DataFrame:
-    """Corpus with deterministic letterbox/pillarbox/frame padding
-    (fixtures.make_corpus_letterbox) — input for the border-crop
-    geometry operator."""
-    return spark.createDataFrame(
-        fixtures.make_corpus_letterbox(n), schema=CORPUS_SCHEMA
-    )
 
 
 def letterbox_geometry(corpus: DataFrame) -> DataFrame:

@@ -35,7 +35,7 @@ import struct
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -240,7 +240,7 @@ def decode_video_apng(video_id: str, data: bytes, n_frames: int, w: int, h: int)
 def apng_corpus_rows(
     n: int = 10, n_frames: int = 6, w: int = 32, h: int = 24
 ) -> list[dict]:
-    """Row dicts for the APNG corpus (the oracle-sharing convention).
+    """Row dicts for the APNG corpus (fmt='apng').
     Frames are the FULL-COLOR smooth AVI pattern — APNG's 24-bit
     advantage over GIF's palette — and every third clip cycles the
     dispose ops so composition, not just happy deltas, is exercised."""
@@ -272,25 +272,11 @@ def apng_corpus_rows(
     return rows
 
 
-def make_apng_video_corpus(spark: SparkSession, n: int = 10) -> DataFrame:
-    """Video table whose payloads are REAL animated PNG (fmt='apng'):
-    24-bit frames, delta sub-rects, mixed dispose ops."""
-    rows = [
-        (
-            r["video_id"], r["bytes"], r["n_frames"], r["fps"],
-            r["w"], r["h"], r["fmt"], r["caption"],
-        )
-        for r in apng_corpus_rows(n)
-    ]
-    return spark.createDataFrame(rows, schema=VIDEO_SCHEMA)
-
-
 def gif_anim_frame(clip: int, i: int, w: int = 32, h: int = 24) -> np.ndarray:
     """Deterministic paletted animation frame: the AVI demo pattern
     posterized to 6 levels/channel (<= 216 unique colors across ALL
     frames, so one global GIF palette always fits) with a moving
-    sprite, giving real sub-rect deltas for the encoder to exploit.
-    Shared by the Spark fixture and the oracle rebuild."""
+    sprite, giving real sub-rect deltas for the encoder to exploit."""
     base = avi_demo_frame(clip, 0, w, h) // 43 * 43  # static backdrop
     x0 = (3 * i + 2 * clip) % max(w - 8, 1)
     y0 = (2 * i + clip) % max(h - 6, 1)
@@ -301,9 +287,7 @@ def gif_anim_frame(clip: int, i: int, w: int = 32, h: int = 24) -> np.ndarray:
 def gif_corpus_rows(
     n: int = 10, n_frames: int = 6, w: int = 32, h: int = 24
 ) -> list[dict]:
-    """Row dicts for the animated-GIF corpus — shared by the Spark
-    fixture and tools/build_multimodal_oracles.py so the committed
-    oracle and the engine see identical container bytes. Every third
+    """Row dicts for the animated-GIF89a corpus (fmt='gif'). Every third
     clip cycles the disposal methods (1 leave, 2 background, 3
     previous) so the composition path, not just the happy delta path,
     is exercised by the registry row."""
@@ -335,25 +319,11 @@ def gif_corpus_rows(
     return rows
 
 
-def make_gif_video_corpus(spark: SparkSession, n: int = 10) -> DataFrame:
-    """Video table whose payloads are REAL animated GIF89a (fmt='gif'):
-    LZW + transparency delta sub-rects + mixed disposal methods."""
-    rows = [
-        (
-            r["video_id"], r["bytes"], r["n_frames"], r["fps"],
-            r["w"], r["h"], r["fmt"], r["caption"],
-        )
-        for r in gif_corpus_rows(n)
-    ]
-    return spark.createDataFrame(rows, schema=VIDEO_SCHEMA)
-
-
 def avi_demo_frame(clip: int, i: int, w: int = 32, h: int = 24) -> np.ndarray:
     """Deterministic smooth frame (moving two-phase gradient, seeded by
     clip and frame index): smooth enough that baseline JPEG holds
     PSNR >= 40 dB, with real inter-frame motion so scene-cut deltas are
-    non-trivial. Shared by the Spark fixture and the single-process
-    oracle rebuild so both sides encode the exact same pixels."""
+    non-trivial."""
     y, x = np.mgrid[0:h, 0:w].astype(np.float64)
     r = 128 + 90 * np.sin(2 * np.pi * (x / w + i * 0.07 + clip * 0.13))
     g = 128 + 90 * np.cos(2 * np.pi * (y / h - i * 0.05 + clip * 0.11))
@@ -364,10 +334,8 @@ def avi_demo_frame(clip: int, i: int, w: int = 32, h: int = 24) -> np.ndarray:
 def avi_corpus_rows(
     n: int = 8, n_frames: int = 6, w: int = 32, h: int = 24
 ) -> list[dict]:
-    """Row dicts for the AVI/MJPG corpus — shared by the Spark fixture
-    and tools/build_multimodal_oracles.py (the adpcm_corpus_rows
-    convention), so the committed oracle and the engine see identical
-    container bytes."""
+    """Row dicts for the AVI corpus (fmt='avi'): REAL RIFF/AVI
+    containers of REAL baseline-JPEG frames."""
     from webcollector_spark import avi
 
     rows = []
@@ -387,20 +355,6 @@ def avi_corpus_rows(
             }
         )
     return rows
-
-
-def make_avi_video_corpus(spark: SparkSession, n: int = 8) -> DataFrame:
-    """Video table whose payloads are REAL RIFF/AVI containers of REAL
-    baseline-JPEG frames (fmt='avi') — compressed video in a standard
-    container, end to end."""
-    rows = [
-        (
-            r["video_id"], r["bytes"], r["n_frames"], r["fps"],
-            r["w"], r["h"], r["fmt"], r["caption"],
-        )
-        for r in avi_corpus_rows(n)
-    ]
-    return spark.createDataFrame(rows, schema=VIDEO_SCHEMA)
 
 
 def encode_wav(wave: np.ndarray, sample_rate: int) -> bytes:
@@ -558,9 +512,8 @@ def decode_audio_flac(audio_id: str, data: bytes, n_samples: int) -> np.ndarray:
 
 
 def flac_corpus_rows(n: int = 16, seed: int = 48) -> list[dict]:
-    """Row dicts for the FLAC corpus — shared by the Spark fixture and
-    the oracle rebuild (the adpcm_corpus_rows convention). The oracle
-    computes features from the PRE-ENCODE PCM, so a driver match
+    """Row dicts for the FLAC corpus (fmt='flac', 16-bit mono). The
+    oracle computes features from the PRE-ENCODE PCM, so a driver match
     proves the decode is bit-exact through the whole Rice/CRC path."""
     from webcollector_spark import flac
 
@@ -582,22 +535,9 @@ def flac_corpus_rows(n: int = 16, seed: int = 48) -> list[dict]:
     return rows
 
 
-def make_flac_audio_corpus(spark: SparkSession, n: int = 16) -> DataFrame:
-    """Audio table whose payloads are REAL FLAC bitstreams (fmt='flac',
-    16-bit mono) — lossless compressed audio, end to end."""
-    rows = [
-        (
-            r["audio_id"], r["bytes"], r["sample_rate"],
-            r["n_samples"], r["fmt"],
-        )
-        for r in flac_corpus_rows(n)
-    ]
-    return spark.createDataFrame(rows, schema=AUDIO_SCHEMA)
-
-
 def ulaw_corpus_rows(n: int = 16, seed: int = 47) -> list[dict]:
-    """Row dicts for the mu-law corpus — shared by the Spark fixture
-    and the oracle rebuild (the adpcm_corpus_rows convention)."""
+    """Row dicts for the G.711 mu-law WAV corpus (fmt='ulaw', 8
+    bits/sample)."""
     rng = np.random.default_rng(seed)
     rows = []
     for i in range(n):
@@ -614,17 +554,6 @@ def ulaw_corpus_rows(n: int = 16, seed: int = 47) -> list[dict]:
             }
         )
     return rows
-
-
-def make_ulaw_audio_corpus(spark: SparkSession, n: int = 16) -> DataFrame:
-    """Audio table whose payloads are REAL G.711 mu-law WAV bytes
-    (fmt='ulaw', 8 bits/sample) — the telephony-grade compressed-audio
-    decode path, end to end."""
-    rows = [
-        (r["audio_id"], r["bytes"], r["sample_rate"], r["n_samples"], r["fmt"])
-        for r in ulaw_corpus_rows(n)
-    ]
-    return spark.createDataFrame(rows, schema=AUDIO_SCHEMA)
 
 
 def decode_audio_adpcm(audio_id: str, data: bytes, n_samples: int) -> np.ndarray:
@@ -703,43 +632,44 @@ def _audio_decoder(fmt: str):
         ) from None
 
 
-def make_video_corpus(spark: SparkSession, n: int = 20, seed: int = 42) -> DataFrame:
-    """Deterministic opaque-payload video table (metadata real, payload
-    a seeded blob the stub decoder interprets)."""
+def video_corpus_rows(n: int = 24, seed: int = 42) -> list[dict]:
+    """Row dicts for the opaque-payload video corpus (fmt='fakevid'):
+    metadata real, payload a seeded blob the stub decoder interprets."""
     rng = np.random.default_rng(seed)
     rows = []
     for i in range(n):
         nf = int(rng.integers(8, 33))
         rows.append(
-            (
-                f"vid{i:06d}",
-                rng.integers(0, 256, size=64, dtype=np.uint8).tobytes(),
-                nf,
-                float(rng.choice([12.0, 24.0, 30.0])),
-                32,
-                24,
-                "fakevid",
-                f"caption of vid{i:06d}",
-            )
+            {
+                "video_id": f"vid{i:06d}",
+                "bytes": rng.integers(0, 256, size=64, dtype=np.uint8).tobytes(),
+                "n_frames": nf,
+                "fps": float(rng.choice([12.0, 24.0, 30.0])),
+                "w": 32,
+                "h": 24,
+                "fmt": "fakevid",
+                "caption": f"caption of vid{i:06d}",
+            }
         )
-    return spark.createDataFrame(rows, schema=VIDEO_SCHEMA)
+    return rows
 
 
-def make_audio_corpus(spark: SparkSession, n: int = 20, seed: int = 43) -> DataFrame:
+def audio_corpus_rows(n: int = 24, seed: int = 43) -> list[dict]:
+    """Row dicts for the opaque-payload audio corpus (fmt='fakeaud')."""
     rng = np.random.default_rng(seed)
     rows = []
     for i in range(n):
         sr = int(rng.choice([8000, 16000]))
         rows.append(
-            (
-                f"aud{i:06d}",
-                rng.integers(0, 256, size=64, dtype=np.uint8).tobytes(),
-                sr,
-                int(rng.integers(sr // 2, sr * 2)),
-                "fakeaud",
-            )
+            {
+                "audio_id": f"aud{i:06d}",
+                "bytes": rng.integers(0, 256, size=64, dtype=np.uint8).tobytes(),
+                "sample_rate": sr,
+                "n_samples": int(rng.integers(sr // 2, sr * 2)),
+                "fmt": "fakeaud",
+            }
         )
-    return spark.createDataFrame(rows, schema=AUDIO_SCHEMA)
+    return rows
 
 
 def adpcm_waveform(i: int, sr: int, ns: int) -> np.ndarray:
@@ -755,10 +685,8 @@ def adpcm_waveform(i: int, sr: int, ns: int) -> np.ndarray:
 
 
 def adpcm_corpus_rows(n: int = 16, seed: int = 46) -> list[dict]:
-    """Row dicts for the IMA-ADPCM corpus — shared by the Spark fixture
-    below and the single-process oracle rebuild
-    (tools/build_multimodal_oracles.py), so both sides encode the exact
-    same bytes."""
+    """Row dicts for the IMA-ADPCM WAV corpus (fmt='adpcm', 4
+    bits/sample)."""
     from webcollector_spark import adpcm as _adpcm
 
     rng = np.random.default_rng(seed)
@@ -777,17 +705,6 @@ def adpcm_corpus_rows(n: int = 16, seed: int = 46) -> list[dict]:
             }
         )
     return rows
-
-
-def make_adpcm_audio_corpus(spark: SparkSession, n: int = 16) -> DataFrame:
-    """Audio table whose payloads are REAL compressed IMA-ADPCM bytes
-    (fmt='adpcm', 4 bits/sample) — the compressed-audio decode path,
-    end to end."""
-    rows = [
-        (r["audio_id"], r["bytes"], r["sample_rate"], r["n_samples"], r["fmt"])
-        for r in adpcm_corpus_rows(n)
-    ]
-    return spark.createDataFrame(rows, schema=AUDIO_SCHEMA)
 
 
 def sample_frames(videos: DataFrame, every_n: int = 4) -> DataFrame:

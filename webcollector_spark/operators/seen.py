@@ -15,9 +15,11 @@ definitely hasn't seen skip the shuffle entirely; only bloom-positives
 (true hits + fpp false positives) go through the exact anti-join.
 
 Scale note (10^10 keys): one bitset at 1% fpp is ~12 GB — too big to
-broadcast. `shards=S` splits the filter into S independent bitsets
-sharded by key hash: the build routes keys to their shard's partition
-after one repartition on the shard id, and the probe ships each shard
+broadcast. So the filter splits into S independent bitsets sharded by
+key hash, S the fewest that keep each within `_MAX_SHARD_BYTES` (a
+default 1M-key filter is ~1.2 MB: one shard; `shards=` overrides it):
+the build routes keys to their shard's partition after one
+repartition on the shard id, and the probe ships each shard
 as its own broadcast, so a task deserializes only the shards its keys
 hash to. Correctness is identical because a key's shard is a pure
 function of the key (verified equal to the exact anti-join in
@@ -99,13 +101,24 @@ def _contains(keys: pd.Series, m: int, k: int, shards: int, shard_bits) -> np.nd
     return out
 
 
+_MAX_SHARD_BYTES = 64 << 20  # largest bitset one broadcast ships
+
+
+def _bits_for(capacity: int, fpp: float) -> int:
+    return max(64, int(-capacity * math.log(fpp) / (math.log(2) ** 2)))
+
+
 class Bloom:
     """`shards` bitsets of `m` bits each, laid end to end in `bits`; a
-    key sets/probes k bits of its shard. `shards=1` is the plain bloom."""
+    key sets/probes k bits of its shard. `shards=1` is the plain bloom;
+    `shards=None` takes the fewest that keep a bitset within
+    `_MAX_SHARD_BYTES`."""
 
-    def __init__(self, capacity: int, fpp: float = 0.01, shards: int = 1):
+    def __init__(self, capacity: int, fpp: float = 0.01, shards: int | None = None):
+        if shards is None:
+            shards = -(-_bits_for(capacity, fpp) // (8 * _MAX_SHARD_BYTES))
         per_shard = -(-capacity // shards)
-        m = max(64, int(-per_shard * math.log(fpp) / (math.log(2) ** 2)))
+        m = _bits_for(per_shard, fpp)
         self.m = (m + 63) // 64 * 64
         self.k = max(1, round(self.m / max(1, per_shard) * math.log(2)))
         self.shards = shards
@@ -129,13 +142,13 @@ def build_bloom(
     key_col: str = "key",
     capacity: int = 1_000_000,
     fpp: float = 0.01,
-    shards: int = 1,
+    shards: int | None = None,
 ) -> Bloom:
     """Distributed bloom build: per-partition partial bitsets, OR-merged
     per shard on the driver. At shards > 1 the keys first shuffle once
     to their shard's partition, so a task folds one or a few shards."""
     out = Bloom(capacity, fpp, shards)
-    m, k = out.m, out.k
+    m, k, shards = out.m, out.k, out.shards
     keys = keys_df.select(key_col)
     if shards > 1:
 

@@ -33,6 +33,7 @@ deterministic and cluster-wide.
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import io
 import os
@@ -298,7 +299,9 @@ def _commit_shards(
       through a sha256-teeing handle and `os.replace`d into place once
       complete, so a killed export never leaves a truncated shard under
       the final name (needs a rename-capable FS; on object stores
-      deploy the existence check as a conditional PUT).
+      deploy the existence check as a conditional PUT); once a shard is
+      committed or skipped, the `.inprogress.*` files that failed or
+      losing attempts left for it are removed.
 
     The container is the caller's: `open_container(fh, shard)` starts
     one shard's container on the hashing handle `fh` and returns
@@ -338,12 +341,17 @@ def _commit_shards(
                         h.update(chunk)
                 done.append((st["shard"], st["rows"], os.path.getsize(final),
                              h.hexdigest(), final, False))
-                return
-            st["close"]()
-            fh.close()
-            os.replace(st["tmp"], final)
-            done.append((st["shard"], st["rows"], fh.n, fh.sha.hexdigest(),
-                         final, True))
+            else:
+                st["close"]()
+                fh.close()
+                os.replace(st["tmp"], final)
+                done.append((st["shard"], st["rows"], fh.n, fh.sha.hexdigest(),
+                             final, True))
+            for stale in glob.glob(f"{glob.escape(final)}.inprogress.*"):
+                try:
+                    os.remove(stale)
+                except FileNotFoundError:
+                    pass  # another attempt removed or renamed it first
 
         try:
             for pdf in batches:

@@ -327,6 +327,9 @@ def _warc_files(spark, out_dir: str) -> DataFrame:
     )
 
 
+_INDEX_SLICE = 1 << 16  # compressed bytes fed to the inflater at a time
+
+
 def index_warc(spark, out_dir: str) -> DataFrame:
     """Per-record random-access index over an export: (path, shard,
     offset, length, record_type, record_id, url) where offset/length
@@ -337,14 +340,19 @@ def index_warc(spark, out_dir: str) -> DataFrame:
     member, payload bytes never retained."""
 
     def members(r):
-        data, pos = bytes(r["content"]), 0
+        data, pos = memoryview(r["content"]), 0
         while pos < len(data):
             # inflate exactly ONE gzip member: decompressobj(31) stops at
-            # the member trailer and hands back the remainder in
-            # unused_data — gzip.GzipFile would run through every member
-            d = zlib.decompressobj(31)
-            headers, _, _ = _parse_record(d.decompress(data[pos:]), 0, r["path"])
-            length = len(data) - pos - len(d.unused_data)
+            # the member trailer and hands back the rest of what it was
+            # fed in unused_data — gzip.GzipFile would run through every
+            # member. Fed in bounded slices, a member costs its own bytes
+            # plus at most one slice, not a copy of the rest of the file.
+            d, out, fed = zlib.decompressobj(31), [], pos
+            while not d.eof and fed < len(data):
+                out.append(d.decompress(data[fed : fed + _INDEX_SLICE]))
+                fed = min(fed + _INDEX_SLICE, len(data))
+            headers, _, _ = _parse_record(b"".join(out), 0, r["path"])
+            length = fed - pos - len(d.unused_data)
             yield {
                 "path": r["path"],
                 "offset": pos,

@@ -22,6 +22,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from webcollector_spark.corpora import corpus
 from webcollector_spark.functions.regex_rule import rule_column
 
 Q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1863,76 +1864,76 @@ def _oracle_parquet(name: str, cols: str) -> str:
     return f"SELECT {cols} FROM read_parquet('{_ORACLE_DIR / name}.parquet')"
 
 
-@register(
-    "image_decode_verify",
-    _oracle_parquet(
-        "image_decode_verify", "image_id, w, h, fmt, psnr_db, psnr_ok, phash_match"
-    ),
-)
-def q_image_decode_verify(spark, sf):
-    """Decode every corpus image in Arrow batches; verify PSNR>=40dB
-    (exact for png) + phash equality per row (input_hint invariant)."""
+# Registry rows that differ only in their corpus: one table per shape,
+# entry name -> corpus name in webcollector_spark/corpora.py (whose
+# comments say what each corpus exercises). An entry's oracle is
+# oracles/<entry>.parquet, which tools/build_multimodal_oracles.py
+# rebuilds from these same tables.
+
+# Decode every image in Arrow batches; verify per row PSNR >= 40 dB vs
+# the recomputed ground truth (exact for lossless formats) + phash
+# equality (input_hint invariant). Real bitstreams decode from the bytes
+# (reference anchor: payloads are opaque bytes + typed metadata,
+# model/Page.java:323-330).
+DECODE_VERIFY = {
+    "image_decode_verify": "base",
+    "image_decode_verify_jpeg": "jpeg",
+    "image_decode_verify_jpeg420": "jpeg420",
+    "image_decode_verify_jpegprog": "jpegprog",
+    "image_decode_verify_pngi": "pngi",
+    "image_decode_verify_gif": "gif",
+    "image_decode_verify_bmp": "bmp",
+    "image_decode_verify_ico": "ico",
+    "image_decode_verify_tiff": "tiff",
+    "image_decode_verify_webp": "webp",
+}
+# Per-clip duration / rms / zero crossings. The compressed rows' oracles
+# do not run the engine's decoder: ADPCM and mu-law decode with the
+# stdlib's independent audioop, FLAC from the pre-encode PCM, so a match
+# checks the codec and not just the mapInPandas plumbing.
+AUDIO_FEATURES = {
+    "audio_features": "audio",
+    "audio_features_adpcm": "adpcm",
+    "audio_features_ulaw": "ulaw",
+    "audio_features_flac": "flac",
+}
+# Frame-sample fan-out (one row in, n_frames / every_n rows out) through
+# each container's decoder; codec fidelity vs pre-encode frames is pinned
+# in tests/test_avi.py, test_gif_anim.py and test_apng.py.
+SAMPLE_FRAMES = {  # entry -> (corpus, keep every n-th frame)
+    "video_frame_sample": ("video", 4),
+    "video_frames_avi": ("avi", 2),
+    "video_frames_gif": ("gif_anim", 2),
+    "video_frames_apng": ("apng", 2),
+}
+
+
+def _decode_verify(name, spark, sf):
     from webcollector_spark.operators import images
 
-    return images.decode_verify(images.corpus_df(spark))
+    return images.decode_verify(corpus(spark, name))
 
 
-@register(
-    "image_decode_verify_jpeg",
-    _oracle_parquet(
-        "image_decode_verify_jpeg",
-        "image_id, w, h, fmt, psnr_db, psnr_ok, phash_match",
-    ),
-)
-def q_image_decode_verify_jpeg(spark, sf):
-    """Same verify dataflow over REAL baseline-JPEG bytes
-    (webcollector_spark.jpeg: DCT + canonical Huffman + restart
-    markers, decoded from the bitstream) — retires the last
-    stub-only multimodal claim (VERDICT r3 item 5). Reference anchor:
-    Page content bytes are real compressed payloads
-    (model/Page.java:323-330)."""
-    from webcollector_spark.operators import images
+def _audio_features(name, spark, sf):
+    from webcollector_spark.operators import media
 
-    return images.decode_verify(images.corpus_jpeg_df(spark))
+    return media.audio_features(corpus(spark, name))
 
 
-@register(
-    "image_decode_verify_jpeg420",
-    _oracle_parquet(
-        "image_decode_verify_jpeg420",
-        "image_id, w, h, fmt, psnr_db, psnr_ok, phash_match",
-    ),
-)
-def q_image_decode_verify_jpeg420(spark, sf):
-    """Verify dataflow over CHROMA-SUBSAMPLED real JPEG (4:2:0, the
-    layout the real web overwhelmingly serves, plus 4:2:2 rows):
-    MCU-interleaved entropy decode, box-down/replicate-up chroma, over
-    smooth photograph-like ground truth so the 40 dB gate is meaningful
-    under chroma loss. Bitstream-layer exactness for these layouts is
-    separately pinned bit-for-bit in test_jpeg.py."""
-    from webcollector_spark.operators import images
+def _sample_frames(name_every_n, spark, sf):
+    from webcollector_spark.operators import media
 
-    return images.decode_verify(images.corpus_jpeg_subsampled_df(spark))
+    name, every_n = name_every_n
+    return media.sample_frames(corpus(spark, name), every_n=every_n)
 
 
-@register(
-    "image_decode_verify_jpegprog",
-    _oracle_parquet(
-        "image_decode_verify_jpegprog",
-        "image_id, w, h, fmt, psnr_db, psnr_ok, phash_match",
-    ),
-)
-def q_image_decode_verify_jpegprog(spark, sf):
-    """Verify dataflow over PROGRESSIVE JPEG (SOF2 — roughly one web
-    JPEG in ten): multi-scan spectral selection + successive
-    approximation with EOB-run symbols and per-scan optimal Huffman
-    tables, decoded by webcollector_spark/jpeg_progressive.py and
-    auto-dispatched from the shared decode seam. Transport
-    losslessness vs the baseline bitstream is pinned bit-exactly in
-    test_jpeg_progressive.py."""
-    from webcollector_spark.operators import images
-
-    return images.decode_verify(images.corpus_jpeg_progressive_df(spark))
+for _table, _plan, _cols in (
+    (DECODE_VERIFY, _decode_verify, "image_id, w, h, fmt, psnr_db, psnr_ok, phash_match"),
+    (AUDIO_FEATURES, _audio_features, "audio_id, duration_sec, rms, zero_crossings"),
+    (SAMPLE_FRAMES, _sample_frames, "video_id, frame_idx, ts_sec, frame_mean, frame_hash"),
+):
+    for _name, _corpus in _table.items():
+        register(_name, _oracle_parquet(_name, _cols))(functools.partial(_plan, _corpus))
 
 
 @register(
@@ -1950,138 +1951,11 @@ def q_image_progressive_preview(spark, sf):
     phash — the crawl-scale point of progressive JPEG: dedup/triage
     BEFORE paying the full transfer. Baseline rows report
     is_progressive=false with null metrics."""
-    from webcollector_spark.operators import images
     from webcollector_spark.operators.sniff import progressive_preview
 
     return progressive_preview(
-        images.corpus_jpeg_progressive_df(spark).unionByName(
-            images.corpus_jpeg_df(spark)
-        )
+        corpus(spark, "jpegprog").unionByName(corpus(spark, "jpeg"))
     )
-
-
-@register(
-    "image_decode_verify_pngi",
-    _oracle_parquet(
-        "image_decode_verify_pngi",
-        "image_id, w, h, fmt, psnr_db, psnr_ok, phash_match",
-    ),
-)
-def q_image_decode_verify_pngi(spark, sf):
-    """Verify dataflow over Adam7-INTERLACED PNG (codecs.decode_png
-    interlace method 1 — the lossless analog of progressive JPEG:
-    seven sub-images, each its own filter context, first pass 1/64 of
-    the pixels). Lossless, so every row must be bit-exact (PSNR inf)
-    with phash identity."""
-    from webcollector_spark.operators import images
-
-    return images.decode_verify(images.corpus_png_interlaced_df(spark))
-
-
-@register(
-    "image_decode_verify_gif",
-    _oracle_parquet(
-        "image_decode_verify_gif",
-        "image_id, w, h, fmt, psnr_db, psnr_ok, phash_match",
-    ),
-)
-def q_image_decode_verify_gif(spark, sf):
-    """Same verify dataflow over REAL GIF87a bytes
-    (webcollector_spark.gif: palette + variable-width LZW, decoded from
-    the bitstream — KwKwK, width growth, 4096-CLEAR all exercised).
-    Ground truth is posterized to 216 colors so GIF is LOSSLESS here:
-    every row must decode bit-exact (psnr_db = 1e9 cap, psnr_ok, exact
-    phash). Third real compressed image bitstream after PNG's DEFLATE
-    and JPEG's DCT+Huffman. Reference anchor: payloads are opaque bytes
-    + typed metadata (model/Page.java:323-330)."""
-    from webcollector_spark.operators import images
-
-    return images.decode_verify(images.corpus_gif_df(spark))
-
-
-@register(
-    "image_decode_verify_bmp",
-    _oracle_parquet(
-        "image_decode_verify_bmp",
-        "image_id, w, h, fmt, psnr_db, psnr_ok, phash_match",
-    ),
-)
-def q_image_decode_verify_bmp(spark, sf):
-    """Same verify dataflow over REAL Windows BMP bytes
-    (codecs.encode_bmp/decode_bmp: 24bpp BI_RGB, 4-byte row padding,
-    bottom-up AND top-down row orders both present in the corpus, the
-    odd 33-px width forcing non-zero padding). BMP is lossless, so
-    every row must decode bit-exact (psnr_db = 1e9 cap, psnr_ok, exact
-    phash). Reference anchor: payloads are opaque bytes + typed
-    metadata (model/Page.java:323-330)."""
-    from webcollector_spark.operators import images
-
-    return images.decode_verify(images.corpus_bmp_df(spark))
-
-
-@register(
-    "image_decode_verify_ico",
-    _oracle_parquet(
-        "image_decode_verify_ico",
-        "image_id, w, h, fmt, psnr_db, psnr_ok, phash_match",
-    ),
-)
-def q_image_decode_verify_ico(spark, sf):
-    """Same verify dataflow over REAL Windows ICO favicons — the
-    payload every crawler meets at /favicon.ico. Multi-size
-    directories mix the classic doubled-height DIB form with embedded
-    PNG (codecs.encode_ico/decode_ico); decode serves the largest
-    entry, and both payload forms are lossless, so every row must
-    decode bit-exact (psnr_db = 1e9 cap, psnr_ok, exact phash).
-    Reference anchor: payloads are opaque bytes + typed metadata
-    (model/Page.java:323-330)."""
-    from webcollector_spark.operators import images
-
-    return images.decode_verify(images.corpus_ico_df(spark))
-
-
-@register(
-    "image_decode_verify_tiff",
-    _oracle_parquet(
-        "image_decode_verify_tiff",
-        "image_id, w, h, fmt, psnr_db, psnr_ok, phash_match",
-    ),
-)
-def q_image_decode_verify_tiff(spark, sf):
-    """Same verify dataflow over REAL baseline-RGB TIFF bytes
-    (webcollector_spark.tiff — the IFD reader shared with the EXIF
-    layer): II and MM byte orders, multi-strip rasters with a short
-    final strip, and a Compression cycle of 32773 (PackBits, the
-    spec's own RLE), 1 (none) and 5 (LZW — MSB-first with EarlyChange,
-    the opposite byte order of GIF's LZW — under the horizontal-
-    differencing Predictor 2 real LZW TIFFs use). Lossless, so every
-    row must decode bit-exact (psnr_db = 1e9 cap, psnr_ok, exact
-    phash). Reference anchor: payloads are opaque bytes + typed
-    metadata (model/Page.java:323-330)."""
-    from webcollector_spark.operators import images
-
-    return images.decode_verify(images.corpus_tiff_df(spark))
-
-
-@register(
-    "image_decode_verify_webp",
-    _oracle_parquet(
-        "image_decode_verify_webp",
-        "image_id, w, h, fmt, psnr_db, psnr_ok, phash_match",
-    ),
-)
-def q_image_decode_verify_webp(spark, sf):
-    """Same verify dataflow over REAL lossless WebP (VP8L) bytes
-    (webcollector_spark.webp: canonical prefix codes in both spec
-    forms, LZ77 backward references over pixels, the multiplicative-
-    hash color cache, subtract-green — all decoded from the bitstream).
-    The corpus cycles cache sizes and the transform so every entropy
-    path appears. Lossless, so every row must decode bit-exact
-    (psnr_db = 1e9 cap, psnr_ok, exact phash). Reference anchor:
-    payloads are opaque bytes + typed metadata (model/Page.java:323-330)."""
-    from webcollector_spark.operators import images
-
-    return images.decode_verify(images.corpus_webp_df(spark))
 
 
 @register(
@@ -2091,7 +1965,7 @@ def q_image_decode_verify_webp(spark, sf):
 def q_image_resize(spark, sf):
     from webcollector_spark.operators import images
 
-    return images.resize_meanpool(images.corpus_df(spark))
+    return images.resize_meanpool(corpus(spark, "base"))
 
 
 @register(
@@ -2101,7 +1975,7 @@ def q_image_resize(spark, sf):
 def q_phash_neardup_exact(spark, sf):
     from webcollector_spark.operators import images
 
-    return images.phash_neardup_pairs(images.corpus_with_neardups(spark))
+    return images.phash_neardup_pairs(corpus(spark, "neardups"))
 
 
 @register(
@@ -2113,7 +1987,7 @@ def q_phash_neardup_exact(spark, sf):
 def q_phash_neardup_banded(spark, sf):
     from webcollector_spark.operators import images
 
-    return images.phash_neardup_banded(images.corpus_with_neardups(spark))
+    return images.phash_neardup_banded(corpus(spark, "neardups"))
 
 
 @register(
@@ -2139,7 +2013,7 @@ def q_phash_neardup_blocked(spark, sf):
     from webcollector_spark.operators import images
 
     return images.phash_neardup_blocked(
-        images.caption_corpus_df(spark), max_hamming=4
+        corpus(spark, "captions"), max_hamming=4
     )
 
 
@@ -2156,9 +2030,9 @@ def q_image_meta_sniff(spark, sf):
     decode triage stage (operators/sniff.py): the binary column is
     sliced to a 4 KB prefix JVM-side before Arrow, so curation
     decisions never pay for full payload transfer or decode."""
-    from webcollector_spark.operators import images, sniff
+    from webcollector_spark.operators import sniff
 
-    return sniff.sniff_meta(images.corpus_mixed_df(spark))
+    return sniff.sniff_meta(corpus(spark, "mixed"))
 
 
 @register(
@@ -2181,9 +2055,9 @@ def q_image_compression_stats(spark, sf):
     """Per-container storage-cost profile (bytes per RGB8 pixel) over
     the sniffed metadata: sniff map stage -> ONE hash-aggregate with
     map-side combine; the division happens once per group at the end."""
-    from webcollector_spark.operators import images, sniff
+    from webcollector_spark.operators import sniff
 
-    return sniff.compression_stats(sniff.sniff_meta(images.corpus_mixed_df(spark)))
+    return sniff.compression_stats(sniff.sniff_meta(corpus(spark, "mixed")))
 
 
 @register(
@@ -2201,7 +2075,7 @@ def q_dhash_neardup_blocked(spark, sf):
     from webcollector_spark.operators import images
 
     return images.dhash_neardup_blocked(
-        images.corpus_with_neardups(spark), max_hamming=4
+        corpus(spark, "neardups"), max_hamming=4
     )
 
 
@@ -2249,7 +2123,7 @@ def q_image_neardup_keepers(spark, sf):
     from webcollector_spark.operators import images
 
     return images.image_neardup_keepers(
-        images.corpus_with_neardups(spark), max_hamming=4
+        corpus(spark, "neardups"), max_hamming=4
     )
 
 
@@ -2281,7 +2155,7 @@ def q_image_channel_stats(spark, sf):
     partitioning because the partials are integers."""
     from webcollector_spark.operators import images
 
-    return images.channel_stats(images.corpus_df(spark))
+    return images.channel_stats(corpus(spark, "base"))
 
 
 @register(
@@ -2300,92 +2174,7 @@ def q_image_letterbox(spark, sf):
     tools/build_multimodal_oracles.py)."""
     from webcollector_spark.operators import images
 
-    return images.letterbox_geometry(images.corpus_letterbox_df(spark))
-
-
-@register(
-    "video_frame_sample",
-    _oracle_parquet(
-        "video_frame_sample", "video_id, frame_idx, ts_sec, frame_mean, frame_hash"
-    ),
-)
-def q_video_frame_sample(spark, sf):
-    """Frame-sample fan-out over the opaque-payload video table (stub
-    decode kernel, real Spark plumbing — operators/media.py)."""
-    from webcollector_spark.operators import media
-
-    return media.sample_frames(media.make_video_corpus(spark, 24), every_n=4)
-
-
-@register(
-    "audio_features",
-    _oracle_parquet(
-        "audio_features", "audio_id, duration_sec, rms, zero_crossings"
-    ),
-)
-def q_audio_features(spark, sf):
-    from webcollector_spark.operators import media
-
-    return media.audio_features(media.make_audio_corpus(spark, 24))
-
-
-@register(
-    "audio_features_adpcm",
-    _oracle_parquet(
-        "audio_features_adpcm", "audio_id, duration_sec, rms, zero_crossings"
-    ),
-)
-def q_audio_features_adpcm(spark, sf):
-    """Same feature dataflow over REAL compressed IMA-ADPCM bytes
-    (webcollector_spark.adpcm: 4-bit block-coded, vectorized across
-    blocks). The committed oracle decodes with the STDLIB's independent
-    DVI/IMA implementation (audioop), so this row checks the codec
-    bitstream itself, not just the mapInPandas plumbing. Reference
-    anchor: payloads are opaque bytes + typed metadata
-    (model/Page.java:323-330)."""
-    from webcollector_spark.operators import media
-
-    return media.audio_features(media.make_adpcm_audio_corpus(spark, 16))
-
-
-@register(
-    "audio_features_ulaw",
-    _oracle_parquet(
-        "audio_features_ulaw", "audio_id, duration_sec, rms, zero_crossings"
-    ),
-)
-def q_audio_features_ulaw(spark, sf):
-    """Same feature dataflow over REAL G.711 mu-law WAV bytes (fmt code
-    7, 8 bits/sample — the telephony/legacy-web compressed-audio
-    format; operators/media.py ulaw_decode is the Sun g711.c 14-bit
-    variant, bit-exact vs the stdlib both directions). The committed
-    oracle decodes with the STDLIB's independent expansion
-    (audioop.ulaw2lin), so this row checks the codec's inverse table
-    itself, not just the mapInPandas plumbing — the adpcm convention."""
-    from webcollector_spark.operators import media
-
-    return media.audio_features(media.make_ulaw_audio_corpus(spark, 16))
-
-
-@register(
-    "audio_features_flac",
-    _oracle_parquet(
-        "audio_features_flac", "audio_id, duration_sec, rms, zero_crossings"
-    ),
-)
-def q_audio_features_flac(spark, sf):
-    """Same feature dataflow over REAL FLAC bitstreams — the dominant
-    lossless-audio format on the web (webcollector_spark.flac: fixed
-    predictors order 0-4, partitioned Rice coding, CRC-8/CRC-16/MD5
-    verified on decode). The committed oracle computes features from
-    the PRE-ENCODE PCM and never runs the decoder, so a driver match
-    proves the decode is bit-exact through the whole Rice/CRC path —
-    a stronger check than re-running the codec on both sides.
-    Reference anchor: Page content bytes are real compressed payloads
-    (model/Page.java:323-330)."""
-    from webcollector_spark.operators import media
-
-    return media.audio_features(media.make_flac_audio_corpus(spark, 16))
+    return images.letterbox_geometry(corpus(spark, "letterbox"))
 
 
 @register(
@@ -2400,7 +2189,7 @@ def q_audio_fingerprint(spark, sf):
     Arrow batches; committed straight-line oracle."""
     from webcollector_spark.operators import audiofp
 
-    return audiofp.audio_fingerprints(audiofp.make_fp_audio_corpus(spark))
+    return audiofp.audio_fingerprints(corpus(spark, "audio_fp"))
 
 
 @register(
@@ -2425,7 +2214,7 @@ def q_audio_neardup_pairs(spark, sf):
     originals (tests/test_audiofp.py pins recall)."""
     from webcollector_spark.operators import audiofp
 
-    fps = audiofp.audio_fingerprints(audiofp.make_fp_audio_corpus(spark))
+    fps = audiofp.audio_fingerprints(corpus(spark, "audio_fp"))
     return audiofp.audio_neardup_banded(fps, max_hamming=8)
 
 
@@ -2436,72 +2225,8 @@ def q_audio_neardup_pairs(spark, sf):
 def q_video_scene_cuts(spark, sf):
     from webcollector_spark.operators import media
 
-    vids = media.make_video_corpus(spark, 24)
+    vids = corpus(spark, "video")
     return media.scene_cuts(media.sample_frames(vids, every_n=2), threshold=1.0)
-
-
-@register(
-    "video_frames_avi",
-    _oracle_parquet(
-        "video_frames_avi", "video_id, frame_idx, ts_sec, frame_mean, frame_hash"
-    ),
-)
-def q_video_frames_avi(spark, sf):
-    """Same frame-sample dataflow over REAL compressed video in a REAL
-    standard container: RIFF/AVI ('MJPG') wrapping baseline-JPEG frames
-    (webcollector_spark.avi walks the RIFF tree — avih dims + frame
-    count cross-checked against the row's typed metadata, '00dc' chunk
-    sizes define frame boundaries, webcollector_spark.jpeg decodes the
-    bitstream). Codec fidelity vs pre-encode ground truth (PSNR >=
-    40 dB per frame) is pinned in tests/test_avi.py; this row pins the
-    distributed container-walk dataflow. Reference anchor: Page content
-    bytes are real compressed payloads (model/Page.java:323-330)."""
-    from webcollector_spark.operators import media
-
-    return media.sample_frames(media.make_avi_video_corpus(spark, 8), every_n=2)
-
-
-@register(
-    "video_frames_gif",
-    _oracle_parquet(
-        "video_frames_gif", "video_id, frame_idx, ts_sec, frame_mean, frame_hash"
-    ),
-)
-def q_video_frames_gif(spark, sf):
-    """Same frame-sample dataflow over REAL animated GIF89a — the
-    web's most common animation payload (webcollector_spark.gif:
-    variable-width LZW rasters composed onto the logical-screen canvas
-    through the GIF rendering model: transparency-delta sub-rects,
-    mixed disposal methods 1/2/3, frame count cross-checked against
-    the row's typed metadata). Codec fidelity (bit-exact composition
-    vs pre-encode frames, interlace both directions) is pinned in
-    tests/test_gif_anim.py; this row pins the distributed dataflow.
-    Reference anchor: Page content bytes are real compressed payloads
-    (model/Page.java:323-330)."""
-    from webcollector_spark.operators import media
-
-    return media.sample_frames(media.make_gif_video_corpus(spark, 10), every_n=2)
-
-
-@register(
-    "video_frames_apng",
-    _oracle_parquet(
-        "video_frames_apng", "video_id, frame_idx, ts_sec, frame_mean, frame_hash"
-    ),
-)
-def q_video_frames_apng(spark, sf):
-    """Same frame-sample dataflow over REAL animated PNG — the other
-    animation payload the modern web serves, carrying the 24-bit color
-    GIF's palette cannot (webcollector_spark.apng: acTL/fcTL/fdAT,
-    delta sub-rect frames, dispose none/background/previous composed
-    through the APNG rendering model, scanline filters inverted by the
-    shared PNG machinery). Codec fidelity (bit-exact composition) is
-    pinned in tests/test_apng.py; this row pins the distributed
-    dataflow. Reference anchor: Page content bytes are real compressed
-    payloads (model/Page.java:323-330)."""
-    from webcollector_spark.operators import media
-
-    return media.sample_frames(media.make_apng_video_corpus(spark, 10), every_n=2)
 
 
 # ---------------------------------------------------------------------------
@@ -4141,6 +3866,41 @@ def q_chunk_dedup_exact(spark, sf):
 # per-doc ordered window (running max of span ends) + one map-side
 # aggregate. Two shuffles total (by h, by doc_id), nothing all-pairs,
 # nothing driver-side.
+def _dup_windows(docs: DataFrame, k: int) -> tuple[DataFrame, DataFrame]:
+    """docs(doc_id, text) -> (doc_id, toks, n_tokens), plus the (doc_id,
+    pos) of every k-token window whose md5 occurs more than once in the
+    corpus: the first pass both substring-dedup queries share — explode
+    the windows, then one hash-partitioned count-over window (the
+    exploded side is never joined or broadcast)."""
+    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), F.lit(0))
+    base = docs.select(
+        "doc_id", toks.alias("toks"), F.size(toks).alias("n_tokens")
+    )
+    occ = (
+        base.filter(F.col("n_tokens") >= k)
+        .select(
+            "doc_id",
+            "toks",
+            F.explode(
+                F.sequence(F.lit(0), F.col("n_tokens") - k)
+            ).alias("pos"),
+        )
+        .select(
+            "doc_id",
+            "pos",
+            F.md5(
+                F.array_join(F.slice("toks", F.col("pos") + 1, k), " ")
+            ).alias("h"),
+        )
+    )
+    dup = (
+        occ.withColumn("c", F.count("*").over(Window.partitionBy("h")))
+        .filter(F.col("c") > 1)
+        .select("doc_id", "pos")
+    )
+    return base, dup
+
+
 @register(
     "substring_span_dedup",
     r"""
@@ -4182,34 +3942,7 @@ def q_chunk_dedup_exact(spark, sf):
 )
 def q_substring_span_dedup(spark, sf):
     k = 8
-    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), F.lit(0))
-    docs = _t(spark, sf, "documents").select(
-        "doc_id", toks.alias("toks"), F.size(toks).alias("n_tokens")
-    )
-    occ = (
-        docs.filter(F.col("n_tokens") >= k)
-        .select(
-            "doc_id",
-            "toks",
-            F.explode(
-                F.sequence(F.lit(0), F.col("n_tokens") - k)
-            ).alias("pos"),
-        )
-        .select(
-            "doc_id",
-            "pos",
-            F.md5(
-                F.array_join(F.slice("toks", F.col("pos") + 1, k), " ")
-            ).alias("h"),
-        )
-    )
-    dup = (
-        occ.withColumn(
-            "c", F.count("*").over(Window.partitionBy("h"))
-        )
-        .filter(F.col("c") > 1)
-        .select("doc_id", "pos")
-    )
+    docs, dup = _dup_windows(_t(spark, sf, "documents"), k)
     prior_end = F.max(F.col("pos") + k).over(
         Window.partitionBy("doc_id")
         .orderBy("pos")
@@ -4265,32 +3998,7 @@ _EXSUB_L = 50
 def exact_substr_spans(docs: DataFrame, L: int) -> DataFrame:
     """docs(doc_id, text) -> (doc_id, span_start, span_len): maximal
     intervals of positions covered by duplicated L-token windows."""
-    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), F.lit(0))
-    base = docs.select(
-        "doc_id", toks.alias("toks"), F.size(toks).alias("n_tokens")
-    )
-    occ = (
-        base.filter(F.col("n_tokens") >= L)
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.lit(0), F.col("n_tokens") - L)
-            ).alias("pos"),
-            "toks",
-        )
-        .select(
-            "doc_id",
-            "pos",
-            F.md5(
-                F.array_join(F.slice("toks", F.col("pos") + 1, L), " ")
-            ).alias("h"),
-        )
-    )
-    dup = (
-        occ.withColumn("c", F.count("*").over(Window.partitionBy("h")))
-        .filter(F.col("c") > 1)
-        .select("doc_id", "pos")
-    )
+    _, dup = _dup_windows(docs, L)
     prior_end = F.max(F.col("pos") + L).over(
         Window.partitionBy("doc_id")
         .orderBy("pos")
@@ -4374,12 +4082,6 @@ _CAPTION_NORM_SQL = (
 )
 
 
-def _caption_corpus(spark):
-    from webcollector_spark.operators import images
-
-    return images.caption_corpus_df(spark)
-
-
 @register(
     "caption_dedup",
     f"""
@@ -4394,7 +4096,7 @@ def _caption_corpus(spark):
 def q_caption_dedup(spark, sf):
     from webcollector_spark.operators import captions
 
-    return captions.caption_dedup(_caption_corpus(spark))
+    return captions.caption_dedup(corpus(spark, "captions"))
 
 
 @register(
@@ -4411,7 +4113,7 @@ def q_caption_dedup(spark, sf):
 def q_caption_spam(spark, sf):
     from webcollector_spark.operators import captions
 
-    return captions.caption_spam(_caption_corpus(spark), min_phashes=3)
+    return captions.caption_spam(corpus(spark, "captions"), min_phashes=3)
 
 
 @register(
@@ -4432,7 +4134,7 @@ def q_caption_spam(spark, sf):
 def q_caption_conflict(spark, sf):
     from webcollector_spark.operators import captions
 
-    return captions.caption_conflict(_caption_corpus(spark), max_hamming=4)
+    return captions.caption_conflict(corpus(spark, "captions"), max_hamming=4)
 
 
 @register(
@@ -4461,7 +4163,7 @@ def q_caption_conflict(spark, sf):
 def q_caption_quality(spark, sf):
     from webcollector_spark.operators import captions
 
-    return captions.caption_quality(_caption_corpus(spark))
+    return captions.caption_quality(corpus(spark, "captions"))
 
 
 # Per-image conflict FLAG (round-4 registration of the Zipfian-safe
@@ -4494,7 +4196,7 @@ def q_caption_quality(spark, sf):
 def q_caption_conflict_flags(spark, sf):
     from webcollector_spark.operators import captions
 
-    return captions.caption_conflict_flags(_caption_corpus(spark), max_hamming=4)
+    return captions.caption_conflict_flags(corpus(spark, "captions"), max_hamming=4)
 
 
 @register(
@@ -4531,7 +4233,7 @@ def q_imagetext_filter(spark, sf):
     (operators/captions.py imagetext_filter)."""
     from webcollector_spark.operators import captions
 
-    return captions.imagetext_filter(_caption_corpus(spark))
+    return captions.imagetext_filter(corpus(spark, "captions"))
 
 
 def _aspect_bucket_oracle() -> str:
@@ -4581,7 +4283,7 @@ def q_aspect_bucket_assign(spark, sf):
     aspect_bucket_assign)."""
     from webcollector_spark.operators import captions
 
-    return captions.aspect_bucket_assign(_caption_corpus(spark))
+    return captions.aspect_bucket_assign(corpus(spark, "captions"))
 
 
 # SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup over
@@ -5023,7 +4725,7 @@ def q_image_sharpness(spark, sf):
     from webcollector_spark.operators import images
 
     return images.image_sharpness(
-        images.corpus_blurgate_df(spark), threshold=10_000.0
+        corpus(spark, "blurgate"), threshold=10_000.0
     )
 
 
@@ -5074,7 +4776,7 @@ def q_image_features_fused(spark, sf):
     oracle-checkable columns."""
     from webcollector_spark.operators import images
 
-    return images.features_fused(images.corpus_df(spark, 200)).drop("dhash")
+    return images.features_fused(corpus(spark, "base")).drop("dhash")
 
 
 @register(
@@ -5136,7 +4838,7 @@ def q_image_neardup_best_keepers(spark, sf):
     from webcollector_spark.operators import images
 
     return images.image_neardup_best_keepers(
-        images.corpus_with_neardups(spark), max_hamming=4
+        corpus(spark, "neardups"), max_hamming=4
     )
 
 
@@ -5485,10 +5187,9 @@ def q_image_exif_meta(spark, sf):
     """Per-image EXIF tags over the APP1-spliced real-JPEG corpus; the
     binary column is sliced to the APP1-bounded 64 KiB prefix JVM-side,
     so pixel data never crosses the Arrow boundary."""
-    from webcollector_spark.operators import images
     from webcollector_spark.operators.sniff import exif_meta
 
-    return exif_meta(images.corpus_exif_df(spark))
+    return exif_meta(corpus(spark, "exif"))
 
 
 @register(
@@ -5506,13 +5207,10 @@ def q_image_jpeg_quality(spark, sf):
     pipeline gates on BEFORE spending a decode. Runs over all four
     container formats plus the quality-ladder re-encode corpus; the
     oracle restates each row's encode-time quality from construction."""
-    from webcollector_spark.operators import images
     from webcollector_spark.operators.sniff import jpeg_quality
 
     return jpeg_quality(
-        images.corpus_mixed_df(spark).unionByName(
-            images.corpus_jpeg_quality_df(spark)
-        )
+        corpus(spark, "mixed").unionByName(corpus(spark, "jpeg_quality"))
     )
 
 
@@ -5533,7 +5231,7 @@ def q_image_exif_upright(spark, sf):
     ~32 phash bits (operators/images.py exif_upright_decode)."""
     from webcollector_spark.operators import images
 
-    return images.exif_upright_decode(images.corpus_exif_rotated_df(spark))
+    return images.exif_upright_decode(corpus(spark, "exif_rotated"))
 
 
 # ---------------------------------------------------------------------------
