@@ -1,4 +1,6 @@
 import struct
+import tracemalloc
+import zlib
 
 import numpy as np
 import pytest
@@ -697,3 +699,54 @@ def encode_bmp_rle8(
         40, w, h, 1, 8, 1, len(body), 2835, 2835, 256, 0,
     )
     return out + bytes(pal_quads) + bytes(body)
+
+
+# -- inflate bound (decompression bombs) ----------------------------------
+
+
+def _zeros_stream(n: int) -> bytes:
+    """zlib stream of `n` zero bytes, built without holding them."""
+    c = zlib.compressobj(9)
+    chunk = bytes(1 << 22)
+    parts = [c.compress(chunk) for _ in range(n // len(chunk))]
+    return b"".join(parts) + c.flush()
+
+
+def _png_1x1(idat: bytes, w: int = 1, h: int = 1) -> bytes:
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    return (
+        codecs._PNG_SIG + codecs._chunk(b"IHDR", ihdr)
+        + codecs._chunk(b"IDAT", idat) + codecs._chunk(b"IEND", b"")
+    )
+
+
+def _qimg(payload: bytes, w: int = 1, h: int = 1) -> bytes:
+    return b"QIMG" + struct.pack(">IIB", w, h, 4) + payload
+
+
+def test_png_and_qimg_bombs_fail_within_a_few_mb():
+    # 400 MB of zeros behind headers that declare a 1x1 image
+    bomb = _zeros_stream(100 << 22)
+    assert len(bomb) < 500_000
+    for payload in (_png_1x1(bomb), _qimg(bomb)):
+        tracemalloc.start()
+        try:
+            with pytest.raises(ValueError):
+                codecs.decode(payload)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 8 << 20, peak
+
+
+def test_raw_size_over_the_bound_is_refused_before_inflating(monkeypatch):
+    # 32768 x 32768 RGB is 3.2 GB raw, over codecs._MAX_RAW_BYTES
+    def no_inflate(*a, **k):
+        raise AssertionError("inflated a stream whose header is over the bound")
+
+    small = zlib.compress(bytes(16))
+    monkeypatch.setattr(zlib, "decompressobj", no_inflate)
+    monkeypatch.setattr(zlib, "decompress", no_inflate)
+    for payload in (_png_1x1(small, 1 << 15, 1 << 15), _qimg(small, 1 << 15, 1 << 15)):
+        with pytest.raises(ValueError, match="exceeds"):
+            codecs.decode(payload)

@@ -390,6 +390,65 @@ def test_subsampled_corpus_through_decode_verify(spark):
     assert all(r["psnr_ok"] and r["phash_match"] for r in rows)
 
 
+# -- fill bytes and TEM (T.81 B.1.1.2 / B.1.1.3) ---------------------------
+
+
+def _with_fill_and_tem(data: bytes) -> bytes:
+    """`data` (one clean encoder output) with 0xFF fill bytes and a TEM
+    marker ahead of every segment after SOI, EOI included. Both are
+    legal anywhere a marker may appear, so every reader must see through
+    them. The walk is written out here, independent of jpeg.py's."""
+    out, pos = bytearray(data[:2]), 2
+    while pos < len(data):
+        marker = data[pos + 1]
+        end = pos + 2
+        if marker != 0xD9:
+            end += int.from_bytes(data[pos + 2 : pos + 4], "big")
+        if marker == 0xDA:  # entropy data runs to the next non-RST marker
+            while not (
+                data[end] == 0xFF and data[end + 1] not in (0x00, *range(0xD0, 0xD8))
+            ):
+                end += 1
+        out += b"\xff\xff\x01\xff\xff" + data[pos:end]
+        pos = end
+    return bytes(out)
+
+
+def _fill_cases():
+    from webcollector_spark.exif import build_exif_app1, insert_app1
+    from webcollector_spark.jpeg_progressive import encode_progressive
+
+    px = _noise(40, 24, seed=11)
+    app1 = build_exif_app1(make="Cam", orientation=6, pixel_x=40, pixel_y=24)
+    return {
+        "baseline": jpeg.encode_baseline(px, quality=75, restart_interval=2),
+        "420": jpeg.encode_baseline(px, quality=90, subsampling="420"),
+        "progressive": encode_progressive(px, quality=85),
+        "exif": insert_app1(jpeg.encode_baseline(px, quality=80), app1),
+    }
+
+
+@pytest.mark.parametrize("kind", ["baseline", "420", "progressive", "exif"])
+def test_fill_bytes_and_tem_before_segments(kind):
+    from webcollector_spark.exif import parse_exif
+
+    clean = _fill_cases()[kind]
+    filled = _with_fill_and_tem(clean)
+    assert len(filled) > len(clean)
+    px, end = jpeg.decode_baseline_at(filled, 0)
+    assert np.array_equal(px, jpeg.decode_baseline(clean))
+    assert end == len(filled)
+    assert codecs.sniff_header(filled) == codecs.sniff_header(clean)
+    dqt, dqt_clean = jpeg.parse_dqt(filled), jpeg.parse_dqt(clean)
+    assert dqt.keys() == dqt_clean.keys() and len(dqt) == 2
+    assert all(np.array_equal(dqt[t], dqt_clean[t]) for t in dqt)
+    assert jpeg.sof_marker(filled) == jpeg.sof_marker(clean)
+    assert jpeg.header_quality(filled) == jpeg.header_quality(clean)
+    assert parse_exif(filled) == parse_exif(clean)
+    if kind == "exif":
+        assert parse_exif(filled)["orientation"] == 6
+
+
 # -- fixture encoder (MJPEG stream) --------------------------------------
 
 

@@ -6,9 +6,13 @@ has none; these pin the invariants that matter at scale:
 * CrawlDatum positional-JSON codec round-trip
 * url_to_path total function (never raises, host-prefixed)
 * bloom filter: no false negatives, fpp within budget
+* codecs.decode fails only as ValueError/NotImplementedError on corrupt
+  payloads, and the header-only readers never raise
 """
 
 from __future__ import annotations
+
+from functools import lru_cache
 
 import pandas as pd
 from hypothesis import given, settings
@@ -272,3 +276,61 @@ def test_url_template_collapses_every_digit(u):
     t = url_template(u)
     assert not re.search(r"[0-9]", re.sub(r"\{[DH]\}", "", t))
     assert url_template("http://h.test" + t) == t
+
+
+# -- decode failure contract --------------------------------------------
+
+
+@lru_cache(maxsize=1)
+def _payloads() -> dict[str, bytes]:
+    """One small payload per container codecs.decode dispatches on."""
+    import numpy as np
+
+    from webcollector_spark import codecs, exif, fixtures, jpeg
+    from webcollector_spark.jpeg_progressive import encode_progressive
+
+    px = np.random.default_rng(3).integers(0, 256, (24, 40, 3), dtype=np.uint8)
+    app1 = exif.build_exif_app1(make="Cam", orientation=6, pixel_x=40, pixel_y=24)
+    out = {
+        "png": codecs.encode_png(px),
+        "png_adam7": codecs.encode_png(px, interlace=True, filters=True),
+        "qimg": codecs.encode_lossy(px),
+        "bmp": codecs.encode_bmp(px),
+        "jpeg": jpeg.encode_baseline(px, restart_interval=2),
+        "jpeg420": jpeg.encode_baseline(px, subsampling="420"),
+        "progressive": encode_progressive(px),
+        "exif": exif.insert_app1(jpeg.encode_baseline(px), app1),
+    }
+    for name in ("gif", "ico", "tiff", "webp"):
+        rows = getattr(fixtures, f"make_corpus_{name}")(2)
+        out[name] = bytes(rows["bytes"][1])
+    return out
+
+
+@given(st.deferred(lambda: st.sampled_from(sorted(_payloads()))), st.data())
+@settings(max_examples=400, deadline=None)
+def test_corrupt_payloads_fail_as_valueerror(name, data):
+    """Over truncated and byte-flipped payloads of every container,
+    codecs.decode raises only ValueError (or NotImplementedError for a
+    valid feature outside the supported subset), and the header-only
+    readers never raise."""
+    from webcollector_spark import codecs, jpeg
+    from webcollector_spark.exif import parse_exif
+
+    buf = bytearray(_payloads()[name])
+    if data.draw(st.booleans(), label="truncate"):
+        buf = buf[: data.draw(st.integers(0, len(buf) - 1), label="cut")]
+    else:
+        for _ in range(data.draw(st.integers(1, 3), label="flips")):
+            at = data.draw(st.integers(0, len(buf) - 1), label="at")
+            buf[at] = data.draw(st.integers(0, 255), label="byte")
+    payload = bytes(buf)
+    try:
+        codecs.decode(payload)
+    except (ValueError, NotImplementedError):
+        pass
+    codecs.sniff_header(payload)
+    jpeg.parse_dqt(payload)
+    jpeg.sof_marker(payload)
+    jpeg.header_quality(payload)
+    parse_exif(payload)

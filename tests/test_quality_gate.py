@@ -137,3 +137,57 @@ def test_gate_keeps_links_routing(spark, tmp_path):
     assert "http://h000.test/b" in got
     assert got["http://h000.test/a"]["phash"] is None  # pair dropped
     assert got["http://h000.test/b"]["phash"] is not None  # pair kept
+
+
+def test_truncated_images_fail_the_pair_not_the_round(spark, tmp_path):
+    """A page whose data-URI image is cut short is fetched like any
+    other: SUCCESS, caption and out-links kept, phash null. The cut
+    payloads trip zlib, struct, index and table lookups inside the
+    decoders; codecs.decode turns each into ValueError."""
+    base = fixtures.make_corpus(24)  # PNG with a slice of lossy QIMG
+    rows = [
+        base[base["fmt"] == "png"].iloc[0].to_dict(),
+        base[base["fmt"] != "png"].iloc[0].to_dict(),  # QIMG
+        fixtures.make_corpus_bmp(1).iloc[0].to_dict(),
+        fixtures.make_corpus_jpeg(1).iloc[0].to_dict(),
+        fixtures.make_corpus_jpeg_progressive(1).iloc[0].to_dict(),
+    ]
+    assert bytes(rows[1]["bytes"])[:4] == b"QIMG"
+    for r, cut in zip(rows, [40, 30, 60, 0.5, 0.5]):
+        data = bytes(r["bytes"])
+        r["bytes"] = data[: cut if cut >= 1 else int(len(data) * cut)]
+    corpus = pd.DataFrame(rows)
+    graph = pd.DataFrame(
+        [
+            {
+                "url": f"http://h000.test/cut/{i}",
+                "host": "h000.test",
+                "image_id": r["image_id"],
+                "out_links": [f"http://h001.test/next/{i}"],
+                "http_code": 200,
+                "location": None,
+            }
+            for i, r in enumerate(rows)
+        ]
+    )
+    hist = str(tmp_path / "hist_cut")
+    req = SyntheticRequester(graph.to_dict("records"), corpus.to_dict("records"))
+    crawler = RamCrawler(
+        spark,
+        req,
+        config=CrawlerConfig(
+            top_n=0, bloom_capacity=1_000, fetched_history_path=hist
+        ),
+    )
+    crawler.add_seed(graph["url"].tolist())
+    metrics = crawler.start(1)
+    assert metrics[0].fetched == len(rows)
+    got = {r["url"]: r for r in spark.read.parquet(hist).collect()}
+    assert set(got) == set(graph["url"])
+    for i, r in enumerate(rows):
+        row = got[f"http://h000.test/cut/{i}"]
+        assert row["status"] == 5, r["image_id"]  # STATUS_DB_SUCCESS
+        assert row["phash"] is None
+        assert row["caption"] == r["caption"] and row["caption"]
+    keys = {r["url"] for r in crawler.frontier().select("url").collect()}
+    assert {f"http://h001.test/next/{i}" for i in range(len(rows))} <= keys

@@ -36,6 +36,7 @@ from webcollector_spark.codecs import (
     _PNG_SIG,
     _chunk,
     _filter_scanlines,
+    _inflate_exact,
     _unfilter,
 )
 
@@ -131,10 +132,8 @@ def decode_apng(data: bytes) -> list[tuple[int, int, np.ndarray]]:
         nonlocal canvas, pending, data_parts
         if pending is None:
             return
-        raw = zlib.decompress(b"".join(data_parts))
         rw, rh = pending["w"], pending["h"]
-        if len(raw) != rh * (1 + rw * 3):
-            raise ValueError("APNG frame data size mismatch")
+        raw = _inflate_exact(b"".join(data_parts), rh * (1 + rw * 3))
         arr = np.frombuffer(raw, np.uint8).reshape(rh, 1 + rw * 3)
         rect = _unfilter(arr, rh, rw, 3).reshape(rh, rw, 3)
         x, y = pending["x"], pending["y"]

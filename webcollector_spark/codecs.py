@@ -29,9 +29,32 @@ import zlib
 
 import numpy as np
 
+from webcollector_spark import jpeg
+
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _QIMG_MAGIC = b"QIMG"
 _QIMG_Q = 4  # quantization step; max reconstruction error Q/2
+
+
+#: The largest raw (inflated) image a PNG/QIMG header may declare.
+#: 2^29 bytes holds a 16-bit RGBA 8K frame (7680x4320x8 = 265 MB) with
+#: room to spare; a header past it is a decompression bomb or corrupt,
+#: and is refused before a byte is inflated.
+_MAX_RAW_BYTES = 1 << 29
+
+
+def _inflate_exact(buf: bytes, n: int) -> bytes:
+    """Inflate a zlib stream that must yield exactly the `n` bytes its
+    header implies. Inflates at most n + 1 bytes, so a bomb behind a
+    small header costs what the header declares; ValueError when the
+    output is longer or shorter than `n` or the stream does not end."""
+    if n > _MAX_RAW_BYTES:
+        raise ValueError(f"declared raw size {n} exceeds {_MAX_RAW_BYTES} bytes")
+    d = zlib.decompressobj()
+    out = d.decompress(buf, n + 1)
+    if len(out) != n or not d.eof:
+        raise ValueError(f"inflated size mismatch: the header implies {n} bytes")
+    return out
 
 
 def _chunk(tag: bytes, payload: bytes) -> bytes:
@@ -255,25 +278,27 @@ def decode_png(data: bytes) -> np.ndarray:
         vals = (bits * weights).sum(axis=2).astype(np.uint8)
         return vals[:, :pw, None]
 
-    stream = np.frombuffer(zlib.decompress(bytes(idat)), dtype=np.uint8)
     if not interlace:
+        raw = _inflate_exact(bytes(idat), h * (1 + rowbytes(w)))
+        stream = np.frombuffer(raw, dtype=np.uint8)
         samples = region(stream.reshape(h, 1 + rowbytes(w)), h, w)
     else:
         # Adam7 (spec §8.2): seven independently-filtered sub-images in
         # one zlib stream; empty passes contribute nothing
+        grids = [
+            (x0, y0, dx, dy, (h - y0 + dy - 1) // dy, (w - x0 + dx - 1) // dx)
+            for x0, y0, dx, dy in _ADAM7
+        ]
+        grids = [g for g in grids if g[4] and g[5]]
+        size = sum(ph * (1 + rowbytes(pw)) for *_, ph, pw in grids)
+        stream = np.frombuffer(_inflate_exact(bytes(idat), size), dtype=np.uint8)
         samples = np.zeros((h, w, nch), dtype=np.uint8)
         p = 0
-        for x0, y0, dx, dy in _ADAM7:
-            ph = (h - y0 + dy - 1) // dy
-            pw = (w - x0 + dx - 1) // dx
-            if ph == 0 or pw == 0:
-                continue
+        for x0, y0, dx, dy, ph, pw in grids:
             n = ph * (1 + rowbytes(pw))
             raw = stream[p : p + n].reshape(ph, 1 + rowbytes(pw))
             p += n
             samples[y0::dy, x0::dx] = region(raw, ph, pw)
-        if p != len(stream):
-            raise ValueError("interlaced PNG stream length mismatch")
 
     if ctype == 2:
         return samples
@@ -305,7 +330,8 @@ def encode_lossy(pixels: np.ndarray) -> bytes:
 
 def decode_qimg(data: bytes) -> np.ndarray:
     w, h, q = struct.unpack(">IIB", data[4:13])
-    arr = np.frombuffer(zlib.decompress(data[13:]), dtype=np.uint8).reshape(h, w, 3)
+    raw = _inflate_exact(data[13:], w * h * 3)
+    arr = np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3)
     return np.minimum(arr.astype(np.uint16) * q + q // 2, 255).astype(np.uint8)
 
 
@@ -528,15 +554,29 @@ def decode_ico(data: bytes) -> list[np.ndarray]:
     return images
 
 
+#: what a container parser raises on bytes it cannot read, besides
+#: ValueError: a short struct unpack or zlib stream, an index or table
+#: lookup past the data, an overflowing size field
+_PARSE_ERRORS = (ArithmeticError, LookupError, StopIteration, struct.error, zlib.error)
+
+
 def decode(data: bytes) -> np.ndarray:
-    """Dispatch on magic bytes."""
+    """Dispatch on magic bytes: the one decode entry. A payload its
+    parser cannot read raises ValueError, whatever the parser tripped
+    on; NotImplementedError still marks a valid feature outside the
+    supported subset."""
+    try:
+        return _decode(data)
+    except _PARSE_ERRORS as e:
+        raise ValueError(f"corrupt image payload ({type(e).__name__}: {e})") from e
+
+
+def _decode(data: bytes) -> np.ndarray:
     if data[:8] == _PNG_SIG:
         return decode_png(data)
     if data[:4] == _QIMG_MAGIC:
         return decode_qimg(data)
     if data[:2] == b"\xff\xd8":
-        from webcollector_spark import jpeg
-
         return jpeg.decode_baseline(data)
     if data[:4] == b"GIF8":
         from webcollector_spark import gif
@@ -629,30 +669,12 @@ def sniff_header(data: bytes) -> tuple[str, int | None, int | None]:
             return "ico", best[0], best[1]
         return "ico", None, None
     if data[:2] == b"\xff\xd8":
-        # marker walk: skip fill bytes and non-SOF segments until a
-        # start-of-frame carries the dimensions (ITU T.81 B.2.2)
-        pos = 2
-        while pos + 4 <= len(data):
-            if data[pos] != 0xFF:
-                break
-            while pos < len(data) and data[pos] == 0xFF:
-                pos += 1  # fill bytes
-            if pos >= len(data):
-                break
-            marker = data[pos]
-            pos += 1
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                continue  # standalone markers, no length field
-            if pos + 2 > len(data):
-                break
-            (seglen,) = struct.unpack(">H", data[pos : pos + 2])
-            is_sof = 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC)
-            if is_sof and pos + 7 <= len(data):
-                h, w = struct.unpack(">HH", data[pos + 3 : pos + 7])
+        # marker walk to the first start-of-frame, which carries the
+        # dimensions (ITU T.81 B.2.2)
+        for marker, payload, _ in jpeg._header_segments(data):
+            if marker in jpeg._SOF and len(payload) >= 5:
+                h, w = struct.unpack(">HH", payload[1:5])
                 return "jpeg", int(w), int(h)
-            if marker == 0xDA:  # SOS: entropy data follows, SOF was missed
-                break
-            pos += seglen
         return "jpeg", None, None
     if data[:2] == b"P6":
         # ascii header: "P6" <ws> width <ws> height <ws> maxval

@@ -9,6 +9,8 @@ metadata extraction the input_hint's (bytes, w, h, fmt, caption) schema
 implies, done header-only: EXIF lives in the first JPEG APP1 segment, so
 the Spark operator slices a bounded prefix JVM-side (the APP1 length
 field caps the segment at 64 KiB) and never ships pixel data to Python.
+The segment search is jpeg.py's header walk, the same one the decoders
+use, so fill bytes and standalone markers before APP1 are read alike.
 
 Format notes (TIFF 6.0 §2, JEITA CP-3451):
 * APP1 = FF E1 <len u16 incl itself> "Exif\\0\\0" <TIFF stream>;
@@ -28,6 +30,8 @@ Both byte orders are written and parsed — real corpora contain both
 from __future__ import annotations
 
 import struct
+
+from webcollector_spark.jpeg import _header_segments
 
 TAG_MAKE = 0x010F
 TAG_MODEL = 0x0110
@@ -205,24 +209,12 @@ def parse_exif(data: bytes) -> dict:
     """Extract EXIF fields from a JPEG prefix. Never raises: damaged or
     absent EXIF yields has_exif=False (triage, not validation)."""
     try:
-        if data[:2] != b"\xff\xd8":
-            return dict(_EMPTY)
-        pos = 2
-        tiff = None
-        # walk segments until APP1/Exif, SOS, or prefix exhaustion
-        while pos + 4 <= len(data):
-            if data[pos] != 0xFF:
-                return dict(_EMPTY)
-            marker = data[pos + 1]
-            if marker == 0xDA:  # SOS — no EXIF before image data: done
-                return dict(_EMPTY)
-            (seg_len,) = struct.unpack_from(">H", data, pos + 2)
-            body = data[pos + 4 : pos + 2 + seg_len]
-            if marker == 0xE1 and body[:6] == b"Exif\x00\x00":
-                tiff = body[6:]
+        # EXIF is the first APP1 segment that opens with "Exif\0\0"
+        for marker, payload, _ in _header_segments(data):
+            if marker == 0xE1 and payload[:6] == b"Exif\x00\x00":
+                tiff = payload[6:]
                 break
-            pos += 2 + seg_len
-        if tiff is None:
+        else:
             return dict(_EMPTY)
 
         order = tiff[:2]

@@ -8,7 +8,11 @@ web overwhelmingly serves: libjpeg's default, every phone camera) —
 plus grayscale, implemented faithfully at the bitstream level:
 
 * markers: SOI / DQT / SOF0 / DHT / DRI / SOS / RSTn / EOI, with
-  0xFF00 byte stuffing in the entropy-coded segment;
+  0xFF00 byte stuffing in the entropy-coded segment. One segment
+  reader (`_segment`: fill bytes, TEM/RSTn, cut payloads), one
+  frame-header parse (`_Frame`) and one unstuffing (`_entropy`) serve
+  both decoders and every header-only reader (parse_dqt, sof_marker,
+  header_quality here, codecs.sniff_header, exif.parse_exif);
 * entropy coding: canonical Huffman per Annex C (tables read from the
   DHT segments, NOT assumed), DC prediction per component, AC
   run-length with ZRL and EOB, restart-interval predictor resets;
@@ -19,10 +23,11 @@ plus grayscale, implemented faithfully at the bitstream level:
   products over all blocks at once, quantization tables from DQT;
 * color: JFIF RGB <-> YCbCr.
 
-Progressive routes to jpeg_progressive; arithmetic, 12-bit, and sampling-factor-3 streams raise
-ValueError — decode quality over silent wrong answers. The default
-quality (98) keeps round-trip PSNR above the input_hint's 40 dB gate
-even on full-range NOISE images, the worst case (measured 43.4 dB;
+Progressive routes to jpeg_progressive; arithmetic, 12-bit, and
+sampling-factor-3 streams raise ValueError — decode quality over
+silent wrong answers. The default quality (98) keeps round-trip PSNR
+above the input_hint's 40 dB gate even on full-range NOISE images,
+the worst case (measured 43.4 dB;
 the dominant error is Y+chroma quantization amplified ~2x through the
 YCbCr->RGB transform, so 95 lands at only ~36 dB there — structured
 images sit 50+ dB at either setting).
@@ -421,6 +426,199 @@ def encode_baseline(
     return bytes(out)
 
 
+# -- container grammar (B.1.1-B.2.4): the one marker walk --------------------
+
+_SOI, _EOI, _SOS, _DQT, _DHT, _DRI = 0xD8, 0xD9, 0xDA, 0xDB, 0xC4, 0xDD
+#: start-of-frame markers (B.1.1.3): C0-CF less DHT, JPG and DAC
+_SOF = frozenset(range(0xC0, 0xD0)) - {_DHT, 0xC8, 0xCC}
+#: markers without a length field: TEM, RST0-7, SOI, EOI (B.1.1.3)
+_NO_LENGTH = frozenset((0x01, *range(0xD0, 0xD8), _SOI, _EOI))
+
+
+def _segment(data: bytes, pos: int) -> tuple[int, int, int] | None:
+    """The marker segment at `pos` as (marker, payload start, end).
+    Fill bytes before the marker are skipped (B.1.1.2), and the markers
+    without a length field have an empty payload. `end` is where the
+    length field says the segment ends: past len(data) when the payload
+    is cut short, which the caller reports instead of guessing. None
+    when the bytes end before the marker or its length field; raises
+    ValueError when no marker starts at `pos`."""
+    n = len(data)
+    if pos + 2 > n:
+        return None
+    if data[pos] != 0xFF:
+        raise ValueError(f"marker expected at {pos}")
+    while data[pos + 1] == 0xFF:
+        pos += 1
+        if pos + 2 > n:
+            return None
+    marker = data[pos + 1]
+    if marker == 0x00:
+        raise ValueError(f"marker expected at {pos}")
+    if marker in _NO_LENGTH:
+        return marker, pos + 2, pos + 2
+    if pos + 4 > n:
+        return None
+    length = (data[pos + 2] << 8) | data[pos + 3]
+    if length < 2:  # the length counts its own two bytes
+        raise ValueError(f"bad segment length at {pos}")
+    return marker, pos + 4, pos + 2 + length
+
+
+def _header_segments(data: bytes, start: int = 0):
+    """(marker, payload, whole) for each segment between the SOI at
+    `start` and the first SOS or EOI — the header-only readers' walk.
+    `whole` is False for a payload the bytes end inside, which is the
+    last one yielded. Stops quietly at a non-marker: never raises."""
+    if data[start : start + 2] != b"\xff\xd8":
+        return
+    pos = start + 2
+    while True:
+        try:
+            seg = _segment(data, pos)
+        except ValueError:
+            return
+        if seg is None or seg[0] in (_SOS, _EOI):
+            return
+        marker, p, pos = seg
+        yield marker, data[p:pos], pos <= len(data)
+
+
+def _dqt(payload: bytes):
+    """DQT payload -> (table id, 64 entries in zigzag order) per table
+    (B.2.4.1); ValueError on a 16-bit table or a short one, after the
+    tables before it."""
+    for p in range(0, len(payload), 65):
+        if payload[p] >> 4:
+            raise ValueError("only 8-bit quant tables supported")
+        if p + 65 > len(payload):
+            raise ValueError("truncated DQT table")
+        yield payload[p] & 0xF, np.frombuffer(
+            payload[p + 1 : p + 65], dtype=np.uint8
+        ).astype(np.int64)
+
+
+class _Frame:
+    """What the segments ahead of a scan declare: quant tables (zigzag
+    order), Huffman specs, the SOFn frame and its components, and the
+    restart interval. Both decoders fold segments in with `read`."""
+
+    def __init__(self) -> None:
+        self.qtabs: dict[int, np.ndarray] = {}
+        self.huff: dict[tuple[int, int], bytes] = {}
+        self.comps: list[dict] = []
+        self.sof: int | None = None
+        self.h = self.w = 0
+        self.restart_interval = 0
+
+    def read(
+        self, data: bytes, pos: int, strict: bool = True
+    ) -> tuple[int | None, int, bytes]:
+        """Fold the segments from `pos` up to the next SOS or EOI.
+        Returns (SOS, entropy start, scan header), (EOI, offset past
+        it, b""), or (None, offset of the cut segment, b"") when the
+        bytes end first; a cut payload raises ValueError when
+        `strict`. Frames other than SOF0/SOF2 raise ValueError."""
+        while True:
+            seg = _segment(data, pos)
+            if seg is None:
+                return None, pos, b""
+            marker, p, end = seg
+            if end > len(data):
+                if strict:
+                    raise ValueError("truncated segment")
+                return None, pos, b""
+            payload, pos = data[p:end], end
+            if marker in (_SOS, _EOI):
+                return marker, pos, payload
+            if marker == _DQT:
+                self.qtabs.update(_dqt(payload))
+            elif marker == _DHT:
+                p = 0
+                while p < len(payload):
+                    n = sum(payload[p + 1 : p + 17])
+                    if p + 17 + n > len(payload):
+                        raise ValueError("truncated DHT table")
+                    key = (payload[p] >> 4, payload[p] & 0xF)
+                    self.huff[key] = bytes(payload[p + 1 : p + 17 + n])
+                    p += 17 + n
+            elif marker in _SOF:
+                self._sof(marker, payload)
+            elif marker == _DRI:
+                if len(payload) != 2:
+                    raise ValueError("bad DRI segment")
+                self.restart_interval = (payload[0] << 8) | payload[1]
+            # APPn / COM / TEM / RSTn: skipped
+
+    def _sof(self, marker: int, p: bytes) -> None:
+        if marker not in (0xC0, 0xC2):
+            raise ValueError(
+                "only baseline (SOF0) and progressive (SOF2) supported"
+            )
+        if len(p) < 6 or len(p) != 6 + 3 * p[5]:
+            raise ValueError("bad SOF segment")
+        _, self.h, self.w, nc = struct.unpack(">BHHB", p[:6])
+        self.comps = []
+        for ci in range(nc):
+            cid, samp, tq = p[6 + 3 * ci : 9 + 3 * ci]
+            hi, vi = samp >> 4, samp & 0xF
+            if hi not in (1, 2, 4) or vi not in (1, 2, 4):
+                # 1/2/4 cover 4:4:4 / 4:2:2 / 4:4:0 / 4:2:0 / 4:1:1;
+                # factor 3 would need fractional chroma alignment the
+                # replication upsampler cannot do
+                raise ValueError(f"unsupported sampling factors {hi}x{vi}")
+            self.comps.append({"id": cid, "tq": tq, "hi": hi, "vi": vi})
+        self.sof = marker
+
+    def scan(self, sos: bytes) -> tuple[list[tuple[int, int, int]], int, int, int, int]:
+        """SOS header -> ([(component index, DC table, AC table)], Ss,
+        Se, Ah, Al)."""
+        ns = sos[0] if sos else 0
+        if not ns or len(sos) != 4 + 2 * ns:
+            raise ValueError("bad SOS segment")
+        ids = [c["id"] for c in self.comps]
+        scomps = []
+        for i in range(ns):
+            cid, tabs = sos[1 + 2 * i], sos[2 + 2 * i]
+            if cid not in ids:
+                raise ValueError(f"scan names unknown component {cid}")
+            scomps.append((ids.index(cid), tabs >> 4, tabs & 0xF))
+        ss, se, a = sos[1 + 2 * ns :]
+        return scomps, ss, se, a >> 4, a & 0xF
+
+    def grid(self) -> tuple[int, int, int, int]:
+        """(hmax, vmax, mcux, mcuy) of the frame's MCU grid (A.2)."""
+        hmax = max(c["hi"] for c in self.comps)
+        vmax = max(c["vi"] for c in self.comps)
+        return hmax, vmax, -(-self.w // (8 * hmax)), -(-self.h // (8 * vmax))
+
+
+def _entropy(data: bytes, pos: int) -> tuple[bytes, list[int], int]:
+    """Unstuff the entropy-coded segment at `pos` (FF00 -> FF, F.1.2.3).
+    Returns (bytes, the bit position after each RSTn marker, offset of
+    the marker that ends the segment — or of the last byte when the
+    data ends first, which stays out of the bytes)."""
+    raw = bytearray()
+    restarts = []
+    p = pos
+    while p < len(data) - 1:
+        b = data[p]
+        if b == 0xFF:
+            nxt = data[p + 1]
+            if nxt == 0x00:
+                raw.append(0xFF)
+                p += 2
+                continue
+            if 0xD0 <= nxt <= 0xD7:  # RSTn
+                restarts.append(len(raw) * 8)
+                p += 2
+                continue
+            break  # EOI or next marker
+        raw.append(b)
+        p += 1
+    return bytes(raw), restarts, p
+
+
 # -- Huffman (decode side) ---------------------------------------------------
 
 @lru_cache(maxsize=64)
@@ -488,105 +686,29 @@ def decode_baseline_at(data: bytes, start: int) -> tuple[np.ndarray, int]:
     concatenated-frame streams iterate on (operators/media.py)."""
     if data[start : start + 2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
-    pos = start + 2
-    qtabs: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], bytes] = {}
-    comps: list[dict] = []
-    h = w = 0
-    restart_interval = 0
-    scan_start = -1
+    frame = _Frame()
+    marker, pos, sos = frame.read(data, start + 2)
+    if frame.sof == 0xC2:  # progressive: its own scan loop
+        from webcollector_spark.jpeg_progressive import decode_progressive_at
 
-    while pos < len(data):
-        if data[pos] != 0xFF:
-            raise ValueError(f"marker expected at {pos}")
-        marker = data[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        (length,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        payload = data[pos + 4 : pos + 2 + length]
-        pos += 2 + length
-        if marker == 0xDB:  # DQT (possibly several tables)
-            p = 0
-            while p < len(payload):
-                pq, tq = payload[p] >> 4, payload[p] & 0xF
-                if pq != 0:
-                    raise ValueError("only 8-bit quant tables supported")
-                qtabs[tq] = np.frombuffer(
-                    payload[p + 1 : p + 65], dtype=np.uint8
-                ).astype(np.int64)
-                p += 65
-        elif marker == 0xC4:  # DHT (possibly several tables)
-            p = 0
-            while p < len(payload):
-                tc, th = payload[p] >> 4, payload[p] & 0xF
-                n = sum(payload[p + 1 : p + 17])
-                huff[(tc, th)] = bytes(payload[p + 1 : p + 17 + n])
-                p += 17 + n
-        elif marker == 0xC0:  # SOF0 baseline
-            _, h, w, nc = struct.unpack(">BHHB", payload[:6])
-            for ci in range(nc):
-                cid, samp, tq = payload[6 + 3 * ci : 9 + 3 * ci]
-                hi, vi = samp >> 4, samp & 0xF
-                if hi not in (1, 2, 4) or vi not in (1, 2, 4):
-                    # 1/2/4 cover 4:4:4 / 4:2:2 / 4:4:0 / 4:2:0 /
-                    # 4:1:1; factor 3 would need fractional chroma
-                    # alignment the replication upsampler cannot do
-                    raise ValueError(
-                        f"unsupported sampling factors {hi}x{vi}"
-                    )
-                comps.append({"id": cid, "tq": tq, "hi": hi, "vi": vi})
-        elif marker == 0xC2:  # SOF2: progressive — separate scan loop
-            from webcollector_spark.jpeg_progressive import (
-                decode_progressive_at,
-            )
-
-            return decode_progressive_at(data, start)
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError(
-                "only baseline (SOF0) and progressive (SOF2) supported"
-            )
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack(">H", payload[:2])
-        elif marker == 0xDA:  # SOS
-            ns = payload[0]
-            sel = {}
-            for i in range(ns):
-                cid, tabs = payload[1 + 2 * i], payload[2 + 2 * i]
-                sel[cid] = (tabs >> 4, tabs & 0xF)
-            for c in comps:
-                c["td"], c["ta"] = sel[c["id"]]
-            scan_start = pos
-            break
-        # APPn/COM/etc: skipped
-    if scan_start < 0 or not comps:
+        return decode_progressive_at(data, start)
+    if marker != _SOS or not frame.comps:
         raise ValueError("no scan found")
+    comps = frame.comps
+    scomps = frame.scan(sos)[0]
+    if len(scomps) != len(comps):
+        raise ValueError("baseline scan must carry every component")
+    for ci, td, ta in scomps:
+        comps[ci]["td"], comps[ci]["ta"] = td, ta
+    restart_interval = frame.restart_interval
 
-    # -- unstuff the entropy segment, note restart markers ------------------
-    raw = bytearray()
-    restarts = []  # bit positions AFTER each RST marker (byte-aligned)
-    p = scan_start
-    while p < len(data) - 1:
-        b = data[p]
-        if b == 0xFF:
-            nxt = data[p + 1]
-            if nxt == 0x00:
-                raw.append(0xFF)
-                p += 2
-                continue
-            if 0xD0 <= nxt <= 0xD7:  # RSTn
-                restarts.append(len(raw) * 8)
-                p += 2
-                continue
-            break  # EOI or next marker
-        raw.append(b)
-        p += 1
-    end = p + 2 if data[p : p + 2] == b"\xff\xd9" else p
+    raw, restarts, end = _entropy(data, pos)
+    marker, after, _ = _Frame().read(data, end, strict=False)
+    if marker == _EOI:  # the offset past EOI, where a next frame starts
+        end = after
 
-    reader = _BitReader(bytes(raw))
-    hmax = max(c["hi"] for c in comps)
-    vmax = max(c["vi"] for c in comps)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
+    reader = _BitReader(raw)
+    hmax, vmax, mcux, mcuy = frame.grid()
     n_mcu = mcux * mcuy
     nc = len(comps)
     coefs = [
@@ -594,9 +716,7 @@ def decode_baseline_at(data: bytes, start: int) -> tuple[np.ndarray, int]:
         for c in comps
     ]
     pred = [0] * nc
-    luts = {
-        (tc, th): _decode_lut(spec) for (tc, th), spec in huff.items()
-    }
+    luts = {key: _decode_lut(spec) for key, spec in frame.huff.items()}
     ri = 0
     for m in range(n_mcu):
         if restart_interval and m and m % restart_interval == 0:
@@ -645,27 +765,19 @@ def decode_baseline_at(data: bytes, start: int) -> tuple[np.ndarray, int]:
         raster = np.empty_like(coefs[ci])
         raster[_mcu_raster_order(mcuy, mcux, c["vi"], c["hi"])] = coefs[ci]
         rasters.append(raster)
-    return _reconstruct(rasters, comps, qtabs, h, w, mcuy, mcux, hmax, vmax), end
+    return _reconstruct(rasters, frame), end
 
 
-def _reconstruct(
-    coefs: list[np.ndarray],
-    comps: list[dict],
-    qtabs: dict[int, np.ndarray],
-    h: int,
-    w: int,
-    mcuy: int,
-    mcux: int,
-    hmax: int,
-    vmax: int,
-) -> np.ndarray:
+def _reconstruct(coefs: list[np.ndarray], frame: _Frame) -> np.ndarray:
     """Quantized zigzag coefficients (raster block order per component,
     full MCU-padded grid) -> pixels: dequantize + IDCT + reassemble +
     chroma upsample + color. Shared by the sequential and progressive
     decoders — they differ only in how the coefficients arrive."""
+    comps, h, w = frame.comps, frame.h, frame.w
+    hmax, vmax, mcux, mcuy = frame.grid()
     planes = []
     for ci, c in enumerate(comps):
-        q = qtabs[c["tq"]]
+        q = frame.qtabs[c["tq"]]
         dq = (coefs[ci] * q[None, :])[:, UNZIGZAG].reshape(-1, 8, 8).astype(
             np.float64
         )
@@ -697,41 +809,25 @@ def parse_dqt(data: bytes, start: int = 0) -> dict[int, np.ndarray]:
     stream up to SOS/EOI. Tolerant of truncated prefixes — returns
     whatever complete tables appeared before the bytes ran out; returns
     {} when `data` is not a JPEG at `start`."""
-    if data[start : start + 2] != b"\xff\xd8":
-        return {}
     tables: dict[int, np.ndarray] = {}
-    pos = start + 2
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            break
-        marker = data[pos + 1]
-        if marker == 0xFF:  # fill byte (B.1.1.2)
-            pos += 1
-            continue
-        if marker in (0xD8, 0xD9, 0x01) or 0xD0 <= marker <= 0xD7:
-            if marker == 0xD9:
-                break
-            pos += 2  # standalone marker, no length field
-            continue
-        (length,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        payload = data[pos + 4 : pos + 2 + length]
-        if len(payload) < length - 2:
-            break  # truncated prefix — keep what we have
-        pos += 2 + length
-        if marker == 0xDB:
-            p = 0
-            while p + 65 <= len(payload):
-                pq, tq = payload[p] >> 4, payload[p] & 0xF
-                if pq != 0:
-                    break  # 16-bit tables out of scope (baseline is 8-bit)
-                stream = np.frombuffer(
-                    payload[p + 1 : p + 65], dtype=np.uint8
-                ).astype(np.int64)
-                tables[tq] = stream[UNZIGZAG]  # zigzag (B.2.4.1) -> natural
-                p += 65
-        elif marker == 0xDA:  # SOS — DQT for this image is complete
-            break
+    for marker, payload, whole in _header_segments(data, start):
+        if marker == _DQT and whole:
+            try:
+                for tq, stream in _dqt(payload):
+                    tables[tq] = stream[UNZIGZAG]  # zigzag -> natural
+            except ValueError:
+                pass  # 16-bit tables out of scope (baseline is 8-bit)
     return tables
+
+
+def table_qualities(tables: dict[int, np.ndarray]) -> dict[int, tuple[int, bool]]:
+    """IJG inversion (estimate_quality) of the luma (0) and chroma (1)
+    tables present: table id -> (q_est, exact)."""
+    return {
+        tid: estimate_quality(tables[tid], std)
+        for tid, std in ((0, STD_LUMA_Q), (1, STD_CHROMA_Q))
+        if tid in tables
+    }
 
 
 def header_quality(data: bytes, prefix: int = 65536) -> int | None:
@@ -739,40 +835,17 @@ def header_quality(data: bytes, prefix: int = 65536) -> int | None:
     the present DQT tables' IJG inversions, or None when `data` is not
     a JPEG (or carries no complete table in the prefix). The in-crawl
     form of operators/sniff.py jpeg_quality's quality_est column."""
-    tables = parse_dqt(data[:prefix])
-    if not tables:
-        return None
-    qs = []
-    for tid, std in ((0, STD_LUMA_Q), (1, STD_CHROMA_Q)):
-        if tid in tables:
-            qs.append(estimate_quality(tables[tid], std)[0])
-    return min(qs) if qs else None
+    qs = table_qualities(parse_dqt(data[:prefix]))
+    return min(q for q, _ in qs.values()) if qs else None
 
 
 def sof_marker(data: bytes, start: int = 0) -> int | None:
     """Header-only walk to the frame marker: returns the SOFn marker
     byte (0xC0 baseline, 0xC2 progressive, ...) or None if the prefix
     is not a JPEG or was cut before the frame header."""
-    if data[start : start + 2] != b"\xff\xd8":
-        return None
-    pos = start + 2
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            return None
-        marker = data[pos + 1]
-        if marker == 0xFF:
-            pos += 1
-            continue
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-                      0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
+    for marker, _, _ in _header_segments(data, start):
+        if marker in _SOF:
             return marker
-        if marker in (0xD9, 0xDA):
-            return None  # scan/EOI before any SOF: not a valid frame
-        (length,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        pos += 2 + length
     return None
 
 

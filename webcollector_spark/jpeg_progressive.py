@@ -4,7 +4,9 @@ Roughly one in ten JPEGs on the real web is progressive (large CDNs
 re-encode to it: the first scans paint a preview), so an image crawl
 that hard-errors on SOF2 silently drops a meaningful slice of the
 corpus. This module adds the progressive process on top of the
-sequential codec in `webcollector_spark.jpeg`, sharing its DCT /
+sequential codec in `webcollector_spark.jpeg`, sharing its front end
+(the marker walk, the `_Frame` header parse with DHT/DRI segments
+folded in between scans, the `_entropy` unstuffing), its DCT /
 quantization / Huffman primitives and its `_reconstruct` back end:
 
 * decode: spectral selection + successive approximation, both scan
@@ -42,9 +44,13 @@ from webcollector_spark.jpeg import (
     _BitReader,
     _BitWriter,
     _C,
+    _EOI,
+    _Frame,
     _SAMP_FACTORS,
+    _SOS,
     _box_down,
     _decode_lut,
+    _entropy,
     _extend,
     _huff_codes,
     _magnitude,
@@ -482,153 +488,55 @@ def _decode_progressive(
     pos-after-EOI)."""
     if data[start : start + 2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
+    frame = _Frame()
     pos = start + 2
-    qtabs: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], bytes] = {}
-    comps: list[dict] = []
-    h = w = 0
-    restart_interval = 0
     coefs: list[np.ndarray] | None = None
-    hmax = vmax = mcux = mcuy = 0
     scans_done = 0
-    complete = False
-
-    while pos + 2 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError(f"marker expected at {pos}")
-        marker = data[pos + 1]
-        if marker == 0xD9:  # EOI
-            pos += 2
-            complete = True
-            break
-        if pos + 4 > len(data):
-            break  # marker arrived, its length field did not
-        (length,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        payload = data[pos + 4 : pos + 2 + length]
-        if len(payload) < length - 2:
-            if tolerate_truncation:
-                break  # segment cut mid-payload
-            raise ValueError("truncated segment")
-        pos += 2 + length
-        if marker == 0xDB:
-            p = 0
-            while p < len(payload):
-                pq, tq = payload[p] >> 4, payload[p] & 0xF
-                if pq != 0:
-                    raise ValueError("only 8-bit quant tables supported")
-                qtabs[tq] = np.frombuffer(
-                    payload[p + 1 : p + 65], dtype=np.uint8
-                ).astype(np.int64)
-                p += 65
-        elif marker == 0xC4:
-            p = 0
-            while p < len(payload):
-                tc, th = payload[p] >> 4, payload[p] & 0xF
-                n = sum(payload[p + 1 : p + 17])
-                huff[(tc, th)] = bytes(payload[p + 1 : p + 17 + n])
-                p += 17 + n
-        elif marker == 0xC2:
-            _, h, w, nc = struct.unpack(">BHHB", payload[:6])
-            for ci in range(nc):
-                cid, samp, tq = payload[6 + 3 * ci : 9 + 3 * ci]
-                hi, vi = samp >> 4, samp & 0xF
-                if hi not in (1, 2, 4) or vi not in (1, 2, 4):
-                    raise ValueError(
-                        f"unsupported sampling factors {hi}x{vi}"
-                    )
-                comps.append({"id": cid, "tq": tq, "hi": hi, "vi": vi})
-            hmax = max(c["hi"] for c in comps)
-            vmax = max(c["vi"] for c in comps)
-            mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
+    while True:
+        marker, pos, sos = frame.read(data, pos, strict=not tolerate_truncation)
+        if frame.sof == 0xC0:
+            raise ValueError("expected a progressive (SOF2) frame")
+        if coefs is None and frame.comps:
+            _, _, mcux, mcuy = frame.grid()
             coefs = [
                 np.zeros(
                     ((mcuy * c["vi"]) * (mcux * c["hi"]), 64), dtype=np.int64
                 )
-                for c in comps
+                for c in frame.comps
             ]
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("expected a progressive (SOF2) frame")
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", payload[:2])
-        elif marker == 0xDA:
-            if coefs is None:
-                raise ValueError("SOS before SOF2")
-            ns = payload[0]
-            scomps = []
-            for i in range(ns):
-                cid, tabs = payload[1 + 2 * i], payload[2 + 2 * i]
-                ci = next(
-                    j for j, c in enumerate(comps) if c["id"] == cid
-                )
-                scomps.append((ci, tabs >> 4, tabs & 0xF))
-            Ss, Se = payload[1 + 2 * ns], payload[2 + 2 * ns]
-            a = payload[3 + 2 * ns]
-            Ah, Al = a >> 4, a & 0xF
-            if tolerate_truncation:
-                try:
-                    pos, _ = _decode_scan(
-                        data, pos, coefs, comps, scomps, huff,
-                        Ss, Se, Ah, Al, restart_interval,
-                        h, w, mcuy, mcux, hmax, vmax,
-                    )
-                except (ValueError, IndexError):
-                    # entropy data cut mid-scan: keep every unit that
-                    # landed before the cut, stop here
-                    pos = len(data)
-                    break
-            else:
-                pos, _ = _decode_scan(
-                    data, pos, coefs, comps, scomps, huff,
-                    Ss, Se, Ah, Al, restart_interval,
-                    h, w, mcuy, mcux, hmax, vmax,
-                )
-            scans_done += 1
-        # APPn / COM: skipped
+        if marker != _SOS:  # EOI, or the bytes ran out
+            break
+        if coefs is None:
+            raise ValueError("SOS before SOF2")
+        scan = frame.scan(sos)
+        try:
+            pos = _decode_scan(data, pos, coefs, frame, *scan)
+        except (ValueError, IndexError):
+            if not tolerate_truncation:
+                raise
+            # entropy data cut mid-scan: keep every unit that landed
+            # before the cut, stop here
+            pos = len(data)
+            break
+        scans_done += 1
 
     if coefs is None:
         raise ValueError("no frame found")
-    return (
-        _reconstruct(coefs, comps, qtabs, h, w, mcuy, mcux, hmax, vmax),
-        scans_done,
-        complete,
-        pos,
-    )
+    return _reconstruct(coefs, frame), scans_done, marker == _EOI, pos
 
 
-def _decode_scan(
-    data, pos, coefs, comps, scomps, huff,
-    Ss, Se, Ah, Al, restart_interval,
-    h, w, mcuy, mcux, hmax, vmax,
-):
-    """Entropy-decode one scan in place; returns (pos after the scan's
-    entropy segment, 0) — EOB runs never cross scans."""
-    # unstuff the entropy segment, record restart bit positions
-    raw = bytearray()
-    restarts = []
-    p = pos
-    while p < len(data) - 1:
-        b = data[p]
-        if b == 0xFF:
-            nxt = data[p + 1]
-            if nxt == 0x00:
-                raw.append(0xFF)
-                p += 2
-                continue
-            if 0xD0 <= nxt <= 0xD7:
-                restarts.append(len(raw) * 8)
-                p += 2
-                continue
-            break
-        raw.append(b)
-        p += 1
-
-    reader = _BitReader(bytes(raw))
+def _decode_scan(data, pos, coefs, frame, scomps, Ss, Se, Ah, Al) -> int:
+    """Entropy-decode one scan in place; returns the offset where its
+    entropy-coded segment ends — EOB runs never cross scans."""
+    raw, restarts, p = _entropy(data, pos)
+    reader = _BitReader(raw)
+    comps, restart_interval = frame.comps, frame.restart_interval
+    hmax, vmax, mcux, mcuy = frame.grid()
     is_dc = Ss == 0
     interleaved = len(scomps) > 1
     if not is_dc and interleaved:
         raise ValueError("AC scans must be single-component (A.2.2)")
-    luts = {key: _decode_lut(spec) for key, spec in huff.items()}
+    luts = {key: _decode_lut(spec) for key, spec in frame.huff.items()}
     eobrun = 0
     ri = 0
     pred = {ci: 0 for ci, _, _ in scomps}
@@ -642,7 +550,7 @@ def _decode_scan(
     else:
         ci0 = scomps[0][0]
         c = comps[ci0]
-        ch, cw = -(-(h * c["vi"]) // vmax), -(-(w * c["hi"]) // hmax)
+        ch, cw = -(-(frame.h * c["vi"]) // vmax), -(-(frame.w * c["hi"]) // hmax)
         nby, nbx = -(-ch // 8), -(-cw // 8)
         gw_blocks = mcux * c["hi"]
         n_units = nby * nbx
@@ -691,7 +599,7 @@ def _decode_scan(
                 eobrun = _ac_refine_block(
                     blk, reader, asym, alen, Ss, Se, Al, eobrun
                 )
-    return p, 0
+    return p
 
 
 def _ac_decode_symbol(reader, asym, alen) -> int:

@@ -207,7 +207,9 @@ def _fetch_one(
         if img_bytes is not None:
             try:
                 out["phash"] = codecs.phash64(codecs.decode(img_bytes))
-            except ValueError:
+            except (ValueError, NotImplementedError):
+                # a corrupt or unsupported image is not a failed fetch:
+                # the page keeps its caption and links
                 out["phash"] = None
             # header-only quality estimate (JPEG payloads): recorded in
             # meta always; below cfg.min_image_quality the training

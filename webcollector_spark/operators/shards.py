@@ -453,11 +453,14 @@ def write_webdataset(
     )
 
 
-def _tar_files(spark, out_dir: str) -> DataFrame:
-    """An export's shard files as a `binaryFile` frame."""
+def _export_files(spark, out_dir: str, glob: str) -> DataFrame:
+    """An export's files named like `glob` as a `binaryFile` frame. The
+    glob is a filter on the directory load, not part of the path: a
+    glob path sends Spark's metadata probe after a file of that literal
+    name, which logs a FileNotFoundException on every read."""
     return (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", "shard-*.tar")
+        .option("pathGlobFilter", glob)
         .load(out_dir)
     )
 
@@ -514,7 +517,7 @@ def verify_export(
     segment integrity (crawldb/DbUpdater.java); a distributed export
     onto a plain object store has to carry its own audit.
     """
-    files = _tar_files(spark, out_dir)
+    files = _export_files(spark, out_dir, "shard-*.tar")
     if deep:
 
         def audit(r):
@@ -608,7 +611,7 @@ def read_webdataset(spark, out_dir: str) -> DataFrame:
                    "caption": caption.get(stem, ""), "shard": shard}
 
     return map_rows(
-        _tar_files(spark, out_dir).select("path", "content"),
+        _export_files(spark, out_dir, "shard-*.tar").select("path", "content"),
         T.StructType.fromDDL(
             "image_id string, data binary, caption string, shard bigint"
         ),

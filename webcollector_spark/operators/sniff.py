@@ -132,7 +132,7 @@ JPEGQ_SCHEMA = T.StructType(
 def jpeg_quality(corpus: DataFrame, prefix: int = 65536) -> DataFrame:
     """Header-only JPEG quality estimation: parse the DQT segments out
     of the marker stream (jpeg.parse_dqt) and invert the IJG quality
-    scaling per table (jpeg.estimate_quality). The curation signal a
+    scaling per table (jpeg.table_qualities). The curation signal a
     10^9-image pipeline gates on BEFORE decode: a 4032x3024 payload
     whose tables say quality 30 has already lost what no filter
     downstream can recover.
@@ -157,26 +157,15 @@ def jpeg_quality(corpus: DataFrame, prefix: int = 65536) -> DataFrame:
     def row(r):
         data = bytes(r["prefix"])
         tables = jpeg.parse_dqt(data)
-        ql = qc = qe = std = None
-        if tables:
-            exact = []
-            if 0 in tables:
-                ql, ok = jpeg.estimate_quality(tables[0], jpeg.STD_LUMA_Q)
-                exact.append(ok)
-            if 1 in tables:
-                qc, ok = jpeg.estimate_quality(tables[1], jpeg.STD_CHROMA_Q)
-                exact.append(ok)
-            present = [q for q in (ql, qc) if q is not None]
-            qe = min(present) if present else None
-            std = all(exact) if exact else None
+        qs = jpeg.table_qualities(tables)
         yield {
             "image_id": r["image_id"],
             "is_jpeg": data[:2] == b"\xff\xd8",
             "n_tables": len(tables),
-            "quality_luma": ql,
-            "quality_chroma": qc,
-            "quality_est": qe,
-            "dqt_std": std,
+            "quality_luma": qs.get(0, (None,))[0],
+            "quality_chroma": qs.get(1, (None,))[0],
+            "quality_est": min(q for q, _ in qs.values()) if qs else None,
+            "dqt_std": all(ok for _, ok in qs.values()) if qs else None,
         }
 
     sliced = corpus.select(

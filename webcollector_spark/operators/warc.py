@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from webcollector_spark.operators.shards import _commit_shards
+from webcollector_spark.operators.shards import _commit_shards, _export_files
 from webcollector_spark.session import map_rows
 
 _GZ_LEVEL = 6
@@ -318,15 +318,6 @@ def write_warc(
     )
 
 
-def _warc_files(spark, out_dir: str) -> DataFrame:
-    """An export's .warc.gz files as (path, content), one row per file."""
-    return (
-        spark.read.format("binaryFile")
-        .load(f"{out_dir}/*.warc.gz")
-        .select("path", "content")
-    )
-
-
 _INDEX_SLICE = 1 << 16  # compressed bytes fed to the inflater at a time
 
 
@@ -364,7 +355,7 @@ def index_warc(spark, out_dir: str) -> DataFrame:
             pos += length
 
     return map_rows(
-        _warc_files(spark, out_dir),
+        _export_files(spark, out_dir, "*.warc.gz").select("path", "content"),
         T.StructType.fromDDL(
             "path string, offset bigint, length bigint, record_type string, "
             "record_id string, url string"
@@ -453,7 +444,7 @@ def read_warc(spark, out_dir: str) -> DataFrame:
             }
 
     return map_rows(
-        _warc_files(spark, out_dir),
+        _export_files(spark, out_dir, "*.warc.gz").select("path", "content"),
         T.StructType.fromDDL(
             "path string, record_type string, record_id string, url string, "
             "warc_date string, content_type string, payload binary, "
