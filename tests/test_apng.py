@@ -145,25 +145,6 @@ def test_spark_dataflow_matches_committed_oracle(spark):
     assert np.allclose(got["frame_mean"].values, exp["frame_mean"].values)
 
 
-def test_oracle_rebuild_is_stable():
-    import sys
-    from pathlib import Path
-
-    import pandas as pd
-
-    sys.path.insert(0, str(Path("tools").resolve()))
-    from build_multimodal_oracles import build_sample_frames
-
-    fresh = build_sample_frames(media.apng_corpus_rows(10), every_n=2)
-    committed = pd.read_parquet("oracles/video_frames_apng.parquet")
-    pd.testing.assert_frame_equal(
-        fresh.sort_values(["video_id", "frame_idx"]).reset_index(drop=True),
-        committed.sort_values(["video_id", "frame_idx"])
-        .reset_index(drop=True)
-        .astype({"frame_idx": fresh["frame_idx"].dtype}),
-    )
-
-
 def test_static_png_decoder_renders_frame_zero():
     """An APNG is a valid PNG whose IDAT is frame 0 — a decoder without
     animation support (our static path, old browsers) must render the

@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 
 from webcollector_spark.corpora import corpus
-from webcollector_spark.operators import audiofp
+from webcollector_spark.operators import audiofp, pairs
 
 
 def _ham(a: int, b: int) -> int:
@@ -67,11 +67,15 @@ def test_banded_equals_exact_and_recall(spark):
     fps = audiofp.audio_fingerprints(corpus(spark, "audio_fp"))
     exact = {
         (r.aud_a, r.aud_b, r.hamming)
-        for r in audiofp.audio_neardup_pairs(fps, max_hamming=8).collect()
+        for r in pairs.hamming_pairs(
+            fps, "audio_id", "afp", ("aud_a", "aud_b"), 8
+        ).collect()
     }
     banded = {
         (r.aud_a, r.aud_b, r.hamming)
-        for r in audiofp.audio_neardup_banded(fps, max_hamming=8).collect()
+        for r in pairs.banded_pairs(
+            fps, "audio_id", "afp", ("aud_a", "aud_b"), 8
+        ).collect()
     }
     assert banded == exact
     pair_ids = {frozenset((a, b)) for a, b, _ in exact}
@@ -96,20 +100,3 @@ def test_spark_matches_committed_oracle(spark):
     )
     assert (got["audio_id"].values == exp["audio_id"].values).all()
     assert (got["afp"].values == exp["afp"].values).all()
-
-
-def test_oracle_rebuild_is_stable():
-    import sys
-    from pathlib import Path
-
-    import pandas as pd
-
-    sys.path.insert(0, str(Path("tools").resolve()))
-    from build_multimodal_oracles import build_audio_fingerprint
-
-    fresh = build_audio_fingerprint(audiofp.fp_corpus_rows(12, 6))
-    committed = pd.read_parquet("oracles/audio_fingerprint.parquet")
-    pd.testing.assert_frame_equal(
-        fresh.sort_values("audio_id").reset_index(drop=True),
-        committed.sort_values("audio_id").reset_index(drop=True),
-    )

@@ -750,3 +750,44 @@ def test_raw_size_over_the_bound_is_refused_before_inflating(monkeypatch):
     for payload in (_png_1x1(small, 1 << 15, 1 << 15), _qimg(small, 1 << 15, 1 << 15)):
         with pytest.raises(ValueError, match="exceeds"):
             codecs.decode(payload)
+
+
+def _jpeg_frame_header(sof: int, w: int, h: int) -> bytes:
+    """SOI + a 3-component SOFn declaring w x h + EOI: no tables, no scan."""
+    comps = bytes([1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1])
+    payload = struct.pack(">BHHB", 8, h, w, 3) + comps
+    return (
+        b"\xff\xd8" + bytes([0xFF, sof]) + struct.pack(">H", len(payload) + 2)
+        + payload + b"\xff\xd9"
+    )
+
+
+def _apng_header(w: int, h: int) -> bytes:
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    return (
+        codecs._PNG_SIG + codecs._chunk(b"IHDR", ihdr)
+        + codecs._chunk(b"acTL", struct.pack(">II", 1, 0))
+        + codecs._chunk(b"IEND", b"")
+    )
+
+
+@pytest.mark.parametrize("kind", ["sof0", "sof2", "apng"])
+def test_oversized_frame_headers_fail_within_a_few_mb(kind):
+    """A header that declares 65535 x 65535 is refused before a plane or
+    canvas is allocated."""
+    from webcollector_spark import apng
+
+    if kind == "apng":
+        payload, decode = _apng_header(65535, 65535), apng.decode_apng
+    else:
+        sof = 0xC0 if kind == "sof0" else 0xC2
+        payload, decode = _jpeg_frame_header(sof, 65535, 65535), codecs.decode
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="exceeds"):
+            decode(payload)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 4 << 20, peak
+

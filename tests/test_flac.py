@@ -169,23 +169,6 @@ def test_spark_dataflow_matches_committed_oracle(spark):
     assert (got["zero_crossings"].values == exp["zero_crossings"].values).all()
 
 
-def test_oracle_rebuild_is_stable():
-    import sys
-    from pathlib import Path
-
-    import pandas as pd
-
-    sys.path.insert(0, str(Path("tools").resolve()))
-    from build_multimodal_oracles import build_audio_features
-
-    fresh = build_audio_features(media.flac_corpus_rows(16))
-    committed = pd.read_parquet("oracles/audio_features_flac.parquet")
-    pd.testing.assert_frame_equal(
-        fresh.sort_values("audio_id").reset_index(drop=True),
-        committed.sort_values("audio_id").reset_index(drop=True),
-    )
-
-
 # ---------------------------------------------------------------------------
 # LPC subframes (r5, VERDICT r4 item 6): quantized-coefficient integer
 # prediction, orders 1-32 on decode, order-8 Levinson-Durbin on encode.

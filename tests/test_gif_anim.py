@@ -214,22 +214,3 @@ def test_spark_dataflow_matches_committed_oracle(spark):
     assert (got["frame_idx"].values == exp["frame_idx"].values).all()
     assert np.allclose(got["frame_mean"].values, exp["frame_mean"].values)
     assert (got["frame_hash"].values == exp["frame_hash"].values).all()
-
-
-def test_oracle_rebuild_is_stable():
-    import sys
-    from pathlib import Path
-
-    import pandas as pd
-
-    sys.path.insert(0, str(Path("tools").resolve()))
-    from build_multimodal_oracles import build_sample_frames
-
-    fresh = build_sample_frames(media.gif_corpus_rows(10), every_n=2)
-    committed = pd.read_parquet("oracles/video_frames_gif.parquet")
-    pd.testing.assert_frame_equal(
-        fresh.sort_values(["video_id", "frame_idx"]).reset_index(drop=True),
-        committed.sort_values(["video_id", "frame_idx"])
-        .reset_index(drop=True)
-        .astype({"frame_idx": fresh["frame_idx"].dtype}),
-    )

@@ -1,6 +1,7 @@
 """Multimodal (image) operator tests: decode invariant (PSNR/phash),
-mean-pool resize determinism, and the banded phash near-dup join
-matching the exact O(n^2) formulation."""
+mean-pool resize determinism, the dedup decisions over the near-dup
+pairs (the pair joins themselves are tested in test_pairs.py), and the
+committed oracle tables."""
 
 from __future__ import annotations
 
@@ -40,52 +41,6 @@ def test_resize_meanpool_deterministic(spark):
     assert rows[r0["image_id"]]["pixel_sum"] == int(
         small.round().astype(np.int64).sum()
     )
-
-
-def test_phash_banded_matches_exact(spark):
-    corpus = corpus_frame(spark, fixtures.corpus_with_neardups(120, 30))
-    exact = {
-        (r["img_a"], r["img_b"], r["hamming"])
-        for r in images.phash_neardup_pairs(corpus, max_hamming=16).collect()
-    }
-    banded = {
-        (r["img_a"], r["img_b"], r["hamming"])
-        for r in images.phash_neardup_banded(corpus, max_hamming=16).collect()
-    }
-    assert banded == exact
-    # every injected lossy re-encode must pair with its source image
-    dup_pairs = {
-        (a, b) for a, b, _ in exact if a.startswith("dup") or b.startswith("dup")
-    }
-    assert len(dup_pairs) >= 30
-    for i in range(30):
-        assert (f"dup{i:08d}", f"img{i:08d}") in dup_pairs or (
-            f"img{i:08d}",
-            f"dup{i:08d}",
-        ) in dup_pairs
-
-
-def test_phash_blocked_matches_exact(spark):
-    """Block-combination keys (the web-scale layout) return exactly the
-    O(n^2) hamming-ball result — completeness by pigeonhole on intact
-    8-bit blocks — at both the default and a non-default k."""
-    corpus = corpus_frame(spark, fixtures.corpus_with_neardups(120, 30))
-    for k, m in ((4, 8), (2, 4)):
-        exact = {
-            (r["img_a"], r["img_b"], r["hamming"])
-            for r in images.phash_neardup_pairs(corpus, max_hamming=k).collect()
-        }
-        blocked = {
-            (r["img_a"], r["img_b"], r["hamming"])
-            for r in images.phash_neardup_blocked(
-                corpus, max_hamming=k, m=m
-            ).collect()
-        }
-        assert blocked == exact, (k, m)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        images.phash_neardup_blocked(corpus, max_hamming=8, m=8)
 
 
 def test_multimodal_oracle_parquet_fresh():

@@ -210,6 +210,30 @@ def test_ijg_chroma_collisions_resolve_low():
         assert q_est == (1 if q <= 3 else q)
 
 
+def _estimate_quality_loop(table, std):
+    """The original per-q loop estimate_quality replaced: the reference."""
+    best_q, best_err = 1, None
+    table = np.asarray(table, dtype=np.int64)
+    for q in range(1, 101):
+        err = int(np.abs(jpeg._quality_scale(std, q) - table).sum())
+        if best_err is None or err < best_err:
+            best_q, best_err = q, err
+    return best_q, best_err == 0
+
+
+def test_estimate_quality_matches_the_per_q_loop():
+    rng = np.random.default_rng(5)
+    for std in (jpeg.STD_LUMA_Q, jpeg.STD_CHROMA_Q):
+        tables = [jpeg._quality_scale(std, q) for q in range(1, 101)]
+        # off-by-a-little tables sit between two scalings (ties included)
+        tables += [
+            np.clip(t + rng.integers(-2, 3, 64), 1, 255) for t in tables[::3]
+        ]
+        tables += list(rng.integers(1, 256, (200, 64)))
+        for t in tables:
+            assert jpeg.estimate_quality(t, std) == _estimate_quality_loop(t, std)
+
+
 def test_parse_dqt_roundtrips_encoder_tables():
     px = _gradient(24, 16)
     for q in (25, 50, 75, 92):

@@ -194,6 +194,34 @@ def test_preview_truncation_never_raises_and_improves():
         last_psnr = min(p, 1e8)
 
 
+def test_scan_boundary_prefixes_fail_decode_but_preview():
+    """A progressive file cut where a segment or a scan's entropy data
+    ends is a failed decode, not a partial success; the same prefixes
+    still render through decode_progressive_prefix."""
+    from webcollector_spark.jpeg_progressive import decode_progressive_prefix
+
+    data = bytes(fixtures.make_corpus_jpeg_progressive(1)["bytes"][0])
+    cuts, pos, framed = [], 2, False
+    while True:
+        marker, _, end = jpeg._segment(data, pos)
+        if marker == jpeg._EOI:
+            break
+        framed = framed or marker == 0xC2
+        pos = jpeg._entropy(data, end)[2] if marker == jpeg._SOS else end
+        if framed:
+            cuts += [end, pos]
+    cuts = sorted(set(cuts))
+    assert len(cuts) >= 20 and cuts[-1] < len(data)
+    scans_seen = []
+    for cut in cuts:
+        with pytest.raises(ValueError):
+            codecs.decode(data[:cut])
+        _, scans, complete = decode_progressive_prefix(data[:cut])
+        assert not complete
+        scans_seen.append(scans)
+    assert scans_seen == sorted(scans_seen) and scans_seen[-1] >= 9
+
+
 def test_sof_marker_helper():
     px = _noise(16, 16, seed=3)
     assert jpeg.sof_marker(jpeg.encode_baseline(px)) == 0xC0

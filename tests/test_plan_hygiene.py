@@ -184,15 +184,15 @@ class TestExplodeBroadcastChecker:
         plan stays clean.)"""
         from explain_plans import _explode_broadcasts
 
-        from webcollector_spark.operators.images import _block_combo_keys
+        from webcollector_spark.operators.pairs import _block_combo_keys
 
         dh = (
             spark.range(200)
             .select(F.xxhash64("id").alias("ph"))
             .distinct()
         )
-        a = _block_combo_keys(dh, "_a", "ph_a", 4, 8, "ph", "ph").drop("_a")
-        b = _block_combo_keys(dh, "_b", "ph_b", 4, 8, "ph", "ph").drop("_b")
+        a = _block_combo_keys(dh, "ph", "ph_a", 4, 8)
+        b = _block_combo_keys(dh, "ph", "ph_b", 4, 8)
         unhinted = a.join(b, ["combo", "bkey"]).filter(
             F.col("ph_a") < F.col("ph_b")
         )

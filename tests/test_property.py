@@ -202,7 +202,7 @@ _mk = st.sampled_from([(8, 4), (8, 2), (8, 1), (4, 2), (4, 1)])
 def test_min_combo_lut_matches_bruteforce(mk, data):
     from itertools import combinations
 
-    from webcollector_spark.operators.images import (
+    from webcollector_spark.operators.pairs import (
         _block_combos,
         _min_combo_lut,
     )
@@ -226,7 +226,7 @@ def test_pair_survives_on_exactly_one_combo(mk, data):
     """Simulate the join + filter on random hash pairs: a pair within
     hamming k is emitted on exactly one combination; a pair beyond k on
     none (the hamming filter drops it before the combo filter)."""
-    from webcollector_spark.operators.images import (
+    from webcollector_spark.operators.pairs import (
         _block_combos,
         _min_combo_lut,
     )

@@ -10,7 +10,7 @@ from conftest import corpus_frame
 
 from webcollector_spark import codecs, fixtures
 from webcollector_spark.corpora import corpus
-from webcollector_spark.operators import captions, images, sniff
+from webcollector_spark.operators import captions, images, pairs, sniff
 from webcollector_spark.schema import CORPUS_SCHEMA
 
 
@@ -117,13 +117,15 @@ def test_dhash_blocked_matches_exact_bruteforce(spark):
     dh = images.with_dhash(corpus)
     exact = {
         (r["img_a"], r["img_b"], r["hamming"])
-        for r in images.phash_neardup_pairs(
-            dh.withColumnRenamed("dhash", "phash"), max_hamming=4
+        for r in pairs.hamming_pairs(
+            dh, "image_id", "dhash", ("img_a", "img_b"), 4
         ).collect()
     }
     blocked = {
         (r["img_a"], r["img_b"], r["hamming"])
-        for r in images.dhash_neardup_blocked(corpus, max_hamming=4).collect()
+        for r in pairs.blocked_pairs(
+            dh, "image_id", "dhash", ("img_a", "img_b"), 4
+        ).collect()
     }
     assert blocked == exact
     # the lossy re-encodes stay within the dhash hamming ball too

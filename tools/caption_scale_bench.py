@@ -23,7 +23,7 @@ count — no need to execute the join). This is the measurement that
 caught the original design: (k+1)-banding's 12-bit buckets generate
 ~5e9 candidates at n=2M (the join never finished), while the Manku
 block-combination keys (32-bit buckets) generate within 2x of the true
-pair count. See images.phash_neardup_blocked.
+pair count. See operators/pairs.py blocked_pairs.
 
 Usage: python tools/caption_scale_bench.py  (writes BENCH_CAPTIONS.json)
 """
@@ -92,7 +92,7 @@ def main() -> None:
         )
 
     def banded_keys(meta):
-        # the (k+1)-band layout phash_neardup_banded uses, k=4 -> 12-bit chunks
+        # the (k+1)-band layout pairs.banded_pairs uses, k=4 -> 12-bit chunks
         from pyspark.sql import functions as F
 
         bands, width = 5, 64 // 5
@@ -115,17 +115,15 @@ def main() -> None:
     for n in SIZES:
         meta = synth_meta(spark, n).persist(StorageLevel.MEMORY_AND_DISK)
         meta.count()
-        from webcollector_spark.operators.images import _block_combo_keys
+        from webcollector_spark.operators.pairs import _block_combo_keys
 
-        blocked = _block_combo_keys(meta, "i", "p", 4, 8, "image_id", "phash")
+        blocked = _block_combo_keys(meta, "phash", "p", 4, 8)
         # the volume the join ACTUALLY pays since the distinct-hash
         # collapse: keys over distinct phashes only (exact-dup cluster
         # pairs never enter the candidate stage — they come from the
         # linear self-equi-join on phash)
         distinct_ph = meta.select("phash").distinct()
-        blocked_distinct = _block_combo_keys(
-            distinct_ph, "i", "p", 4, 8, "phash", "phash"
-        )
+        blocked_distinct = _block_combo_keys(distinct_ph, "phash", "p", 4, 8)
         row = {
             "banded_candidate_pairs": int(
                 candidate_volume(banded_keys(meta), ["band", "chunk"])

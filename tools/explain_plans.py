@@ -81,8 +81,8 @@ CHECKS = {
     # occurrence hash (never a join/broadcast of the exploded side);
     # island grouping is per-doc windows + one aggregate, all JVM
     "exact_substr_spans": ["Window", "HashAggregate", "!EvalPython"],
-    # banded simhash: band join fans out on collisions only, no
-    # quadratic stage, all JVM
+    # banded simhash: pairs.hash_pairs over distinct signatures fans
+    # out on collisions only, no quadratic stage, all JVM
     "simhash_neardup_banded": ["HashAggregate", "!EvalPython"],
     # minhash estimator: signature groupBy + candidate-bounded joins;
     # exact column shares the array_intersect verify form
@@ -91,18 +91,18 @@ CHECKS = {
     "hll_registers": ["HashAggregate", "!EvalPython"],
     "cm_registers": ["HashAggregate", "!EvalPython"],
     # caption curation: pure JVM string expressions; conflict is the
-    # banded phash bucket join (no quadratic stage, nothing O(n)
-    # broadcast by hint)
+    # blocked phash pair join (pairs.blocked_pairs: no quadratic stage,
+    # nothing O(n) broadcast by hint)
     # (countDistinct + min(string) plans as SortAggregate; quality is
     # fully constant-folded into the LocalTableScan of the generated
     # corpus — both fine, both must stay Python-free)
     "caption_dedup": ["Aggregate", "!EvalPython"],
     "caption_spam": ["Aggregate", "!EvalPython"],
     # both ride the block-combination candidate join over DISTINCT
-    # hashes (the only Aggregate allowed is that input-side hash
-    # collapse — linear); candidate pairs are deduped MAP-SIDE by the
-    # minimal-intact-combo filter, so no post-join `.distinct()`
-    # Exchange exists
+    # hashes (pairs.hash_pairs; the only Aggregate allowed is that
+    # input-side hash collapse — linear); candidate pairs are deduped
+    # MAP-SIDE by the minimal-intact-combo filter, so no post-join
+    # `.distinct()` Exchange exists
     "caption_conflict": ["Join", "Aggregate", "!EvalPython"],
     # the per-image flag consumer: same blocked candidate stage, flags
     # propagate by joins on phash — never a pair-list output
@@ -168,8 +168,8 @@ CHECKS = {
 # queries allowed to broadcast an explode output (see _explode_broadcasts)
 EXPLODE_BROADCAST_OK = {
     # the labeled O(n^2)-class TEST BASELINE over the 200-row fixture —
-    # explicitly kept out of the scale path (its scale twin is
-    # phash_neardup_blocked)
+    # explicitly kept out of the scale path (pairs.banded_pairs; its
+    # scale twin is phash_neardup_blocked, pairs.blocked_pairs)
     "phash_neardup_banded",
 }
 
@@ -177,7 +177,8 @@ EXPLODE_BROADCAST_OK = {
 def _explode_broadcasts(plan: str) -> bool:
     """True when a Generate (explode) sits DIRECTLY under a
     BroadcastExchange — the planner trap that cost 83 s on
-    phash_neardup_blocked: join-strategy sizing happens on the
+    phash_neardup_blocked (the candidate self-join of
+    operators/pairs.py hash_pairs): join-strategy sizing happens on the
     pre-Generate stats, so the broadcast side is under-estimated by the
     explode factor (x70 there) and a huge single-threaded driver build
     slips through. A Generate below an Exchange or a cached

@@ -33,6 +33,7 @@ import zlib
 import numpy as np
 
 from webcollector_spark.codecs import (
+    _MAX_RAW_BYTES,
     _PNG_SIG,
     _chunk,
     _filter_scanlines,
@@ -163,6 +164,8 @@ def decode_apng(data: bytes) -> list[tuple[int, int, np.ndarray]]:
                 raise NotImplementedError(
                     f"APNG subset is 8-bit RGB (got depth {depth} type {ctype})"
                 )
+            if h * w * 3 > _MAX_RAW_BYTES:  # before the canvas exists
+                raise ValueError(f"APNG canvas {w}x{h} exceeds the decode budget")
             canvas = np.zeros((h, w, 3), np.uint8)
         elif tag == b"acTL":
             n_frames, _plays = struct.unpack(">II", body)

@@ -36,11 +36,11 @@ _QIMG_MAGIC = b"QIMG"
 _QIMG_Q = 4  # quantization step; max reconstruction error Q/2
 
 
-#: The largest raw (inflated) image a PNG/QIMG header may declare.
-#: 2^29 bytes holds a 16-bit RGBA 8K frame (7680x4320x8 = 265 MB) with
-#: room to spare; a header past it is a decompression bomb or corrupt,
-#: and is refused before a byte is inflated.
-_MAX_RAW_BYTES = 1 << 29
+#: The largest raw (inflated) image a PNG/QIMG header may declare: the
+#: one decode memory budget (jpeg.MAX_DECODE_BYTES, 2^29). A header past
+#: it is a decompression bomb or corrupt, and is refused before a byte
+#: is inflated.
+_MAX_RAW_BYTES = jpeg.MAX_DECODE_BYTES
 
 
 def _inflate_exact(buf: bytes, n: int) -> bytes:

@@ -434,6 +434,21 @@ _SOF = frozenset(range(0xC0, 0xD0)) - {_DHT, 0xC8, 0xCC}
 #: markers without a length field: TEM, RST0-7, SOI, EOI (B.1.1.3)
 _NO_LENGTH = frozenset((0x01, *range(0xD0, 0xD8), _SOI, _EOI))
 
+#: The most memory one image decode may hold, in bytes. 2^29 holds a
+#: 16-bit RGBA 8K frame (7680x4320x8 = 265 MB) with room to spare;
+#: codecs bounds an inflated PNG/QIMG raw image and the APNG canvas by
+#: it, and the JPEG frame bound below is sized from it.
+MAX_DECODE_BYTES = 1 << 29
+#: What the JPEG decoders hold per frame pixel at their peak, rounded
+#: up: 460-480 bytes for 4:4:4 baseline frames and 200-300 for
+#: progressive ones (tracemalloc over 128x128 and 256x256 frames;
+#: int64 coefficients, float planes and the RGB result).
+_PEAK_BYTES_PER_PIXEL = 512
+#: The largest frame a SOF may declare: 2^20 pixels (1024x1024). The
+#: SOF fields allow 65535x65535, so without it a 200-byte header can ask
+#: a fetch worker for hundreds of GB; refused before any plane exists.
+_MAX_FRAME_PIXELS = MAX_DECODE_BYTES // _PEAK_BYTES_PER_PIXEL
+
 
 def _segment(data: bytes, pos: int) -> tuple[int, int, int] | None:
     """The marker segment at `pos` as (marker, payload start, end).
@@ -558,6 +573,10 @@ class _Frame:
         if len(p) < 6 or len(p) != 6 + 3 * p[5]:
             raise ValueError("bad SOF segment")
         _, self.h, self.w, nc = struct.unpack(">BHHB", p[:6])
+        if self.h * self.w > _MAX_FRAME_PIXELS:
+            raise ValueError(
+                f"frame {self.w}x{self.h} exceeds {_MAX_FRAME_PIXELS} pixels"
+            )
         self.comps = []
         for ci in range(nc):
             cid, samp, tq = p[6 + 3 * ci : 9 + 3 * ci]
@@ -849,6 +868,16 @@ def sof_marker(data: bytes, start: int = 0) -> int | None:
     return None
 
 
+@lru_cache(maxsize=8)
+def _quality_scalings(std: bytes) -> np.ndarray:
+    """(100, 64) table: row q-1 is `_quality_scale` of the int64 table
+    `std` (given as bytes, so it can be a cache key) at quality q."""
+    table = np.frombuffer(std, dtype=np.int64)
+    scaled = np.stack([_quality_scale(table, q) for q in range(1, 101)])
+    scaled.setflags(write=False)  # shared by every caller through the cache
+    return scaled
+
+
 def estimate_quality(table: np.ndarray, std: np.ndarray) -> tuple[int, bool]:
     """Invert the IJG quality scaling: argmin over q in 1..100 of the
     L1 distance between `_quality_scale(std, q)` and the observed
@@ -857,11 +886,9 @@ def estimate_quality(table: np.ndarray, std: np.ndarray) -> tuple[int, bool]:
     injective over 1..100 (verified in test_jpeg.py); chroma collides
     only at q<=3 where every entry clips to 255. Ties (non-standard
     tables equidistant from two scalings) resolve to the LOWER q —
-    the conservative call for a keep/drop quality gate."""
-    best_q, best_err = 1, None
-    table = np.asarray(table, dtype=np.int64)
-    for q in range(1, 101):
-        err = int(np.abs(_quality_scale(std, q) - table).sum())
-        if best_err is None or err < best_err:
-            best_q, best_err = q, err
-    return best_q, best_err == 0
+    the conservative call for a keep/drop quality gate (argmin returns
+    the first minimum)."""
+    scaled = _quality_scalings(np.asarray(std, dtype=np.int64).tobytes())
+    err = np.abs(scaled - np.asarray(table, dtype=np.int64).reshape(-1)).sum(axis=1)
+    q = int(np.argmin(err))
+    return q + 1, bool(err[q] == 0)

@@ -474,7 +474,10 @@ def decode_progressive_prefix(
 def decode_progressive_at(data: bytes, start: int) -> tuple[np.ndarray, int]:
     """Decode one progressive JPEG beginning at byte `start`; returns
     (pixels, offset one past its EOI). Dispatched to automatically by
-    jpeg.decode_baseline_at on SOF2."""
+    jpeg.decode_baseline_at on SOF2. A frame without a scan or cut
+    before its EOI raises ValueError, as a cut baseline frame does:
+    a truncated body is a failure here, and decode_progressive_prefix
+    is the API that renders what arrived."""
     pixels, _, _, pos = _decode_progressive(
         data, start, tolerate_truncation=False
     )
@@ -522,6 +525,8 @@ def _decode_progressive(
 
     if coefs is None:
         raise ValueError("no frame found")
+    if not tolerate_truncation and (marker != _EOI or not scans_done):
+        raise ValueError("progressive frame without a scan or an EOI")
     return _reconstruct(coefs, frame), scans_done, marker == _EOI, pos
 
 

@@ -14,9 +14,10 @@ different loudness/codec).
 Fingerprint layout: S time segments x B bands -> (S-1) x (B-1) sign
 bits packed row-major into 64 bits (defaults S=17, B=5). Spark side:
 decode + FFT inside Arrow batches (the media-operator discipline —
-numpy kernels, no per-row Python beyond the batch), then candidate
-pairing reuses the pigeonhole band-join shape the image hashes use:
-all-JVM XOR/bit_count verification, banded bucket join for scale.
+numpy kernels, no per-row Python beyond the batch). Pairing is the
+image hashes' own: `operators/pairs.py` banded_pairs (pigeonhole band
+join + all-JVM XOR/bit_count verify) over (audio_id, afp), named
+aud_a/aud_b; hamming_pairs is its O(n^2) reference.
 
 Reference anchor: fetched payloads are opaque bytes + typed metadata
 (model/Page.java:323-330).
@@ -27,7 +28,6 @@ from __future__ import annotations
 import numpy as np
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from webcollector_spark.operators.media import (
@@ -94,64 +94,6 @@ def audio_fingerprints(audio: DataFrame) -> DataFrame:
         }
 
     return map_rows(audio, FP_SCHEMA, row)
-
-
-def audio_neardup_pairs(fps: DataFrame, max_hamming: int = 8) -> DataFrame:
-    """Exact near-dup pairs (hamming <= r) over the fingerprint table —
-    all-JVM XOR/bit_count; the labeled O(n^2) baseline."""
-    a = fps.select(F.col("audio_id").alias("aud_a"), F.col("afp").alias("fp_a"))
-    b = fps.select(F.col("audio_id").alias("aud_b"), F.col("afp").alias("fp_b"))
-    ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("aud_a") < F.col("aud_b"))
-        .withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("aud_a", "aud_b", "hamming")
-    )
-
-
-def audio_neardup_banded(fps: DataFrame, max_hamming: int = 8) -> DataFrame:
-    """Scale path: (max_hamming+1)-band pigeonhole bucket join + exact
-    verify — the identical machinery the image hashes use, applied to
-    the audio fingerprint column. Same result set as the O(n^2) form."""
-    bands = max_hamming + 1
-    width = 64 // bands
-
-    def banded(id_alias: str, fp_alias: str) -> DataFrame:
-        out = fps.select(
-            F.col("audio_id").alias(id_alias), F.col("afp").alias(fp_alias)
-        )
-        parts = F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.shiftrightunsigned(F.col(fp_alias), i * width)
-                    .bitwiseAND(F.lit((1 << width) - 1))
-                    .alias("chunk"),
-                )
-                for i in range(bands)
-            ]
-        )
-        return out.select(
-            id_alias, fp_alias, F.explode(parts).alias("bc")
-        ).select(
-            id_alias, fp_alias,
-            F.col("bc.band").alias("band"), F.col("bc.chunk").alias("chunk"),
-        )
-
-    a = banded("aud_a", "fp_a")
-    b = banded("aud_b", "fp_b")
-    ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return (
-        a.join(b, ["band", "chunk"])
-        .filter(F.col("aud_a") < F.col("aud_b"))
-        .select("aud_a", "aud_b", "fp_a", "fp_b")
-        .dropDuplicates(["aud_a", "aud_b"])
-        .withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("aud_a", "aud_b", "hamming")
-    )
 
 
 def fp_waveform(i: int, sr: int, ns: int, seed: int = 49) -> np.ndarray:

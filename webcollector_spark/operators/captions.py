@@ -8,17 +8,19 @@ of the curation pipeline — the pixel half lives in
 `operators/images.py` (decode verify, phash near-dup).
 
 All caption work is JVM-side string expressions (no Python in the hot
-path); the only join shape is the banded phash self-join reused from
-`images.phash_neardup_banded`-style bucketing, so every operator here
-is O(docs) or O(docs x bucket) and survives a 10^9-image corpus:
+path); the only join shape is the blocked phash pair join from
+`operators/pairs.py`, so every operator here is O(docs) or
+O(docs x bucket) and survives a 10^9-image corpus:
 
 * `caption_dedup` / `caption_spam` — one hash-aggregate on the
   normalized caption (map-side combine; no skew beyond the boilerplate
   groups, which aggregate to one row each).
 * `caption_conflict` — block-combination phash keys
-  (images.phash_neardup_blocked, pigeonhole-complete at hamming <=
-  max_hamming with 32-bit bucket keys), then two shuffle joins on
-  image_id to attach captions; nothing O(n) is broadcast.
+  (pairs.blocked_pairs, pigeonhole-complete at hamming <= max_hamming
+  with 32-bit bucket keys), then two shuffle joins on image_id to
+  attach captions; nothing O(n) is broadcast.
+* `caption_conflict_flags` — the same candidate stage over distinct
+  hashes only (pairs.hash_pairs), aggregated per hash: no pair list.
 * `caption_quality` — a pure map stage.
 
 Reference analogue: WebCollector keeps page metadata beside fetched
@@ -31,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from webcollector_spark.operators.pairs import blocked_pairs, hash_pairs
 
 
 def caption_norm(col: str | Column = "caption") -> Column:
@@ -75,14 +79,12 @@ def caption_conflict(corpus: DataFrame, max_hamming: int = 4) -> DataFrame:
     wrong.
 
     Scale shape: candidates come from the block-combination keys
-    (images.phash_neardup_blocked — pigeonhole-complete, near-singleton
-    buckets even at 10^9 uniform hashes; plain (k+1)-banding measured
+    (pairs.blocked_pairs — pigeonhole-complete, near-singleton buckets
+    even at 10^9 uniform hashes; plain (k+1)-banding measured
     quadratic-within-bucket at n=2M); the two caption-attach joins are
     shuffle joins on image_id (pair-keyed, nothing O(n) broadcast)."""
-    from webcollector_spark.operators.images import phash_neardup_blocked
-
-    pairs = phash_neardup_blocked(
-        corpus.select("image_id", "phash"), max_hamming=max_hamming
+    pairs = blocked_pairs(
+        corpus, "image_id", "phash", ("img_a", "img_b"), max_hamming
     )
     caps = corpus.select("image_id", caption_norm().alias("cap"))
     return (
@@ -239,9 +241,8 @@ def caption_conflict_flags(corpus: DataFrame, max_hamming: int = 4) -> DataFrame
       cap0 = min(caption) — ONE hash-aggregate over the corpus;
     * a cluster with n_caps >= 2 conflicts internally: every member
       has a disagreeing hamming-0 neighbor;
-    * cross-hash, over the blocked distinct-hash pairs
-      (images `_block_combo_keys` + minimal-intact-combo, the same
-      candidate stage as phash_neardup_blocked): a single-caption
+    * cross-hash, over the distinct-hash pairs (pairs.hash_pairs, the
+      same candidate stage as pairs.blocked_pairs): a single-caption
       cluster is flagged by a neighbor that is multi-caption (some
       member must disagree) or whose single caption differs;
     * members inherit their cluster's flag by one join on phash.
@@ -249,32 +250,15 @@ def caption_conflict_flags(corpus: DataFrame, max_hamming: int = 4) -> DataFrame
     Flag set == distinct images of `caption_conflict`'s pair list
     (asserted in tests/test_captions.py); measured on the Zipfian
     corpus in BENCH.md §4g."""
-    from webcollector_spark.operators.images import (
-        _block_combo_keys,
-        _min_intact_combo,
-    )
-
     norm = corpus.select("image_id", "phash", caption_norm().alias("cap"))
     per_hash = norm.groupBy("phash").agg(
         F.countDistinct("cap").alias("n_caps"), F.min("cap").alias("cap0")
     )
-    m = 8
-    t = m - max_hamming
-    dh = per_hash.select(F.col("phash").alias("ph"))
-    a = _block_combo_keys(dh, "_a", "ph_a", max_hamming, m, "ph", "ph").drop("_a")
-    b = _block_combo_keys(dh, "_b", "ph_b", max_hamming, m, "ph", "ph").drop("_b")
-    xor = F.col("ph_a").bitwiseXOR(F.col("ph_b"))
-    ham = F.bit_count(xor)
-    # candidate hash pairs, each emitted once (shuffle_hash +
-    # minimal-intact-combo, same stage as phash_neardup_blocked); the
-    # per-hash caption summaries attach AFTERWARDS — hp is
-    # candidate-sized, so those are two cheap joins
+    # candidate hash pairs, each emitted once; the per-hash caption
+    # summaries attach AFTERWARDS — hp is candidate-sized, so those are
+    # two cheap joins
     hp = (
-        a.hint("shuffle_hash")
-        .join(b, ["combo", "bkey"])
-        .filter(F.col("ph_a") < F.col("ph_b"))
-        .filter(ham <= max_hamming)
-        .filter(F.col("combo") == _min_intact_combo(xor, m, t))
+        hash_pairs(per_hash, "phash", max_hamming)
         .select("ph_a", "ph_b")
         .join(
             per_hash.select(

@@ -11,16 +11,11 @@ pixel work happens inside iterator-of-Arrow-batches UDFs
 Scale notes:
 * decode/resize/phash are embarrassingly parallel map stages — they
   scale with partitions and never shuffle.
-* phash near-dup is a 64-bit hamming ball search: exact formulation is
-  a self-join with bit_count(a XOR b) <= r, JVM-side (whole-stage
-  codegen, no Python). Two LSH-shaped alternatives:
-  - (r+1)-banding (phash_neardup_banded): pigeonhole on bands; right
-    when r is large (r=12 -> 4-5 bit chunks would be useless, so it
-    keeps wide bands and tolerates bucket fan-out at moderate n).
-  - block-combination keys (phash_neardup_blocked, Manku WWW'07): for
-    small r at LARGE n — 32-bit bucket keys keep buckets near-singleton
-    at 10^9 uniform hashes, where (r+1)-banding's 12-bit buckets
-    measured ~5e9 candidate pairs at just n=2M (BENCH_CAPTIONS.json).
+* near-dup is a 64-bit hamming ball search over the corpus' phash or
+  the decoded dhash (`with_dhash`); the exact, (r+1)-banded and
+  Manku-blocked pair joins live in `operators/pairs.py`, shared with
+  the audio and text hash families. This module keeps the pixel
+  kernels and the dedup decisions built on those pairs.
 """
 
 from __future__ import annotations
@@ -32,7 +27,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from webcollector_spark import codecs, fixtures
+from webcollector_spark.operators.pairs import blocked_pairs
 from webcollector_spark.session import map_rows
+
+#: output names of an image near-dup pair (operators/pairs.py)
+_IMG_PAIR = ("img_a", "img_b")
 
 DECODE_META_SCHEMA = T.StructType(
     [
@@ -236,19 +235,6 @@ def with_dhash(corpus: DataFrame) -> DataFrame:
     return map_rows(corpus, schema, row)
 
 
-def dhash_neardup_blocked(corpus: DataFrame, max_hamming: int = 4) -> DataFrame:
-    """Hamming-ball near-dup over the DIFFERENCE hash, running through
-    the exact same block-combination machinery as the phash path — the
-    blocking layer is hash-agnostic by construction (it sees only a
-    64-bit column), so adding a second LSH family costs one map stage
-    and zero new join code. Ensemble rationale in codecs.dhash64."""
-    dh = with_dhash(corpus)
-    return phash_neardup_blocked(
-        dh.select("image_id", F.col("dhash").alias("phash")),
-        max_hamming=max_hamming,
-    )
-
-
 def image_neardup_keepers(
     corpus: DataFrame,
     max_hamming: int = 4,
@@ -274,20 +260,18 @@ def image_neardup_keepers(
     runs without touching payload bytes."""
     from webcollector_spark.operators.components import dedup_clusters
 
-    dhash_src = (
-        features.select("image_id", F.col("dhash").alias("phash"))
+    dhash = (
+        features.select("image_id", "dhash")
         if features is not None
-        else None
-    )
-    dhash_pairs = (
-        phash_neardup_blocked(dhash_src, max_hamming=max_hamming)
-        if dhash_src is not None
-        else dhash_neardup_blocked(corpus, max_hamming=max_hamming)
+        else with_dhash(corpus)
     )
     pairs = (
-        phash_neardup_blocked(corpus, max_hamming=max_hamming)
+        blocked_pairs(corpus, "image_id", "phash", _IMG_PAIR, max_hamming)
         .select("img_a", "img_b")
-        .unionByName(dhash_pairs.select("img_a", "img_b"))
+        .unionByName(
+            blocked_pairs(dhash, "image_id", "dhash", _IMG_PAIR, max_hamming)
+            .select("img_a", "img_b")
+        )
         .distinct()
     )
     return dedup_clusters(
@@ -297,246 +281,6 @@ def image_neardup_keepers(
         src="img_a",
         dst="img_b",
     )
-
-
-def phash_neardup_pairs(corpus: DataFrame, max_hamming: int = 12) -> DataFrame:
-    """Exact perceptual near-dup: pairs with hamming(phash) <= r.
-    All-JVM (bit_count/xor in whole-stage codegen). O(n^2) — the
-    baseline; see `phash_neardup_banded` for the scale path."""
-    a = corpus.select(
-        F.col("image_id").alias("img_a"), F.col("phash").alias("ph_a")
-    )
-    b = corpus.select(
-        F.col("image_id").alias("img_b"), F.col("phash").alias("ph_b")
-    )
-    ham = F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b")))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("img_a") < F.col("img_b"))
-        .withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("img_a", "img_b", "hamming")
-    )
-
-
-def phash_neardup_banded(
-    corpus: DataFrame, max_hamming: int = 12, bands: int | None = None
-) -> DataFrame:
-    """Scale path: split the 64-bit hash into (max_hamming+1) bands —
-    pigeonhole guarantees two hashes within hamming r agree exactly on
-    >= 1 band — bucket-join per band, then verify candidates exactly.
-    Same result set as `phash_neardup_pairs`, O(n * bucket) work."""
-    bands = bands or (max_hamming + 1)
-    width = 64 // bands
-
-    def banded(df: DataFrame, id_alias: str, ph_alias: str) -> DataFrame:
-        out = df.select(
-            F.col("image_id").alias(id_alias), F.col("phash").alias(ph_alias)
-        )
-        parts = F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.shiftrightunsigned(F.col(ph_alias), i * width)
-                    .bitwiseAND(F.lit((1 << width) - 1))
-                    .alias("chunk"),
-                )
-                for i in range(bands)
-            ]
-        )
-        return out.select(id_alias, ph_alias, F.explode(parts).alias("bc")).select(
-            id_alias, ph_alias, F.col("bc.band").alias("band"), F.col("bc.chunk").alias("chunk")
-        )
-
-    a = banded(corpus, "img_a", "ph_a")
-    b = banded(corpus, "img_b", "ph_b")
-    ham = F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b")))
-    return (
-        a.join(b, ["band", "chunk"])
-        .filter(F.col("img_a") < F.col("img_b"))
-        .select("img_a", "img_b", ham.alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def _block_combo_keys(
-    df: DataFrame,
-    id_alias: str,
-    ph_alias: str,
-    max_hamming: int = 4,
-    m: int = 8,
-    id_col: str = "image_id",
-    ph_col: str = "phash",
-) -> DataFrame:
-    """Manku-style block-combination keys for hamming <= k search over
-    a 64-bit hash (Manku, Jain & Sarma, WWW'07 §3 — the permuted-table
-    construction, expressed as explode+join instead of sorted probes).
-
-    WHY not simple (k+1)-banding at scale: with k=4 a band is only
-    64//5 = 12 bits -> 4096 buckets per band. Hashes are uniform, so at
-    n rows every bucket holds ~n/4096 rows and the bucket self-join is
-    quadratic-within-bucket: measured at n=2M synthetic phashes the
-    banded join generates ~5 BILLION candidate pairs. Block-combination
-    keys fix the geometry: split into m=8 blocks of 8 bits; hamming <= k
-    corrupts at most k blocks, so >= m-k blocks are intact and the two
-    hashes agree on SOME (m-k)-block combination. Keying every
-    C(m, m-k) combination (70 for k=4) makes a bucket key m-k blocks =
-    32 bits wide -> random collisions need 32 matching bits
-    (~n/2^32 per bucket, near-singleton even at 10^9 rows). Work is
-    O(n * C(m, m-k)) map-side fan-out + true-pair verification, never
-    quadratic. Tradeoff knob: larger m widens coverage per key but
-    explodes C(m, m-k); m=8/k<=4 is the classic 64-bit operating point.
-    """
-    t = m - max_hamming
-    if t < 1:
-        raise ValueError(f"need m > max_hamming (got m={m}, k={max_hamming})")
-    width = 64 // m
-    mask = (1 << width) - 1
-
-    def block(i: int):
-        return F.shiftrightunsigned(F.col(ph_alias), i * width).bitwiseAND(
-            F.lit(mask)
-        )
-
-    keys = []
-    for combo_id, combo in enumerate(_block_combos(m, t)):
-        bkey = F.lit(0).cast("long")
-        for i in combo:
-            bkey = F.shiftleft(bkey, width).bitwiseOR(block(i))
-        keys.append(
-            F.struct(F.lit(combo_id).alias("combo"), bkey.alias("bkey"))
-        )
-    out = df.select(F.col(id_col).alias(id_alias), F.col(ph_col).alias(ph_alias))
-    return out.select(
-        id_alias, ph_alias, F.explode(F.array(*keys)).alias("cb")
-    ).select(id_alias, ph_alias, F.col("cb.combo").alias("combo"), F.col("cb.bkey").alias("bkey"))
-
-
-def _block_combos(m: int, t: int) -> list[tuple[int, ...]]:
-    """Canonical enumeration order of the C(m, t) block combinations —
-    shared by the key emitter and the minimal-combo dedup LUT so combo
-    ids agree by construction."""
-    from itertools import combinations
-
-    return list(combinations(range(m), t))
-
-
-def _min_combo_lut(m: int, t: int) -> list[int]:
-    """min_combo_lut[corrupt_bitmap] = id of the FIRST (m,t)-block
-    combination containing no corrupted block, -1 when fewer than t
-    blocks are intact (unreachable for joined pairs, which agreed on
-    some combo's full bkey). Property-tested against a brute-force
-    oracle in tests/test_property.py."""
-    combos = _block_combos(m, t)
-    return [
-        next(
-            (
-                ci
-                for ci, c in enumerate(combos)
-                if all(not (cmask >> blk_i) & 1 for blk_i in c)
-            ),
-            -1,
-        )
-        for cmask in range(1 << m)
-    ]
-
-
-def _min_intact_combo(xor, m: int, t: int):
-    """Column expression: id of the FIRST (m,t)-block combination fully
-    intact between two hashes whose xor is `xor` — the canonical combo a
-    candidate pair is allowed to survive on, so each pair is emitted
-    exactly once without a `.distinct()` shuffle. Derives the
-    corrupted-block bitmap from the xor, then looks the minimal intact
-    combo up in a 2^m-entry literal array."""
-    width = 64 // m
-    blkmask = (1 << width) - 1
-    corrupt = F.lit(0)
-    for i in range(m):
-        blk = F.shiftrightunsigned(xor, i * width).bitwiseAND(F.lit(blkmask))
-        corrupt = corrupt.bitwiseOR(
-            F.when(blk != 0, F.lit(1 << i)).otherwise(F.lit(0))
-        )
-    return F.element_at(
-        F.array(*[F.lit(v) for v in _min_combo_lut(m, t)]),
-        corrupt.cast("int") + F.lit(1),
-    )
-
-
-def phash_neardup_blocked(
-    corpus: DataFrame, max_hamming: int = 4, m: int = 8
-) -> DataFrame:
-    """Web-scale hamming <= k near-dup pairs via block-combination keys
-    (see _block_combo_keys for why plain banding collapses at n >= 10^6).
-    Same result set as the exact O(n^2) formulation — completeness by
-    pigeonhole on intact blocks.
-
-    Candidate work is keyed on DISTINCT hashes, not rows: a crawl's
-    exact-duplicate multiplicity is Zipfian (the same logo/spacer/stock
-    image recurs millions of times), and every row of an exact-dup
-    cluster shares all C(m, m-k) combination keys, so a row-keyed join
-    does C(cluster)^2 x 70 candidate work for pairs that need none.
-    Instead: (1) hamming-0 pairs come from a plain self-equi-join on
-    phash — true pairs only, output-bound (a Zipfian mega-cluster's
-    C(g,2) output is the pair-list CONTRACT, not join waste; its
-    oversized shuffle partition is the shape AQE skew-split handles,
-    and consumers that only need connectivity — dedup components,
-    per-image conflict flags — should aggregate per cluster instead of
-    enumerating pairs); (2) the blocked join runs
-    over the distinct-hash table (candidates O(distinct^2 within
-    32-bit buckets), each surviving hash pair emitted exactly once via
-    the minimal-intact-combo filter — no `.distinct()` shuffle); (3)
-    members rejoin by hash on both sides. Measured on the 2M-row
-    conflict bench (4-row planted clusters): candidate volume 210M
-    row-keyed -> 2,034 distinct-keyed, wall 188.7 s -> 59.6 s
-    (BENCH.md §4f); at real Zipfian multiplicity the gap widens."""
-    t = m - max_hamming
-    mem = corpus.select("image_id", "phash")
-    # (1) exact duplicates: true pairs, no candidate stage at all
-    within = (
-        mem.select(F.col("image_id").alias("img_a"), "phash")
-        .join(mem.select(F.col("image_id").alias("img_b"), "phash"), "phash")
-        .filter(F.col("img_a") < F.col("img_b"))
-        .select("img_a", "img_b", F.lit(0).cast("int").alias("hamming"))
-    )
-    if max_hamming == 0:
-        return within
-    # (2) hamming 1..k over distinct hashes only
-    dh = corpus.select(F.col("phash").alias("ph")).distinct()
-    a = _block_combo_keys(dh, "_a", "ph_a", max_hamming, m, "ph", "ph").drop("_a")
-    b = _block_combo_keys(dh, "_b", "ph_b", max_hamming, m, "ph", "ph").drop("_b")
-    xor = F.col("ph_a").bitwiseXOR(F.col("ph_b"))
-    ham = F.bit_count(xor)
-    # hint the self-join: the optimizer sizes the join by the
-    # pre-Generate distinct-hash table (small) and would BROADCAST the
-    # x70-exploded side — a single-threaded 35M-row driver build at 2M
-    # input rows (measured: the broadcast build alone took 83 s). Keys
-    # are hash-uniform, so per-partition SHJ builds are balanced.
-    hash_pairs = (
-        a.hint("shuffle_hash").join(b, ["combo", "bkey"])
-        .filter(F.col("ph_a") < F.col("ph_b"))
-        .filter(ham <= max_hamming)
-        .filter(F.col("combo") == _min_intact_combo(xor, m, t))
-        .select("ph_a", "ph_b", ham.cast("int").alias("hamming"))
-    )
-    # (3) expand hash pairs back to image pairs (shuffle joins on the
-    # hash — pair-keyed, nothing O(n) broadcast)
-    between = (
-        hash_pairs.join(
-            mem.select(F.col("image_id").alias("ia"), F.col("phash").alias("ph_a")),
-            "ph_a",
-        )
-        .join(
-            mem.select(F.col("image_id").alias("ib"), F.col("phash").alias("ph_b")),
-            "ph_b",
-        )
-        .select(
-            F.least("ia", "ib").alias("img_a"),
-            F.greatest("ia", "ib").alias("img_b"),
-            "hamming",
-        )
-    )
-    return within.unionByName(between)
 
 
 SHARPNESS_PARTIALS_SCHEMA = T.StructType(

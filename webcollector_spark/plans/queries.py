@@ -714,6 +714,10 @@ def q_ngram_overlap(spark, sf):
 # 60-bit halves via double hashing h_i = h1 + i*h2 (Kirsch-Mitzenmacher), so
 # the hot path is a single JVM-side md5 + integer arithmetic, not 4 string
 # hashes. Docs with <2 tokens have no shingles -> NULL signature (LEFT JOIN).
+# Each step is written once per engine: the shingle array (`_shingle_arrays`,
+# `_SHINGLE_SQL`), the signature (`_minhash_sig`, `_SIG_SQL`), the band
+# collision join (`_band_pairs`, `_BANDS_SQL` + `_CAND_SQL`) and the exact
+# Jaccard verify (`_jaccard`, `_COMMON_SQL`).
 _SHINGLE_SQL = r"""
   SELECT doc_id, unnest(list_distinct(
            [t[i] || ' ' || t[i+1] for i in range(1, len(t))])) AS w
@@ -722,18 +726,39 @@ _SHINGLE_SQL = r"""
 """
 
 _SIG_SQL = f"""
-  SELECT doc_id,
-         concat_ws('_', CAST(min(h1) AS VARCHAR),
-                        CAST(min(h1 + h2) AS VARCHAR)) AS band0,
-         concat_ws('_', CAST(min(h1 + 2 * h2) AS VARCHAR),
-                        CAST(min(h1 + 3 * h2) AS VARCHAR)) AS band1
+  SELECT doc_id, m0, m1, m2, m3,
+         concat_ws('_', CAST(m0 AS VARCHAR), CAST(m1 AS VARCHAR)) AS band0,
+         concat_ws('_', CAST(m2 AS VARCHAR), CAST(m3 AS VARCHAR)) AS band1
   FROM (
-    SELECT doc_id,
-           CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h1,
-           CAST(('0x' || substr(md5(w), 17, 15)) AS BIGINT) | 1 AS h2
-    FROM ({_SHINGLE_SQL}))
-  GROUP BY doc_id
+    SELECT doc_id, min(h1) AS m0, min(h1 + h2) AS m1,
+           min(h1 + 2 * h2) AS m2, min(h1 + 3 * h2) AS m3
+    FROM (
+      SELECT doc_id,
+             CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h1,
+             CAST(('0x' || substr(md5(w), 17, 15)) AS BIGINT) | 1 AS h2
+      FROM ({_SHINGLE_SQL}))
+    GROUP BY doc_id)
 """
+
+# the two bands of `sig` as rows, and the distinct doc pairs colliding on one
+_BANDS_SQL = """
+      SELECT doc_id, 0 AS bi, band0 AS b FROM sig
+      UNION ALL SELECT doc_id, 1 AS bi, band1 AS b FROM sig"""
+
+_CAND_SQL = """
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM bands a JOIN bands b
+        ON a.bi = b.bi AND a.b = b.b AND a.doc_id < b.doc_id"""
+
+# exact word-bigram Jaccard terms for the `cand` pairs: shingle count per
+# doc (`sizes`) and shared shingles per pair (`common`)
+_COMMON_SQL = f"""sh AS ({_SHINGLE_SQL}),
+    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+    common AS (
+      SELECT c.doc_a, c.doc_b, count(*) AS c
+      FROM cand c JOIN sh a ON a.doc_id = c.doc_a
+                  JOIN sh b ON b.doc_id = c.doc_b AND b.w = a.w
+      GROUP BY c.doc_a, c.doc_b)"""
 
 _MINHASH_BAND_SQL = f"""
   SELECT d.doc_id, s.band0, s.band1
@@ -741,36 +766,17 @@ _MINHASH_BAND_SQL = f"""
 """
 
 
-def _shingles(spark, sf):
-    """Exploded distinct word-bigram shingles: (doc_id, w)."""
-    docs = _t(spark, sf, "documents")
-    toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), F.lit(0))
-    t = F.col("t")
-    sh = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - 1),
-            lambda i: F.concat_ws(" ", F.element_at(t, i), F.element_at(t, i + 1)),
-        )
-    )
-    return (
-        docs.select("doc_id", toks.alias("t"))
-        .filter(F.size("t") >= 2)
-        .select("doc_id", F.explode(sh).alias("w"))
-    )
-
-
 def _shingle_arrays(spark, sf):
-    """Per-doc distinct shingle ARRAYS + sizes — the map-only twin of
-    `_shingles` (same array, kept whole instead of exploded; zero
-    shuffle to build). Candidate verification joins THIS table and
-    computes |A ∩ B| via `size(array_intersect(...))` in-expression,
-    which replaces the exploded-row double sort-merge join + groupBy
-    over candidate×shingle rows that dominated the r3 bench (VERDICT r3
-    finding 1: 28.3 s of the 73.9 s suite, unstable 6.7-76.7 s). Array
-    size per doc is bounded by doc length, so the join payload is
-    O(candidates × doc_len) — the same bytes the exploded join moved,
-    in two narrow joins and a map stage instead of two SMJs + a wide
-    aggregate."""
+    """Per-doc distinct word-bigram shingle ARRAYS + sizes: (doc_id, ws,
+    n), map-only (zero shuffle to build). Candidate verification joins
+    THIS table and computes |A ∩ B| via `size(array_intersect(...))`
+    in-expression, which replaces the exploded-row double sort-merge
+    join + groupBy over candidate×shingle rows that dominated the r3
+    bench (VERDICT r3 finding 1: 28.3 s of the 73.9 s suite, unstable
+    6.7-76.7 s). Array size per doc is bounded by doc length, so the
+    join payload is O(candidates × doc_len) — the same bytes the
+    exploded join moved, in two narrow joins and a map stage instead of
+    two SMJs + a wide aggregate."""
     docs = _t(spark, sf, "documents")
     toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), F.lit(0))
     t = F.col("t")
@@ -788,8 +794,14 @@ def _shingle_arrays(spark, sf):
     )
 
 
+def _shingles(spark, sf):
+    """Exploded distinct word-bigram shingles: (doc_id, w)."""
+    return _shingle_arrays(spark, sf).select("doc_id", F.explode("ws").alias("w"))
+
+
 def _minhash_sig(spark, sf):
-    """Per-doc 4-permutation minhash signature folded into 2 LSH bands."""
+    """Per-doc 4-permutation minhash signature: (doc_id, m0..m3, band0,
+    band1), the four minima folded pairwise into 2 LSH bands."""
     h = F.md5("w")
     hashed = _shingles(spark, sf).select(
         "doc_id",
@@ -798,12 +810,60 @@ def _minhash_sig(spark, sf):
             "h2"
         ),
     )
-    mh = [
-        F.min(F.col("h1") + i * F.col("h2")).cast("string") for i in range(4)
-    ]
+    m = [F.col(f"m{i}") for i in range(4)]
     return hashed.groupBy("doc_id").agg(
-        F.concat_ws("_", mh[0], mh[1]).alias("band0"),
-        F.concat_ws("_", mh[2], mh[3]).alias("band1"),
+        *[F.min(F.col("h1") + i * F.col("h2")).alias(f"m{i}") for i in range(4)]
+    ).select(
+        "doc_id",
+        *m,
+        F.concat_ws("_", m[0].cast("string"), m[1].cast("string")).alias("band0"),
+        F.concat_ws("_", m[2].cast("string"), m[3].cast("string")).alias("band1"),
+    )
+
+
+def _band_pairs(sig, a="doc_a", b="doc_b", split=None):
+    """Distinct doc pairs (a, b) whose signatures collide on an LSH
+    band. Self form: every pair with a < b. With `split`, a predicate
+    over doc_id: a from the docs it holds for, b from the others — only
+    that quadrant is ever generated."""
+    bands = sig.select(
+        "doc_id", F.lit(0).alias("bi"), F.col("band0").alias("band")
+    ).unionByName(
+        sig.select("doc_id", F.lit(1).alias("bi"), F.col("band1").alias("band"))
+    )
+    left, right = (bands, bands) if split is None else (
+        bands.filter(split), bands.filter(~split)
+    )
+    pairs = left.select("bi", "band", F.col("doc_id").alias(a)).join(
+        right.select("bi", "band", F.col("doc_id").alias(b)), ["bi", "band"]
+    )
+    if split is None:
+        pairs = pairs.filter(F.col(a) < F.col(b))
+    return pairs.select(a, b).distinct()
+
+
+def _jaccard(spark, sf, pairs, a="doc_a", b="doc_b"):
+    """`pairs` plus `common` (|A ∩ B|) and the unrounded exact
+    word-bigram `jaccard` of each (a, b) doc pair (VERDICT r3 item 3):
+    two narrow joins attach each side's distinct shingle array, and
+    |A ∩ B| is one size(array_intersect()) expression — no join ever
+    touches the exploded shingle table and the wide candidate×shingle
+    aggregate is gone. shuffle_hash keeps the O(docs) array side out of
+    a broadcast (the planner sizes it by the pre-transform documents
+    scan) without sorting it."""
+    arr = _shingle_arrays(spark, sf)
+    left = arr.select(
+        F.col("doc_id").alias(a), F.col("ws").alias("ws_a"), F.col("n").alias("na")
+    ).hint("shuffle_hash")
+    right = arr.select(
+        F.col("doc_id").alias(b), F.col("ws").alias("ws_b"), F.col("n").alias("nb")
+    ).hint("shuffle_hash")
+    c = F.col("common")
+    return (
+        pairs.join(left, a)
+        .join(right, b)
+        .withColumn("common", F.size(F.array_intersect("ws_a", "ws_b")))
+        .withColumn("jaccard", c.cast("double") / (F.col("na") + F.col("nb") - c))
     )
 
 
@@ -819,33 +879,12 @@ def q_minhash_band(spark, sf):
     "lsh_candidate_pairs",
     f"""
     WITH sig AS ({_SIG_SQL}),
-    bands AS (
-      SELECT doc_id, 0 AS bi, band0 AS b FROM sig
-      UNION ALL
-      SELECT doc_id, 1 AS bi, band1 AS b FROM sig)
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.bi = b.bi AND a.b = b.b AND a.doc_id < b.doc_id
+    bands AS ({_BANDS_SQL})
+    {_CAND_SQL}
     """,
 )
 def q_lsh_pairs(spark, sf):
-    sig = _minhash_sig(spark, sf)
-    bands = sig.select(
-        "doc_id", F.lit(0).alias("bi"), F.col("band0").alias("b")
-    ).unionByName(
-        sig.select("doc_id", F.lit(1).alias("bi"), F.col("band1").alias("b"))
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.bi") == F.col("b.bi"))
-            & (F.col("a.b") == F.col("b.b"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    return _band_pairs(_minhash_sig(spark, sf))
 
 
 # LSH-bounded exact Jaccard (VERDICT r2 item 8): the banded-minhash
@@ -859,20 +898,9 @@ def q_lsh_pairs(spark, sf):
     "jaccard_lsh_verified",
     f"""
     WITH sig AS ({_SIG_SQL}),
-    bands AS (
-      SELECT doc_id, 0 AS bi, band0 AS b FROM sig
-      UNION ALL SELECT doc_id, 1 AS bi, band1 AS b FROM sig),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.bi = b.bi AND a.b = b.b AND a.doc_id < b.doc_id),
-    sh AS ({_SHINGLE_SQL}),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS c
-      FROM cand c JOIN sh a ON a.doc_id = c.doc_a
-                  JOIN sh b ON b.doc_id = c.doc_b AND b.w = a.w
-      GROUP BY c.doc_a, c.doc_b)
+    bands AS ({_BANDS_SQL}),
+    cand AS ({_CAND_SQL}),
+    {_COMMON_SQL}
     SELECT m.doc_a, m.doc_b,
            round(CAST(m.c AS DOUBLE) / (sa.n + sb.n - m.c), 4) AS jaccard
     FROM common m JOIN sizes sa ON sa.doc_id = m.doc_a
@@ -881,32 +909,10 @@ def q_lsh_pairs(spark, sf):
     """,
 )
 def q_jaccard_lsh_verified(spark, sf):
-    cands = q_lsh_pairs(spark, sf)
-    # exact verify via per-doc shingle ARRAYS (VERDICT r3 item 3): two
-    # narrow joins attach each candidate's sorted distinct shingle set,
-    # |A ∩ B| is one size(array_intersect()) expression — no join ever
-    # touches the exploded shingle table and the wide candidate×shingle
-    # aggregate is gone. shuffle_hash keeps the O(docs) array side out
-    # of a broadcast (the planner sizes it by the pre-transform
-    # documents scan) without sorting it.
-    arr = _shingle_arrays(spark, sf)
-    a = arr.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("ws").alias("ws_a"),
-        F.col("n").alias("na"),
-    ).hint("shuffle_hash")
-    b = arr.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("ws").alias("ws_b"),
-        F.col("n").alias("nb"),
-    ).hint("shuffle_hash")
-    c = F.size(F.array_intersect(F.col("ws_a"), F.col("ws_b")))
-    jac = c.cast("double") / (F.col("na") + F.col("nb") - c)
     return (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .filter(jac >= 0.5)
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
+        _jaccard(spark, sf, q_lsh_pairs(spark, sf))
+        .filter(F.col("jaccard") >= 0.5)
+        .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
     )
 
 
@@ -921,26 +927,9 @@ def q_jaccard_lsh_verified(spark, sf):
 @register(
     "minhash_jaccard_est",
     f"""
-    WITH sh AS ({_SHINGLE_SQL}),
-    h AS (SELECT doc_id,
-            CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h1,
-            CAST(('0x' || substr(md5(w), 17, 15)) AS BIGINT) | 1 AS h2
-          FROM sh),
-    sig AS (SELECT doc_id, min(h1) AS m0, min(h1 + h2) AS m1,
-                   min(h1 + 2 * h2) AS m2, min(h1 + 3 * h2) AS m3
-            FROM h GROUP BY doc_id),
-    bands AS (
-      SELECT doc_id, 0 AS bi,
-             concat_ws('_', CAST(m0 AS VARCHAR), CAST(m1 AS VARCHAR)) AS b
-      FROM sig
-      UNION ALL
-      SELECT doc_id, 1 AS bi,
-             concat_ws('_', CAST(m2 AS VARCHAR), CAST(m3 AS VARCHAR)) AS b
-      FROM sig),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.bi = b.bi AND a.b = b.b AND a.doc_id < b.doc_id),
+    WITH sig AS ({_SIG_SQL}),
+    bands AS ({_BANDS_SQL}),
+    cand AS ({_CAND_SQL}),
     agree AS (
       SELECT c.doc_a, c.doc_b,
              (CASE WHEN x.m0 = y.m0 THEN 1 ELSE 0 END
@@ -949,12 +938,7 @@ def q_jaccard_lsh_verified(spark, sf):
               + CASE WHEN x.m3 = y.m3 THEN 1 ELSE 0 END) AS n_agree
       FROM cand c JOIN sig x ON x.doc_id = c.doc_a
                   JOIN sig y ON y.doc_id = c.doc_b),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS c
-      FROM cand c JOIN sh a ON a.doc_id = c.doc_a
-                  JOIN sh b ON b.doc_id = c.doc_b AND b.w = a.w
-      GROUP BY c.doc_a, c.doc_b)
+    {_COMMON_SQL}
     SELECT g.doc_a, g.doc_b,
            round(g.n_agree / 4.0, 4) AS jaccard_est,
            round(CAST(m.c AS DOUBLE) / (sa.n + sb.n - m.c), 4) AS jaccard_exact
@@ -964,39 +948,7 @@ def q_jaccard_lsh_verified(spark, sf):
     """,
 )
 def q_minhash_jaccard_est(spark, sf):
-    sh = _shingles(spark, sf)
-    h = sh.select(
-        "doc_id",
-        F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long").alias("h1"),
-        F.expr(
-            "CAST(conv(substring(md5(w), 17, 15), 16, 10) AS BIGINT) | 1"
-        ).alias("h2"),
-    )
-    sig = h.groupBy("doc_id").agg(
-        *[F.min(F.col("h1") + i * F.col("h2")).alias(f"m{i}") for i in range(4)]
-    )
-    bands = sig.select(
-        "doc_id",
-        F.lit(0).alias("bi"),
-        F.concat_ws(
-            "_", F.col("m0").cast("string"), F.col("m1").cast("string")
-        ).alias("b"),
-    ).unionByName(
-        sig.select(
-            "doc_id",
-            F.lit(1).alias("bi"),
-            F.concat_ws(
-                "_", F.col("m2").cast("string"), F.col("m3").cast("string")
-            ).alias("b"),
-        )
-    )
-    cand = (
-        bands.select("bi", "b", F.col("doc_id").alias("doc_a"))
-        .join(bands.select("bi", "b", F.col("doc_id").alias("doc_b")), ["bi", "b"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    sig = _minhash_sig(spark, sf)
     x = sig.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"m{i}").alias(f"x{i}") for i in range(4)],
@@ -1010,36 +962,20 @@ def q_minhash_jaccard_est(spark, sf):
         for i in range(4)
     )
     agree = (
-        cand.join(x, "doc_a").join(y, "doc_b")
+        _band_pairs(sig).join(x, "doc_a").join(y, "doc_b")
         .select("doc_a", "doc_b", n_agree.alias("n_agree"))
     )
-    # exact column via per-doc shingle arrays, same rewrite as
-    # jaccard_lsh_verified (VERDICT r3 item 3): no exploded-shingle
-    # join, no candidate×shingle aggregate. The c >= 1 filter keeps the
-    # oracle's inner-join-on-common semantics (a candidate pair sharing
-    # zero shingles drops from the output there too).
-    arr = _shingle_arrays(spark, sf)
-    aw = arr.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("ws").alias("ws_a"),
-        F.col("n").alias("na"),
-    ).hint("shuffle_hash")
-    bw = arr.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("ws").alias("ws_b"),
-        F.col("n").alias("nb"),
-    ).hint("shuffle_hash")
-    c = F.size(F.array_intersect(F.col("ws_a"), F.col("ws_b")))
-    jac = c.cast("double") / (F.col("na") + F.col("nb") - c)
+    # the common >= 1 filter keeps the oracle's inner-join-on-common
+    # semantics (a candidate pair sharing zero shingles drops from the
+    # output there too)
     return (
-        agree.join(aw, "doc_a")
-        .join(bw, "doc_b")
-        .filter(c >= 1)
+        _jaccard(spark, sf, agree)
+        .filter(F.col("common") >= 1)
         .select(
             "doc_a",
             "doc_b",
             F.round(F.col("n_agree") / 4.0, 4).alias("jaccard_est"),
-            F.round(jac, 4).alias("jaccard_exact"),
+            F.round("jaccard", 4).alias("jaccard_exact"),
         )
     )
 
@@ -1053,13 +989,8 @@ def q_minhash_jaccard_est(spark, sf):
     "dedup_cluster_keepers",
     f"""
     WITH RECURSIVE sig AS ({_SIG_SQL}),
-    bands AS (
-      SELECT doc_id, 0 AS bi, band0 AS b FROM sig
-      UNION ALL SELECT doc_id, 1 AS bi, band1 AS b FROM sig),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.bi = b.bi AND a.b = b.b AND a.doc_id < b.doc_id),
+    bands AS ({_BANDS_SQL}),
+    pairs AS ({_CAND_SQL}),
     edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
               UNION SELECT doc_b, doc_a FROM pairs),
     reach(node, r) AS (
@@ -1080,33 +1011,19 @@ def q_minhash_jaccard_est(spark, sf):
 def q_dedup_cluster_keepers(spark, sf):
     from webcollector_spark.operators.components import dedup_clusters
 
-    sig = _minhash_sig(spark, sf)
-    bands = sig.select(
-        "doc_id", F.lit(0).alias("bi"), F.col("band0").alias("b")
-    ).unionByName(
-        sig.select("doc_id", F.lit(1).alias("bi"), F.col("band1").alias("b"))
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.bi") == F.col("b.bi"))
-            & (F.col("a.b") == F.col("b.b"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    pairs = _band_pairs(_minhash_sig(spark, sf))
     docs = _t(spark, sf, "documents").select("doc_id")
     return dedup_clusters(pairs, docs)
 
 
-# SimHash (16-bit here; 64-bit in production) — bit votes over word hashes.
-# Identical arithmetic on both engines: hv = first 8 md5 hex digits as int,
-# bit j extracted via floor(hv / 2^j) % 2 (no engine-specific shift ops).
-_SIMHASH_SQL = r"""
+# SimHash — bit votes over word hashes: 16 bits for the `simhash` row, 32
+# for the banded near-dup below (64-bit in production). Identical
+# arithmetic on both engines: hv = first 8 md5 hex digits as int, bit j
+# extracted via floor(hv / 2^j) % 2 (no engine-specific shift ops).
+def _simhash_sql(bits: int) -> str:
+    return f"""
     WITH words AS (
-      SELECT doc_id, unnest(list_distinct(regexp_extract_all(text, '\S+'))) AS w
+      SELECT doc_id, unnest(list_distinct(regexp_extract_all(text, '\\S+'))) AS w
       FROM documents),
     h AS (SELECT doc_id, CAST(('0x' || substr(md5(w), 1, 8)) AS BIGINT) AS hv
           FROM words),
@@ -1114,7 +1031,7 @@ _SIMHASH_SQL = r"""
       SELECT doc_id, j,
              sum(CASE WHEN CAST(floor(hv / pow(2, j)) AS BIGINT) % 2 = 1
                       THEN 1 ELSE -1 END) AS s
-      FROM h, range(16) t(j) GROUP BY doc_id, j)
+      FROM h, range({bits}) t(j) GROUP BY doc_id, j)
     SELECT doc_id,
            CAST(sum(CASE WHEN s > 0 THEN CAST(pow(2, j) AS BIGINT) ELSE 0 END)
                 AS BIGINT) AS simhash
@@ -1122,8 +1039,9 @@ _SIMHASH_SQL = r"""
     """
 
 
-@register("simhash", _SIMHASH_SQL)
-def q_simhash(spark, sf):
+def _simhash(spark, sf, bits: int):
+    """(doc_id, simhash): the `bits`-bit SimHash of each doc's distinct
+    words, the Spark twin of `_simhash_sql(bits)`."""
     docs = _t(spark, sf, "documents")
     words = docs.select(
         "doc_id",
@@ -1137,11 +1055,11 @@ def q_simhash(spark, sf):
         "doc_id",
         F.conv(F.substring(F.md5("w"), 1, 8), 16, 10).cast("long").alias("hv"),
     )
-    bits = h.select(
-        "doc_id", "hv", F.explode(F.sequence(F.lit(0), F.lit(15))).alias("j")
+    per_bit = h.select(
+        "doc_id", "hv", F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("j")
     )
     votes = (
-        bits.withColumn(
+        per_bit.withColumn(
             "vote",
             F.when(
                 (F.floor(F.col("hv") / F.pow(F.lit(2.0), F.col("j"))).cast("long") % 2)
@@ -1161,41 +1079,28 @@ def q_simhash(spark, sf):
     )
 
 
+@register("simhash", _simhash_sql(16))
+def q_simhash(spark, sf):
+    return _simhash(spark, sf, 16)
+
+
 # Banded simhash near-dup (Manku et al. 2007, the production text
-# near-dup shape alongside phash_neardup_banded for images): split the
-# signature into 4 bands, candidates share >= 1 band, exact Hamming
-# verifies candidates only. Pigeonhole EXACTNESS: hamming <= 2 flips at
-# most 2 of the 4 bands, so >= 2 bands stay equal and every qualifying
-# pair is guaranteed a candidate — banding loses nothing at threshold 2.
-# Scale shape: the band join shuffles (band_value, doc_id) pairs and
-# fans out only on collisions; no all-pairs stage (the image twin keeps
-# an O(n^2) exact baseline for recall measurement; text at web scale
-# never runs one). Uses a 32-bit signature (4 x 8-bit bands; 64-bit in
-# production): the registry's 16-bit `simhash` cannot discriminate a
-# 5k-doc corpus — at sf0.1 it put 48% of ALL pairs within hamming 2
-# (6.1M rows), measured before this widening.
-_SIMHASH32_SQL = r"""
-    WITH words AS (
-      SELECT doc_id, unnest(list_distinct(regexp_extract_all(text, '\S+'))) AS w
-      FROM documents),
-    h AS (SELECT doc_id, CAST(('0x' || substr(md5(w), 1, 8)) AS BIGINT) AS hv
-          FROM words),
-    votes AS (
-      SELECT doc_id, j,
-             sum(CASE WHEN CAST(floor(hv / pow(2, j)) AS BIGINT) % 2 = 1
-                      THEN 1 ELSE -1 END) AS s
-      FROM h, range(32) t(j) GROUP BY doc_id, j)
-    SELECT doc_id,
-           CAST(sum(CASE WHEN s > 0 THEN CAST(pow(2, j) AS BIGINT) ELSE 0 END)
-                AS BIGINT) AS simhash
-    FROM votes GROUP BY doc_id
-    """
-
-
+# near-dup shape, the same blocked pairing the image hashes use): split
+# the signature into 4 blocks of 8 bits; hamming <= 2 flips at most 2
+# of them, so every qualifying pair agrees on some 2-block key and is
+# guaranteed a candidate — blocking loses nothing at threshold 2 — and
+# exact Hamming verifies candidates only. The oracle states the same
+# pigeonhole as one-band collisions. Scale shape: the key join shuffles
+# (key, signature) pairs and fans out only on collisions; no all-pairs
+# stage (the image twin keeps an O(n^2) exact baseline for recall
+# measurement; text at web scale never runs one). Uses a 32-bit
+# signature (64-bit in production): the registry's 16-bit `simhash`
+# cannot discriminate a 5k-doc corpus — at sf0.1 it put 48% of ALL
+# pairs within hamming 2 (6.1M rows), measured before this widening.
 @register(
     "simhash_neardup_banded",
     f"""
-    WITH sh AS ({_SIMHASH32_SQL}),
+    WITH sh AS ({_simhash_sql(32)}),
     bands AS (
       SELECT doc_id, simhash, bi,
              CAST(floor(simhash / pow(2, bi * 8)) AS BIGINT) % 256 AS bv
@@ -1214,94 +1119,31 @@ _SIMHASH32_SQL = r"""
     """,
 )
 def q_simhash_neardup_banded(spark, sf):
-    docs = _t(spark, sf, "documents")
-    words = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), F.lit(0))
-            )
-        ).alias("w"),
-    )
-    h = words.select(
-        "doc_id",
-        F.conv(F.substring(F.md5("w"), 1, 8), 16, 10).cast("long").alias("hv"),
-    )
-    bits = h.select(
-        "doc_id", "hv", F.explode(F.sequence(F.lit(0), F.lit(31))).alias("j")
-    )
-    votes = (
-        bits.withColumn(
-            "vote",
-            F.when(
-                (F.floor(F.col("hv") / F.pow(F.lit(2.0), F.col("j"))).cast("long") % 2)
-                == 1,
-                1,
-            ).otherwise(-1),
-        )
-        .groupBy("doc_id", "j")
-        .agg(F.sum("vote").alias("s"))
-    )
-    sh = votes.groupBy("doc_id").agg(
-        F.sum(
-            F.when(F.col("s") > 0, F.pow(F.lit(2.0), F.col("j")).cast("long")).otherwise(
-                0
-            )
-        ).alias("simhash")
-    )
+    from webcollector_spark.operators.pairs import hash_pairs
+
+    sh = _simhash(spark, sf, 32)
     # output is the per-doc near-dup DEGREE, not the pair list: this
     # corpus (6-31 distinct words/doc, templated) genuinely has ~6% of
     # all pairs within hamming 2 — including a 339-doc identical-
     # signature cluster — so the pair list is O(cluster^2) rows while
     # the degree stays O(docs) and is the curation signal you'd rank on.
     # For a DEGREE the pair list never needs materializing at all:
-    # collapse to distinct signatures with their member counts, band
-    # and pair THOSE (each signature pair emitted once via the
-    # first-intact-band filter, the same trick as
-    # images.phash_neardup_blocked's minimal-combo filter), and a doc's
-    # degree is (own cluster size - 1) + sum of neighboring signatures'
-    # counts — candidate work drops from O(cluster^2) row pairs to
-    # O(distinct^2 within band buckets) signature pairs
+    # collapse to distinct signatures with their member counts, pair
+    # THOSE (pairs.hash_pairs: 4 blocks of 8 bits, each signature pair
+    # emitted once), and a doc's degree is (own cluster size - 1) + sum
+    # of neighboring signatures' counts — candidate work drops from
+    # O(cluster^2) row pairs to O(distinct^2 within block buckets)
+    # signature pairs
     sigc = sh.groupBy("simhash").agg(F.count("*").alias("cnt"))
-    bands = sigc.select(
-        "simhash",
-        "cnt",
-        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("bi"),
-    ).withColumn(
-        "bv",
-        F.floor(
-            F.col("simhash") / F.pow(F.lit(2.0), F.col("bi") * 8)
-        ).cast("long")
-        % 256,
-    )
-    a = bands.select(
-        "bi", "bv", F.col("simhash").alias("ha"), F.col("cnt").alias("ca")
-    )
-    b = bands.select(
-        "bi", "bv", F.col("simhash").alias("hb"), F.col("cnt").alias("cb")
-    )
-    bxor = F.col("ha").bitwiseXOR(F.col("hb"))
-    ham = F.bit_count(bxor)
-    min_bi = F.when(
-        F.shiftrightunsigned(bxor, 0).bitwiseAND(F.lit(255)) == 0, F.lit(0)
-    )
-    for _bi in (1, 2, 3):
-        min_bi = min_bi.when(
-            F.shiftrightunsigned(bxor, 8 * _bi).bitwiseAND(F.lit(255)) == 0,
-            F.lit(_bi),
-        )
-    # shuffle_hash hint for the same reason as phash_neardup_blocked:
-    # the optimizer sizes this self-join by the small distinct-signature
-    # table and would broadcast the exploded band side
     sig_pairs = (
-        a.hint("shuffle_hash").join(b, ["bi", "bv"])
-        .filter((F.col("ha") < F.col("hb")) & (ham <= 2) & (F.col("bi") == min_bi))
-        .select("ha", "ca", "hb", "cb")
+        hash_pairs(sigc, "simhash", 2, m=4, bits=32)
+        .join(sigc.select(F.col("simhash").alias("ph_a"), F.col("cnt").alias("ca")), "ph_a")
+        .join(sigc.select(F.col("simhash").alias("ph_b"), F.col("cnt").alias("cb")), "ph_b")
     )
     contrib = sig_pairs.select(
-        F.col("ha").alias("simhash"), F.col("cb").alias("add")
+        F.col("ph_a").alias("simhash"), F.col("cb").alias("add")
     ).unionAll(
-        sig_pairs.select(F.col("hb").alias("simhash"), F.col("ca").alias("add"))
+        sig_pairs.select(F.col("ph_b").alias("simhash"), F.col("ca").alias("add"))
     )
     neighbor = contrib.groupBy("simhash").agg(F.sum("add").alias("oth"))
     deg_sig = sigc.join(neighbor, "simhash", "left").select(
@@ -1309,7 +1151,7 @@ def q_simhash_neardup_banded(spark, sf):
         (F.col("cnt") - 1 + F.coalesce(F.col("oth"), F.lit(0))).alias("n"),
     )
     return (
-        docs.select("doc_id")
+        _t(spark, sf, "documents").select("doc_id")
         .join(sh, "doc_id", "left")
         .join(deg_sig, "simhash", "left")
         .select(
@@ -1973,9 +1815,11 @@ def q_image_resize(spark, sf):
     _oracle_parquet("phash_neardup", "img_a, img_b, hamming"),
 )
 def q_phash_neardup_exact(spark, sf):
-    from webcollector_spark.operators import images
+    from webcollector_spark.operators import pairs
 
-    return images.phash_neardup_pairs(corpus(spark, "neardups"))
+    return pairs.hamming_pairs(
+        corpus(spark, "neardups"), "image_id", "phash", ("img_a", "img_b"), 12
+    )
 
 
 @register(
@@ -1985,9 +1829,11 @@ def q_phash_neardup_exact(spark, sf):
     _oracle_parquet("phash_neardup", "img_a, img_b, hamming"),
 )
 def q_phash_neardup_banded(spark, sf):
-    from webcollector_spark.operators import images
+    from webcollector_spark.operators import pairs
 
-    return images.phash_neardup_banded(corpus(spark, "neardups"))
+    return pairs.banded_pairs(
+        corpus(spark, "neardups"), "image_id", "phash", ("img_a", "img_b"), 12
+    )
 
 
 @register(
@@ -2008,12 +1854,12 @@ def q_phash_neardup_blocked(spark, sf):
     """Web-scale hamming<=4 near-dup: Manku block-combination keys
     (C(8,4)=70 32-bit bucket keys per hash) — the layout that stays
     near-singleton-bucket at 10^9 uniform hashes where (k+1)-banding's
-    12-bit buckets go quadratic (operators/images.py
-    phash_neardup_blocked; measured in BENCH_CAPTIONS.json)."""
-    from webcollector_spark.operators import images
+    12-bit buckets go quadratic (operators/pairs.py blocked_pairs;
+    measured in BENCH_CAPTIONS.json)."""
+    from webcollector_spark.operators import pairs
 
-    return images.phash_neardup_blocked(
-        corpus(spark, "captions"), max_hamming=4
+    return pairs.blocked_pairs(
+        corpus(spark, "captions"), "image_id", "phash", ("img_a", "img_b"), 4
     )
 
 
@@ -2072,11 +1918,10 @@ def q_dhash_neardup_blocked(spark, sf):
     and zero new join code. Oracle is the brute-force O(n^2) hamming
     ball over the same recomputed hashes; the blocked candidate stage is
     pigeonhole-complete so the sets are identical by construction."""
-    from webcollector_spark.operators import images
+    from webcollector_spark.operators import images, pairs
 
-    return images.dhash_neardup_blocked(
-        corpus(spark, "neardups"), max_hamming=4
-    )
+    dhash = images.with_dhash(corpus(spark, "neardups"))
+    return pairs.blocked_pairs(dhash, "image_id", "dhash", ("img_a", "img_b"), 4)
 
 
 @register(
@@ -2212,10 +2057,10 @@ def q_audio_neardup_pairs(spark, sf):
     itself is cross-checked, not just replayed. The gain-scaled and
     re-noised duplicate variants in the corpus must pair with their
     originals (tests/test_audiofp.py pins recall)."""
-    from webcollector_spark.operators import audiofp
+    from webcollector_spark.operators import audiofp, pairs
 
     fps = audiofp.audio_fingerprints(corpus(spark, "audio_fp"))
-    return audiofp.audio_neardup_banded(fps, max_hamming=8)
+    return pairs.banded_pairs(fps, "audio_id", "afp", ("aud_a", "aud_b"), 8)
 
 
 @register(
@@ -6195,9 +6040,7 @@ def q_warc_revisit_plan(spark, sf):
     "lsh_incremental_dedup",
     f"""
     WITH sig AS ({_SIG_SQL}),
-    bands AS (
-      SELECT doc_id, 0 AS bi, band0 AS b FROM sig
-      UNION ALL SELECT doc_id, 1 AS bi, band1 AS b FROM sig),
+    bands AS ({_BANDS_SQL}),
     cand AS (
       SELECT DISTINCT i.doc_id AS doc_in, c.doc_id AS doc_corpus
       FROM bands i JOIN bands c ON i.bi = c.bi AND i.b = c.b
@@ -6221,43 +6064,13 @@ def q_warc_revisit_plan(spark, sf):
     """,
 )
 def q_lsh_incremental_dedup(spark, sf):
-    incoming_pred = F.col("doc_id") % 5 == 0
-    sig = _minhash_sig(spark, sf)
-    bands = sig.select(
-        "doc_id", F.lit(0).alias("bi"), F.col("band0").alias("b")
-    ).unionByName(
-        sig.select("doc_id", F.lit(1).alias("bi"), F.col("band1").alias("b"))
+    cand = _band_pairs(
+        _minhash_sig(spark, sf), "doc_in", "doc_corpus", F.col("doc_id") % 5 == 0
     )
-    cand = (
-        bands.filter(incoming_pred)
-        .select("bi", "b", F.col("doc_id").alias("doc_in"))
-        .join(
-            bands.filter(~incoming_pred).select(
-                "bi", "b", F.col("doc_id").alias("doc_corpus")
-            ),
-            ["bi", "b"],
-        )
-        .select("doc_in", "doc_corpus")
-        .distinct()
-    )
-    arr = _shingle_arrays(spark, sf)
-    a = arr.select(
-        F.col("doc_id").alias("doc_in"),
-        F.col("ws").alias("ws_a"),
-        F.col("n").alias("na"),
-    ).hint("shuffle_hash")
-    b = arr.select(
-        F.col("doc_id").alias("doc_corpus"),
-        F.col("ws").alias("ws_b"),
-        F.col("n").alias("nb"),
-    ).hint("shuffle_hash")
-    c = F.size(F.array_intersect(F.col("ws_a"), F.col("ws_b")))
-    jac = c.cast("double") / (F.col("na") + F.col("nb") - c)
     verified = (
-        cand.join(a, "doc_in")
-        .join(b, "doc_corpus")
-        .filter(jac >= 0.5)
-        .select("doc_in", "doc_corpus", F.round(jac, 4).alias("jaccard"))
+        _jaccard(spark, sf, cand, "doc_in", "doc_corpus")
+        .filter(F.col("jaccard") >= 0.5)
+        .select("doc_in", "doc_corpus", F.round("jaccard", 4).alias("jaccard"))
     )
     w = Window.partitionBy("doc_in").orderBy(
         F.col("jaccard").desc(), "doc_corpus"
