@@ -26,7 +26,7 @@ def _frames(n=6, clip=2, w=32, h=24):
 def test_roundtrip_bit_exact(disposes):
     frames = _frames()
     data = apng.encode_apng(frames, disposes=disposes)
-    dec = apng.decode_apng(data)
+    dec = list(apng.decode_apng(data))
     assert len(dec) == 6
     for i, (dn, dd, fr) in enumerate(dec):
         assert (dn, dd) == (1, 10)
@@ -76,7 +76,7 @@ def test_chunk_structure_is_spec_shaped():
 def test_identical_frame_keeps_delay():
     f = _frames(1)[0]
     data = apng.encode_apng([f, f], delays=[(1, 10), (3, 7)])
-    dec = apng.decode_apng(data)
+    dec = list(apng.decode_apng(data))
     assert [(dn, dd) for dn, dd, _ in dec] == [(1, 10), (3, 7)]
     assert np.array_equal(dec[1][2], f)
 
@@ -85,9 +85,9 @@ def test_rejections_and_honest_unsupported():
     frames = _frames(2)
     good = apng.encode_apng(frames)
     with pytest.raises(ValueError, match="not a PNG"):
-        apng.decode_apng(b"XPNG" + good[4:])
+        list(apng.decode_apng(b"XPNG" + good[4:]))
     with pytest.raises(ValueError, match="no acTL"):
-        apng.decode_apng(codecs.encode_png(frames[0]))
+        list(apng.decode_apng(codecs.encode_png(frames[0])))
     # blend_op 1 refused, not mis-composited
     blend = bytearray(good)
     fctl = blend.find(b"fcTL")
@@ -101,26 +101,28 @@ def test_rejections_and_honest_unsupported():
         ">I", blend, body_off + 26, zlib.crc32(payload) & 0xFFFFFFFF
     )
     with pytest.raises(NotImplementedError, match="blend_op 1"):
-        apng.decode_apng(bytes(blend))
+        list(apng.decode_apng(bytes(blend)))
     # declared/carried frame-count mismatch
     trunc = bytearray(good)
     actl = trunc.find(b"acTL")
     struct.pack_into(">I", trunc, actl + 4, 5)
     with pytest.raises(ValueError, match="declares 5"):
-        apng.decode_apng(bytes(trunc))
+        list(apng.decode_apng(bytes(trunc)))
 
 
 def test_metadata_cross_check_raises():
-    r = media.apng_corpus_rows(1)[0]
+    r = media.encoded_video_rows("apng", 1)[0]
     with pytest.raises(ValueError, match="metadata says"):
         list(
-            media.decode_video_apng(
+            media.video_frames(
+                "apng",
                 r["video_id"], r["bytes"], r["n_frames"], r["w"] + 1, r["h"]
             )
         )
     with pytest.raises(ValueError, match="carries"):
         list(
-            media.decode_video_apng(
+            media.video_frames(
+                "apng",
                 r["video_id"], r["bytes"], r["n_frames"] + 1, r["w"], r["h"]
             )
         )
@@ -187,7 +189,7 @@ def test_default_image_before_first_fctl_is_skipped():
     out += apng._chunk(b"fdAT", _s.pack(">I", 3) + apng._frame_payload(f1))
     out += apng._chunk(b"IEND", b"")
 
-    frames = apng.decode_apng(bytes(out))
+    frames = list(apng.decode_apng(bytes(out)))
     assert len(frames) == 2
     assert np.array_equal(frames[0][2], f0)  # NOT the default image
     assert np.array_equal(frames[1][2], f1)

@@ -10,7 +10,7 @@ import struct
 import numpy as np
 import pytest
 
-from webcollector_spark import avi, codecs
+from webcollector_spark import avi, codecs, riff
 from webcollector_spark.corpora import corpus
 from webcollector_spark.operators import media
 
@@ -23,6 +23,7 @@ def test_roundtrip_psnr_and_header_recovery():
     frames = _frames(6, clip=3)
     data = avi.encode_avi_mjpeg(frames, fps=24.0)
     w, h, fps, n, dec = avi.decode_avi_mjpeg(data)
+    dec = list(dec)
     assert (w, h, fps, n) == (32, 24, 24.0, 6)
     assert len(dec) == 6
     for truth, got in zip(frames, dec):
@@ -58,6 +59,7 @@ def test_decoder_skips_junk_and_rec_grouping_and_odd_sizes():
     clean = avi.encode_avi_mjpeg(frames, fps=12.0)
     # re-extract the two JPEG payloads from the clean file
     w, h, fps, n, dec = avi.decode_avi_mjpeg(clean)
+    dec = list(dec)
     from webcollector_spark import jpeg
 
     payloads = [jpeg.encode_baseline(f, 98) for f in frames]
@@ -68,33 +70,36 @@ def test_decoder_skips_junk_and_rec_grouping_and_odd_sizes():
     )
     hdrl = clean[hdrl_start : hdrl_start + 8 + hdrl_size + (hdrl_size & 1)]
 
-    junk = avi._chunk(b"JUNK", b"\x00" * 13)  # odd size -> pad byte
-    rec = avi._list(
-        b"rec ",
-        avi._chunk(b"00dc", payloads[0]) + avi._chunk(b"00db", payloads[1]),
+    junk = riff.chunk(b"JUNK", b"\x00" * 13)  # odd size -> pad byte
+    rec = riff.chunk(
+        b"LIST",
+        b"rec " + riff.chunk(b"00dc", payloads[0]) + riff.chunk(b"00db", payloads[1]),
     )
-    movi = avi._list(b"movi", rec)
+    movi = riff.chunk(b"LIST", b"movi" + rec)
     body = b"AVI " + hdrl + junk + movi
     weird = b"RIFF" + struct.pack("<I", len(body)) + body
 
     w2, h2, fps2, n2, dec2 = avi.decode_avi_mjpeg(weird)
+    dec2 = list(dec2)
     assert (w2, h2, n2) == (w, h, 2) and len(dec2) == 2
     for a, b in zip(dec, dec2):
         assert np.array_equal(a, b)
 
 
 def test_metadata_cross_check_raises():
-    rows = media.avi_corpus_rows(1)
+    rows = media.encoded_video_rows("avi", 1)
     r = rows[0]
     with pytest.raises(ValueError, match="metadata says"):
         list(
-            media.decode_video_avi(
+            media.video_frames(
+                "avi",
                 r["video_id"], r["bytes"], r["n_frames"], r["w"] + 1, r["h"]
             )
         )
     with pytest.raises(ValueError, match="declares"):
         list(
-            media.decode_video_avi(
+            media.video_frames(
+                "avi",
                 r["video_id"], r["bytes"], r["n_frames"] + 1, r["w"], r["h"]
             )
         )

@@ -771,14 +771,48 @@ def _apng_header(w: int, h: int) -> bytes:
     )
 
 
-@pytest.mark.parametrize("kind", ["sof0", "sof2", "apng"])
+def _gif_header(w: int, h: int) -> bytes:
+    """A 20-byte GIF: logical screen w x h, a 2-color table, no image."""
+    return b"GIF89a" + struct.pack("<HHBBB", w, h, 0x80, 0, 0) + bytes(6) + b"\x3b"
+
+
+def _bmp_rle8_header(w: int, h: int) -> bytes:
+    """A 1,080-byte BI_RLE8 BMP: zero palette, then end-of-bitmap."""
+    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 8, 1, 0, 0, 0, 0, 0)
+    off = 14 + 40 + 1024
+    return (
+        b"BM" + struct.pack("<IHHI", off + 2, 0, 0, off) + info + bytes(1024)
+        + b"\x00\x01"
+    )
+
+
+def _tiff_tiled_header(w: int, h: int) -> bytes:
+    """A little-endian RGB TIFF whose one w x h tile has 0 bytes."""
+    tags = [
+        (256, 4, w), (257, 4, h), (262, 3, 2), (277, 3, 3),
+        (322, 4, w), (323, 4, h), (324, 4, 8), (325, 4, 0),
+    ]
+    ifd = struct.pack("<H", len(tags)) + b"".join(
+        struct.pack("<HHII", tag, typ, 1, v) for tag, typ, v in tags
+    )
+    return b"II*\x00" + struct.pack("<I", 8) + ifd + bytes(4)
+
+
+@pytest.mark.parametrize(
+    "kind", ["sof0", "sof2", "apng", "gif", "bmp_rle8", "tiff_tiled"]
+)
 def test_oversized_frame_headers_fail_within_a_few_mb(kind):
     """A header that declares 65535 x 65535 is refused before a plane or
     canvas is allocated."""
     from webcollector_spark import apng
 
+    headers = {
+        "gif": _gif_header, "bmp_rle8": _bmp_rle8_header, "tiff_tiled": _tiff_tiled_header
+    }
     if kind == "apng":
-        payload, decode = _apng_header(65535, 65535), apng.decode_apng
+        payload, decode = _apng_header(65535, 65535), lambda p: list(apng.decode_apng(p))
+    elif kind in headers:
+        payload, decode = headers[kind](65535, 65535), codecs.decode
     else:
         sof = 0xC0 if kind == "sof0" else 0xC2
         payload, decode = _jpeg_frame_header(sof, 65535, 65535), codecs.decode

@@ -140,7 +140,7 @@ def test_rice_parameter_choice_is_cost_optimal():
 
 
 def test_metadata_cross_check_raises():
-    r = media.flac_corpus_rows(1)[0]
+    r = media.encoded_audio_rows("flac", 1)[0]
     with pytest.raises(ValueError, match="metadata says"):
         media.decode_audio_flac(
             r["audio_id"], r["bytes"], r["n_samples"] + 1
@@ -229,7 +229,7 @@ def test_corpus_contains_real_lpc_subframes():
     """The done-criterion: the audio_features_flac fixture must now
     exercise the LPC decode path (the predictor real encoders emit)."""
     tot = {"lpc": 0, "fixed": 0}
-    for r in media.flac_corpus_rows(16):
+    for r in media.encoded_audio_rows("flac", 16):
         c = _count_subframes(r["bytes"])
         tot["lpc"] += c["lpc"]
         tot["fixed"] += c["fixed"]

@@ -68,7 +68,7 @@ def test_anim_roundtrip_bit_exact(disposals):
     data = gif.encode_gif89a_anim(
         frames, delays_cs=[7] * 6, disposals=disposals
     )
-    dec = gif.decode_gif_frames(data)
+    dec = list(gif.decode_gif_frames(data))
     assert len(dec) == 6
     for i, (delay, fr) in enumerate(dec):
         assert delay == 7
@@ -92,7 +92,7 @@ def test_anim_delta_frames_are_smaller_than_full_frames():
 def test_identical_consecutive_frames_keep_their_delay():
     f = _anim_frames(1)[0]
     data = gif.encode_gif89a_anim([f, f, f], delays_cs=[3, 9, 27])
-    dec = gif.decode_gif_frames(data)
+    dec = list(gif.decode_gif_frames(data))
     assert [d for d, _ in dec] == [3, 9, 27]
     for _, fr in dec:
         assert np.array_equal(fr, f)
@@ -108,7 +108,7 @@ def test_netscape_loop_block_written_and_skipped():
     )
     assert loop_count == 5
     for data in (looped, bare):
-        dec = gif.decode_gif_frames(data)
+        dec = list(gif.decode_gif_frames(data))
         assert len(dec) == 2
 
 
@@ -122,7 +122,7 @@ def test_disposal_background_exposes_background_color():
     b = np.full((h, w, 3), 86, np.uint8)
     b[0, 0] = [43, 43, 43]  # keeps palette {43,86} + bg slot stable
     data = gif.encode_gif89a_anim([a, b, a], disposals=[2, 1, 1])
-    dec = gif.decode_gif_frames(data)
+    dec = list(gif.decode_gif_frames(data))
     assert np.array_equal(dec[0][1], a)
     assert np.array_equal(dec[1][1], b)
     assert np.array_equal(dec[2][1], a)
@@ -152,29 +152,31 @@ def test_frame_rect_exceeding_screen_raises():
     # shrink the logical screen under the frame rect
     struct.pack_into("<H", data, 6, 8)
     with pytest.raises(ValueError, match="exceeds logical screen"):
-        gif.decode_gif_frames(bytes(data))
+        list(gif.decode_gif_frames(bytes(data)))
 
 
 def test_truncated_stream_raises():
     data = gif.encode_gif89a_anim(_anim_frames(3))
     with pytest.raises((ValueError, IndexError)):
-        gif.decode_gif_frames(data[: len(data) // 2])
+        list(gif.decode_gif_frames(data[: len(data) // 2]))
 
 
 # ------------------------------------------------------------- media seam
 
 
 def test_metadata_cross_check_raises():
-    r = media.gif_corpus_rows(1)[0]
+    r = media.encoded_video_rows("gif", 1)[0]
     with pytest.raises(ValueError, match="metadata says"):
         list(
-            media.decode_video_gif(
+            media.video_frames(
+                "gif",
                 r["video_id"], r["bytes"], r["n_frames"], r["w"] + 1, r["h"]
             )
         )
     with pytest.raises(ValueError, match="carries"):
         list(
-            media.decode_video_gif(
+            media.video_frames(
+                "gif",
                 r["video_id"], r["bytes"], r["n_frames"] + 1, r["w"], r["h"]
             )
         )
@@ -183,7 +185,7 @@ def test_metadata_cross_check_raises():
 def test_corpus_mixes_disposal_methods():
     """Every third clip cycles disposal 1/2/3 so the registry row
     exercises the composition path, not just happy deltas."""
-    rows = media.gif_corpus_rows(3)
+    rows = media.encoded_video_rows("gif", 3)
     # clip 2 carries GCEs with disposal 2 present in the bitstream
     gces = [
         (b[i + 3] >> 2) & 0x07

@@ -169,7 +169,9 @@ def test_mjpeg_video_through_sample_frames(spark):
     assert {r["video_id"] for r in got} == set(metas)
     for r in got:
         decoded = dict(
-            media.decode_video_mjpeg(r["video_id"], metas[r["video_id"]], 8, 16, 12)
+            enumerate(
+                media.video_frames("mjpeg", r["video_id"], metas[r["video_id"]], 8, 16, 12)
+            )
         )
         assert abs(r["frame_mean"] - float(decoded[r["frame_idx"]].mean())) < 1e-3
 
@@ -178,7 +180,7 @@ def test_mjpeg_metadata_mismatch_raises():
     frames = [np.zeros((12, 16, 3), dtype=np.uint8)]
     data = encode_mjpeg_stream(frames)
     with pytest.raises(ValueError, match="metadata"):
-        list(media.decode_video_mjpeg("v", data, 1, 8, 8))
+        list(media.video_frames("mjpeg", "v", data, 1, 8, 8))
 
 
 # -- header-only quality estimation (jpeg.parse_dqt / estimate_quality,
@@ -479,6 +481,6 @@ def test_fill_bytes_and_tem_before_segments(kind):
 def encode_mjpeg_stream(frames: list[np.ndarray], quality: int = 98) -> bytes:
     """Concatenated baseline-JPEG frames — the MJPEG wire shape (each
     frame a complete SOI..EOI image, back to back). Fixture-side twin
-    of `decode_video_mjpeg`; REAL compression (DCT + Huffman), unlike
+    of the `mjpeg` video kernel; REAL compression (DCT + Huffman), unlike
     the zlib containers."""
     return b"".join(jpeg.encode_baseline(f, quality) for f in frames)

@@ -26,8 +26,10 @@ def test_sample_frames_fanout_and_determinism(spark):
         # recompute one frame's mean from the stub decoder
         r0 = min(rows, key=lambda r: r["frame_idx"])
         idx, frame = next(
-            media._decode_video_stub(
-                vid, bytes(m["bytes"]), m["n_frames"], m["w"], m["h"]
+            enumerate(
+                media.video_frames(
+                    "fakevid", vid, bytes(m["bytes"]), m["n_frames"], m["w"], m["h"]
+                )
             )
         )
         assert idx == 0
@@ -70,13 +72,13 @@ def test_unknown_fmt_raises():
 
 
 def test_ppm_roundtrip_bit_exact():
-    """decode_video_real(encode_ppm_stream(x)) == x, frame for frame."""
+    """The ppm kernel inverts encode_ppm_stream(x), frame for frame."""
     rng = np.random.default_rng(7)
     frames = [
         rng.integers(0, 256, size=(12, 16, 3), dtype=np.uint8) for _ in range(5)
     ]
     data = encode_ppm_stream(frames)
-    out = list(media.decode_video_real("v", data, 5, 16, 12))
+    out = list(enumerate(media.video_frames("ppm", "v", data, 5, 16, 12)))
     assert [i for i, _ in out] == [0, 1, 2, 3, 4]
     for (_, got), want in zip(out, frames):
         assert np.array_equal(got, want)
@@ -89,10 +91,10 @@ def test_ppm_decoder_handles_comments_and_checks_metadata():
     fr = rng.integers(0, 256, size=(4, 6, 3), dtype=np.uint8)
     # a P6 header with a comment line — legal PPM that naive split misses
     data = b"P6\n# made by test\n6 4\n255\n" + fr.tobytes()
-    (_, got), = list(media.decode_video_real("v", data, 1, 6, 4))
+    (_, got), = list(enumerate(media.video_frames("ppm", "v", data, 1, 6, 4)))
     assert np.array_equal(got, fr)
     with pytest.raises(ValueError, match="metadata says"):
-        list(media.decode_video_real("v", data, 1, 5, 4))
+        list(media.video_frames("ppm", "v", data, 1, 5, 4))
 
 
 def test_wav_roundtrip_and_foreign_chunks():
@@ -115,6 +117,78 @@ def test_wav_roundtrip_and_foreign_chunks():
     assert np.array_equal(got, got2)
 
 
+def _apng_small_deltas(n_frames: int, side: int = 1500) -> bytes:
+    """An APNG with a side x side black first frame, then 1x1 frames."""
+    import struct
+    import zlib
+
+    from webcollector_spark import codecs
+
+    out = bytearray(codecs._PNG_SIG)
+    out += codecs._chunk(b"IHDR", struct.pack(">IIBBBBB", side, side, 8, 2, 0, 0, 0))
+    out += codecs._chunk(b"acTL", struct.pack(">II", n_frames, 0))
+    seq = 0
+    for k in range(n_frames):
+        rw = rh = side if k == 0 else 1
+        out += codecs._chunk(
+            b"fcTL", struct.pack(">IIIIIHHBB", seq, rw, rh, 0, 0, 1, 10, 0, 0)
+        )
+        rows = zlib.compress(bytes(rh * (1 + 3 * rw)), 9)
+        if k == 0:
+            out += codecs._chunk(b"IDAT", rows)
+        else:
+            out += codecs._chunk(b"fdAT", struct.pack(">I", seq + 1) + rows)
+        seq += 1 + (k > 0)
+    return bytes(out + codecs._chunk(b"IEND", b""))
+
+
+def _gif_small_deltas(n_frames: int, side: int = 1500) -> bytes:
+    """A GIF with a side x side logical screen and n_frames 1x1 images."""
+    import struct
+
+    from webcollector_spark import gif
+
+    out = bytearray(b"GIF89a" + struct.pack("<HHBBB", side, side, 0x80, 0, 0))
+    out += bytes(3) + b"\xff\xff\xff"
+    pixel = gif._sub_blocks(gif.lzw_encode(np.array([1]), 2))
+    for k in range(n_frames):
+        out += b"\x2c" + struct.pack("<HHHHB", k, 0, 1, 1, 0) + b"\x02" + pixel
+    return bytes(out + b"\x3b")
+
+
+def test_animation_decode_peak_does_not_grow_with_frame_count():
+    """Frames stream out of the APNG and GIF decoders: a 1500x1500
+    animation of tiny frames decodes under 40 MiB (traced), at 80
+    frames as at 40, through the video path (APNG) and through
+    codecs.decode on the crawl path (GIF). A decoder that listed a
+    canvas copy per frame held 270 MiB at 40 frames."""
+    import tracemalloc
+
+    from webcollector_spark import codecs
+
+    def traced(fn) -> int:
+        tracemalloc.start()
+        try:
+            fn()
+            return tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+
+    for n in (40, 80):
+        apng_bytes, gif_bytes = _apng_small_deltas(n), _gif_small_deltas(n)
+        peaks = {
+            "apng": traced(
+                lambda: sum(1 for _ in media.video_frames("apng", "a", apng_bytes, n, 1500, 1500))
+            ),
+            "gif": traced(lambda: codecs.decode(gif_bytes)),
+        }
+        if n == 40:
+            at_40 = peaks
+        for fmt, peak in peaks.items():
+            assert peak < 40 << 20, (fmt, n, peak)
+            assert peak <= at_40[fmt] + (1 << 20), (fmt, n, peak, at_40[fmt])
+
+
 def test_real_video_corpus_through_sample_frames(spark):
     """The REAL decode path produces the same downstream schema and
     ground-truth-recomputable features as the stub path — the seam is
@@ -128,8 +202,10 @@ def test_real_video_corpus_through_sample_frames(spark):
     for r in rows:
         m = meta[r["video_id"]]
         frames = dict(
-            media.decode_video_real(
-                r["video_id"], bytes(m["bytes"]), m["n_frames"], m["w"], m["h"]
+            enumerate(
+                media.video_frames(
+                    "ppm", r["video_id"], bytes(m["bytes"]), m["n_frames"], m["w"], m["h"]
+                )
             )
         )
         assert abs(r["frame_mean"] - float(frames[r["frame_idx"]].mean())) < 1e-3
@@ -166,7 +242,7 @@ def test_mixed_fmt_single_dataframe(spark):
 def encode_ppm_stream(frames: list[np.ndarray]) -> bytes:
     """Concatenated binary-P6 stream — the `ffmpeg -f image2pipe
     -vcodec ppm` wire format (header `P6\\n{w} {h}\\n255\\n` + raw RGB
-    raster per frame). Fixture-side twin of `decode_video_real`."""
+    raster per frame). Fixture-side twin of the `ppm` video kernel."""
     out = bytearray()
     for fr in frames:
         h, w, c = fr.shape

@@ -73,6 +73,20 @@ def test_lzw_earlychange_and_clear_boundaries():
         tiff.tiff_lzw_decode(tiff.tiff_lzw_encode(b"hello world")[:3], 11)
 
 
+def test_lzw_megabyte_strip_roundtrips_in_linear_time():
+    """The LZW bit reader keeps only its unread bits. An accumulator
+    that kept every bit it had read grows to the size of the strip,
+    which makes decode quadratic: over 100 s for this strip on a 4-core
+    box."""
+    import time
+
+    raw = np.random.default_rng(5).integers(0, 16, 1 << 20, dtype=np.uint8).tobytes()
+    enc = tiff.tiff_lzw_encode(raw)
+    t0 = time.perf_counter()
+    assert tiff.tiff_lzw_decode(enc, len(raw)) == raw
+    assert time.perf_counter() - t0 < 5.0
+
+
 def test_lzw_predictor_compresses_smooth_content():
     smooth = (
         128 + 90 * np.sin(np.add.outer(np.arange(48) / 7, np.arange(40) / 5))

@@ -535,17 +535,18 @@ def build_image_channel_partials(pdf: pd.DataFrame):
 
 def build_sample_frames(vids: list[dict], every_n: int):
     """Frame features, decoded straight-line through each row's video
-    decoder (media._video_decoder: the stub, or the AVI/GIF/APNG
-    container walks down to the real JPEG/LZW/PNG bitstreams). Codec
-    fidelity vs pre-encode frames is pinned in tests/test_avi.py,
-    test_gif_anim.py and test_apng.py; this oracle pins the distributed
-    dataflow around it, per the module-docstring convention."""
+    decoder and metadata check (media.video_frames: the stub, or the
+    AVI/GIF/APNG container walks down to the real JPEG/LZW/PNG
+    bitstreams). Codec fidelity vs pre-encode frames is pinned in
+    tests/test_avi.py, test_gif_anim.py and test_apng.py; this oracle
+    pins the distributed dataflow around it, per the module-docstring
+    convention."""
     rows = []
     for r in vids:
-        decode = media._video_decoder(r["fmt"])
-        for idx, frame in decode(
-            r["video_id"], bytes(r["bytes"]), r["n_frames"], r["w"], r["h"]
-        ):
+        frames = media.video_frames(
+            r["fmt"], r["video_id"], bytes(r["bytes"]), r["n_frames"], r["w"], r["h"]
+        )
+        for idx, frame in enumerate(frames):
             if idx % every_n:
                 continue
             rows.append(
@@ -617,10 +618,10 @@ def _wave_adpcm(r: dict) -> np.ndarray:
 
 def _wave_flac(r: dict) -> np.ndarray:
     """The PRE-ENCODE PCM (adpcm_waveform re-quantized exactly as
-    flac_corpus_rows does): the engine's decoder NEVER runs here, so a
-    driver match proves decode_flac reproduces the original samples
-    bit-exact through the fixed-predictor/Rice/CRC path — any
-    single-sample decode error flips zero_crossings or rms."""
+    media.encoded_audio_rows does for FLAC): the engine's decoder NEVER
+    runs here, so a driver match proves decode_flac reproduces the
+    original samples bit-exact through the fixed-predictor/Rice/CRC
+    path — any single-sample decode error flips zero_crossings or rms."""
     pcm = np.round(
         media.adpcm_waveform(int(r["audio_id"][3:]), r["sample_rate"], r["n_samples"])
         * 32767.0

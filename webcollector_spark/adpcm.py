@@ -33,6 +33,8 @@ import struct
 
 import numpy as np
 
+from webcollector_spark import riff
+
 # fmt: off
 STEP_TABLE = np.array([
     7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34,
@@ -180,15 +182,7 @@ def encode_wav_ima(
     body = encode_blocks(pcm, block_align)
     spb = samples_per_block(block_align)
     byte_rate = sample_rate * block_align // spb  # approx, per spec
-    fmt = struct.pack(
-        "<HHIIHHHH",
-        WAVE_FORMAT_IMA_ADPCM, 1, sample_rate, byte_rate, block_align, 4,
-        2, spb,
+    fmt = riff.WavFormat(
+        WAVE_FORMAT_IMA_ADPCM, 1, sample_rate, byte_rate, block_align, 4
     )
-    hdr = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<II", 4, len(pcm))
-        + b"data" + struct.pack("<I", len(body))
-    )
-    return b"RIFF" + struct.pack("<I", len(hdr) + len(body)) + hdr + body
+    return riff.wav(fmt, body, extension=struct.pack("<H", spb), n_samples=len(pcm))

@@ -14,14 +14,18 @@ codec (webcollector_spark.jpeg — DCT + canonical Huffman):
   chunk per frame, word-aligned) -> 'idx1' (one 16-byte keyframe entry
   per chunk, offsets relative to the 'movi' list data start, the
   convention players expect).
-* `decode_avi_mjpeg(data)` — tolerant reader: walks the RIFF tree,
-  takes dims/frame-count/rate from 'avih'/'strh', skips JUNK/unknown
-  chunks (writers pad with JUNK for CD sector alignment), accepts both
-  '00dc' (compressed) and '00db' (uncompressed-flagged, still JPEG in
-  MJPG files) frame chunks inside 'movi' — including the nested
-  LIST('rec ') grouping some muxers emit — and decodes each payload
-  with the real JPEG decoder. Never scans for JPEG magic bytes: chunk
-  sizes define frame boundaries.
+* `decode_avi_mjpeg(data)` — tolerant reader: takes dims/frame-count/
+  rate from 'avih'/'strh', skips JUNK/unknown chunks (writers pad with
+  JUNK for CD sector alignment), accepts both '00dc' (compressed) and
+  '00db' (uncompressed-flagged, still JPEG in MJPG files) frame chunks
+  inside 'movi' — including the nested LIST('rec ') grouping some
+  muxers emit — and yields each payload decoded with the real JPEG
+  decoder, one frame at a time, checked against the avih dims and
+  declared frame count. Never scans for JPEG magic bytes: chunk sizes
+  define frame boundaries.
+
+Both directions speak RIFF through webcollector_spark.riff, the one
+chunk walk and writer WAV and WebP share.
 
 Layout reference: the public Microsoft AVI RIFF specification
 (AVIMAINHEADER / AVISTREAMHEADER / BITMAPINFOHEADER / idx1) — widely
@@ -36,19 +40,9 @@ from collections.abc import Iterator
 
 import numpy as np
 
+from webcollector_spark import riff
+
 _AVIIF_KEYFRAME = 0x10
-
-
-def _chunk(tag: bytes, payload: bytes) -> bytes:
-    """RIFF chunk: tag + u32 size + payload + pad byte to word align
-    (the pad is NOT counted in size — the rule odd-size handling below
-    must invert)."""
-    pad = b"\0" if len(payload) & 1 else b""
-    return tag + struct.pack("<I", len(payload)) + payload + pad
-
-
-def _list(kind: bytes, payload: bytes) -> bytes:
-    return _chunk(b"LIST", kind + payload)
 
 
 def encode_avi_mjpeg(
@@ -105,11 +99,8 @@ def encode_avi_mjpeg(
         0x47504A4D,                    # biCompression = 'MJPG' (LE fourcc)
         w * h * 3, 0, 0, 0, 0,
     )
-    hdrl = _list(
-        b"hdrl",
-        _chunk(b"avih", avih)
-        + _list(b"strl", _chunk(b"strh", strh) + _chunk(b"strf", strf)),
-    )
+    strl = riff.chunk(b"LIST", b"strl" + riff.chunk(b"strh", strh) + riff.chunk(b"strf", strf))
+    hdrl = riff.chunk(b"LIST", b"hdrl" + riff.chunk(b"avih", avih) + strl)
 
     movi_payload = bytearray()
     idx = bytearray()
@@ -120,60 +111,37 @@ def encode_avi_mjpeg(
         idx += b"00dc" + struct.pack(
             "<III", _AVIIF_KEYFRAME, 4 + len(movi_payload), len(p)
         )
-        movi_payload += _chunk(b"00dc", p)
-    movi = _list(b"movi", bytes(movi_payload))
-
-    body = b"AVI " + hdrl + movi + _chunk(b"idx1", bytes(idx))
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def _walk(data: bytes, pos: int, end: int) -> Iterator[tuple[bytes, int, int]]:
-    """Yield (tag, payload_start, payload_size) for each chunk in
-    [pos, end); LIST chunks are yielded as (list-kind, children_start,
-    children_size) so callers recurse by kind."""
-    while pos + 8 <= end:
-        tag = data[pos : pos + 4]
-        (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        start = pos + 8
-        if tag == b"LIST" and size >= 4:
-            yield data[start : start + 4], start + 4, size - 4
-        else:
-            yield tag, start, size
-        pos = start + size + (size & 1)  # chunks are word-aligned
+        movi_payload += riff.chunk(b"00dc", p)
+    movi = riff.chunk(b"LIST", b"movi" + movi_payload)
+    return riff.chunk(b"RIFF", b"AVI " + hdrl + movi + riff.chunk(b"idx1", bytes(idx)))
 
 
 def decode_avi_mjpeg(
     data: bytes,
-) -> tuple[int, int, float, int, list[np.ndarray]]:
-    """AVI bytes -> (w, h, fps, declared_frames, decoded RGB frames).
+) -> tuple[int, int, float, int, Iterator[np.ndarray]]:
+    """AVI bytes -> (w, h, fps, declared_frames, frames), where `frames`
+    yields the decoded RGB frames one at a time.
 
-    Dims/count/rate come from the container's own headers; the caller
-    cross-checks them against row metadata. Raises on a non-AVI RIFF,
-    a missing header, or a frame chunk that is not baseline JPEG."""
+    Dims/count/rate come from the container's own headers, and the
+    frames are checked against them: each frame must be avih's w x h,
+    and the 'movi' list must carry exactly the declared count (refused
+    at the first extra chunk, before it is decoded). The caller checks
+    the container against row metadata. Raises on a non-AVI RIFF or a
+    missing header at once, and on a frame chunk that is not baseline
+    JPEG when that frame is reached."""
     from webcollector_spark import jpeg
 
-    if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise ValueError("not a RIFF/AVI file")
     w = h = n_declared = 0
     fps = 0.0
-    frames: list[np.ndarray] = []
-
-    def movi_frames(pos: int, end: int) -> None:
-        for tag, start, size in _walk(data, pos, end):
-            if tag == b"rec ":  # nested grouping LIST some muxers emit
-                movi_frames(start, start + size)
-            elif tag[2:4] in (b"dc", b"db"):
-                frames.append(jpeg.decode_baseline(data[start : start + size]))
-            # ix## sub-indexes / JUNK: skipped
-
-    for tag, start, size in _walk(data, 12, 12 + len(data) - 12):
+    movi: list[tuple[int, int]] = []
+    for tag, start, size in riff.chunks(data, b"AVI ", "RIFF/AVI"):
         if tag == b"hdrl":
-            for t2, s2, z2 in _walk(data, start, start + size):
+            for t2, s2, z2 in riff.walk(data, start, start + size):
                 if t2 == b"avih" and z2 >= 40:
                     vals = struct.unpack("<10I", data[s2 : s2 + 40])
                     n_declared, w, h = vals[4], vals[8], vals[9]
                 elif t2 == b"strl":
-                    for t3, s3, z3 in _walk(data, s2, s2 + z2):
+                    for t3, s3, z3 in riff.walk(data, s2, s2 + z2):
                         if t3 == b"strh" and z3 >= 32:
                             fcc = data[s3 : s3 + 4]
                             scale, rate = struct.unpack(
@@ -182,9 +150,38 @@ def decode_avi_mjpeg(
                             if fcc == b"vids" and scale:
                                 fps = rate / scale
         elif tag == b"movi":
-            movi_frames(start, start + size)
+            movi.append((start, start + size))
         # idx1 / JUNK / INFO: not needed for a sequential decode
-
     if w == 0 or h == 0:
         raise ValueError("AVI missing avih main header")
-    return int(w), int(h), float(fps), int(n_declared), frames
+
+    def frame_chunks(pos: int, end: int) -> Iterator[tuple[int, int]]:
+        for tag, start, size in riff.walk(data, pos, end):
+            if tag == b"rec ":  # nested grouping LIST some muxers emit
+                yield from frame_chunks(start, start + size)
+            elif tag[2:4] in (b"dc", b"db"):
+                yield start, size
+            # ix## sub-indexes / JUNK: skipped
+
+    def frames() -> Iterator[np.ndarray]:
+        carried = 0
+        for pos, end in movi:
+            for start, size in frame_chunks(pos, end):
+                if carried == n_declared:
+                    raise ValueError(
+                        f"container declares {n_declared} frames, carries more"
+                    )
+                frame = jpeg.decode_baseline(data[start : start + size])
+                if frame.shape[:2] != (h, w):
+                    raise ValueError(
+                        f"frame {carried} is {frame.shape[1]}x{frame.shape[0]}, "
+                        f"container says {w}x{h}"
+                    )
+                carried += 1
+                yield frame
+        if carried != n_declared:
+            raise ValueError(
+                f"container declares {n_declared} frames, carries {carried}"
+            )
+
+    return int(w), int(h), float(fps), int(n_declared), frames()

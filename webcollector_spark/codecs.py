@@ -407,6 +407,13 @@ def _bmp_rle8(data: bytes, off: int, w: int, h: int) -> np.ndarray:
     return idx[::-1]  # bottom-up
 
 
+#: What decode_bmp holds per pixel at its peak, rounded up: 8-bit
+#: indices plus their RGB lookup and its contiguous copy (tracemalloc
+#: at 1024x1024 measured 3.0 for 24bpp, 4.1 for BI_RLE8 and 6.0 for
+#: 8bpp BI_RGB).
+_BMP_PEAK_BYTES_PER_PIXEL = 8
+
+
 def decode_bmp(data: bytes) -> np.ndarray:
     """BMP bytes -> RGB8 HxWx3. Accepts BITMAPINFOHEADER and the
     larger V4/V5 headers (same 40-byte prefix), 24bpp and 32bpp
@@ -422,6 +429,7 @@ def decode_bmp(data: bytes) -> np.ndarray:
     (clr_used,) = struct.unpack("<I", data[46:50])
     top_down = hh < 0
     h = abs(hh)
+    jpeg.check_canvas(w, h, _BMP_PEAK_BYTES_PER_PIXEL, "BMP")
     if compression == 1:  # BI_RLE8
         if bpp != 8:
             raise ValueError(f"BI_RLE8 requires 8bpp, got {bpp}")

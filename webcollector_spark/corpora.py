@@ -69,19 +69,19 @@ CORPORA = {
     # opaque video blobs through the stub decoder: the frame fan-out plumbing
     "video": (VIDEO_SCHEMA, lambda: media.video_corpus_rows(24)),
     # real RIFF/AVI containers of baseline-JPEG frames
-    "avi": (VIDEO_SCHEMA, lambda: media.avi_corpus_rows(8)),
+    "avi": (VIDEO_SCHEMA, lambda: media.encoded_video_rows("avi", 8)),
     # real animated GIF89a: delta sub-rects, mixed disposal methods
-    "gif_anim": (VIDEO_SCHEMA, lambda: media.gif_corpus_rows(10)),
+    "gif_anim": (VIDEO_SCHEMA, lambda: media.encoded_video_rows("gif", 10)),
     # real animated PNG: 24-bit delta frames, mixed dispose ops
-    "apng": (VIDEO_SCHEMA, lambda: media.apng_corpus_rows(10)),
+    "apng": (VIDEO_SCHEMA, lambda: media.encoded_video_rows("apng", 10)),
     # opaque audio blobs through the stub decoder
     "audio": (AUDIO_SCHEMA, lambda: media.audio_corpus_rows(24)),
     # real IMA-ADPCM WAV, 4 bits/sample
-    "adpcm": (AUDIO_SCHEMA, lambda: media.adpcm_corpus_rows(16)),
+    "adpcm": (AUDIO_SCHEMA, lambda: media.encoded_audio_rows("adpcm", 16)),
     # real G.711 mu-law WAV, 8 bits/sample
-    "ulaw": (AUDIO_SCHEMA, lambda: media.ulaw_corpus_rows(16)),
+    "ulaw": (AUDIO_SCHEMA, lambda: media.encoded_audio_rows("ulaw", 16)),
     # real FLAC: fixed predictors, partitioned Rice, CRC/MD5 verified
-    "flac": (AUDIO_SCHEMA, lambda: media.flac_corpus_rows(16)),
+    "flac": (AUDIO_SCHEMA, lambda: media.encoded_audio_rows("flac", 16)),
     # PCM16 WAV clips + gain-scaled and re-noised duplicates of six of them
     "audio_fp": (AUDIO_SCHEMA, lambda: audiofp.fp_corpus_rows(12, 6)),
 }

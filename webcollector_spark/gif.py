@@ -39,8 +39,11 @@ are opaque bytes + typed metadata (model/Page.java:323-330).
 from __future__ import annotations
 
 import struct
+from collections.abc import Iterator
 
 import numpy as np
+
+from webcollector_spark.jpeg import check_canvas
 
 _MAX_WIDTH = 12
 _MAX_CODES = 1 << _MAX_WIDTH
@@ -334,8 +337,19 @@ def encode_gif89a_anim(
     return bytes(out)
 
 
-def decode_gif_frames(data: bytes) -> list[tuple[int, np.ndarray]]:
-    """GIF bytes -> [(delay_cs, RGB8 HxWx3 composed frame), ...].
+#: What decoding a GIF holds per logical-screen pixel at its peak,
+#: rounded up: the canvas, the frame yielded and the first one
+#: codecs.decode keeps, and for a full-screen image its int32 LZW
+#: indices, their opacity mask, gathered colors and the pre-draw copy
+#: of disposal 3 (tracemalloc through codecs.decode at 512x512 and
+#: 1024x1024: 28.5 for one frame, 37.4 for disposal-3 frames).
+_PEAK_BYTES_PER_PIXEL = 40
+
+
+def decode_gif_frames(data: bytes) -> Iterator[tuple[int, np.ndarray]]:
+    """GIF bytes -> (delay_cs, RGB8 HxWx3 composed frame) per image,
+    yielded as each image is composed, so the decode holds one canvas
+    and one frame whatever the frame count.
 
     The full GIF89a rendering model: frames are sub-rectangles drawn
     onto the logical-screen canvas; a preceding Graphic Control
@@ -358,8 +372,10 @@ def decode_gif_frames(data: bytes) -> list[tuple[int, np.ndarray]]:
         gct[bg_index] if gct is not None and bg_index < len(gct) else
         np.zeros(3, dtype=np.uint8)
     )
-    canvas = np.broadcast_to(bg_rgb, (sh, sw, 3)).astype(np.uint8).copy()
-    frames: list[tuple[int, np.ndarray]] = []
+    check_canvas(sw, sh, _PEAK_BYTES_PER_PIXEL, "GIF logical screen")
+    canvas = np.empty((sh, sw, 3), np.uint8)
+    canvas[:] = bg_rgb
+    n_frames = 0
     delay_cs, tindex, disposal = 0, -1, 0  # GCE state for the next image
     while pos < len(data):
         block = data[pos]
@@ -384,6 +400,8 @@ def decode_gif_frames(data: bytes) -> list[tuple[int, np.ndarray]]:
             raise ValueError(f"unknown GIF block {block:#x} at {pos - 1}")
         left, top, iw, ih, ipacked = struct.unpack("<HHHHB", data[pos : pos + 9])
         pos += 9
+        if top + ih > sh or left + iw > sw:  # before its raster is decoded
+            raise ValueError("frame rect exceeds logical screen")
         table = gct
         if ipacked & 0x80:
             n = 1 << ((ipacked & 0x07) + 1)
@@ -407,24 +425,27 @@ def decode_gif_frames(data: bytes) -> list[tuple[int, np.ndarray]]:
         opaque = idx != tindex if tindex >= 0 else np.ones_like(idx, bool)
         if int(idx[opaque].max(initial=0)) >= len(table):
             raise ValueError("palette index out of range")
-        if top + ih > sh or left + iw > sw:
-            raise ValueError("frame rect exceeds logical screen")
-        pre_draw = canvas.copy()
         region = canvas[top : top + ih, left : left + iw]
+        pre_draw = region.copy() if disposal == 3 else None
         region[opaque] = table[idx[opaque]]
-        frames.append((delay_cs, canvas.copy()))
+        n_frames += 1
+        yield delay_cs, canvas.copy()
         if disposal == 2:
-            canvas[top : top + ih, left : left + iw] = bg_rgb
-        elif disposal == 3:
-            canvas = pre_draw
+            region[:] = bg_rgb
+        elif pre_draw is not None:  # only the rect was drawn
+            region[:] = pre_draw
         delay_cs, tindex, disposal = 0, -1, 0
-    if not frames:
+    if not n_frames:
         raise ValueError("no image block in GIF")
-    return frames
 
 
 def decode_gif87a(data: bytes) -> np.ndarray:
     """GIF bytes -> RGB8 HxWx3 (first composed frame). Kept as the
     single-image entry point the image-codec dispatch uses; animation
-    consumers call decode_gif_frames."""
-    return decode_gif_frames(data)[0][1]
+    consumers call decode_gif_frames. The rest of the stream is still
+    parsed, so a corrupt later image fails the decode."""
+    frames = decode_gif_frames(data)
+    _delay, first = next(frames)
+    for _ in frames:
+        pass
+    return first

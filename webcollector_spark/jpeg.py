@@ -436,18 +436,26 @@ _NO_LENGTH = frozenset((0x01, *range(0xD0, 0xD8), _SOI, _EOI))
 
 #: The most memory one image decode may hold, in bytes. 2^29 holds a
 #: 16-bit RGBA 8K frame (7680x4320x8 = 265 MB) with room to spare;
-#: codecs bounds an inflated PNG/QIMG raw image and the APNG canvas by
-#: it, and the JPEG frame bound below is sized from it.
+#: codecs bounds an inflated PNG/QIMG raw image by it, and every
+#: decoder that allocates a canvas from header dims checks those dims
+#: against it through `check_canvas` first.
 MAX_DECODE_BYTES = 1 << 29
 #: What the JPEG decoders hold per frame pixel at their peak, rounded
 #: up: 460-480 bytes for 4:4:4 baseline frames and 200-300 for
 #: progressive ones (tracemalloc over 128x128 and 256x256 frames;
-#: int64 coefficients, float planes and the RGB result).
+#: int64 coefficients, float planes and the RGB result). So a frame
+#: may declare at most 2^20 pixels (1024x1024).
 _PEAK_BYTES_PER_PIXEL = 512
-#: The largest frame a SOF may declare: 2^20 pixels (1024x1024). The
-#: SOF fields allow 65535x65535, so without it a 200-byte header can ask
-#: a fetch worker for hundreds of GB; refused before any plane exists.
-_MAX_FRAME_PIXELS = MAX_DECODE_BYTES // _PEAK_BYTES_PER_PIXEL
+
+
+def check_canvas(w: int, h: int, peak_bytes_per_pixel: int, what: str) -> None:
+    """Refuse a w x h image before anything is allocated for it when
+    its decoder, holding `peak_bytes_per_pixel` (its measured peak,
+    rounded up) per pixel, would pass MAX_DECODE_BYTES. Header fields
+    allow up to 65535x65535 or more, so without this a header of a few
+    hundred bytes can ask a fetch worker for many GB."""
+    if w * h * peak_bytes_per_pixel > MAX_DECODE_BYTES:
+        raise ValueError(f"{what} {w}x{h} exceeds the decode budget")
 
 
 def _segment(data: bytes, pos: int) -> tuple[int, int, int] | None:
@@ -573,10 +581,7 @@ class _Frame:
         if len(p) < 6 or len(p) != 6 + 3 * p[5]:
             raise ValueError("bad SOF segment")
         _, self.h, self.w, nc = struct.unpack(">BHHB", p[:6])
-        if self.h * self.w > _MAX_FRAME_PIXELS:
-            raise ValueError(
-                f"frame {self.w}x{self.h} exceeds {_MAX_FRAME_PIXELS} pixels"
-            )
+        check_canvas(self.w, self.h, _PEAK_BYTES_PER_PIXEL, "JPEG frame")
         self.comps = []
         for ci in range(nc):
             cid, samp, tq = p[6 + 3 * ci : 9 + 3 * ci]

@@ -3,21 +3,24 @@
 The container has no media codec LIBRARIES (no PIL/ffmpeg/librosa —
 verified), so compressed formats (h264, mp3, ...) stay behind a
 clearly-marked deterministic fake. But the codec SEAM itself is real
-and exercised: this module also ships genuine pure-Python decoders for
-two uncompressed production formats —
+and exercised: every other registered format is a genuine pure-Python
+decoder.
 
-* **WAV** (RIFF PCM16) — what `ffmpeg -f wav -acodec pcm_s16le` emits;
-  `decode_audio_real` walks the RIFF chunks and returns the float32
-  waveform.
-* **PPM stream** (concatenated binary P6 frames) — byte-for-byte what
-  `ffmpeg -f image2pipe -vcodec ppm` emits; `decode_video_real` parses
-  each maxval-255 P6 header + raster and yields HxWx3 uint8 frames.
-
-…plus two REAL COMPRESSED video paths built on the repo's own baseline
-JPEG codec: **MJPEG** (concatenated SOI..EOI frames, boundaries from
-the marker structure) and **AVI** (MJPEG inside a real RIFF/AVI
-container — webcollector_spark.avi walks the RIFF tree and the
-container's own headers are cross-checked against the row metadata).
+* **Video** kernels each yield HxWx3 uint8 frames: a PPM stream
+  (concatenated binary P6 frames, byte-for-byte what `ffmpeg -f
+  image2pipe -vcodec ppm` emits), MJPEG (concatenated SOI..EOI frames
+  of the repo's own baseline JPEG codec, boundaries from the marker
+  structure), AVI (MJPEG inside a real RIFF/AVI container,
+  webcollector_spark.avi), animated GIF89a and APNG. `video_frames`
+  is the one frame contract: it runs the row's kernel and checks the
+  frame count and every frame's dims against the row metadata, for
+  `sample_frames` and the oracle builder alike. Frames stream, so a
+  decode holds a fixed number of canvases whatever the clip length.
+* **Audio** kernels each return a float32 waveform: WAV as PCM16,
+  G.711 mu-law and IMA-ADPCM (one RIFF/WAVE parse,
+  webcollector_spark.riff, then the format's sample kernel), and FLAC.
+* **Corpora**: `encoded_video_rows` and `encoded_audio_rows` build the
+  real-codec registry corpora, one loop per family.
 
 Every operator dispatches per row on the `fmt` column (`_VIDEO_CODECS`
 / `_AUDIO_CODECS`), so a single DataFrame can mix fake and real
@@ -31,7 +34,7 @@ around it is fixed.
 
 from __future__ import annotations
 
-import struct
+from collections.abc import Iterator
 
 import numpy as np
 
@@ -39,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from webcollector_spark import adpcm, apng, avi, flac, gif, jpeg, riff
 from webcollector_spark.session import map_rows
 
 # input_hint generalized: opaque payload + typed metadata
@@ -85,16 +89,16 @@ AUDIO_FEAT_SCHEMA = T.StructType(
 )
 
 
-def _decode_video_stub(video_id: str, data: bytes, n_frames: int, w: int, h: int):
+def _decode_video_stub(data: bytes, n_frames: int, w: int, h: int):
     """DETERMINISTIC FAKE video decoder (no codecs in sandbox).
 
-    Yields (frame_idx, HxWx3 uint8) frames derived from a seeded RNG so
+    Yields n_frames HxWx3 uint8 frames derived from a seeded RNG so
     tests can recompute ground truth. Production: replace with ffmpeg.
     """
     seed = int.from_bytes(data[:8].ljust(8, b"\0"), "big") ^ len(data)
     for i in range(n_frames):
         rng = np.random.default_rng((seed + i) & 0xFFFFFFFF)
-        yield i, rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
+        yield rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
 
 
 def _decode_audio_stub(audio_id: str, data: bytes, n_samples: int) -> np.ndarray:
@@ -105,20 +109,19 @@ def _decode_audio_stub(audio_id: str, data: bytes, n_samples: int) -> np.ndarray
     return (rng.random(n_samples, dtype=np.float32) * 2.0 - 1.0)
 
 
-def decode_video_real(video_id: str, data: bytes, n_frames: int, w: int, h: int):
+def _ppm_frames(data: bytes, *_meta):
     """REAL decoder for a concatenated binary-P6 (PPM) frame stream.
 
     Pure Python/numpy, no external libs; parses exactly what ffmpeg's
     image2pipe/ppm output produces: per frame a `P6`,
     whitespace-separated width/height, maxval 255, single
-    whitespace byte, then w*h*3 bytes of raw RGB. Yields
-    (frame_idx, HxWx3 uint8) like the stub, and cross-checks the frame
-    dimensions against the row's typed metadata.
+    whitespace byte, then w*h*3 bytes of raw RGB, to the end of the
+    payload.
     """
     pos = 0
-    for i in range(n_frames):
+    while pos < len(data):
         if data[pos : pos + 2] != b"P6":
-            raise ValueError(f"{video_id}: frame {i}: not a P6 header at {pos}")
+            raise ValueError(f"not a P6 header at {pos}")
         pos += 2
         fields = []
         while len(fields) < 3:
@@ -136,187 +139,30 @@ def decode_video_real(video_id: str, data: bytes, n_frames: int, w: int, h: int)
         pos += 1  # the single whitespace byte after maxval
         fw, fh, maxval = fields
         if maxval != 255:
-            raise NotImplementedError(f"{video_id}: only maxval-255 P6 supported")
-        if (fw, fh) != (w, h):
-            raise ValueError(
-                f"{video_id}: frame {i} is {fw}x{fh}, metadata says {w}x{h}"
-            )
+            raise NotImplementedError("only maxval-255 P6 supported")
         raster = np.frombuffer(data, dtype=np.uint8, count=fh * fw * 3, offset=pos)
         pos += fh * fw * 3
-        yield i, raster.reshape(fh, fw, 3).copy()
+        yield raster.reshape(fh, fw, 3).copy()
 
 
-def decode_video_mjpeg(video_id: str, data: bytes, n_frames: int, w: int, h: int):
+def _mjpeg_frames(data: bytes, *_meta):
     """REAL decoder for an MJPEG-style concatenated baseline-JPEG frame
     stream (webcollector_spark.jpeg — DCT + canonical Huffman, parsed
     from the bitstream, not assumed). Frame boundaries come from the
     marker structure (`decode_baseline_at` returns the offset past each
     EOI), never from searching for magic bytes — 0xFFD9 can legally
-    occur inside table payloads. Yields (frame_idx, HxWx3 uint8) and
-    cross-checks dimensions against the row's typed metadata."""
-    from webcollector_spark import jpeg
-
+    occur inside table payloads."""
     pos = 0
-    for i in range(n_frames):
+    while pos < len(data):
         frame, pos = jpeg.decode_baseline_at(data, pos)
-        fh, fw = frame.shape[:2]
-        if (fw, fh) != (w, h):
-            raise ValueError(
-                f"{video_id}: frame {i} is {fw}x{fh}, metadata says {w}x{h}"
-            )
-        yield i, frame
+        yield frame
 
 
-def decode_video_avi(video_id: str, data: bytes, n_frames: int, w: int, h: int):
-    """REAL decoder for MJPEG inside a REAL RIFF/AVI container
-    (webcollector_spark.avi): the container's own headers (avih dims +
-    frame count, strh rate) are parsed and CROSS-CHECKED against the
-    row's typed metadata — a crawl must trust neither side alone.
-    Frame boundaries come from the '00dc' chunk sizes, never from
-    scanning for JPEG magic. Yields (frame_idx, HxWx3 uint8)."""
-    from webcollector_spark import avi
-
-    cw, ch, _fps, n_declared, frames = avi.decode_avi_mjpeg(data)
-    if (cw, ch) != (w, h):
-        raise ValueError(
-            f"{video_id}: container says {cw}x{ch}, metadata says {w}x{h}"
-        )
-    if n_declared != n_frames or len(frames) != n_frames:
-        raise ValueError(
-            f"{video_id}: container declares {n_declared} frames, "
-            f"carries {len(frames)}, metadata says {n_frames}"
-        )
-    for i, fr in enumerate(frames):
-        yield i, fr
-
-
-def decode_video_gif(video_id: str, data: bytes, n_frames: int, w: int, h: int):
-    """REAL decoder for animated GIF89a (webcollector_spark.gif): LZW
-    rasters composed onto the logical-screen canvas through the
-    transparency/disposal rendering model, sub-rect delta frames and
-    interlace included — the web's most common animation payload.
-    Cross-checks the logical screen size and frame count against the
-    row's typed metadata. Yields (frame_idx, HxWx3 uint8)."""
-    from webcollector_spark import gif as gif_codec
-
-    frames = gif_codec.decode_gif_frames(data)
-    if len(frames) != n_frames:
-        raise ValueError(
-            f"{video_id}: container carries {len(frames)} frames, "
-            f"metadata says {n_frames}"
-        )
-    for i, (_delay, fr) in enumerate(frames):
-        fh, fw = fr.shape[:2]
-        if (fw, fh) != (w, h):
-            raise ValueError(
-                f"{video_id}: frame {i} is {fw}x{fh}, metadata says {w}x{h}"
-            )
-        yield i, fr
-
-
-def decode_video_apng(video_id: str, data: bytes, n_frames: int, w: int, h: int):
-    """REAL decoder for animated PNG (webcollector_spark.apng): fcTL/
-    fdAT sub-rect frames composed through the APNG rendering model
-    (dispose none/background/previous), scanline filters inverted by
-    the shared PNG machinery. Cross-checks canvas size and frame count
-    against the row's typed metadata."""
-    from webcollector_spark import apng as apng_codec
-
-    frames = apng_codec.decode_apng(data)
-    if len(frames) != n_frames:
-        raise ValueError(
-            f"{video_id}: container carries {len(frames)} frames, "
-            f"metadata says {n_frames}"
-        )
-    for i, (_dn, _dd, fr) in enumerate(frames):
-        fh, fw = fr.shape[:2]
-        if (fw, fh) != (w, h):
-            raise ValueError(
-                f"{video_id}: frame {i} is {fw}x{fh}, metadata says {w}x{h}"
-            )
-        yield i, fr
-
-
-def apng_corpus_rows(
-    n: int = 10, n_frames: int = 6, w: int = 32, h: int = 24
-) -> list[dict]:
-    """Row dicts for the APNG corpus (fmt='apng').
-    Frames are the FULL-COLOR smooth AVI pattern — APNG's 24-bit
-    advantage over GIF's palette — and every third clip cycles the
-    dispose ops so composition, not just happy deltas, is exercised."""
-    from webcollector_spark import apng as apng_codec
-
-    rows = []
-    for c in range(n):
-        fps = [10.0, 20.0, 25.0][c % 3]
-        frames = [avi_demo_frame(c, i, w, h) for i in range(n_frames)]
-        disposes = (
-            [(0, 1, 2)[i % 3] for i in range(n_frames)] if c % 3 == 2 else None
-        )
-        rows.append(
-            {
-                "video_id": f"apng{c:06d}",
-                "bytes": apng_codec.encode_apng(
-                    frames,
-                    delays=[(1, int(fps))] * n_frames,
-                    disposes=disposes,
-                ),
-                "n_frames": n_frames,
-                "fps": fps,
-                "w": w,
-                "h": h,
-                "fmt": "apng",
-                "caption": f"caption of apng{c:06d}",
-            }
-        )
-    return rows
-
-
-def gif_anim_frame(clip: int, i: int, w: int = 32, h: int = 24) -> np.ndarray:
-    """Deterministic paletted animation frame: the AVI demo pattern
-    posterized to 6 levels/channel (<= 216 unique colors across ALL
-    frames, so one global GIF palette always fits) with a moving
-    sprite, giving real sub-rect deltas for the encoder to exploit."""
-    base = avi_demo_frame(clip, 0, w, h) // 43 * 43  # static backdrop
-    x0 = (3 * i + 2 * clip) % max(w - 8, 1)
-    y0 = (2 * i + clip) % max(h - 6, 1)
-    base[y0 : y0 + 6, x0 : x0 + 8] = (43 * ((i + clip) % 6), 86, 172)
-    return base.astype(np.uint8)
-
-
-def gif_corpus_rows(
-    n: int = 10, n_frames: int = 6, w: int = 32, h: int = 24
-) -> list[dict]:
-    """Row dicts for the animated-GIF89a corpus (fmt='gif'). Every third
-    clip cycles the disposal methods (1 leave, 2 background, 3
-    previous) so the composition path, not just the happy delta path,
-    is exercised by the registry row."""
-    from webcollector_spark import gif as gif_codec
-
-    rows = []
-    for c in range(n):
-        fps = [10.0, 20.0, 25.0][c % 3]
-        frames = [gif_anim_frame(c, i, w, h) for i in range(n_frames)]
-        disposals = (
-            [(1, 2, 3)[i % 3] for i in range(n_frames)] if c % 3 == 2 else None
-        )
-        rows.append(
-            {
-                "video_id": f"gifv{c:06d}",
-                "bytes": gif_codec.encode_gif89a_anim(
-                    frames,
-                    delays_cs=[int(round(100.0 / fps))] * n_frames,
-                    disposals=disposals,
-                ),
-                "n_frames": n_frames,
-                "fps": fps,
-                "w": w,
-                "h": h,
-                "fmt": "gif",
-                "caption": f"caption of gifv{c:06d}",
-            }
-        )
-    return rows
+def _every_third(ops: tuple[int, int, int], n_frames: int, clip: int):
+    """Per-frame ops cycling `ops` on every third clip (None, the
+    encoder default, on the others), so a corpus exercises composition
+    and not only the happy delta path."""
+    return [ops[i % 3] for i in range(n_frames)] if clip % 3 == 2 else None
 
 
 def avi_demo_frame(clip: int, i: int, w: int = 32, h: int = 24) -> np.ndarray:
@@ -331,79 +177,84 @@ def avi_demo_frame(clip: int, i: int, w: int = 32, h: int = 24) -> np.ndarray:
     return np.clip(np.stack([r, g, b], axis=-1), 0, 255).astype(np.uint8)
 
 
-def avi_corpus_rows(
-    n: int = 8, n_frames: int = 6, w: int = 32, h: int = 24
-) -> list[dict]:
-    """Row dicts for the AVI corpus (fmt='avi'): REAL RIFF/AVI
-    containers of REAL baseline-JPEG frames."""
-    from webcollector_spark import avi
+def gif_anim_frame(clip: int, i: int, w: int = 32, h: int = 24) -> np.ndarray:
+    """Deterministic paletted animation frame: the AVI demo pattern
+    posterized to 6 levels/channel (<= 216 unique colors across ALL
+    frames, so one global GIF palette always fits) with a moving
+    sprite, giving real sub-rect deltas for the encoder to exploit."""
+    base = avi_demo_frame(clip, 0, w, h) // 43 * 43  # static backdrop
+    x0 = (3 * i + 2 * clip) % max(w - 8, 1)
+    y0 = (2 * i + clip) % max(h - 6, 1)
+    base[y0 : y0 + 6, x0 : x0 + 8] = (43 * ((i + clip) % 6), 86, 172)
+    return base.astype(np.uint8)
 
+
+# fmt -> (id prefix, fps cycle, frame pattern, encoder(frames, fps, clip))
+# of the real-container video corpora. APNG carries the FULL-COLOR AVI
+# pattern, its 24-bit advantage over GIF's palette; GIF and APNG cycle
+# their disposal / dispose ops on every third clip.
+_VIDEO_CORPORA = {
+    "avi": (
+        "avi", (12.0, 24.0, 30.0), avi_demo_frame,
+        lambda frames, fps, clip: avi.encode_avi_mjpeg(frames, fps=fps),
+    ),
+    "gif": (
+        "gifv", (10.0, 20.0, 25.0), gif_anim_frame,
+        lambda frames, fps, clip: gif.encode_gif89a_anim(
+            frames,
+            delays_cs=[int(round(100.0 / fps))] * len(frames),
+            disposals=_every_third((1, 2, 3), len(frames), clip),
+        ),
+    ),
+    "apng": (
+        "apng", (10.0, 20.0, 25.0), avi_demo_frame,
+        lambda frames, fps, clip: apng.encode_apng(
+            frames,
+            delays=[(1, int(fps))] * len(frames),
+            disposes=_every_third((0, 1, 2), len(frames), clip),
+        ),
+    ),
+}
+
+
+def encoded_video_rows(
+    fmt: str, n: int, n_frames: int = 6, w: int = 32, h: int = 24
+) -> list[dict]:
+    """Row dicts of a real-container video corpus (fmt 'avi': RIFF/AVI
+    of baseline-JPEG frames; 'gif': animated GIF89a; 'apng'): n clips
+    of n_frames deterministic frames, fps cycling per clip."""
+    prefix, fps_cycle, pattern, encode = _VIDEO_CORPORA[fmt]
     rows = []
     for c in range(n):
-        fps = [12.0, 24.0, 30.0][c % 3]
-        frames = [avi_demo_frame(c, i, w, h) for i in range(n_frames)]
+        fps = fps_cycle[c % 3]
+        video_id = f"{prefix}{c:06d}"
+        frames = [pattern(c, i, w, h) for i in range(n_frames)]
         rows.append(
             {
-                "video_id": f"avi{c:06d}",
-                "bytes": avi.encode_avi_mjpeg(frames, fps=fps),
+                "video_id": video_id,
+                "bytes": encode(frames, fps, c),
                 "n_frames": n_frames,
                 "fps": fps,
                 "w": w,
                 "h": h,
-                "fmt": "avi",
-                "caption": f"caption of avi{c:06d}",
+                "fmt": fmt,
+                "caption": f"caption of {video_id}",
             }
         )
     return rows
+
+
+def _pcm16(wave: np.ndarray) -> np.ndarray:
+    """float [-1,1] waveform -> little-endian int16 samples."""
+    return np.clip(np.round(wave * 32767.0), -32768, 32767).astype("<i2")
 
 
 def encode_wav(wave: np.ndarray, sample_rate: int) -> bytes:
     """float32 [-1,1] mono waveform -> RIFF/WAVE PCM16 bytes (the
     canonical 44-byte-header layout). Fixture-side twin of
     `decode_audio_real`."""
-    pcm = np.clip(np.round(wave * 32767.0), -32768, 32767).astype("<i2")
-    body = pcm.tobytes()
-    hdr = b"WAVE" + b"fmt " + struct.pack(
-        "<IHHIIHH", 16, 1, 1, sample_rate, sample_rate * 2, 2, 16
-    ) + b"data" + struct.pack("<I", len(body))
-    return b"RIFF" + struct.pack("<I", 4 + len(hdr) - 4 + len(body)) + hdr + body
-
-
-def decode_audio_real(audio_id: str, data: bytes, n_samples: int) -> np.ndarray:
-    """REAL decoder for RIFF/WAVE PCM (16-bit mono) -> float32 [-1,1].
-
-    Walks the RIFF chunk list (tolerates extra chunks like LIST/fact
-    before `data`), so it reads what any standard WAV writer emits —
-    not just `encode_wav`'s minimal layout.
-    """
-    if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError(f"{audio_id}: not a RIFF/WAVE file")
-    pos, bits, channels = 12, None, None
-    while pos + 8 <= len(data):
-        tag = data[pos : pos + 4]
-        (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        body = data[pos + 8 : pos + 8 + size]
-        if tag == b"fmt ":
-            fmt_code, channels, _sr, _br, _ba, bits = struct.unpack(
-                "<HHIIHH", body[:16]
-            )
-            if fmt_code != 1 or channels != 1 or bits != 16:
-                raise NotImplementedError(
-                    f"{audio_id}: only PCM16 mono supported "
-                    f"(fmt={fmt_code}, ch={channels}, bits={bits})"
-                )
-        elif tag == b"data":
-            if bits is None:
-                raise ValueError(f"{audio_id}: data chunk before fmt")
-            pcm = np.frombuffer(body, dtype="<i2")
-            if len(pcm) < n_samples:
-                raise ValueError(
-                    f"{audio_id}: {len(pcm)} samples in file, "
-                    f"metadata says {n_samples}"
-                )
-            return (pcm[:n_samples].astype(np.float32)) / 32767.0
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    raise ValueError(f"{audio_id}: no data chunk")
+    fmt = riff.WavFormat(1, 1, sample_rate, sample_rate * 2, 2, 16)
+    return riff.wav(fmt, _pcm16(wave).tobytes())
 
 
 _ULAW_BIAS = 0x84  # decode-table bias (the 16-bit expansion side)
@@ -446,51 +297,61 @@ def encode_wav_ulaw(wave: np.ndarray, sample_rate: int) -> bytes:
     8 bits/sample — half the bytes of PCM16 at ~38 dB SNR, the codec
     telephony archives and old web audio actually ship). Includes the
     'fact' chunk (sample count) non-PCM WAVs are required to carry."""
-    pcm = np.clip(np.round(wave * 32767.0), -32768, 32767).astype(np.int16)
-    body = ulaw_encode(pcm).tobytes()
-    hdr = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<IHHIIHH", 16, 7, 1, sample_rate,
-                                sample_rate, 1, 8)
-        + b"fact" + struct.pack("<II", 4, len(pcm))
-        + b"data" + struct.pack("<I", len(body))
-    )
-    return b"RIFF" + struct.pack("<I", len(hdr) + len(body) + 4) + hdr + body
+    pcm = _pcm16(wave)
+    fmt = riff.WavFormat(7, 1, sample_rate, sample_rate, 1, 8)
+    return riff.wav(fmt, ulaw_encode(pcm).tobytes(), n_samples=len(pcm))
 
 
-def decode_audio_ulaw(audio_id: str, data: bytes, n_samples: int) -> np.ndarray:
-    """REAL decoder for RIFF/WAVE G.711 mu-law (fmt code 7, mono) ->
-    float32 [-1,1]. Same chunk walk as the PCM path; the 8-bit codes
-    expand through the exact inverse table."""
-    if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError(f"{audio_id}: not a RIFF/WAVE file")
-    pos, fmt_code = 12, None
-    while pos + 8 <= len(data):
-        tag = data[pos : pos + 4]
-        (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        body = data[pos + 8 : pos + 8 + size]
-        if tag == b"fmt ":
-            fmt_code, channels, _sr, _br, _ba, bits = struct.unpack(
-                "<HHIIHH", body[:16]
+def _wav_codec(code: int, bits: int | None, what: str, samples):
+    """A RIFF/WAVE decoder -> float32 [-1,1]: the one WAV parse
+    (riff.read_wav, which tolerates extra chunks like LIST/fact before
+    `data`, so it reads what any standard writer emits), a check that
+    the fmt chunk is mono `code` (at `bits` per sample when given),
+    then `samples(data_payload, fmt, n_samples)`, the format's kernel,
+    giving at most n_samples int16 samples. Fewer than the metadata's
+    count fail the clip."""
+
+    def decode(audio_id: str, data: bytes, n_samples: int) -> np.ndarray:
+        try:
+            fmt, body = riff.read_wav(data)
+        except ValueError as e:
+            raise ValueError(f"{audio_id}: {e}") from None
+        if fmt.code != code or fmt.channels != 1 or bits not in (None, fmt.bits):
+            raise NotImplementedError(
+                f"{audio_id}: only mono {what} supported "
+                f"(fmt={fmt.code:#x}, ch={fmt.channels}, bits={fmt.bits})"
             )
-            if fmt_code != 7 or channels != 1 or bits != 8:
-                raise NotImplementedError(
-                    f"{audio_id}: only mono 8-bit mu-law supported "
-                    f"(fmt={fmt_code}, ch={channels}, bits={bits})"
-                )
-        elif tag == b"data":
-            if fmt_code is None:
-                raise ValueError(f"{audio_id}: data chunk before fmt")
-            codes = np.frombuffer(body, dtype=np.uint8)
-            if len(codes) < n_samples:
-                raise ValueError(
-                    f"{audio_id}: {len(codes)} samples in file, "
-                    f"metadata says {n_samples}"
-                )
-            pcm = ulaw_decode(codes[:n_samples])
-            return pcm.astype(np.float32) / 32767.0
-        pos += 8 + size + (size & 1)
-    raise ValueError(f"{audio_id}: no data chunk")
+        pcm = samples(body, fmt, n_samples)
+        if len(pcm) < n_samples:
+            raise ValueError(
+                f"{audio_id}: {len(pcm)} samples in file, "
+                f"metadata says {n_samples}"
+            )
+        return pcm.astype(np.float32) / 32767.0
+
+    return decode
+
+
+#: REAL decoder for RIFF/WAVE PCM (16-bit mono).
+decode_audio_real = _wav_codec(
+    1, 16, "PCM16", lambda body, fmt, n: np.frombuffer(body, "<i2")[:n]
+)
+#: REAL decoder for RIFF/WAVE G.711 mu-law (fmt code 7): the 8-bit
+#: codes expand through the exact inverse table.
+decode_audio_ulaw = _wav_codec(
+    7, 8, "8-bit mu-law",
+    lambda body, fmt, n: ulaw_decode(np.frombuffer(body, np.uint8)[:n]),
+)
+#: REAL decoder for RIFF/WAVE IMA-ADPCM (fmt code 0x11): 4:1 vs PCM16,
+#: the block-coded bitstream ffmpeg's adpcm_ima_wav emits. The
+#: bit-level work (vectorized across blocks) lives in
+#: webcollector_spark.adpcm, cross-validated bit-exactly against the
+#: stdlib's independent DVI implementation (audioop.adpcm2lin) in
+#: tests/test_adpcm.py.
+decode_audio_adpcm = _wav_codec(
+    adpcm.WAVE_FORMAT_IMA_ADPCM, None, "IMA-ADPCM",
+    lambda body, fmt, n: adpcm.decode_blocks(body, fmt.block_align, n),
+)
 
 
 def decode_audio_flac(audio_id: str, data: bytes, n_samples: int) -> np.ndarray:
@@ -498,8 +359,6 @@ def decode_audio_flac(audio_id: str, data: bytes, n_samples: int) -> np.ndarray:
     predictors + partitioned Rice, CRC-8/CRC-16/MD5 all verified) ->
     float32 [-1,1]. Mono 16-bit in this corpus; lossless, so the
     waveform is bit-identical to the pre-encode PCM."""
-    from webcollector_spark import flac
-
     pcm, _sr = flac.decode_flac(data)
     if pcm.ndim != 1:
         raise NotImplementedError(f"{audio_id}: stereo features not wired")
@@ -511,95 +370,22 @@ def decode_audio_flac(audio_id: str, data: bytes, n_samples: int) -> np.ndarray:
     return pcm.astype(np.float32) / 32767.0
 
 
-def flac_corpus_rows(n: int = 16, seed: int = 48) -> list[dict]:
-    """Row dicts for the FLAC corpus (fmt='flac', 16-bit mono). The
-    oracle computes features from the PRE-ENCODE PCM, so a driver match
-    proves the decode is bit-exact through the whole Rice/CRC path."""
-    from webcollector_spark import flac
-
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        sr = int(rng.choice([8000, 16000]))
-        ns = int(rng.integers(sr // 2, sr))
-        pcm = np.round(adpcm_waveform(i, sr, ns) * 32767.0).astype(np.int16)
-        rows.append(
-            {
-                "audio_id": f"flc{i:06d}",
-                "bytes": flac.encode_flac(pcm, sr),
-                "sample_rate": sr,
-                "n_samples": ns,
-                "fmt": "flac",
-            }
-        )
-    return rows
-
-
-def ulaw_corpus_rows(n: int = 16, seed: int = 47) -> list[dict]:
-    """Row dicts for the G.711 mu-law WAV corpus (fmt='ulaw', 8
-    bits/sample)."""
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        sr = int(rng.choice([8000, 16000]))
-        ns = int(rng.integers(sr // 2, sr))
-        wave = adpcm_waveform(i, sr, ns)
-        rows.append(
-            {
-                "audio_id": f"ulw{i:06d}",
-                "bytes": encode_wav_ulaw(wave, sr),
-                "sample_rate": sr,
-                "n_samples": ns,
-                "fmt": "ulaw",
-            }
-        )
-    return rows
-
-
-def decode_audio_adpcm(audio_id: str, data: bytes, n_samples: int) -> np.ndarray:
-    """REAL decoder for RIFF/WAVE IMA-ADPCM (fmt code 0x11, mono) ->
-    float32 [-1,1]. 4:1 compressed vs PCM16; the block-coded bitstream
-    ffmpeg's adpcm_ima_wav emits. Container walk here; the bit-level
-    work (vectorized across blocks) lives in webcollector_spark.adpcm,
-    cross-validated bit-exactly against the stdlib's independent DVI
-    implementation (audioop.adpcm2lin) in tests/test_adpcm.py."""
-    from webcollector_spark import adpcm as _adpcm
-
-    if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError(f"{audio_id}: not a RIFF/WAVE file")
-    pos, block_align, fmt_code, channels = 12, None, None, None
-    while pos + 8 <= len(data):
-        tag = data[pos : pos + 4]
-        (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        body = data[pos + 8 : pos + 8 + size]
-        if tag == b"fmt ":
-            fmt_code, channels, _sr, _br, block_align, _bits = struct.unpack(
-                "<HHIIHH", body[:16]
-            )
-            if fmt_code != 0x11 or channels != 1:
-                raise NotImplementedError(
-                    f"{audio_id}: only mono IMA-ADPCM supported "
-                    f"(fmt={fmt_code:#x}, ch={channels})"
-                )
-        elif tag == b"data":
-            if block_align is None:
-                raise ValueError(f"{audio_id}: data chunk before fmt")
-            pcm = _adpcm.decode_blocks(bytes(body), block_align, n_samples)
-            return pcm.astype(np.float32) / 32767.0
-        pos += 8 + size + (size & 1)
-    raise ValueError(f"{audio_id}: no data chunk")
-
-
 # fmt -> decode kernel. Compressed formats (h264, vp9, mp3, opus...)
 # are the production swap: one registry entry with ffmpeg/librosa
-# bindings; nothing else in the dataflow changes.
+# bindings; nothing else in the dataflow changes. A video kernel takes
+# (payload, n_frames, w, h) and yields HxWx3 uint8 frames; only the
+# stub reads the metadata, and `video_frames` checks every kernel's
+# frames against it.
 _VIDEO_CODECS = {
     "fakevid": _decode_video_stub,
-    "ppm": decode_video_real,
-    "mjpeg": decode_video_mjpeg,
-    "avi": decode_video_avi,
-    "gif": decode_video_gif,
-    "apng": decode_video_apng,
+    "ppm": _ppm_frames,
+    "mjpeg": _mjpeg_frames,
+    # MJPEG in RIFF/AVI; the reader checks its frames against avih
+    "avi": lambda data, *_meta: avi.decode_avi_mjpeg(data)[4],
+    # GIF89a: LZW rasters composed through the disposal model
+    "gif": lambda data, *_meta: (fr for _delay, fr in gif.decode_gif_frames(data)),
+    # APNG: fcTL/fdAT sub-rects composed through the dispose ops
+    "apng": lambda data, *_meta: (fr for *_delay, fr in apng.decode_apng(data)),
 }
 _AUDIO_CODECS = {
     "fakeaud": _decode_audio_stub,
@@ -619,6 +405,36 @@ def _video_decoder(fmt: str):
             "formats need ffmpeg bindings — register them in "
             "webcollector_spark/operators/media.py:_VIDEO_CODECS"
         ) from None
+
+
+def video_frames(
+    fmt: str, video_id: str, data: bytes, n_frames: int, w: int, h: int
+) -> Iterator[np.ndarray]:
+    """The frames of one video row, decoded by its fmt's kernel and
+    checked against the row's typed metadata: every frame must be
+    w x h, and the payload must carry exactly n_frames (refused at the
+    first extra frame). A crawl trusts neither the payload nor the
+    metadata alone. Frames are yielded as they are decoded, so a
+    consumer holds one at a time whatever the clip length."""
+    carried = 0
+    for frame in _video_decoder(fmt)(data, n_frames, w, h):
+        if carried == n_frames:
+            raise ValueError(
+                f"{video_id}: payload carries more than the {n_frames} "
+                "frames its metadata declares"
+            )
+        fh, fw = frame.shape[:2]
+        if (fw, fh) != (w, h):
+            raise ValueError(
+                f"{video_id}: frame {carried} is {fw}x{fh}, metadata says {w}x{h}"
+            )
+        carried += 1
+        yield frame
+    if carried != n_frames:
+        raise ValueError(
+            f"{video_id}: payload carries {carried} frames, "
+            f"metadata declares {n_frames}"
+        )
 
 
 def _audio_decoder(fmt: str):
@@ -684,24 +500,37 @@ def adpcm_waveform(i: int, sr: int, ns: int) -> np.ndarray:
     return (wave * (0.6 + 0.4 * np.sin(2 * np.pi * 1.5 * t))).astype(np.float32)
 
 
-def adpcm_corpus_rows(n: int = 16, seed: int = 46) -> list[dict]:
-    """Row dicts for the IMA-ADPCM WAV corpus (fmt='adpcm', 4
-    bits/sample)."""
-    from webcollector_spark import adpcm as _adpcm
+# fmt -> (id prefix, seed, encoder(wave, sample_rate)) of the
+# real-codec tone corpora. FLAC stores the waveform quantized to PCM16
+# as is; its oracle recomputes that pre-encode PCM.
+_AUDIO_CORPORA = {
+    "adpcm": ("adp", 46, adpcm.encode_wav_ima),
+    "ulaw": ("ulw", 47, encode_wav_ulaw),
+    "flac": (
+        "flc", 48,
+        lambda wave, sr: flac.encode_flac(np.round(wave * 32767.0).astype(np.int16), sr),
+    ),
+}
 
+
+def encoded_audio_rows(fmt: str, n: int) -> list[dict]:
+    """Row dicts of a real-codec audio corpus (fmt 'adpcm': IMA-ADPCM
+    WAV, 4 bits/sample; 'ulaw': G.711 mu-law WAV, 8 bits/sample;
+    'flac': 16-bit mono FLAC): n `adpcm_waveform` clips of half a
+    second to a second at 8 or 16 kHz, drawn from the format's seed."""
+    prefix, seed, encode = _AUDIO_CORPORA[fmt]
     rng = np.random.default_rng(seed)
     rows = []
     for i in range(n):
         sr = int(rng.choice([8000, 16000]))
         ns = int(rng.integers(sr // 2, sr))
-        wave = adpcm_waveform(i, sr, ns)
         rows.append(
             {
-                "audio_id": f"adp{i:06d}",
-                "bytes": _adpcm.encode_wav_ima(wave, sr),
+                "audio_id": f"{prefix}{i:06d}",
+                "bytes": encode(adpcm_waveform(i, sr, ns), sr),
                 "sample_rate": sr,
                 "n_samples": ns,
-                "fmt": "adpcm",
+                "fmt": fmt,
             }
         )
     return rows
@@ -714,10 +543,10 @@ def sample_frames(videos: DataFrame, every_n: int = 4) -> DataFrame:
     stage, no shuffle."""
 
     def row(r):
-        decode = _video_decoder(r["fmt"])
-        for idx, frame in decode(
-            r["video_id"], bytes(r["bytes"]), r["n_frames"], r["w"], r["h"]
-        ):
+        frames = video_frames(
+            r["fmt"], r["video_id"], bytes(r["bytes"]), r["n_frames"], r["w"], r["h"]
+        )
+        for idx, frame in enumerate(frames):
             if idx % every_n:
                 continue
             yield {

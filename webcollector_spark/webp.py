@@ -3,7 +3,9 @@
 The modern web's lossless image bitstream (RFC 9649), built from real
 entropy coding end to end:
 
-* RIFF/WEBP container + VP8L chunk (0x2F signature, 14-bit dims);
+* RIFF/WEBP container + VP8L chunk (0x2F signature, 14-bit dims),
+  read and written through webcollector_spark.riff, the chunk walk
+  and writer WAV and AVI share;
 * LSB-first bit packing with canonical prefix codes in both spec
   forms — "simple" (1-2 symbols) and "normal" (code-length-coded,
   with 16/17/18 repeat symbols, the Deflate idea recoded);
@@ -35,9 +37,10 @@ metadata (model/Page.java:323-330).
 from __future__ import annotations
 
 import heapq
-import struct
 
 import numpy as np
+
+from webcollector_spark import riff
 
 _CODE_LENGTH_ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15]
 _HASH_MUL = 0x1E35A7BD
@@ -463,11 +466,7 @@ def encode_webp_lossless(
             if dnbits:
                 bw.write(dextra, dnbits)
     payload = b"\x2f" + bw.flush()
-    chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-    if len(payload) & 1:
-        chunk += b"\x00"
-    riff = b"WEBP" + chunk
-    return b"RIFF" + struct.pack("<I", len(riff)) + riff
+    return riff.chunk(b"RIFF", b"WEBP" + riff.chunk(b"VP8L", payload))
 
 
 def _decode_argb_stream(
@@ -557,20 +556,13 @@ def _decode_argb_stream(
 def decode_webp_lossless(data: bytes) -> np.ndarray:
     """WebP bytes -> RGB8 HxWx3 (VP8L lossless only; lossy VP8 and
     transforms beyond subtract-green raise NotImplementedError)."""
-    if data[:4] != b"RIFF" or data[8:12] != b"WEBP":
-        raise ValueError("not a WebP (RIFF) file")
-    pos = 12
     payload = None
-    while pos + 8 <= len(data):
-        tag = data[pos : pos + 4]
-        (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        body = data[pos + 8 : pos + 8 + size]
+    for tag, start, size in riff.chunks(data, b"WEBP", "WebP (RIFF)"):
         if tag == b"VP8L":
-            payload = body
+            payload = data[start : start + size]
             break
         if tag in (b"VP8 ", b"VP8X"):
             raise NotImplementedError(f"WebP {tag.decode().strip()} (lossy/extended) not supported")
-        pos += 8 + size + (size & 1)
     if payload is None:
         raise ValueError("no VP8L chunk")
     if payload[:1] != b"\x2f":
