@@ -116,6 +116,57 @@ def test_rejections():
         gif.decode_gif87a(data[: len(data) // 2] + b"\x00\x3b")
 
 
+def _tiny_images_on_a_big_screen(n_images: int, side: int = 3000) -> bytes:
+    """A GIF87a whose `n_images` 1x1 images (palette index 1) sit on a
+    side x side logical screen: ~15 bytes an image."""
+    gct = np.array([[0, 0, 0], [255, 255, 255]], np.uint8)
+    out = bytearray(b"GIF87a" + struct.pack("<HHBBB", side, side, 0x80, 0, 0))
+    out += gct.tobytes()
+    raster = gif._sub_blocks(gif.lzw_encode(np.array([1], np.int32), 2))
+    for k in range(n_images):
+        out += b"\x2c" + struct.pack("<HHHHB", k % side, k // side, 1, 1, 0)
+        out += b"\x02" + raster
+    return bytes(out + b"\x3b")
+
+
+def test_many_tiny_images_decode_in_time_of_their_rects():
+    """codecs.decode keeps one frame but parses every image; past the
+    first frame no screen is copied, so 400 1x1 images on a 3000x3000
+    screen (a 6 KB file) cost their pixels, not 400 screens. A decode
+    that copied the screen per image took ~2 s on a 4-core box."""
+    import time
+
+    data = _tiny_images_on_a_big_screen(400)
+    assert len(data) < 6200
+    t0 = time.perf_counter()
+    out = codecs.decode(data)
+    elapsed = time.perf_counter() - t0
+    assert out.shape == (3000, 3000, 3)
+    assert out[0, 0].tolist() == [255, 255, 255] and int(out.sum()) == 3 * 255
+    assert elapsed < 0.5, elapsed
+
+
+def test_frames_stay_bit_exact_and_a_corrupt_later_image_fails():
+    """decode_gif_frames still hands out each composed frame whole, and
+    decode_gif87a still parses past the frame it keeps."""
+    data = _tiny_images_on_a_big_screen(5, side=8)
+    frames = [f for _, f in gif.decode_gif_frames(data)]
+    assert len(frames) == 5
+    for k, f in enumerate(frames):
+        lit = np.zeros((8, 8), bool)
+        lit[0, : k + 1] = True
+        assert np.array_equal(f.any(axis=2), lit), k
+    assert np.array_equal(gif.decode_gif87a(data), frames[0])
+    # the last image's first LZW byte -> CLEAR(4), END(5): no pixels
+    bad = bytearray(data)
+    assert bad[-4] == 0x4C
+    bad[-4] = 0x2C
+    with pytest.raises(ValueError, match="LZW produced 0 pixels"):
+        gif.decode_gif87a(bytes(bad))
+    with pytest.raises(ValueError, match="LZW produced 0 pixels"):
+        codecs.decode(bytes(bad))
+
+
 def test_corpus_lossless_invariants():
     pdf = fixtures.make_corpus_gif(12)
     for r in pdf.to_dict("records"):

@@ -87,6 +87,29 @@ def test_lzw_megabyte_strip_roundtrips_in_linear_time():
     assert time.perf_counter() - t0 < 5.0
 
 
+def test_strip_decode_holds_one_plane():
+    """Strips decode straight into the plane: 16-row strips peak near
+    the plane's own 3 bytes a pixel, and one whole-image predictor strip
+    stays under the canvas bound. Growing a bytearray raster and copying
+    it twice peaked at 9.2, and int64 predictor sums at 51."""
+    import tracemalloc
+
+    rng = np.random.default_rng(512)
+    px = rng.integers(0, 256, (512, 512, 3)).astype(np.uint8)
+    for data, bound in (
+        (tiff.encode_tiff(px), 4),
+        (tiff.encode_tiff(px, rows_per_strip=512, predictor=2), tiff._PEAK_BYTES_PER_PIXEL),
+    ):
+        tracemalloc.start()
+        try:
+            out = tiff.decode_tiff(data)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert np.array_equal(out, px)
+        assert peak / px[..., 0].size < bound, peak / px[..., 0].size
+
+
 def test_lzw_predictor_compresses_smooth_content():
     smooth = (
         128 + 90 * np.sin(np.add.outer(np.arange(48) / 7, np.arange(40) / 5))

@@ -1,16 +1,23 @@
-"""Fixed driver cost of one crawl pass, per engine call.
+"""Fixed driver cost of one benchmark pass, per engine call or query.
 
-    python tools/round_cost.py [--seed N]
+    python tools/round_cost.py [--workload crawl|curation_suite] [--seed N] [--passes N]
 
-Sets up the benchmark's `crawl` workload (`crawlbench/workloads.py`, used
-as is) the way `crawlbench/run.py` does, warms it up, then runs one
-untraced pass with the engine's entry points and DataFrame actions
-wrapped. Per call path it prints the number of calls and, inclusive of
-nested calls, the wall time, the Spark jobs started (from the status
-store) and the py4j round trips (commands the driver sent to the JVM).
-The totals line adds how much of the pass's wall time some Spark job was
-running; the rest is spent on the driver. The meter's own job-id reads
-(two py4j commands per wrapped call, not counted) add a little wall time.
+Sets up a benchmark workload (`crawlbench/workloads.py`, used as is) the
+way `crawlbench/run.py` does, warms it up, then runs untraced passes
+with the engine's calls wrapped. Counts are inclusive of nested calls:
+the wall time, the Spark jobs started (from the status store) and the
+py4j round trips (commands the driver sent to the JVM). The meter's own
+job-id reads (two py4j commands per wrapped call, not counted) add a
+little wall time.
+
+`crawl` (one pass): per call path of the engine's entry points and
+DataFrame actions, the number of calls and their counts. The totals
+line adds how much of the pass's wall time some Spark job was running;
+the rest is spent on the driver.
+
+`curation_suite` (`--passes`, default 3): per registry query, the median
+over the passes of building its plan (the registry function) and of
+executing it (`toArrow`), each with its jobs and py4j round trips.
 """
 
 from __future__ import annotations
@@ -18,6 +25,7 @@ from __future__ import annotations
 import argparse
 import functools
 import os
+import statistics
 import sys
 import time
 from contextlib import contextmanager
@@ -103,19 +111,25 @@ class Meter:
         return busy / 1000.0
 
 
+def count_sends(meter: Meter) -> None:
+    """Wrap the py4j send paths."""
+    from py4j import clientserver, java_gateway
+
+    for cls in (clientserver.ClientServerConnection, java_gateway.GatewayConnection):
+        cls.send_command = meter.count_py4j(cls.send_command)
+
+
 def instrument(meter: Meter) -> None:
     """Wrap the py4j send paths, the engine calls a crawl pass makes and
     the DataFrame actions, where the crawler and the workload look them
     up."""
-    from py4j import clientserver, java_gateway
     from pyspark.sql.classic.dataframe import DataFrame
 
     import workloads
     from webcollector_spark import crawler, store
     from webcollector_spark.operators import recrawl
 
-    for cls in (clientserver.ClientServerConnection, java_gateway.GatewayConnection):
-        cls.send_command = meter.count_py4j(cls.send_command)
+    count_sends(meter)
     for attr in ("inject", "merge", "load", "count", "_set", "log_round"):
         meter.wrap(store.RamFrontierStore, attr, f"store.{attr}")
     for attr in ("__init__", "_set", "log_round"):
@@ -150,9 +164,56 @@ def report(meter: Meter) -> None:
     show(root)
 
 
+def suite_passes(meter: Meter, wl, spark, passes: int) -> list[dict]:
+    """`passes` runs of the suite, each query split into plan build and
+    execution; one {call path: [calls, wall_s, jobs, py4j]} per pass."""
+    import workloads
+
+    count_sends(meter)
+    per_pass = []
+    for _ in range(passes):
+        meter.rows, out = {}, {}
+        with meter.frame("suite.pass"):
+            for q, fn in wl.fns.items():
+                with meter.frame(q):
+                    with meter.frame("build"):
+                        df = fn(spark, str(workloads.SUITE_DIR))
+                    with meter.frame("execute"):
+                        out[q] = df.toArrow()
+        wl.last = out
+        per_pass.append(meter.rows)
+    return per_pass
+
+
+def report_suite(per_pass: list[dict]) -> None:
+    def median(path, i):
+        return statistics.median(rows[path][i] for rows in per_pass)
+
+    root = ("suite.pass",)
+    print(f"median of {len(per_pass)} passes: {median(root, 1):.2f} s wall, "
+          f"{median(root, 2):.0f} Spark jobs, {median(root, 3):.0f} py4j round trips")
+    print(f"{'query':<24}{'build_ms':>9}{'exec_ms':>9}"
+          f"{'build_jobs':>11}{'exec_jobs':>10}{'build_py4j':>11}{'exec_py4j':>10}")
+    totals = [0.0] * 6
+    for path in per_pass[0]:
+        if len(path) != 2:
+            continue
+        b, x = path + ("build",), path + ("execute",)
+        cells = [median(b, 1) * 1e3, median(x, 1) * 1e3, median(b, 2),
+                 median(x, 2), median(b, 3), median(x, 3)]
+        totals = [t + c for t, c in zip(totals, cells)]
+        print(f"{path[1]:<24}{cells[0]:>9.0f}{cells[1]:>9.0f}{cells[2]:>11.0f}"
+              f"{cells[3]:>10.0f}{cells[4]:>11.0f}{cells[5]:>10.0f}")
+    print(f"{'sum of medians':<24}{totals[0]:>9.0f}{totals[1]:>9.0f}{totals[2]:>11.0f}"
+          f"{totals[3]:>10.0f}{totals[4]:>11.0f}{totals[5]:>10.0f}")
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--workload", choices=("crawl", "curation_suite"), default="crawl")
     ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--passes", type=int, default=3,
+                    help="curation_suite passes to take the median over")
     args = ap.parse_args()
 
     import box
@@ -162,7 +223,7 @@ def main() -> None:
     work = ROOT / ".crawlbench" / "round_cost"
     box.fit_spark_env(ROOT, work)
     cores = box.nproc()
-    wl = workloads.WORKLOADS["crawl"](args.seed, work)
+    wl = workloads.WORKLOADS[args.workload](args.seed, work)
     wl.make_inputs()
     spark = bench._start_session(cores)
     try:
@@ -170,6 +231,13 @@ def main() -> None:
         bench._warm_workers(spark, cores)
         wl.warm(spark)
         meter = Meter(spark.sparkContext)
+        if args.workload == "curation_suite":
+            per_pass = suite_passes(meter, wl, spark, max(1, args.passes))
+            failed_checks = [n for n, ok in wl.check(spark) if not ok]
+            print(f"local[{cores}], {os.cpu_count()} CPUs: {len(wl.fns)} queries, "
+                  f"failed checks: {failed_checks or 'none'}")
+            report_suite(per_pass)
+            return
         instrument(meter)
         with meter.frame("crawl.pass"):
             p = wl.run(spark)

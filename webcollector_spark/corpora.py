@@ -7,11 +7,16 @@ through `corpus(spark, name)`; the Spark-free oracle builder
 same bytes. A row is a generator call with its size and seed fixed,
 plus the schema of its family (`CORPUS_SCHEMA` for images,
 `VIDEO_SCHEMA`, `AUDIO_SCHEMA`). In production a corpus is a table
-scan; here the generator, same schema. A test that needs another size
-builds its frame from the generator itself.
+scan; here the generator, same schema. Like a table, a corpus is fixed
+for the life of the process: each one is generated once, on its first
+use, and every later `corpus` / `corpus_rows` call reads that output.
+A test that needs another size builds its frame from the generator
+itself.
 """
 
 from __future__ import annotations
+
+import functools
 
 import pandas as pd
 
@@ -24,7 +29,7 @@ from webcollector_spark.schema import CORPUS_SCHEMA
 
 
 def _union(*names: str) -> pd.DataFrame:
-    return pd.concat([corpus_rows(n) for n in names], ignore_index=True)
+    return pd.concat([_generated(n) for n in names], ignore_index=True)
 
 
 CORPORA = {
@@ -87,13 +92,24 @@ CORPORA = {
 }
 
 
+@functools.cache
+def _generated(name: str) -> pd.DataFrame | list[dict]:
+    """The generator's output for `name`, made once per process. Never
+    handed out: `corpus_rows` copies it, `corpus` only reads it."""
+    return CORPORA[name][1]()
+
+
 def corpus_rows(name: str) -> pd.DataFrame | list[dict]:
     """The named corpus, Spark-free: a pandas frame for the image
-    corpora, a list of row dicts for the video and audio ones."""
-    return CORPORA[name][1]()
+    corpora, a list of row dicts for the video and audio ones. Each call
+    returns a fresh copy, so the caller may mutate it (its values are
+    immutable scalars, bytes and strings)."""
+    rows = _generated(name)
+    if isinstance(rows, pd.DataFrame):
+        return rows.copy()
+    return [dict(r) for r in rows]
 
 
 def corpus(spark: SparkSession, name: str) -> DataFrame:
     """The named corpus as a DataFrame of its family's schema."""
-    schema, make = CORPORA[name]
-    return spark.createDataFrame(make(), schema=schema)
+    return spark.createDataFrame(_generated(name), schema=CORPORA[name][0])

@@ -359,6 +359,14 @@ def decode_gif_frames(data: bytes) -> Iterator[tuple[int, np.ndarray]]:
     pre-draw canvas). Interlaced rasters are de-shuffled via the
     four-pass row order. NETSCAPE/comment/plain-text extensions are
     skipped by the 89a block-skipping rules."""
+    for delay_cs, canvas in _compose(data):
+        yield delay_cs, canvas.copy()
+
+
+def _compose(data: bytes) -> Iterator[tuple[int, np.ndarray]]:
+    """decode_gif_frames without the copies: yields the live canvas
+    after each image is drawn, and applies that image's disposal when
+    resumed. An image costs its own rect, not the screen."""
     if data[:4] != b"GIF8" or data[4:6] not in (b"7a", b"9a"):
         raise ValueError("not a GIF")
     sw, sh, packed, bg_index, _ar = struct.unpack("<HHBBB", data[6:13])
@@ -429,7 +437,7 @@ def decode_gif_frames(data: bytes) -> Iterator[tuple[int, np.ndarray]]:
         pre_draw = region.copy() if disposal == 3 else None
         region[opaque] = table[idx[opaque]]
         n_frames += 1
-        yield delay_cs, canvas.copy()
+        yield delay_cs, canvas
         if disposal == 2:
             region[:] = bg_rgb
         elif pre_draw is not None:  # only the rect was drawn
@@ -443,9 +451,10 @@ def decode_gif87a(data: bytes) -> np.ndarray:
     """GIF bytes -> RGB8 HxWx3 (first composed frame). Kept as the
     single-image entry point the image-codec dispatch uses; animation
     consumers call decode_gif_frames. The rest of the stream is still
-    parsed, so a corrupt later image fails the decode."""
-    frames = decode_gif_frames(data)
-    _delay, first = next(frames)
+    parsed, so a corrupt later image fails the decode; past the first
+    frame no screen is copied, so each later image costs its own rect."""
+    frames = _compose(data)
+    first = next(frames)[1].copy()
     for _ in frames:
         pass
     return first

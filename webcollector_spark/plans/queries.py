@@ -16,11 +16,13 @@ from __future__ import annotations
 
 import functools
 import json
+import os
 from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from webcollector_spark.corpora import corpus
 from webcollector_spark.functions.regex_rule import rule_column
@@ -29,13 +31,52 @@ Q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 SQL: dict[str, str] = {}
 
 
+# parquet path -> (its identity, the schema inferred at that identity)
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _identity(path: str) -> tuple | None:
+    """(mtime_ns, size) of a parquet file, or (relative path, mtime_ns,
+    size) of each data file under a parquet directory (Spark's rule:
+    names starting with "_" or "." are not data); None if the path is
+    not on the local file system."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (st.st_mtime_ns, st.st_size)
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            for n in names:
+                if not n.startswith(("_", ".")):
+                    f = os.path.join(root, n)
+                    st = os.stat(f)
+                    files.append((os.path.relpath(f, path), st.st_mtime_ns, st.st_size))
+        return tuple(sorted(files))
+    except OSError:
+        return None
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A registry input table. Its schema is inferred on the first read
+    of the file and passed in on every later one for as long as the
+    file's identity is unchanged. Inference runs a Spark job over the
+    parquet footers: 170-200 ms a read of the suite's sf0.01 tables on 4
+    cores, against 35-45 ms with the schema given."""
     # The driver supplies its own SparkSession; timestamp semantics
     # (date_format buckets, TIMESTAMP literal comparisons) must match
     # DuckDB's naive-UTC reading of the parquet regardless of that
     # session's default zone. Runtime-settable + idempotent.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    ident = _identity(path)
+    known = _SCHEMAS.get(path)
+    if ident is not None and known and known[0] == ident:
+        return spark.read.schema(known[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if ident is not None:
+        _SCHEMAS[path] = (ident, df.schema)
+    return df
 
 
 def register(name: str, sql: str | None):

@@ -105,8 +105,9 @@ def tiff_lzw_encode(data: bytes) -> bytes:
     return bytes(out)
 
 
-def tiff_lzw_decode(data: bytes, expected: int) -> bytes:
-    """Inverse of tiff_lzw_encode, KwKwK case included."""
+def tiff_lzw_decode(data: bytes, expected: int) -> bytearray:
+    """Inverse of tiff_lzw_encode, KwKwK case included. Returns its
+    output buffer itself, not a bytes copy of it."""
     pos = acc = nbits = 0
 
     def get(width: int) -> int:
@@ -158,7 +159,7 @@ def tiff_lzw_decode(data: bytes, expected: int) -> bytes:
         raise ValueError(
             f"TIFF LZW produced {len(out)} bytes, strip is {expected}"
         )
-    return bytes(out)
+    return out
 
 
 def packbits_encode(data: bytes) -> bytes:
@@ -193,7 +194,8 @@ def packbits_encode(data: bytes) -> bytes:
     return bytes(out)
 
 
-def packbits_decode(data: bytes, expected: int) -> bytes:
+def packbits_decode(data: bytes, expected: int) -> bytearray:
+    """Inverse of packbits_encode; returns its output buffer itself."""
     out = bytearray()
     i = 0
     while len(out) < expected:
@@ -215,7 +217,7 @@ def packbits_decode(data: bytes, expected: int) -> bytes:
             i += 1
     if len(out) != expected:
         raise ValueError("PackBits output overran strip size")
-    return bytes(out)
+    return out
 
 
 def _entry(e: str, tag: int, typ: int, count: int, value: int) -> bytes:
@@ -339,11 +341,13 @@ def _tag_uint_list(ifd: dict, tag: int, e: str) -> list[int]:
     return list(struct.unpack_from(e + f"{count}{fmt}", raw))
 
 
-#: What decode_tiff holds per pixel at its peak, rounded up: the
-#: strip raster, its bytes copy and the plane (tracemalloc measured
-#: 9.0 for RGB strips and 3.1-3.2 for RGB tiles at 512x512); a
-#: WhiteIsZero gray plane passes through int16 before its RGB repeat.
-_PEAK_BYTES_PER_PIXEL = 16
+#: What decode_tiff holds per pixel at its peak, rounded up: the plane
+#: strips and tiles are written into, plus one segment's compressed
+#: slice, its decoded bytes and its predictor sums. A whole-image RGB
+#: strip is the worst case (tracemalloc at 1024x1024: 9.0 uncompressed,
+#: 9.1 PackBits, 10.6 LZW); 16-row strips take 3.1-4.8 and 16x16 tiles
+#: 3.3-3.8 at 512x512, and a WhiteIsZero gray plane 5.0.
+_PEAK_BYTES_PER_PIXEL = 12
 
 
 def decode_tiff(data: bytes) -> np.ndarray:
@@ -394,15 +398,11 @@ def decode_tiff(data: bytes) -> np.ndarray:
         raise NotImplementedError("planar TIFF not supported")
     check_canvas(w, h, _PEAK_BYTES_PER_PIXEL, "TIFF image")
 
-    def undiff(block: bytes, nrows: int, ncols: int) -> bytes:
-        if predictor != 2:
-            return block
+    def undiff(block: bytes, nrows: int, ncols: int) -> np.ndarray:
         arr = np.frombuffer(block, np.uint8).reshape(nrows, ncols, spp)
-        return (
-            (np.cumsum(arr, axis=1, dtype=np.int64) & 0xFF)
-            .astype(np.uint8)
-            .tobytes()
-        )
+        if predictor != 2:
+            return arr
+        return np.cumsum(arr, axis=1, dtype=np.uint8)  # wraps mod 256
 
     def expand(chunk: bytes, expected: int) -> bytes:
         if compression == _COMP_PACKBITS:
@@ -432,8 +432,7 @@ def decode_tiff(data: bytes) -> np.ndarray:
         for ti, (off, cnt) in enumerate(zip(offsets, counts)):
             if off + cnt > len(data):
                 raise ValueError("tile out of range")
-            block = undiff(expand(data[off : off + cnt], tw * tl * spp), tl, tw)
-            tile = np.frombuffer(block, np.uint8).reshape(tl, tw, spp)
+            tile = undiff(expand(data[off : off + cnt], tw * tl * spp), tl, tw)
             y0 = (ti // across) * tl
             x0 = (ti % across) * tw
             ys, xs = min(tl, h - y0), min(tw, w - x0)
@@ -444,23 +443,18 @@ def decode_tiff(data: bytes) -> np.ndarray:
         counts = _tag_uint_list(ifd, _TAG_STRIP_COUNTS, e)
         if len(offsets) != len(counts):
             raise ValueError("strip offsets/counts length mismatch")
-        raster = bytearray()
-        remaining = h
+        plane = np.empty((h, w, spp), np.uint8)
+        y0 = 0
         for off, cnt in zip(offsets, counts):
-            nrows = min(rows_per_strip, remaining)
-            remaining -= nrows
+            nrows = min(rows_per_strip, h - y0)
             if off + cnt > len(data):
                 raise ValueError("strip out of range")
-            raster += undiff(
+            plane[y0 : y0 + nrows] = undiff(
                 expand(data[off : off + cnt], nrows * w * spp), nrows, w
             )
-        if remaining:
+            y0 += nrows
+        if y0 < h:
             raise ValueError("strips cover fewer rows than ImageLength")
-        plane = (
-            np.frombuffer(bytes(raster), np.uint8, h * w * spp)
-            .reshape(h, w, spp)
-            .copy()
-        )
     if photometric == 3:
         # ColorMap: 3 * 2^bits SHORTs, all red then green then blue,
         # 16-bit values — baseline takes the high byte
