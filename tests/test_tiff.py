@@ -88,17 +88,24 @@ def test_lzw_megabyte_strip_roundtrips_in_linear_time():
 
 
 def test_strip_decode_holds_one_plane():
-    """Strips decode straight into the plane: 16-row strips peak near
-    the plane's own 3 bytes a pixel, and one whole-image predictor strip
-    stays under the canvas bound. Growing a bytearray raster and copying
-    it twice peaked at 9.2, and int64 predictor sums at 51."""
+    """Strips decode straight into the plane: 16-row strips and a
+    whole-image uncompressed strip peak near the plane's own 3 bytes a
+    pixel, and a whole-image predictor-2 strip of noise, PackBits or LZW,
+    adds only its decoded bytes, well under the canvas bound. Growing a
+    bytearray raster and copying it twice peaked at 9.2, and int64
+    predictor sums at 51. The LZW image is 4-level noise only
+    to keep the traced decode short: its peak does not depend on how
+    well the strip compresses."""
     import tracemalloc
 
     rng = np.random.default_rng(512)
-    px = rng.integers(0, 256, (512, 512, 3)).astype(np.uint8)
-    for data, bound in (
-        (tiff.encode_tiff(px), 4),
-        (tiff.encode_tiff(px, rows_per_strip=512, predictor=2), tiff._PEAK_BYTES_PER_PIXEL),
+    noise = rng.integers(0, 256, (512, 512, 3)).astype(np.uint8)
+    low = rng.integers(0, 4, (512, 512, 3)).astype(np.uint8)
+    for px, data, bound in (
+        (noise, tiff.encode_tiff(noise), 4),
+        (noise, tiff.encode_tiff(noise, rows_per_strip=512, predictor=2), 4),
+        (noise, tiff.encode_tiff(noise, rows_per_strip=512, compression=32773, predictor=2), 9),
+        (low, tiff.encode_tiff(low, rows_per_strip=512, compression=5, predictor=2), 9),
     ):
         tracemalloc.start()
         try:
@@ -108,6 +115,7 @@ def test_strip_decode_holds_one_plane():
             tracemalloc.stop()
         assert np.array_equal(out, px)
         assert peak / px[..., 0].size < bound, peak / px[..., 0].size
+    assert tiff._PEAK_BYTES_PER_PIXEL >= 9
 
 
 def test_lzw_predictor_compresses_smooth_content():

@@ -1,6 +1,6 @@
 """Fixed driver cost of one benchmark pass, per engine call or query.
 
-    python tools/round_cost.py [--workload crawl|curation_suite] [--seed N] [--passes N]
+    python tools/round_cost.py [--workload crawl|curation_suite] [--seed N]
 
 Sets up a benchmark workload (`crawlbench/workloads.py`, used as is) the
 way `crawlbench/run.py` does, warms it up, then runs untraced passes
@@ -15,7 +15,7 @@ DataFrame actions, the number of calls and their counts. The totals
 line adds how much of the pass's wall time some Spark job was running;
 the rest is spent on the driver.
 
-`curation_suite` (`--passes`, default 3): per registry query, the median
+`curation_suite` (`PASSES` = 3 passes): per registry query, the median
 over the passes of building its plan (the registry function) and of
 executing it (`toArrow`), each with its jobs and py4j round trips.
 """
@@ -32,6 +32,7 @@ from contextlib import contextmanager
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
+PASSES = 3  # curation_suite passes the per-query medians are taken over
 sys.path[:0] = [str(ROOT), str(ROOT / "crawlbench")]
 
 
@@ -164,14 +165,14 @@ def report(meter: Meter) -> None:
     show(root)
 
 
-def suite_passes(meter: Meter, wl, spark, passes: int) -> list[dict]:
-    """`passes` runs of the suite, each query split into plan build and
+def suite_passes(meter: Meter, wl, spark) -> list[dict]:
+    """PASSES runs of the suite, each query split into plan build and
     execution; one {call path: [calls, wall_s, jobs, py4j]} per pass."""
     import workloads
 
     count_sends(meter)
     per_pass = []
-    for _ in range(passes):
+    for _ in range(PASSES):
         meter.rows, out = {}, {}
         with meter.frame("suite.pass"):
             for q, fn in wl.fns.items():
@@ -212,8 +213,6 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", choices=("crawl", "curation_suite"), default="crawl")
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--passes", type=int, default=3,
-                    help="curation_suite passes to take the median over")
     args = ap.parse_args()
 
     import box
@@ -232,7 +231,7 @@ def main() -> None:
         wl.warm(spark)
         meter = Meter(spark.sparkContext)
         if args.workload == "curation_suite":
-            per_pass = suite_passes(meter, wl, spark, max(1, args.passes))
+            per_pass = suite_passes(meter, wl, spark)
             failed_checks = [n for n, ok in wl.check(spark) if not ok]
             print(f"local[{cores}], {os.cpu_count()} CPUs: {len(wl.fns)} queries, "
                   f"failed checks: {failed_checks or 'none'}")

@@ -342,11 +342,13 @@ def _tag_uint_list(ifd: dict, tag: int, e: str) -> list[int]:
 
 
 #: What decode_tiff holds per pixel at its peak, rounded up: the plane
-#: strips and tiles are written into, plus one segment's compressed
-#: slice, its decoded bytes and its predictor sums. A whole-image RGB
-#: strip is the worst case (tracemalloc at 1024x1024: 9.0 uncompressed,
-#: 9.1 PackBits, 10.6 LZW); 16-row strips take 3.1-4.8 and 16x16 tiles
-#: 3.3-3.8 at 512x512, and a WhiteIsZero gray plane 5.0.
+#: strips and tiles are written into, plus one segment's decoded bytes
+#: (its compressed bytes are read in place and its predictor sums run
+#: in the plane). A whole-image RGB strip of noise is the worst case,
+#: predictor 1 or 2 alike (tracemalloc at 1024x1024: 3.0 uncompressed,
+#: 6.1 PackBits, 6.5 LZW; at 512x512 LZW's code table lifts it to 7.6);
+#: 16-row strips take 3.0-4.7 and 16x16 tiles 3.3-3.8 at 512x512, and a
+#: WhiteIsZero gray plane 5.0.
 _PEAK_BYTES_PER_PIXEL = 12
 
 
@@ -397,12 +399,15 @@ def decode_tiff(data: bytes) -> np.ndarray:
     if planar != 1:
         raise NotImplementedError("planar TIFF not supported")
     check_canvas(w, h, _PEAK_BYTES_PER_PIXEL, "TIFF image")
+    view = memoryview(data)  # segments are read in place, not copied out
 
-    def undiff(block: bytes, nrows: int, ncols: int) -> np.ndarray:
+    def place(dst: np.ndarray, block: bytes, nrows: int, ncols: int) -> None:
+        # copy a decoded segment into its plane slice, clipped to it, and
+        # undo predictor 2 there: no raster-sized temporary
         arr = np.frombuffer(block, np.uint8).reshape(nrows, ncols, spp)
-        if predictor != 2:
-            return arr
-        return np.cumsum(arr, axis=1, dtype=np.uint8)  # wraps mod 256
+        dst[:] = arr[: dst.shape[0], : dst.shape[1]]
+        if predictor == 2:  # row prefix sums, wrapping mod 256
+            np.cumsum(dst, axis=1, dtype=np.uint8, out=dst)
 
     def expand(chunk: bytes, expected: int) -> bytes:
         if compression == _COMP_PACKBITS:
@@ -432,11 +437,12 @@ def decode_tiff(data: bytes) -> np.ndarray:
         for ti, (off, cnt) in enumerate(zip(offsets, counts)):
             if off + cnt > len(data):
                 raise ValueError("tile out of range")
-            tile = undiff(expand(data[off : off + cnt], tw * tl * spp), tl, tw)
             y0 = (ti // across) * tl
             x0 = (ti % across) * tw
-            ys, xs = min(tl, h - y0), min(tw, w - x0)
-            plane[y0 : y0 + ys, x0 : x0 + xs] = tile[:ys, :xs]
+            place(
+                plane[y0 : y0 + tl, x0 : x0 + tw],
+                expand(view[off : off + cnt], tw * tl * spp), tl, tw,
+            )
     else:
         rows_per_strip = _tag_uint(ifd, _TAG_ROWS_PER_STRIP, e, default=h)
         offsets = _tag_uint_list(ifd, _TAG_STRIP_OFFSETS, e)
@@ -449,8 +455,9 @@ def decode_tiff(data: bytes) -> np.ndarray:
             nrows = min(rows_per_strip, h - y0)
             if off + cnt > len(data):
                 raise ValueError("strip out of range")
-            plane[y0 : y0 + nrows] = undiff(
-                expand(data[off : off + cnt], nrows * w * spp), nrows, w
+            place(
+                plane[y0 : y0 + nrows],
+                expand(view[off : off + cnt], nrows * w * spp), nrows, w,
             )
             y0 += nrows
         if y0 < h:
