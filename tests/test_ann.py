@@ -101,7 +101,7 @@ class TestIVF:
 
         def distortion(cdf):
             assigned = ivf_assign(vecs, cdf, id_col="vec_id", vec_col="ve")
-            joined = vecs.join(assigned, "vec_id").join(
+            joined = assigned.join(
                 cdf.withColumnRenamed("cid", "cluster"), "cluster"
             )
             sq = F.aggregate(
@@ -330,3 +330,82 @@ class TestIVFADC:
             key = (r["query_id"], r["neighbor_id"])
             assert key in full
             assert abs(full[key] - r["adist4"]) < 1e-6
+
+
+def _small_ann_inputs(spark, rows):
+    """(emb, centroids, codebooks) over local rows: the first 4 vectors
+    as centroids, the first 8 vectors' slices as m=4 codebooks."""
+    import numpy as np
+
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    vecs = [np.array(v) for _, v in rows]
+    cents = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs[:4])],
+        "cid int, ce array<double>",
+    )
+    ln = len(vecs[0]) // 4
+    cb = spark.createDataFrame(
+        [
+            (s, i, [float(x) for x in v[s * ln:(s + 1) * ln]])
+            for s in range(4)
+            for i, v in enumerate(vecs[:8])
+        ],
+        "s int, cid int, ce array<double>",
+    )
+    return emb, cents, cb
+
+
+def _random_rows(n, dim, seed=3):
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    return [(i, [float(x) for x in rng.standard_normal(dim)]) for i in range(n)]
+
+
+def test_adc_plans_start_no_job(spark):
+    """Building the PQ plans reads no data: the subvector length is a
+    column (size / m), not a `first()` on the driver."""
+    from webcollector_spark.operators.ann import ivfadc_topk, pq_adc_topk, pq_encode
+
+    emb, cents, cb = _small_ann_inputs(spark, _random_rows(20, 64))
+    queries = emb.filter(F.col("vec_id") < 2)
+    sc = spark.sparkContext
+    group = "ann-plan-build"
+    sc.setJobGroup(group, group)
+    try:
+        pq_adc_topk(emb, cb, queries, k=3, m=4)
+        ivfadc_topk(emb, cents, cb, queries, k=3, nprobe=2, m=4)
+        pq_encode(emb, cb, m=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_pq_rejects_length_not_divisible_by_m(spark):
+    from webcollector_spark.operators.ann import pq_encode
+
+    emb, _, cb = _small_ann_inputs(spark, _random_rows(8, 64))
+    odd = spark.createDataFrame(_random_rows(3, 63), "vec_id long, embedding array<double>")
+    assert len(pq_encode(emb, cb, m=4).collect()) == 8
+    with pytest.raises(Exception, match="not divisible by m=4"):
+        pq_encode(odd, cb, m=4).collect()
+
+
+def test_exact_copies_rank_adjacent_lower_id_first(spark):
+    """Two exact copies share every PQ code, so their ADC distances tie
+    (up to float summation order); both ADC operators must rank them
+    next to each other, lower neighbor_id first."""
+    from webcollector_spark.operators.ann import ivfadc_topk, pq_adc_topk
+
+    rows = _random_rows(40, 64)
+    copy = rows[20][1]
+    rows = rows[:20] + [(37, copy)] + rows[21:37] + [(20, copy)] + rows[38:]
+    emb, cents, cb = _small_ann_inputs(spark, rows)
+    queries = spark.createDataFrame([(999, copy)], "vec_id long, embedding array<double>")
+    for top in (
+        pq_adc_topk(emb, cb, queries, k=40, m=4),
+        ivfadc_topk(emb, cents, cb, queries, k=40, nprobe=2, m=4),
+    ):
+        got = {r["neighbor_id"]: (r["rk"], r["adist4"]) for r in top.collect()}
+        assert got[37][0] == got[20][0] + 1
+        assert got[37][1] == got[20][1]

@@ -37,8 +37,13 @@ CHECKS = {
     # hot-dictionary prune must be a broadcast anti-join, not a shuffle
     "ngram_overlap": ["LeftAnti"],
     "jaccard_pairs": ["LeftAnti"],
+    # brute-force baseline (ann.cosine_topk): the query set broadcasts
+    # against every vector; cosine is a JVM expression
+    "ann_cosine_topk": ["BroadcastNestedLoopJoin", "!EvalPython"],
     # centroid assignment must broadcast the 8 centroids, never shuffle them
     "ivf_ann_topk": ["BroadcastNestedLoopJoin"],
+    # random-hyperplane buckets (literal planes) and the rerank: all JVM
+    "rh_lsh_ann_pairs": ["!EvalPython"],
     # pure JVM map stages (higher-order array lambdas are CodegenFallback
     # but still JVM expressions): no Python eval may appear ("!" = must
     # NOT appear in the plan)

@@ -1,22 +1,40 @@
-"""Approximate nearest neighbour over embedding columns.
+"""Approximate nearest neighbour over embedding columns — the one
+vector-search layer: the registry's similarity-search entries call
+these functions with seeded inputs, so the DuckDB oracles check the
+operators users call.
 
-Three tiers (training-data-pipeline requirement):
+Tiers (training-data-pipeline requirement), cheapest recall first:
 
-1. `cosine_topk_bruteforce` — exact baseline: broadcast the query set,
-   JVM-side dot products (`zip_with`/`aggregate`), window top-k.
-2. label/centroid blocking — `plans/queries.q_cosine_blocked_neardup`
-   (the IVF shape: exact search inside a coarse bucket).
-3. `rh_lsh` here — random-hyperplane LSH (SimHash for real vectors,
-   Charikar '02): b sign-bits of <v, plane_j> form a bucket key;
-   candidates share a bucket in >= 1 of `n_tables` tables; exact
-   cosine reranks candidates. Hyperplanes are DETERMINISTIC literals
-   (seeded numpy), embedded both in the Spark plan and in the DuckDB
-   oracle SQL, so the whole approximate pipeline is still
+0. `cosine_topk` — exact brute force: broadcast the query set,
+   JVM-side dot products (`zip_with`/`aggregate`), window top-k. The
+   recall baseline the other tiers are judged against.
+1. `rh_lsh_pairs` / `rh_lsh_topk` — random-hyperplane LSH (SimHash for
+   real vectors, Charikar '02): b sign-bits of <v, plane_j> form a
+   bucket key; candidates share a bucket in >= 1 of `n_tables` tables;
+   exact cosine reranks candidates. Hyperplanes are DETERMINISTIC
+   literals (seeded numpy), embedded both in the Spark plan and in the
+   DuckDB oracle SQL, so the whole approximate pipeline is still
    column-level cross-checked.
+2. `ivf_topk` — IVF-flat: exact cosine inside the query's `nprobe`
+   nearest k-means cells (`train_ivf_centroids`, `ivf_assign`).
+   Label blocking, `plans/queries.q_cosine_blocked_neardup`, is the
+   same shape with a given bucket column.
+3. `pq_adc_topk` — product quantization: every vector scored, but as m
+   int codes against a per-query lookup table (`train_pq_codebooks`,
+   `pq_encode`).
+4. `ivfadc_topk` — IVFADC: the IVF candidate bound times the PQ
+   per-vector cost.
 
-Scale shape: signatures are one narrow map stage; the bucket join
-shuffles only (vec_id, bucket) pairs; rerank touches candidate pairs
-only. No O(n^2) stage anywhere.
+Each shared step is written once: `_sqdist` is the one squared
+distance, `dot`/`cos` the one inner product and cosine, `_nearest` the
+one nearest-k ranking (behind `ivf_assign`, the IVF probes and
+`pq_assign`), `_adc_topk` the one ADC lookup table and scan, `_topk`
+the one top-k rank.
+
+Scale shape: signatures, codes and distances are map stages over
+broadcast centroid/codeword/query tables; LSH and IVF candidates come
+from equi-joins on bucket or cell; reranking touches candidates only.
+No O(n^2) stage outside the tier-0 baseline.
 """
 
 from __future__ import annotations
@@ -34,8 +52,10 @@ def hyperplanes(dim: int, n_bits: int, seed: int = 42) -> np.ndarray:
 
 
 def _dot_lit(vec: Column, plane: np.ndarray) -> Column:
-    """<vec, literal plane> as a JVM-side expression."""
-    arr = F.array(*[F.lit(float(x)) for x in plane])
+    """<vec, literal plane> as a JVM-side expression. The plane is one
+    parsed array literal (`D`: double, exact round trip of the float),
+    not one Column per element."""
+    arr = F.expr("array(" + ", ".join(f"{float(x)!r}D" for x in plane) + ")")
     return F.aggregate(
         F.zip_with(vec, arr, lambda a, b: a.cast("double") * b),
         F.lit(0.0),
@@ -43,8 +63,9 @@ def _dot_lit(vec: Column, plane: np.ndarray) -> Column:
     )
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """<a, b> over two array columns as a JVM expression (double)."""
+def dot(a: Column, b: Column) -> Column:
+    """<a, b> over two array columns as a JVM expression (double);
+    DuckDB's list_dot_product."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -52,8 +73,63 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def _cos(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
+def cos(a: Column, b: Column) -> Column:
+    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
+
+
+def _sqdist(a: Column, b: Column) -> Column:
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _topk(scored: DataFrame, k: int, order: Column, value: str) -> DataFrame:
+    """Each query's first k candidates by `order`, lower neighbor_id on
+    ties: (query_id, neighbor_id, rk, {value}4), the value rounded to 4
+    places (+ 0 turns a rounded -0.0 into 0.0)."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            "rk",
+            (F.round(value, 4) + F.lit(0.0)).alias(f"{value}4"),
+        )
+    )
+
+
+def _queries(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qe"))
+
+
+def _cosine_topk(cand: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """Exact cosine top-k over candidate rows carrying both vectors
+    (query_id, qe, id_col, vec_col); a query never ranks itself."""
+    scored = cand.filter(F.col(id_col) != F.col("query_id")).select(
+        "query_id",
+        F.col(id_col).alias("neighbor_id"),
+        cos(F.col("qe"), F.col(vec_col)).alias("sim"),
+    )
+    return _topk(scored, k, F.col("sim").desc(), "sim")
+
+
+def cosine_topk(
+    emb: DataFrame,
+    queries: DataFrame,
+    k: int = 3,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Exact cosine top-k per query over the whole corpus: the queries
+    (id_col, vec_col rows, a small set) broadcast against every vector.
+    O(n) per query — the tier-0 baseline. Returns (query_id,
+    neighbor_id, rk, sim4)."""
+    cand = emb.crossJoin(F.broadcast(_queries(queries, id_col, vec_col)))
+    return _cosine_topk(cand, k, id_col, vec_col)
 
 
 def rh_bucket(vec: Column, planes: np.ndarray) -> Column:
@@ -108,7 +184,7 @@ def rh_lsh_pairs(
     a = sigs.select("tab", "bucket", F.col("vid").alias("vec_a"), F.col("v").alias("va"))
     b = sigs.select("tab", "bucket", F.col("vid").alias("vec_b"), F.col("v").alias("vb"))
 
-    sim = _cos(F.col("va"), F.col("vb"))
+    sim = cos(F.col("va"), F.col("vb"))
     return (
         a.join(b, ["tab", "bucket"])
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -150,24 +226,43 @@ def rh_lsh_topk(
             "sim",
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sym.filter(F.col("sim") >= sim_floor)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "rk", F.round("sim", 4).alias("sim4"))
-    )
+    return _topk(sym.filter(F.col("sim") >= sim_floor), k, F.col("sim").desc(), "sim")
 
 
 # ---------------------------------------------------------------------------
-# Tier 4: IVF-flat (the index family FAISS/Milvus ship for billion-vector
+# Tier 2: IVF-flat (the index family FAISS/Milvus ship for billion-vector
 # search). Train coarse centroids with Lloyd's k-means, assign every vector
-# to its nearest cell (a pure map stage: k broadcast distances per row),
-# search only the query's `nprobe` nearest cells. Candidate volume is
-# ~ nprobe/k of the corpus; the registry twin `ivf_ann_topk` pins the
-# seeded-centroid variant against the DuckDB oracle.
+# to its nearest cell (k broadcast distances per row), search only the
+# query's `nprobe` nearest cells. Candidate volume is ~ nprobe/k of the
+# corpus; the registry entry `ivf_ann_topk` pins it, with seeded
+# centroids, against the DuckDB oracle.
+
+
+def _nearest(
+    rows: DataFrame,
+    vec_col: str,
+    cents: DataFrame,
+    keys: list[str],
+    k: int = 1,
+    on: str | None = None,
+) -> DataFrame:
+    """Every column of `rows` plus `cid`, once for each of the row's k
+    nearest entries of `cents` (cid, ce[, on]) by squared L2; ties break
+    toward the lower cid (deterministic). `keys` identify a row; `on`
+    restricts a row to the entries sharing that column (the PQ
+    subspace). `cents` is small by construction and broadcast."""
+    w = Window.partitionBy(*keys).orderBy(F.col("__d").asc(), F.col("cid").asc())
+    pairs = (
+        rows.join(F.broadcast(cents), on)
+        if on
+        else rows.crossJoin(F.broadcast(cents))
+    )
+    return (
+        pairs.withColumn("__d", _sqdist(F.col(vec_col), F.col("ce")))
+        .withColumn("__rk", F.row_number().over(w))
+        .filter(F.col("__rk") <= k)
+        .drop("ce", "__d", "__rk")
+    )
 
 
 def train_ivf_centroids(
@@ -181,7 +276,7 @@ def train_ivf_centroids(
 
     Deterministic seeding: the k lowest-id vectors (k-means|| would seed
     in production; fixed seeds keep tests reproducible). Each iteration
-    is one broadcast-assignment map plus one posexplode/groupBy mean —
+    is one broadcast-assignment plus one posexplode/groupBy mean —
     shuffle volume O(n_vectors x dim) of (cluster, pos, value) triples,
     never O(n^2). Centroids (k x dim doubles) round-trip through the
     driver between iterations — they are small by construction; the
@@ -199,9 +294,8 @@ def train_ivf_centroids(
     cents = [(i, list(r["ve"])) for i, r in enumerate(seed_rows)]
     for _ in range(iters):
         cdf = spark.createDataFrame(cents, "cid int, ce array<double>")
-        assigned = ivf_assign(vecs, cdf, id_col="vid", vec_col="ve")
         means = (
-            vecs.join(assigned, "vid")
+            ivf_assign(vecs, cdf, id_col="vid", vec_col="ve")
             .select("cluster", F.posexplode("ve").alias("pos", "x"))
             .groupBy("cluster", "pos")
             .agg(F.avg("x").alias("m"))
@@ -221,31 +315,27 @@ def train_ivf_centroids(
     return spark.createDataFrame(cents, "cid int, ce array<double>")
 
 
-def _sqdist(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def ivf_assign(
     emb: DataFrame,
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Nearest-centroid cell per vector: (id, cluster). Broadcast the
-    centroids; ties break toward the lower cid (deterministic)."""
-    w = Window.partitionBy(id_col).orderBy(F.col("d").asc(), F.col("cid").asc())
-    return (
-        emb.select(id_col, F.col(vec_col).alias("__v"))
-        .crossJoin(F.broadcast(centroids))
-        .select(id_col, "cid", _sqdist(F.col("__v"), F.col("ce")).alias("d"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter("rk = 1")
-        .select(id_col, F.col("cid").alias("cluster"))
+    """Every column of `emb` plus `cluster`, the vector's nearest
+    centroid cell. Broadcast the centroids; ties break toward the lower
+    cid (deterministic)."""
+    return _nearest(emb, vec_col, centroids, [id_col]).withColumnRenamed(
+        "cid", "cluster"
     )
+
+
+def _probes(
+    queries: DataFrame, centroids: DataFrame, nprobe: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(query_id, qe, cluster): each query's `nprobe` nearest cells."""
+    return _nearest(
+        _queries(queries, id_col, vec_col), "qe", centroids, ["query_id"], nprobe
+    ).withColumnRenamed("cid", "cluster")
 
 
 def ivf_topk(
@@ -259,57 +349,17 @@ def ivf_topk(
 ) -> DataFrame:
     """Exact cosine top-k per query, searched only inside the query's
     `nprobe` nearest cells. `queries` must be (id_col, vec_col) rows
-    (typically a small subset — it is broadcast)."""
-    cluster_of = ivf_assign(emb, centroids, id_col, vec_col)
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("d").asc(), F.col("cid").asc()
+    (typically a small subset — it is broadcast). Returns (query_id,
+    neighbor_id, rk, sim4)."""
+    probes = _probes(queries, centroids, nprobe, id_col, vec_col)
+    cand = ivf_assign(emb, centroids, id_col, vec_col).join(
+        F.broadcast(probes), "cluster"
     )
-    probes = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qe"))
-        .crossJoin(F.broadcast(centroids))
-        .select("query_id", "cid", _sqdist(F.col("qe"), F.col("ce")).alias("d"))
-        .withColumn("rk", F.row_number().over(probe_w))
-        .filter(F.col("rk") <= nprobe)
-        .select("query_id", F.col("cid").alias("cluster"))
-    )
-
-    cands = (
-        F.broadcast(probes)
-        .join(cluster_of, "cluster")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select("query_id", F.col(id_col).alias("neighbor_id"))
-    )
-    scored = (
-        cands.join(
-            F.broadcast(
-                queries.select(
-                    F.col(id_col).alias("query_id"), F.col(vec_col).alias("qe")
-                )
-            ),
-            "query_id",
-        )
-        .join(
-            emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("ne")),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cos(F.col("qe"), F.col("ne")).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "rk", F.round("sim", 4).alias("sim4"))
-    )
+    return _cosine_topk(cand, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
-# Tier 4: product quantization (Jégou et al. 2011) — the memory side of
+# Tier 3: product quantization (Jégou et al. 2011) — the memory side of
 # the web-scale ANN stack. IVF (tier above) bounds how much of the
 # corpus a query touches; PQ bounds what each touched vector costs:
 # dim/m-dim subvectors quantized to k codewords each compress a vector
@@ -319,7 +369,7 @@ def ivf_topk(
 # O(n*m) narrow ints; the per-query LUT is m*k entries — broadcast by
 # construction; the scan is one hash join + sum, no O(n^2) stage and no
 # raw-vector shuffle. At 10^9 vectors compose with ivf_assign so the
-# LUT join only scans the probed cells' code lists (IVFADC).
+# LUT join only scans the probed cells' code lists (IVFADC, tier 4).
 
 
 def _pq_subvectors(
@@ -330,14 +380,16 @@ def _pq_subvectors(
 ) -> DataFrame:
     """(vid, s, sv): the m per-subspace slices of every vector — one
     narrow map stage (crossJoin with the m-row subspace frame is a
-    broadcast nested loop over literals, not a shuffle). Requires
-    dim % m == 0 (checked lazily via slice bounds)."""
-    spark = emb.sparkSession
-    dim = len(emb.select(vec_col).first()[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    ln = dim // m
-    sub = spark.range(m).select(F.col("id").cast("int").alias("s"))
+    broadcast nested loop over literals, not a shuffle). The slice
+    length is the vector's size / m as a column, so building the plan
+    runs no job; a size not divisible by m fails the plan's first job."""
+    dim = F.size(vec_col)
+    ln = F.when(dim % m == 0, (dim / m).cast("int")).otherwise(
+        F.raise_error(
+            F.format_string(f"vector length %d is not divisible by m={m}", dim)
+        )
+    )
+    sub = emb.sparkSession.range(m).select(F.col("id").cast("int").alias("s"))
     return emb.crossJoin(F.broadcast(sub)).select(
         F.col(id_col).alias("vid"),
         "s",
@@ -352,15 +404,8 @@ def pq_assign(sv: DataFrame, codebooks: DataFrame) -> DataFrame:
     """Nearest codeword per (vector, subspace): (vid, s, code).
     `codebooks` is (s, cid, ce) — m*k rows, broadcast. Ties break
     toward the lower cid (deterministic)."""
-    w = Window.partitionBy("vid", "s").orderBy(
-        F.col("d").asc(), F.col("cid").asc()
-    )
-    return (
-        sv.join(F.broadcast(codebooks), "s")
-        .select("vid", "s", "cid", _sqdist(F.col("sv"), F.col("ce")).alias("d"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter("rk = 1")
-        .select("vid", "s", F.col("cid").alias("code"))
+    return _nearest(sv, "sv", codebooks, ["vid", "s"], on="s").select(
+        "vid", "s", F.col("cid").alias("code")
     )
 
 
@@ -436,6 +481,52 @@ def pq_encode(
     )
 
 
+def _adc_topk(
+    cand: DataFrame,
+    queries: DataFrame,
+    codebooks: DataFrame,
+    k: int,
+    m: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The ADC scan: candidate code rows (query_id, vid, s, code) look
+    their partial distances up in the query's LUT — the m*k squared
+    distances from each query subvector to every codeword, broadcast by
+    construction — and sum them to adist (approximate squared L2)."""
+    # lq/qs/qcid renames keep the join condition unambiguous even when
+    # `queries` shares lineage with the corpus (e.g. queries =
+    # emb.limit(n)): same-name refs on shared-lineage frames resolve
+    # trivially true in Spark's analyzer
+    lut = (
+        _pq_subvectors(queries, m, id_col, vec_col)
+        .join(codebooks, "s")
+        .select(
+            F.col("vid").alias("lq"),
+            F.col("s").alias("qs"),
+            F.col("cid").alias("qcid"),
+            _sqdist(F.col("sv"), F.col("ce")).alias("pd"),
+        )
+    )
+    scored = (
+        cand.join(
+            F.broadcast(lut),
+            (F.col("query_id") == F.col("lq"))
+            & (F.col("s") == F.col("qs"))
+            & (F.col("code") == F.col("qcid")),
+        )
+        .groupBy("query_id", F.col("vid").alias("neighbor_id"))
+        .agg(F.sum("pd").alias("adist"))
+    )
+    # Rank on the ROUNDED distance: vectors sharing all m PQ codes have
+    # mathematically identical adist, but a float sum's value depends on
+    # accumulation order, so raw-adist ordering is nondeterministic
+    # run-to-run (observed: a 5-way exact-tie group reordered itself
+    # between runs in both engines). Quantizing to the output precision
+    # makes the tie explicit and the id tie-break decide.
+    return _topk(scored, k, F.round("adist", 4).asc(), "adist")
+
+
 def pq_adc_topk(
     emb: DataFrame,
     codebooks: DataFrame,
@@ -446,52 +537,15 @@ def pq_adc_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Asymmetric-distance top-k: raw query subvectors against the
-    corpus's quantized codes. Per query the m*k partial distances form
-    the LUT (broadcast — small by construction); the corpus side
-    contributes only its code triples, so the scan never touches raw
-    corpus floats. Returns (query_id, neighbor_id, rk, adist4) with
-    adist ascending (approximate squared L2)."""
+    corpus's quantized codes, every vector a candidate of every query.
+    The corpus side contributes only its code triples, so the scan never
+    touches raw corpus floats. Returns (query_id, neighbor_id, rk,
+    adist4) with adist ascending (approximate squared L2)."""
     codes = pq_assign(_pq_subvectors(emb, m, id_col, vec_col), codebooks)
-    # qs/qcid renames keep the join condition unambiguous even when
-    # `queries` shares lineage with `emb` (e.g. queries = emb.limit(n)):
-    # bracket-notation same-name refs on shared-lineage frames resolve
-    # trivially true in Spark's analyzer.
-    lut = (
-        _pq_subvectors(queries, m, id_col, vec_col)
-        .withColumnRenamed("vid", "query_id")
-        .join(codebooks, "s")
-        .select(
-            "query_id",
-            F.col("s").alias("qs"),
-            F.col("cid").alias("qcid"),
-            _sqdist(F.col("sv"), F.col("ce")).alias("pd"),
-        )
-    )
-    scored = (
-        codes.join(
-            F.broadcast(lut),
-            (F.col("s") == F.col("qs")) & (F.col("code") == F.col("qcid")),
-        )
-        .filter(F.col("vid") != F.col("query_id"))
-        .groupBy("query_id", F.col("vid").alias("neighbor_id"))
-        .agg(F.sum("pd").alias("adist"))
-    )
-    # Rank on the ROUNDED distance: vectors sharing all m PQ codes have
-    # mathematically identical adist, but a float sum's value depends on
-    # accumulation order, so raw-adist ordering is nondeterministic
-    # run-to-run (observed: a 5-way exact-tie group reordered itself
-    # between runs in both engines). Quantizing to the output precision
-    # makes the tie explicit and the id tie-break decide.
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("adist", 4).asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id", "neighbor_id", "rk", F.round("adist", 4).alias("adist4")
-        )
-    )
+    cand = codes.crossJoin(
+        F.broadcast(queries.select(F.col(id_col).alias("query_id")))
+    ).filter(F.col("vid") != F.col("query_id"))
+    return _adc_topk(cand, queries, codebooks, k, m, id_col, vec_col)
 
 
 def ivfadc_topk(
@@ -513,70 +567,22 @@ def ivfadc_topk(
     (vid, s, code) int tables — both precomputable once and stored;
     query side contributes nprobe cell ids + an m*k-row LUT per query,
     broadcast by construction; the scan is one hash join + sum over
-    candidates only. No O(n^2) stage, no raw-corpus-vector shuffle.
+    candidates only. No O(n^2) stage, and the scan shuffles no raw
+    corpus vector (only the cell assignment reads them).
 
     Non-residual variant: codes quantize RAW vectors (what
     train_pq_codebooks trains). The textbook refinement encodes
     residuals (x - home centroid) for tighter cells — omitted so the
     stored codes stay query-independent and the registry oracle can
     value-check this exact pipeline end to end."""
-    cluster_of = ivf_assign(emb, centroids, id_col, vec_col)
-    codes = pq_assign(_pq_subvectors(emb, m, id_col, vec_col), codebooks)
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("d").asc(), F.col("cid").asc()
-    )
-    probes = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qe"))
-        .crossJoin(F.broadcast(centroids))
-        .select("query_id", "cid", _sqdist(F.col("qe"), F.col("ce")).alias("d"))
-        .withColumn("rk", F.row_number().over(probe_w))
-        .filter(F.col("rk") <= nprobe)
-        .select("query_id", F.col("cid").alias("cluster"))
-    )
-    # lq/qs/qcid renames: the LUT must join on query identity too (a
-    # candidate of query A must not be scored against query B's LUT),
-    # and same-name refs on shared-lineage frames resolve trivially true
-    lut = (
-        _pq_subvectors(queries, m, id_col, vec_col)
-        .withColumnRenamed("vid", "query_id")
-        .join(codebooks, "s")
-        .select(
-            F.col("query_id").alias("lq"),
-            F.col("s").alias("qs"),
-            F.col("cid").alias("qcid"),
-            _sqdist(F.col("sv"), F.col("ce")).alias("pd"),
-        )
-    )
+    cells = ivf_assign(
+        emb.select(id_col, vec_col), centroids, id_col, vec_col
+    ).select(F.col(id_col).alias("vid"), "cluster")
+    probes = _probes(queries, centroids, nprobe, id_col, vec_col)
     cand = (
-        codes.join(
-            cluster_of.select(F.col(id_col).alias("vid"), "cluster"), "vid"
-        )
-        .join(F.broadcast(probes), "cluster")
+        pq_assign(_pq_subvectors(emb, m, id_col, vec_col), codebooks)
+        .join(cells, "vid")
+        .join(F.broadcast(probes.select("query_id", "cluster")), "cluster")
         .filter(F.col("vid") != F.col("query_id"))
     )
-    scored = (
-        cand.join(
-            F.broadcast(lut),
-            (F.col("query_id") == F.col("lq"))
-            & (F.col("s") == F.col("qs"))
-            & (F.col("code") == F.col("qcid")),
-        )
-        .groupBy("query_id", F.col("vid").alias("neighbor_id"))
-        .agg(F.sum("pd").alias("adist"))
-    )
-    # Rank on the ROUNDED distance: vectors sharing all m PQ codes have
-    # mathematically identical adist, but a float sum's value depends on
-    # accumulation order, so raw-adist ordering is nondeterministic
-    # run-to-run (observed: a 5-way exact-tie group reordered itself
-    # between runs in both engines). Quantizing to the output precision
-    # makes the tie explicit and the id tie-break decide.
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("adist", 4).asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id", "neighbor_id", "rk", F.round("adist", 4).alias("adist4")
-        )
-    )
+    return _adc_topk(cand, queries, codebooks, k, m, id_col, vec_col)

@@ -174,27 +174,25 @@ def banded_pairs(
     width = 64 // bands
     mask = (1 << width) - 1 if width < 64 else -1  # one band: the whole hash
     a, b = out
+    # the band array is one parsed expression, built once for both sides
+    parts = ", ".join(
+        f"named_struct('band', {i}, 'chunk', shiftrightunsigned(ph, {i * width}) & {mask})"
+        for i in range(bands)
+    )
+    banded = (
+        df.select(F.col(id_col).alias("id"), F.col(hash_col).alias("ph"))
+        .select("id", "ph", F.explode(F.expr(f"array({parts})")).alias("bc"))
+        .select("id", "ph", "bc.band", "bc.chunk")
+    )
 
-    def banded(id_alias: str, ph_alias: str) -> DataFrame:
-        sel = df.select(F.col(id_col).alias(id_alias), F.col(hash_col).alias(ph_alias))
-        parts = F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.shiftrightunsigned(F.col(ph_alias), i * width)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("chunk"),
-                )
-                for i in range(bands)
-            ]
-        )
-        return sel.select(id_alias, ph_alias, F.explode(parts).alias("bc")).select(
-            id_alias, ph_alias, F.col("bc.band").alias("band"), F.col("bc.chunk").alias("chunk")
+    def side(id_alias: str, ph_alias: str) -> DataFrame:
+        return banded.select(
+            F.col("id").alias(id_alias), F.col("ph").alias(ph_alias), "band", "chunk"
         )
 
     return (
-        banded(a, "ph_a")
-        .join(banded(b, "ph_b"), ["band", "chunk"])
+        side(a, "ph_a")
+        .join(side(b, "ph_b"), ["band", "chunk"])
         .filter(F.col(a) < F.col(b))
         .select(a, b, _hamming().alias("hamming"))
         .distinct()
@@ -235,23 +233,16 @@ def _block_combo_keys(
         raise ValueError(f"need m > max_hamming (got m={m}, k={max_hamming})")
     width = bits // m
     mask = (1 << width) - 1
-
-    def block(i: int):
-        return F.shiftrightunsigned(F.col(alias), i * width).bitwiseAND(
-            F.lit(mask)
-        )
-
+    # the key array is one parsed expression, not one Column per block
     keys = []
     for combo_id, combo in enumerate(_block_combos(m, t)):
-        bkey = F.lit(0).cast("long")
+        bkey = "CAST(0 AS BIGINT)"
         for i in combo:
-            bkey = F.shiftleft(bkey, width).bitwiseOR(block(i))
-        keys.append(
-            F.struct(F.lit(combo_id).alias("combo"), bkey.alias("bkey"))
-        )
+            bkey = f"shiftleft({bkey}, {width}) | (shiftrightunsigned({alias}, {i * width}) & {mask})"
+        keys.append(f"named_struct('combo', {combo_id}, 'bkey', {bkey})")
     return df.select(F.col(hash_col).alias(alias)).select(
-        alias, F.explode(F.array(*keys)).alias("cb")
-    ).select(alias, F.col("cb.combo").alias("combo"), F.col("cb.bkey").alias("bkey"))
+        alias, F.explode(F.expr(f"array({', '.join(keys)})")).alias("cb")
+    ).select(alias, "cb.combo", "cb.bkey")
 
 
 def _block_combos(m: int, t: int) -> list[tuple[int, ...]]:
@@ -283,25 +274,22 @@ def _min_combo_lut(m: int, t: int) -> list[int]:
     ]
 
 
-def _min_intact_combo(xor, m: int, t: int, bits: int = 64):
+def _min_intact_combo(xor: str, m: int, t: int, bits: int = 64):
     """Column expression: id of the FIRST (m,t)-block combination fully
-    intact between two hashes whose xor is `xor` — the canonical combo a
-    candidate pair is allowed to survive on, so each pair is emitted
-    exactly once without a `.distinct()` shuffle. Derives the
-    corrupted-block bitmap from the xor, then looks the minimal intact
-    combo up in a 2^m-entry literal array."""
+    intact between two hashes whose xor is the SQL expression `xor` —
+    the canonical combo a candidate pair is allowed to survive on, so
+    each pair is emitted exactly once without a `.distinct()` shuffle.
+    Derives the corrupted-block bitmap from the xor, then looks the
+    minimal intact combo up in a 2^m-entry literal array; all of it one
+    parsed expression."""
     width = bits // m
     blkmask = (1 << width) - 1
-    corrupt = F.lit(0)
-    for i in range(m):
-        blk = F.shiftrightunsigned(xor, i * width).bitwiseAND(F.lit(blkmask))
-        corrupt = corrupt.bitwiseOR(
-            F.when(blk != 0, F.lit(1 << i)).otherwise(F.lit(0))
-        )
-    return F.element_at(
-        F.array(*[F.lit(v) for v in _min_combo_lut(m, t)]),
-        corrupt.cast("int") + F.lit(1),
+    corrupt = " | ".join(
+        f"IF((shiftrightunsigned({xor}, {i * width}) & {blkmask}) != 0, {1 << i}, 0)"
+        for i in range(m)
     )
+    lut = ", ".join(str(v) for v in _min_combo_lut(m, t))
+    return F.expr(f"element_at(array({lut}), CAST({corrupt} AS INT) + 1)")
 
 
 def hash_pairs(
@@ -334,7 +322,7 @@ def hash_pairs(
         a.hint("shuffle_hash").join(b, ["combo", "bkey"])
         .filter(F.col("ph_a") < F.col("ph_b"))
         .filter(ham <= max_hamming)
-        .filter(F.col("combo") == _min_intact_combo(xor, m, t, bits))
+        .filter(F.col("combo") == _min_intact_combo("(ph_a ^ ph_b)", m, t, bits))
         .select("ph_a", "ph_b", ham.cast("int").alias("hamming"))
     )
 

@@ -26,6 +26,7 @@ from pyspark.sql.types import StructType
 
 from webcollector_spark.corpora import corpus
 from webcollector_spark.functions.regex_rule import rule_column
+from webcollector_spark.operators import ann
 
 Q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 SQL: dict[str, str] = {}
@@ -87,16 +88,6 @@ def register(name: str, sql: str | None):
         return fn
 
     return deco
-
-
-def _arr_dot(a, b):
-    """<a, b> over two array columns (double) — shared by the
-    embedding-similarity queries (mirrors DuckDB list_dot_product)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1203,8 +1194,9 @@ def q_simhash_neardup_banded(spark, sf):
 
 
 # ---------------------------------------------------------------------------
-# Similarity search: brute-force cosine top-k (the exact baseline; the scale
-# path is the LSH/IVF bucketing above applied to embedding sketches)
+# Similarity search: brute-force cosine top-k (operators/ann.py
+# cosine_topk, the exact baseline; the scale paths are the LSH and IVF
+# entries below)
 @register(
     "ann_cosine_topk",
     """
@@ -1227,41 +1219,7 @@ def q_simhash_neardup_banded(spark, sf):
 )
 def q_ann_cosine_topk(spark, sf):
     emb = _t(spark, sf, "embeddings")
-
-    dot = _arr_dot
-
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    pairs = (
-        F.broadcast(q)
-        .crossJoin(emb)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                dot(F.col("qe"), F.col("embedding"))
-                / (
-                    F.sqrt(dot(F.col("qe"), F.col("qe")))
-                    * F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-                )
-            ).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rk",
-            (F.round("sim", 4) + F.lit(0.0)).alias("sim4"),
-        )
-    )
+    return ann.cosine_topk(emb, emb.filter(F.col("vec_id") < 5), k=3)
 
 
 @register(
@@ -1276,7 +1234,7 @@ def q_ann_cosine_topk(spark, sf):
 def q_embedding_norm(spark, sf):
     e = F.col("embedding")
     return _t(spark, sf, "embeddings").select(
-        "vec_id", "label", F.round(F.sqrt(_arr_dot(e, e)), 4).alias("l2")
+        "vec_id", "label", F.round(F.sqrt(ann.dot(e, e)), 4).alias("l2")
     )
 
 
@@ -1635,8 +1593,7 @@ def q_cosine_blocked_neardup(spark, sf):
     # centroid id), exact cosine within the bucket. Norms precomputed
     # per vector BEFORE the join: one dot product per pair instead of
     # three (at 10^5 pairs per bucket the norm recomputation dominates).
-    dot = _arr_dot
-
+    dot = ann.dot
     e = F.col("embedding")
     emb = _t(spark, sf, "embeddings").select(
         "vec_id", "label", "embedding", F.sqrt(dot(e, e)).alias("nrm")
@@ -2465,12 +2422,31 @@ def q_url_trap_hll(spark, sf):
 
 
 # ---------------------------------------------------------------------------
-# IVF-flat ANN: the scale path between brute force and LSH. Deterministic
-# seeded centroids (the first k vectors — k-means|| would train these in
-# production; seeding keeps the oracle exact), every vector assigned to its
-# nearest centroid (k broadcast dot products per row — a pure map stage),
-# queries probe their nprobe nearest cells and rank candidates only within
-# them. Candidate volume is ~ nprobe/k of the corpus instead of all of it.
+# The ANN entries below call operators/ann.py with seeded inputs, so
+# each oracle checks the operator users call. _ann_inputs fixes what
+# training would produce: the first 8 vectors are the IVF centroids and,
+# sliced 4 ways, the PQ codebooks (k-means would train both in
+# production; seeding keeps the oracle exact); vectors 495-499 are the
+# queries. The oracle SQL writes squared L2 as the dot identity
+# dot(v,v) - 2 dot(v,c) + dot(c,c), the operators as a sum of squared
+# differences; both rank the same cells on these tables.
+
+
+def _ann_inputs(spark, sf):
+    """(embeddings, centroids (cid, ce), codebooks (s, cid, ce), queries)."""
+    emb = _t(spark, sf, "embeddings")
+    seeds = emb.filter(F.col("vec_id") < 8)
+    cents = seeds.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"))
+    cb = ann._pq_subvectors(seeds, 4).select(
+        "s", F.col("vid").alias("cid"), F.col("sv").alias("ce")
+    )
+    return emb, cents, cb, emb.filter(F.col("vec_id").between(495, 499))
+
+
+# IVF-flat ANN (operators/ann.py ivf_topk): the scale path between brute
+# force and LSH. Every vector is assigned to its nearest centroid, queries
+# probe their nprobe nearest cells and rank candidates only within them.
+# Candidate volume is ~ nprobe/k of the corpus instead of all of it.
 
 @register(
     "ivf_ann_topk",
@@ -2483,9 +2459,9 @@ def q_url_trap_hll(spark, sf):
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings
     ),
     assign AS (
-      -- nearest cell by squared L2 (the ivf_assign operator's metric),
-      -- written as dot(v,v) - 2 dot(v,c) + dot(c,c) so both engines
-      -- evaluate the identical float expression
+      -- nearest cell by squared L2, written as the dot identity
+      -- dot(v,v) - 2 dot(v,c) + dot(c,c) (ivf_assign sums squared
+      -- differences; both rank the same cells on these tables)
       SELECT vec_id, cid, row_number() OVER (
                PARTITION BY vec_id
                ORDER BY list_dot_product(ve, ve)
@@ -2520,83 +2496,17 @@ def q_url_trap_hll(spark, sf):
     """,
 )
 def q_ivf_ann_topk(spark, sf):
-    emb = _t(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").alias("ve")
-    )
-
-    dot = _arr_dot
-
-    def cos(a, b):
-        return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
-
-    cents = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("ve").alias("ce")
-    )
-    # assignment: k broadcast distances per vector, rank 1 = home cell —
-    # squared L2 via the dot identity, the SAME metric operators/ann.py's
-    # ivf_assign uses, so the oracle covers the operator's real logic
-    sqd = (
-        dot(F.col("ve"), F.col("ve"))
-        - 2 * dot(F.col("ve"), F.col("ce"))
-        + dot(F.col("ce"), F.col("ce"))
-    )
-    crk_w = Window.partitionBy("vec_id").orderBy(
-        F.col("sqd").asc(), F.col("cid").asc()
-    )
-    assign = (
-        emb.crossJoin(F.broadcast(cents))
-        .select("vec_id", "cid", sqd.alias("sqd"))
-        .withColumn("crk", F.row_number().over(crk_w))
-    )
-    cluster_of = assign.filter("crk = 1").select(
-        "vec_id", F.col("cid").alias("cluster")
-    )
-    probes = assign.filter(
-        F.col("vec_id").between(495, 499) & (F.col("crk") <= 2)
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("cid").alias("cluster")
-    )
-    cands = (
-        F.broadcast(probes)
-        .join(cluster_of, "cluster")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    scored = (
-        cands.join(
-            F.broadcast(
-                emb.filter(F.col("vec_id").between(495, 499)).select(
-                    F.col("vec_id").alias("query_id"), F.col("ve").alias("qe")
-                )
-            ),
-            "query_id",
-        )
-        .join(emb.select(F.col("vec_id").alias("neighbor_id"), "ve"), "neighbor_id")
-        .select("query_id", "neighbor_id", cos(F.col("qe"), F.col("ve")).alias("sim"))
-    )
-    rk_w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(rk_w))
-        .filter(F.col("rk") <= 3)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rk",
-            (F.round("sim", 4) + F.lit(0.0)).alias("sim4"),
-        )
-    )
+    emb, cents, _, queries = _ann_inputs(spark, sf)
+    return ann.ivf_topk(emb, cents, queries, k=3, nprobe=2)
 
 
-# Product quantization + asymmetric-distance (ADC) top-k — the memory
-# side of the web-scale ANN stack (operators/ann.py tier 4,
-# train_pq_codebooks/pq_encode/pq_adc_topk carry the trained path; this
-# twin fixes the codebooks to the first-8 vectors' subvector slices so
-# DuckDB can value-check the full encode->LUT->scan pipeline). Scale
-# shape: corpus side contributes only (vec_id, s, code) int triples;
-# the per-query LUT (m*k rows) is broadcast; one hash join + sum, no
-# O(n^2) stage and no raw-vector shuffle.
+# Product quantization + asymmetric-distance (ADC) top-k
+# (operators/ann.py pq_adc_topk) — the memory side of the web-scale ANN
+# stack, value-checked through the full encode->LUT->scan pipeline with
+# the seeded codebooks. Scale shape: corpus side contributes only
+# (vec_id, s, code) int triples; the per-query LUT (m*k rows) is
+# broadcast; one hash join + sum, no O(n^2) stage and no raw-vector
+# shuffle.
 @register(
     "pq_adc_topk",
     """
@@ -2642,81 +2552,17 @@ def q_ivf_ann_topk(spark, sf):
     """,
 )
 def q_pq_adc_topk(spark, sf):
-    m, ln = 4, 16
-    emb = _t(spark, sf, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("ve"),
-    )
-    sub = spark.range(m).select(F.col("id").cast("int").alias("s"))
-    sv = emb.crossJoin(F.broadcast(sub)).select(
-        "vec_id", "s", F.slice("ve", F.col("s") * ln + 1, ln).alias("svec")
-    )
-    cb = sv.filter(F.col("vec_id") < 8).select(
-        "s", F.col("vec_id").alias("cid"), F.col("svec").alias("ce")
-    )
-    dot = _arr_dot
-    # squared L2 via the dot identity so both engines evaluate the
-    # identical float expression (same convention as ivf_ann_topk)
-    sqd = (
-        dot(F.col("svec"), F.col("svec"))
-        - 2 * dot(F.col("svec"), F.col("ce"))
-        + dot(F.col("ce"), F.col("ce"))
-    )
-    a_w = Window.partitionBy("vec_id", "s").orderBy(
-        F.col("sqd").asc(), F.col("cid").asc()
-    )
-    codes = (
-        sv.join(F.broadcast(cb), "s")
-        .select("vec_id", "s", "cid", sqd.alias("sqd"))
-        .withColumn("rk", F.row_number().over(a_w))
-        .filter("rk = 1")
-        .select("vec_id", "s", F.col("cid").alias("code"))
-    )
-    # qs/qcid naming avoids self-join column ambiguity (codes and lut
-    # share the sv lineage; same-name Column refs resolve trivially true)
-    lut = (
-        sv.filter(F.col("vec_id").between(495, 499))
-        .select(F.col("vec_id").alias("query_id"), "s", "svec")
-        .join(F.broadcast(cb), "s")
-        .select(
-            "query_id",
-            F.col("s").alias("qs"),
-            F.col("cid").alias("qcid"),
-            sqd.alias("pd"),
-        )
-    )
-    scored = (
-        codes.join(
-            F.broadcast(lut),
-            (F.col("s") == F.col("qs")) & (F.col("code") == F.col("qcid")),
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("pd").alias("adist"))
-    )
-    rk_w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(rk_w))
-        .filter(F.col("rk") <= 3)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rk",
-            (F.round("adist", 4) + F.lit(0.0)).alias("adist4"),
-        )
-    )
+    emb, _, cb, queries = _ann_inputs(spark, sf)
+    return ann.pq_adc_topk(emb, cb, queries, k=3, m=4)
 
 
 # IVFADC — the composed billion-vector shape (operators/ann.py
-# ivfadc_topk carries the trained path; this twin fixes centroids to the
-# first-8 vectors and codebooks to their subvector slices so DuckDB can
-# value-check the whole composition): IVF restricts WHICH vectors a
-# query touches (nprobe probed cells only), PQ/ADC bounds what each
-# touched vector COSTS (int codes + broadcast LUT — raw corpus floats
-# never shuffle). Candidate volume ~ nprobe/k of the corpus AND each
-# candidate is m LUT lookups, not a dim-wide float op.
+# ivfadc_topk, with the seeded centroids and codebooks): IVF restricts
+# WHICH vectors a query touches (nprobe probed cells only), PQ/ADC
+# bounds what each touched vector COSTS (int codes + broadcast LUT — raw
+# corpus floats never reach the scan). Candidate volume ~ nprobe/k of
+# the corpus AND each candidate is m LUT lookups, not a dim-wide float
+# op.
 @register(
     "ivfadc_ann_topk",
     """
@@ -2787,34 +2633,8 @@ def q_pq_adc_topk(spark, sf):
     """,
 )
 def q_ivfadc_ann_topk(spark, sf):
-    from webcollector_spark.operators.ann import ivfadc_topk
-
-    emb = _t(spark, sf, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    cents = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").cast("int").alias("cid"), F.col("embedding").alias("ce")
-    )
-    ln = 16
-    sub = spark.range(4).select(F.col("id").cast("int").alias("s"))
-    cb = (
-        emb.filter(F.col("vec_id") < 8)
-        .crossJoin(F.broadcast(sub))
-        .select(
-            "s",
-            F.col("vec_id").cast("int").alias("cid"),
-            F.slice("embedding", F.col("s") * ln + 1, ln).alias("ce"),
-        )
-    )
-    queries = emb.filter(F.col("vec_id").between(495, 499))
-    out = ivfadc_topk(emb, cents, cb, queries, k=3, nprobe=2, m=4)
-    return out.select(
-        "query_id",
-        "neighbor_id",
-        "rk",
-        (F.col("adist4") + F.lit(0.0)).alias("adist4"),
-    )
+    emb, cents, cb, queries = _ann_inputs(spark, sf)
+    return ann.ivfadc_topk(emb, cents, cb, queries, k=3, nprobe=2, m=4)
 
 
 # ---------------------------------------------------------------------------
@@ -4177,8 +3997,8 @@ def q_aspect_bucket_assign(spark, sf):
 # cosine threshold inside each cell defines "semantic duplicate", and
 # connected components + a deterministic keeper give the per-vector
 # decision. Composition of two already-oracled patterns: the IVF
-# assignment (seeded centroids, identical float expression both
-# engines) and the recursive-CTE components fixpoint.
+# assignment (operators/ann.py ivf_assign over the seeded centroids of
+# _ann_inputs) and the recursive-CTE components fixpoint.
 # Scale shape: at 10^9 vectors the paper's recipe is K ∝ n (so cells
 # stay O(avg_size) and within-cell pairing is O(n · avg_size), never
 # all-pairs); K is a small fixture constant here only so the oracle is
@@ -4237,39 +4057,19 @@ _SEMDEDUP_TAU = 0.38  # cosine threshold; synthetic embeddings are
 )
 def q_semdedup_keepers(spark, sf):
     from webcollector_spark.operators.components import dedup_clusters
+    from webcollector_spark.operators.pairs import salted_self_pairs
 
-    dot = _arr_dot
-    emb = _t(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").alias("ve")
-    )
-    cents = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("ve").alias("ce")
-    )
-    # cell assignment: K broadcast distances per vector (pure map
-    # stage), squared L2 via the dot identity — the same expression the
-    # oracle evaluates, so both engines agree bit-for-bit
-    sqd = (
-        dot(F.col("ve"), F.col("ve"))
-        - 2 * dot(F.col("ve"), F.col("ce"))
-        + dot(F.col("ce"), F.col("ce"))
-    )
-    crk_w = Window.partitionBy("vec_id").orderBy(
-        F.col("sqd").asc(), F.col("cid").asc()
-    )
-    cell_of = (
-        emb.crossJoin(F.broadcast(cents))
-        .withColumn("sqd", sqd)
-        .withColumn("crk", F.row_number().over(crk_w))
-        .filter(F.col("crk") == 1)
-        .select("vec_id", F.col("cid").alias("cell"), "ve")
-    )
+    emb, cents, _, _ = _ann_inputs(spark, sf)
+    # cell assignment: K broadcast distances per vector; the vector
+    # rides along for the within-cell cosine
+    cell_of = ann.ivf_assign(
+        emb.select("vec_id", F.col("embedding").alias("ve")), cents, vec_col="ve"
+    ).withColumnRenamed("cluster", "cell")
     # within-cell pairing: salt-split oversized cells (r5, VERDICT r4
     # item 5) — the K ∝ n recipe bounds the AVERAGE cell, but a dense
     # embedding mode makes one hot cell one O(cell^2) straggler task;
     # salted_self_pairs keeps the pair set exact while capping per-task
     # work at ~split_target^2. Never all-pairs across cells.
-    from webcollector_spark.operators.pairs import salted_self_pairs
-
     cand = salted_self_pairs(
         cell_of,
         group_col="cell",
@@ -4277,11 +4077,7 @@ def q_semdedup_keepers(spark, sf):
         payload_cols=["ve"],
         split_target=2048,
     )
-    cos = dot(F.col("ve_a"), F.col("ve_b")) / (
-        F.sqrt(dot(F.col("ve_a"), F.col("ve_a")))
-        * F.sqrt(dot(F.col("ve_b"), F.col("ve_b")))
-    )
-    pairs = cand.filter(cos >= _SEMDEDUP_TAU).select(
+    pairs = cand.filter(ann.cos(F.col("ve_a"), F.col("ve_b")) >= _SEMDEDUP_TAU).select(
         F.col("vec_id_a").alias("ia"), F.col("vec_id_b").alias("ib")
     )
     clusters = dedup_clusters(
