@@ -475,6 +475,108 @@ def test_fill_bytes_and_tem_before_segments(kind):
         assert parse_exif(filled)["orientation"] == 6
 
 
+# -- one frame loop for SOF0 and SOF2 ----------------------------------------
+
+
+def _scan_per_component(px, quality, sub):
+    """A SOF0 stream with one sequential scan per component: legal T.81
+    (A.2.2) that encode_baseline never writes. A lone component scans
+    its own ceil-sized block grid in raster order, without the MCU
+    padding; the order is written out here, independent of jpeg.py's."""
+    coefs, samps, qtabs = jpeg._quantize(px, quality, sub)
+    h, w = px.shape[:2]
+    hmax, vmax = max(s[0] for s in samps), max(s[1] for s in samps)
+    mcux = -(-w // (8 * hmax))
+    out = jpeg._frame_head(0xC0, qtabs, h, w, samps)
+    tables = ((jpeg._DC_LUMA, jpeg._AC_LUMA), (jpeg._DC_CHROMA, jpeg._AC_CHROMA))
+    for t, (dc, ac) in enumerate(tables):
+        out += jpeg._seg(0xC4, bytes([t]) + bytes(dc[0]) + bytes(dc[1]))
+        out += jpeg._seg(0xC4, bytes([0x10 | t]) + bytes(ac[0]) + bytes(ac[1]))
+    for ci, (hi, vi) in enumerate(samps):
+        t = min(ci, 1)
+        dct, act = (jpeg._huff_codes(*tab) for tab in tables[t])
+        nbx = -(-(-(-w * hi // hmax)) // 8)
+        nby = -(-(-(-h * vi // vmax)) // 8)
+        bw, pred = jpeg._BitWriter(), 0
+        for idx in (r * mcux * hi + x for r in range(nby) for x in range(nbx)):
+            blk = [int(v) for v in coefs[ci][idx]]
+            size, bits = jpeg._magnitude(blk[0] - pred)
+            pred = blk[0]
+            bw.write(*dct[size])
+            bw.write(bits, size)
+            run = 0
+            for k in range(1, 64):
+                if blk[k] == 0:
+                    run += 1
+                    continue
+                while run > 15:
+                    bw.write(*act[0xF0])
+                    run -= 16
+                size, bits = jpeg._magnitude(blk[k])
+                bw.write(*act[(run << 4) | size])
+                bw.write(bits, size)
+                run = 0
+            if run:
+                bw.write(*act[0x00])
+        sos = bytes([1, ci + 1, (t << 4) | t, 0, 63, 0])
+        out += jpeg._seg(0xDA, sos) + bw.flush()
+    return bytes(out + b"\xff\xd9")
+
+
+def test_sequential_scan_per_component_decodes():
+    for w, h in ((33, 17), (16, 16), (40, 24)):
+        px = _noise(w, h, seed=w + h)
+        for sub in ("444", "420", "422", "411", "440"):
+            data = _scan_per_component(px, 90, sub)
+            assert data.count(b"\xff\xda") == 3
+            want = jpeg.decode_baseline(
+                jpeg.encode_baseline(px, quality=90, subsampling=sub)
+            )
+            assert np.array_equal(codecs.decode(data), want), (w, h, sub)
+
+
+@pytest.mark.parametrize("cut", [1, 2])
+def test_frame_cut_after_its_last_scan_raises(cut):
+    """Baseline and progressive alike: every scan arrived, the EOI did
+    not. A cut body is a failed decode, never a quiet success."""
+    from webcollector_spark.jpeg_progressive import encode_progressive
+
+    px = _noise(24, 16, seed=4)
+    for data in (jpeg.encode_baseline(px), encode_progressive(px)):
+        assert data.endswith(b"\xff\xd9")
+        with pytest.raises(ValueError):
+            codecs.decode(data[:-cut])
+
+
+@pytest.mark.parametrize("kind", ["baseline", "progressive"])
+def test_overlong_entropy_segment_refused_early(kind):
+    """4 MiB of entropy bytes behind an 8x8 frame's last scan: no valid
+    scan over 3 blocks runs past 3 x 256 bytes, so the decode refuses it
+    while unstuffing, before the bit reader is built for it."""
+    import time
+    import tracemalloc
+
+    from webcollector_spark.jpeg_progressive import encode_progressive
+
+    px = _noise(8, 8, seed=6)
+    enc = (
+        jpeg.encode_baseline(px)
+        if kind == "baseline"
+        else encode_progressive(px, quality=90)
+    )
+    data = enc[:-2] + b"\x55" * (4 << 20) + b"\xff\xd9"
+    tracemalloc.start()
+    try:
+        t0 = time.perf_counter()
+        with pytest.raises(ValueError, match="entropy-coded segment"):
+            codecs.decode(data)
+        took = time.perf_counter() - t0
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert took < 1.0 and peak < 8 << 20, (took, peak)
+
+
 # -- fixture encoder (MJPEG stream) --------------------------------------
 
 

@@ -6,9 +6,12 @@ Sets up a benchmark workload (`crawlbench/workloads.py`, used as is) the
 way `crawlbench/run.py` does, warms it up, then runs untraced passes
 with the engine's calls wrapped. Counts are inclusive of nested calls:
 the wall time, the Spark jobs started (from the status store) and the
-py4j round trips (commands the driver sent to the JVM). The meter's own
-job-id reads (two py4j commands per wrapped call, not counted) add a
-little wall time.
+py4j round trips (commands the driver sent to the JVM). py4j's
+garbage-collection deletes (the driver dropped its last reference to
+a JVM object) are counted apart, in the `gc` columns: when they are
+sent depends on when Python frees the proxies, not on the call, so
+they are not the call's round trips. The meter's own job-id reads (two
+py4j commands per wrapped call, not counted) add a little wall time.
 
 `crawl` (one pass): per call path of the engine's entry points and
 DataFrame actions, the number of calls and their counts. The totals
@@ -32,6 +35,9 @@ from contextlib import contextmanager
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
+#: what a py4j garbage-collection delete command starts with
+#: (py4j.protocol MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME)
+GC_DELETE = "m\nd\n"
 PASSES = 3  # curation_suite passes the per-query medians are taken over
 sys.path[:0] = [str(ROOT), str(ROOT / "crawlbench")]
 
@@ -43,9 +49,10 @@ class Meter:
     def __init__(self, sc):
         self.sc = sc
         self.py4j = 0
+        self.gc = 0
         self._paused = False
         self._stack: list[str] = []
-        # call path -> [calls, wall_s, jobs, py4j]
+        # call path -> [calls, wall_s, jobs, py4j, gc]
         self.rows: dict[tuple[str, ...], list[float]] = {}
         self.job_ids: list[int] = []
 
@@ -58,10 +65,13 @@ class Meter:
 
     def count_py4j(self, send):
         @functools.wraps(send)
-        def wrapper(conn, *a, **kw):
+        def wrapper(conn, command, *a, **kw):
             if not self._paused:
-                self.py4j += 1
-            return send(conn, *a, **kw)
+                if command.startswith(GC_DELETE):
+                    self.gc += 1
+                else:
+                    self.py4j += 1
+            return send(conn, command, *a, **kw)
 
         return wrapper
 
@@ -69,16 +79,17 @@ class Meter:
     def frame(self, name: str):
         self._stack.append(name)
         path = tuple(self._stack)
-        row = self.rows.setdefault(path, [0, 0.0, 0, 0])  # first-call order
-        j0, p0, t0 = self._next_job_id(), self.py4j, time.perf_counter()
+        row = self.rows.setdefault(path, [0, 0.0, 0, 0, 0])  # first-call order
+        j0, p0, g0 = self._next_job_id(), self.py4j, self.gc
+        t0 = time.perf_counter()
         try:
             yield
         finally:
-            wall, py4j = time.perf_counter() - t0, self.py4j - p0
+            wall = time.perf_counter() - t0
             j1 = self._next_job_id()
             if len(self._stack) == 1:
                 self.job_ids.extend(range(j0, j1))
-            for i, v in enumerate((1, wall, j1 - j0, py4j)):
+            for i, v in enumerate((1, wall, j1 - j0, self.py4j - p0, self.gc - g0)):
                 row[i] += v
             self._stack.pop()
 
@@ -149,17 +160,18 @@ def instrument(meter: Meter) -> None:
 
 
 def report(meter: Meter) -> None:
-    (root, (_, wall, jobs, py4j)), *_ = meter.rows.items()
+    (root, (_, wall, jobs, py4j, gc)), *_ = meter.rows.items()
     busy = meter.job_busy_s()
-    print(f"pass: {wall:.2f} s wall, {jobs} Spark jobs, {py4j} py4j round trips; "
-          f"a job ran for {busy:.2f} s, the driver alone for {wall - busy:.2f} s")
-    print(f"{'call path':<52}{'calls':>6}{'wall_s':>9}{'jobs':>6}{'py4j':>7}")
+    print(f"pass: {wall:.2f} s wall, {jobs} Spark jobs, {py4j} py4j round trips "
+          f"(+{gc} gc deletes); a job ran for {busy:.2f} s, the driver alone "
+          f"for {wall - busy:.2f} s")
+    print(f"{'call path':<52}{'calls':>6}{'wall_s':>9}{'jobs':>6}{'py4j':>7}{'gc':>6}")
 
     def show(parent: tuple[str, ...]) -> None:  # children in first-call order
-        for path, (n, w, j, p) in meter.rows.items():
+        for path, (n, w, j, p, g) in meter.rows.items():
             if path[:-1] == parent:
                 label = "  " * (len(path) - 2) + path[-1]
-                print(f"{label:<52}{n:>6}{w:>9.3f}{j:>6}{p:>7}")
+                print(f"{label:<52}{n:>6}{w:>9.3f}{j:>6}{p:>7}{g:>6}")
                 show(path)
 
     show(root)
@@ -167,7 +179,7 @@ def report(meter: Meter) -> None:
 
 def suite_passes(meter: Meter, wl, spark) -> list[dict]:
     """PASSES runs of the suite, each query split into plan build and
-    execution; one {call path: [calls, wall_s, jobs, py4j]} per pass."""
+    execution; one {call path: [calls, wall_s, jobs, py4j, gc]} per pass."""
     import workloads
 
     count_sends(meter)
@@ -192,21 +204,26 @@ def report_suite(per_pass: list[dict]) -> None:
 
     root = ("suite.pass",)
     print(f"median of {len(per_pass)} passes: {median(root, 1):.2f} s wall, "
-          f"{median(root, 2):.0f} Spark jobs, {median(root, 3):.0f} py4j round trips")
-    print(f"{'query':<24}{'build_ms':>9}{'exec_ms':>9}"
-          f"{'build_jobs':>11}{'exec_jobs':>10}{'build_py4j':>11}{'exec_py4j':>10}")
-    totals = [0.0] * 6
+          f"{median(root, 2):.0f} Spark jobs, {median(root, 3):.0f} py4j round trips "
+          f"(+{median(root, 4):.0f} gc deletes)")
+    heads = ("build_ms", "exec_ms", "build_jobs", "exec_jobs", "build_py4j",
+             "exec_py4j", "build_gc", "exec_gc")
+    print(f"{'query':<24}" + "".join(f"{h:>11}" for h in heads))
+
+    def line(label, cells):
+        print(f"{label:<24}" + "".join(f"{c:>11.0f}" for c in cells))
+
+    totals = [0.0] * len(heads)
     for path in per_pass[0]:
         if len(path) != 2:
             continue
         b, x = path + ("build",), path + ("execute",)
-        cells = [median(b, 1) * 1e3, median(x, 1) * 1e3, median(b, 2),
-                 median(x, 2), median(b, 3), median(x, 3)]
+        cells = [median(b, 1) * 1e3, median(x, 1) * 1e3]
+        for i in (2, 3, 4):
+            cells += [median(b, i), median(x, i)]
         totals = [t + c for t, c in zip(totals, cells)]
-        print(f"{path[1]:<24}{cells[0]:>9.0f}{cells[1]:>9.0f}{cells[2]:>11.0f}"
-              f"{cells[3]:>10.0f}{cells[4]:>11.0f}{cells[5]:>10.0f}")
-    print(f"{'sum of medians':<24}{totals[0]:>9.0f}{totals[1]:>9.0f}{totals[2]:>11.0f}"
-          f"{totals[3]:>10.0f}{totals[4]:>11.0f}{totals[5]:>10.0f}")
+        line(path[1], cells)
+    line("sum of medians", totals)
 
 
 def main() -> None:

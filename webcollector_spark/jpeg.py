@@ -1,18 +1,26 @@
-"""Baseline JPEG (ITU-T T.81 sequential DCT, 8-bit) — pure numpy codec.
+"""JPEG (ITU-T T.81 DCT, 8-bit, Huffman) — pure numpy codec.
 
 This retires the QIMG stand-in as the only lossy path (VERDICT r3 item
 5): real compressed bytes flow end-to-end through the Spark decode
-operators. Scope is the baseline sequential process with sampling
-factors 1-2 per axis — 4:4:4, 4:2:2, 4:4:0, and 4:2:0 (what the real
-web overwhelmingly serves: libjpeg's default, every phone camera) —
-plus grayscale, implemented faithfully at the bitstream level:
+operators. Scope is the baseline sequential process (SOF0, encode and
+decode) and the progressive one (SOF2: decoded here, encoded in
+jpeg_progressive) with sampling factors 1, 2 or 4 per axis — 4:4:4,
+4:2:2, 4:4:0, 4:2:0 (what the real web overwhelmingly serves:
+libjpeg's default, every phone camera) and 4:1:1 — plus grayscale,
+implemented faithfully at the bitstream level:
 
-* markers: SOI / DQT / SOF0 / DHT / DRI / SOS / RSTn / EOI, with
-  0xFF00 byte stuffing in the entropy-coded segment. One segment
+* markers: SOI / DQT / SOF0 / SOF2 / DHT / DRI / SOS / RSTn / EOI,
+  with 0xFF00 byte stuffing in the entropy-coded segment. One segment
   reader (`_segment`: fill bytes, TEM/RSTn, cut payloads), one
   frame-header parse (`_Frame`) and one unstuffing (`_entropy`) serve
-  both decoders and every header-only reader (parse_dqt, sof_marker,
+  the decoder and every header-only reader (parse_dqt, sof_marker,
   header_quality here, codecs.sniff_header, exif.parse_exif);
+* one frame loop (`_decode_frame`) reads scans until EOI, strict for
+  `decode_baseline_at` and tolerant of a cut for
+  `jpeg_progressive.decode_progressive_prefix`, and one scan decoder
+  (`_decode_scan`) walks the blocks a scan covers (`_scan_blocks`,
+  shared with both encoders): a sequential scan is the case Ss=0,
+  Se=63, Ah=Al=0;
 * entropy coding: canonical Huffman per Annex C (tables read from the
   DHT segments, NOT assumed), DC prediction per component, AC
   run-length with ZRL and EOB, restart-interval predictor resets;
@@ -23,12 +31,11 @@ plus grayscale, implemented faithfully at the bitstream level:
   products over all blocks at once, quantization tables from DQT;
 * color: JFIF RGB <-> YCbCr.
 
-Progressive routes to jpeg_progressive; arithmetic, 12-bit, and
-sampling-factor-3 streams raise ValueError — decode quality over
-silent wrong answers. The default quality (98) keeps round-trip PSNR
-above the input_hint's 40 dB gate even on full-range NOISE images,
-the worst case (measured 43.4 dB;
-the dominant error is Y+chroma quantization amplified ~2x through the
+Arithmetic, 12-bit, lossless and sampling-factor-3 streams raise
+ValueError — decode quality over silent wrong answers. The default
+quality (98) keeps round-trip PSNR above the input_hint's 40 dB gate
+even on full-range NOISE images, the worst case (measured 43.4 dB; the
+dominant error is Y+chroma quantization amplified ~2x through the
 YCbCr->RGB transform, so 95 lands at only ~36 dB there — structured
 images sit 50+ dB at either setting).
 
@@ -278,23 +285,100 @@ def _box_down(plane: np.ndarray, fv: int, fh: int) -> np.ndarray:
     return plane.reshape(hh // fv, fv, ww // fh, fh).mean(axis=(1, 3))
 
 
-def _mcu_raster_order(
-    mcuy: int, mcux: int, vi: int, hi: int
-) -> np.ndarray:
-    """Scan position j -> raster block index, for a component whose
-    padded block grid is (mcuy*vi, mcux*hi): the interleaved scan
-    visits MCUs raster-wise and, within each MCU, the component's
-    hi x vi blocks raster-wise (A.2.3). Identity when hi == vi == 1."""
-    m = np.arange(mcuy * mcux)
-    mr, mc = m // mcux, m % mcux
-    b = np.arange(vi * hi)
-    br, bc = b // hi, b % hi
-    rows = mr[:, None] * vi + br[None, :]
-    cols = mc[:, None] * hi + bc[None, :]
-    return (rows * (mcux * hi) + cols).reshape(-1)
+def _grid(samps, h: int, w: int) -> tuple[int, int, int, int]:
+    """(hmax, vmax, mcux, mcuy) of the MCU grid (A.2) of an h x w image
+    whose components have sampling factors `samps`, (hi, vi) each."""
+    hmax = max(s[0] for s in samps)
+    vmax = max(s[1] for s in samps)
+    return hmax, vmax, -(-w // (8 * hmax)), -(-h // (8 * vmax))
+
+
+def _scan_blocks(samps, h: int, w: int, scan):
+    """The blocks a scan over the components `scan` covers, in scan
+    order: (blocks per MCU, number of blocks, iterator of (component,
+    raster index into that component's MCU-padded block grid)). Several
+    components interleave (A.2.3): MCU after MCU, each component's
+    hi x vi blocks raster-wise. One component is scanned alone (A.2.2):
+    raster over its own ceil(w*hi/hmax/8) x ceil(h*vi/vmax/8) blocks,
+    without the MCU padding. Both encoders and the decoder walk this."""
+    hmax, vmax, mcux, mcuy = _grid(samps, h, w)
+    if len(scan) == 1:
+        ci = scan[0]
+        hi, vi = samps[ci]
+        cw, ch = -(-w * hi // hmax), -(-h * vi // vmax)  # its own size
+        nbx, nby = -(-cw // 8), -(-ch // 8)
+        return 1, nby * nbx, (
+            (ci, r * mcux * hi + x) for r in range(nby) for x in range(nbx)
+        )
+    layout = [(ci, *samps[ci]) for ci in scan]
+    unit = sum(hi * vi for _, hi, vi in layout)
+    return unit, mcuy * mcux * unit, (
+        (ci, (my * vi + r) * mcux * hi + mx * hi + x)
+        for my in range(mcuy)
+        for mx in range(mcux)
+        for ci, hi, vi in layout
+        for r in range(vi)
+        for x in range(hi)
+    )
 
 
 # -- encoder ----------------------------------------------------------------
+
+def _quantize(
+    pixels: np.ndarray, quality: int, subsampling: str
+) -> tuple[list[np.ndarray], tuple, list[np.ndarray]]:
+    """The half both encoders share: JFIF colour conversion, chroma
+    box-downsampling, edge padding of each plane to its MCU-padded grid,
+    level shift, DCT and quantization. Returns (quantized zigzag
+    coefficients per component, raster block order over that grid; the
+    sampling factors; the quantization tables, luma first)."""
+    gray = pixels.ndim == 2
+    h, w = pixels.shape[:2]
+    if gray:
+        planes, samps = [pixels.astype(np.float64)], ((1, 1),)
+    else:
+        ycc = rgb_to_ycbcr(pixels)
+        planes = [ycc[..., i] for i in range(3)]
+        samps = _SAMP_FACTORS[subsampling]
+    hmax, vmax, mcux, mcuy = _grid(samps, h, w)
+    qtabs = [_quality_scale(STD_LUMA_Q, quality)]
+    if not gray:
+        qtabs.append(_quality_scale(STD_CHROMA_Q, quality))
+    comp_coefs = []
+    for ci, plane in enumerate(planes):
+        hi, vi = samps[ci]
+        plane = _box_down(plane, vmax // vi, hmax // hi)
+        gh, gw = mcuy * vi * 8, mcux * hi * 8
+        ph, pw = gh - plane.shape[0], gw - plane.shape[1]
+        if ph or pw:
+            plane = np.pad(plane, ((0, ph), (0, pw)), mode="edge")
+        blocks, _, _ = _to_blocks(plane - 128.0)
+        coefs = np.einsum("ij,njk,lk->nil", _C, blocks, _C)
+        q = qtabs[min(ci, 1)].reshape(8, 8)
+        quant = np.round(coefs / q).astype(np.int64)
+        comp_coefs.append(quant.reshape(-1, 64)[:, ZIGZAG])
+    return comp_coefs, samps, qtabs
+
+
+def _seg(marker: int, payload: bytes) -> bytes:
+    """One marker segment: marker, length (counting itself), payload."""
+    return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
+
+
+def _frame_head(
+    sof: int, qtabs: list[np.ndarray], h: int, w: int, samps
+) -> bytearray:
+    """SOI, a DQT per quantization table and the SOFn segment: how both
+    encoders open a stream. Component ci + 1 uses table min(ci, 1)."""
+    out = bytearray(b"\xff\xd8")
+    for tid, q in enumerate(qtabs):
+        # DQT elements are stored in ZIGZAG order (B.2.4.1), 8-bit
+        out += _seg(_DQT, bytes([tid]) + bytes(int(x) for x in q[ZIGZAG]))
+    sof_payload = struct.pack(">BHHB", 8, h, w, len(samps))
+    for ci, (hi, vi) in enumerate(samps):
+        sof_payload += bytes([ci + 1, (hi << 4) | vi, min(ci, 1)])
+    return out + _seg(sof, sof_payload)
+
 
 def encode_baseline(
     pixels: np.ndarray,
@@ -309,46 +393,14 @@ def encode_baseline(
     (half both ways, the layout the real web overwhelmingly serves).
     restart_interval > 0 emits DRI + RSTn every that many MCUs —
     the resync points a parallel/streaming decoder keys on."""
-    gray = pixels.ndim == 2
+    comp_coefs, samps, qtabs = _quantize(pixels, quality, subsampling)
     h, w = pixels.shape[:2]
-    if gray:
-        planes = [pixels.astype(np.float64)]
-        samps = ((1, 1),)
-    else:
-        ycc = rgb_to_ycbcr(pixels)
-        planes = [ycc[..., i] for i in range(3)]
-        samps = _SAMP_FACTORS[subsampling]
-    hmax = max(s[0] for s in samps)
-    vmax = max(s[1] for s in samps)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-    n_mcu = mcux * mcuy
-
-    qluma = _quality_scale(STD_LUMA_Q, quality)
-    qchroma = _quality_scale(STD_CHROMA_Q, quality)
-    qtabs = [qluma] if gray else [qluma, qchroma]
-
-    # per component: downsample, pad to its MCU-aligned grid, DCT +
-    # quantize all blocks (zigzag order), note the scan->raster map
-    comp_coefs, orders = [], []
-    for ci, plane in enumerate(planes):
-        hi, vi = samps[ci]
-        plane = _box_down(plane, vmax // vi, hmax // hi)
-        gh, gw = mcuy * vi * 8, mcux * hi * 8
-        ph, pw = gh - plane.shape[0], gw - plane.shape[1]
-        if ph or pw:
-            plane = np.pad(plane, ((0, ph), (0, pw)), mode="edge")
-        blocks, _, _ = _to_blocks(plane - 128.0)
-        coefs = np.einsum("ij,njk,lk->nil", _C, blocks, _C)
-        q = qtabs[min(ci, 1)].reshape(8, 8)
-        quant = np.round(coefs / q).astype(np.int64)
-        comp_coefs.append(quant.reshape(-1, 64)[:, ZIGZAG])
-        orders.append(_mcu_raster_order(mcuy, mcux, vi, hi))
-
+    ncomp = len(samps)
     dc_tabs = [_huff_codes(*_DC_LUMA), _huff_codes(*_DC_CHROMA)]
     ac_tabs = [_huff_codes(*_AC_LUMA), _huff_codes(*_AC_CHROMA)]
 
     bw_ = _BitWriter()
-    pred = [0] * len(planes)
+    pred = [0] * ncomp
 
     def emit(blk: np.ndarray, ci: int) -> None:
         ti = min(ci, 1)
@@ -381,48 +433,30 @@ def encode_baseline(
             code, length = act[0x00]  # EOB
             bw_.write(code, length)
 
+    unit, _, blocks = _scan_blocks(samps, h, w, range(ncomp))
     rst = 0
-    for m in range(n_mcu):
-        if restart_interval and m and m % restart_interval == 0:
+    for j, (ci, idx) in enumerate(blocks):
+        if restart_interval and j and j % (restart_interval * unit) == 0:
             bw_.restart(rst)
             rst += 1
-            pred = [0] * len(planes)
-        for ci in range(len(planes)):
-            nb = samps[ci][0] * samps[ci][1]
-            for b in range(nb):
-                emit(comp_coefs[ci][orders[ci][m * nb + b]], ci)
+            pred = [0] * ncomp
+        emit(comp_coefs[ci][idx], ci)
     scan = bw_.flush()
 
     # -- markers ------------------------------------------------------------
-    out = bytearray(b"\xff\xd8")  # SOI
-
-    def seg(marker: int, payload: bytes) -> None:
-        out.extend(struct.pack(">BBH", 0xFF, marker, len(payload) + 2))
-        out.extend(payload)
-
-    for tid, q in enumerate(qtabs):
-        # DQT elements are stored in ZIGZAG order (B.2.4.1), 8-bit
-        seg(0xDB, bytes([tid]) + bytes(int(x) for x in q[ZIGZAG]))
-    ncomp = 1 if gray else 3
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for ci in range(ncomp):
-        hi, vi = samps[ci]
-        sof += bytes([ci + 1, (hi << 4) | vi, min(ci, 1)])  # id, samp, qtab
-    seg(0xC0, sof)  # SOF0
+    out = _frame_head(0xC0, qtabs, h, w, samps)  # SOF0
     for cls, tid, (bits, values) in (
         (0, 0, _DC_LUMA), (1, 0, _AC_LUMA), (0, 1, _DC_CHROMA), (1, 1, _AC_CHROMA)
     )[: 2 * len(qtabs)]:
-        seg(0xC4, bytes([(cls << 4) | tid]) + bytes(bits) + bytes(values))
+        out += _seg(_DHT, bytes([(cls << 4) | tid]) + bytes(bits) + bytes(values))
     if restart_interval:
-        seg(0xDD, struct.pack(">H", restart_interval))  # DRI
+        out += _seg(_DRI, struct.pack(">H", restart_interval))
     sos = bytes([ncomp])
     for ci in range(ncomp):
         ti = min(ci, 1)
         sos += bytes([ci + 1, (ti << 4) | ti])
-    sos += bytes([0, 63, 0])
-    seg(0xDA, sos)
-    out.extend(scan)
-    out.extend(b"\xff\xd9")  # EOI
+    out += _seg(_SOS, sos + bytes([0, 63, 0])) + scan
+    out += b"\xff\xd9"  # EOI
     return bytes(out)
 
 
@@ -524,7 +558,7 @@ def _dqt(payload: bytes):
 class _Frame:
     """What the segments ahead of a scan declare: quant tables (zigzag
     order), Huffman specs, the SOFn frame and its components, and the
-    restart interval. Both decoders fold segments in with `read`."""
+    restart interval. The frame loop folds segments in with `read`."""
 
     def __init__(self) -> None:
         self.qtabs: dict[int, np.ndarray] = {}
@@ -612,34 +646,41 @@ class _Frame:
 
     def grid(self) -> tuple[int, int, int, int]:
         """(hmax, vmax, mcux, mcuy) of the frame's MCU grid (A.2)."""
-        hmax = max(c["hi"] for c in self.comps)
-        vmax = max(c["vi"] for c in self.comps)
-        return hmax, vmax, -(-self.w // (8 * hmax)), -(-self.h // (8 * vmax))
+        return _grid(self.samps(), self.h, self.w)
+
+    def samps(self) -> list[tuple[int, int]]:
+        return [(c["hi"], c["vi"]) for c in self.comps]
 
 
-def _entropy(data: bytes, pos: int) -> tuple[bytes, list[int], int]:
+def _entropy(
+    data: bytes, pos: int, limit: int = MAX_DECODE_BYTES
+) -> tuple[bytes, list[int], int]:
     """Unstuff the entropy-coded segment at `pos` (FF00 -> FF, F.1.2.3).
     Returns (bytes, the bit position after each RSTn marker, offset of
     the marker that ends the segment — or of the last byte when the
-    data ends first, which stays out of the bytes)."""
+    data ends first, which stays out of the bytes). Raises ValueError
+    as soon as the unstuffed bytes would pass `limit`."""
     raw = bytearray()
     restarts = []
-    p = pos
-    while p < len(data) - 1:
-        b = data[p]
-        if b == 0xFF:
-            nxt = data[p + 1]
-            if nxt == 0x00:
-                raw.append(0xFF)
-                p += 2
-                continue
-            if 0xD0 <= nxt <= 0xD7:  # RSTn
-                restarts.append(len(raw) * 8)
-                p += 2
-                continue
+    p, n = pos, len(data) - 1
+    while p < n:
+        q = data.find(b"\xff", p, n)  # each run of other bytes in one copy
+        if q < 0:
+            q = n
+        if len(raw) + q - p > limit:
+            raise ValueError("entropy-coded segment longer than its scan")
+        raw += data[p:q]
+        p = q
+        if p == n:
+            break
+        nxt = data[p + 1]
+        if nxt == 0x00:
+            raw.append(0xFF)
+        elif 0xD0 <= nxt <= 0xD7:  # RSTn
+            restarts.append(len(raw) * 8)
+        else:
             break  # EOI or next marker
-        raw.append(b)
-        p += 1
+        p += 2
     return bytes(raw), restarts, p
 
 
@@ -671,16 +712,17 @@ class _BitReader:
     """Bit reader over the UNSTUFFED entropy segment, numpy-backed."""
 
     def __init__(self, data: bytes) -> None:
-        self.bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8))
-        # precompute 16-bit peek values at every bit offset via two
-        # 8-bit strided dots — O(n), keeps per-symbol work to one index
-        pad = np.concatenate([self.bits, np.zeros(16, dtype=np.uint8)])
-        p16 = np.zeros(len(self.bits) + 1, dtype=np.int64)
-        w = (1 << np.arange(15, -1, -1)).astype(np.int64)
+        # the bits, then 16 zero bits past the end
+        pad = np.unpackbits(np.frombuffer(data + bytes(2), dtype=np.uint8))
+        n = len(pad) - 16
+        # precompute the 16-bit peek value at every bit offset, in place
+        # by Horner's rule over 16 shifted bit planes: O(n), no
+        # temporaries the size of the table, and per-symbol work stays
+        # one index. This table is the decode's peak memory.
+        p16 = np.zeros(n + 1, dtype=np.int64)
         for i in range(16):
-            p16[: len(self.bits) + 1] += (
-                pad[i : i + len(self.bits) + 1].astype(np.int64) * w[i]
-            )
+            p16 <<= 1
+            p16 += pad[i : i + n + 1]
         self.peek16 = p16
         self.pos = 0
 
@@ -699,104 +741,224 @@ def _extend(v: int, size: int) -> int:
 # -- decoder ----------------------------------------------------------------
 
 def decode_baseline(data: bytes) -> np.ndarray:
-    """Baseline JPEG bytes -> RGB8 HxWx3 (grayscale replicated to 3
-    channels is NOT done — a 1-component stream returns HxW)."""
+    """JPEG bytes, baseline or progressive -> RGB8 HxWx3 (grayscale
+    replicated to 3 channels is NOT done — a 1-component stream returns
+    HxW)."""
     return decode_baseline_at(data, 0)[0]
 
 
 def decode_baseline_at(data: bytes, start: int) -> tuple[np.ndarray, int]:
-    """Decode one JPEG image beginning at byte `start`; returns
-    (pixels, offset one past its EOI) — the seam MJPEG-style
-    concatenated-frame streams iterate on (operators/media.py)."""
+    """Decode one JPEG image, baseline (SOF0) or progressive (SOF2),
+    beginning at byte `start`; returns (pixels, offset one past its
+    EOI) — the seam MJPEG-style concatenated-frame streams iterate on
+    (operators/media.py). A frame without a scan, or whose bytes end
+    before its EOI, raises ValueError: a truncated body is a failure
+    here, and jpeg_progressive.decode_progressive_prefix is the API that
+    renders what arrived."""
+    pixels, _, _, end = _decode_frame(data, start, strict=True)
+    return pixels, end
+
+
+def _decode_frame(
+    data: bytes, start: int, strict: bool
+) -> tuple[np.ndarray, int, bool, int]:
+    """The one frame loop, for SOF0 and SOF2 alike: fold the segments
+    ahead of each scan into the frame, entropy-decode the scan into
+    coefficients allocated once (raster block order, full MCU-padded
+    grid), repeat until EOI. Returns (pixels, scans decoded, whether
+    EOI arrived, offset past it). Strict: a cut segment or scan raises,
+    and so does a frame without a scan or an EOI. Tolerant
+    (strict=False): the loop stops where the bytes run out and
+    reconstructs what arrived; every block a cut scan finished keeps
+    its coefficients."""
     if data[start : start + 2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     frame = _Frame()
-    marker, pos, sos = frame.read(data, start + 2)
-    if frame.sof == 0xC2:  # progressive: its own scan loop
-        from webcollector_spark.jpeg_progressive import decode_progressive_at
+    pos = start + 2
+    coefs: list[np.ndarray] | None = None
+    scans = 0
+    while True:
+        marker, pos, sos = frame.read(data, pos, strict=strict)
+        if coefs is None and frame.comps:
+            _, _, mcux, mcuy = frame.grid()
+            coefs = [
+                np.zeros((mcuy * vi * mcux * hi, 64), dtype=np.int64)
+                for hi, vi in frame.samps()
+            ]
+        if marker != _SOS:  # EOI, or the bytes ran out
+            break
+        if coefs is None:
+            raise ValueError("SOS before SOF")
+        scan = frame.scan(sos)
+        try:
+            pos = _decode_scan(data, pos, coefs, frame, *scan)
+        except (ValueError, IndexError):
+            if strict:
+                raise
+            pos = len(data)
+            break
+        scans += 1
+    if coefs is None:
+        raise ValueError("no frame found")
+    if strict and (marker != _EOI or not scans):
+        raise ValueError("JPEG frame without a scan or an EOI")
+    return _reconstruct(coefs, frame), scans, marker == _EOI, pos
 
-        return decode_progressive_at(data, start)
-    if marker != _SOS or not frame.comps:
-        raise ValueError("no scan found")
-    comps = frame.comps
-    scomps = frame.scan(sos)[0]
-    if len(scomps) != len(comps):
-        raise ValueError("baseline scan must carry every component")
-    for ci, td, ta in scomps:
-        comps[ci]["td"], comps[ci]["ta"] = td, ta
-    restart_interval = frame.restart_interval
 
-    raw, restarts, end = _entropy(data, pos)
-    marker, after, _ = _Frame().read(data, end, strict=False)
-    if marker == _EOI:  # the offset past EOI, where a next frame starts
-        end = after
-
+def _decode_scan(data, pos, coefs, frame, scomps, Ss, Se, Ah, Al) -> int:
+    """Entropy-decode one scan into `coefs` in place; returns the offset
+    where its entropy-coded segment ends (EOB runs never cross scans).
+    A sequential scan is the case Ss=0, Se=63, Ah=Al=0 — each block's
+    DC, then its AC band — and the only one a SOF0 frame carries. A
+    progressive scan carries the DC (Ss=0) of one or more components or
+    one AC band of one component, first (Ah=0) or refining (G.1.2)."""
+    sequential = (Ss, Se, Ah, Al) == (0, 63, 0, 0)
+    if sequential != (frame.sof == 0xC0):
+        raise ValueError("scan parameters do not fit the frame's process")
+    if Ss and len(scomps) > 1:
+        raise ValueError("AC scans must be single-component (A.2.2)")
+    unit, n_blocks, blocks = _scan_blocks(
+        frame.samps(), frame.h, frame.w, [ci for ci, _, _ in scomps]
+    )
+    # a block's data is at most 64 coefficients x (16-bit code + at most
+    # 16 appended bits) = 256 bytes, so no valid scan's segment is longer
+    raw, restarts, end = _entropy(data, pos, 256 * n_blocks)
     reader = _BitReader(raw)
-    hmax, vmax, mcux, mcuy = frame.grid()
-    n_mcu = mcux * mcuy
-    nc = len(comps)
-    coefs = [
-        np.zeros((n_mcu * c["hi"] * c["vi"], 64), dtype=np.int64)
-        for c in comps
-    ]
-    pred = [0] * nc
-    luts = {key: _decode_lut(spec) for key, spec in frame.huff.items()}
-    ri = 0
-    for m in range(n_mcu):
-        if restart_interval and m and m % restart_interval == 0:
+    huff, dc_first = frame.huff, Ss == 0 and not Ah
+    dc = {ci: _decode_lut(huff[0, td]) for ci, td, _ in scomps} if dc_first else {}
+    band = 1 if sequential else Ss  # first AC coefficient; 0: a DC scan
+    ac = {ci: _decode_lut(huff[1, ta]) for ci, _, ta in scomps} if band else {}
+    ac_block = _ac_refine if Ah else _ac_first
+    pred = dict.fromkeys(dc, 0)
+    eobrun = ri = 0
+    restart = frame.restart_interval * unit
+    for j, (ci, idx) in enumerate(blocks):
+        if restart and j and j % restart == 0:
             # byte-align to the recorded restart position, reset DC
+            # prediction and the EOB run
             reader.pos = restarts[ri]
             ri += 1
-            pred = [0] * nc
-        for ci, c in enumerate(comps):
-            dsym, dlen = luts[(0, c["td"])]
-            asym, alen = luts[(1, c["ta"])]
-            nb = c["hi"] * c["vi"]
-            for b in range(nb):
-                blk = coefs[ci][m * nb + b]
+            pred = dict.fromkeys(dc, 0)
+            eobrun = 0
+        blk = coefs[ci][idx]
+        if Ss == 0:
+            if Ah:
+                blk[0] |= reader.receive(1) << Al
+            else:
+                dsym, dlen = dc[ci]
                 peek = reader.peek16[reader.pos]
                 size = int(dsym[peek])
                 ll = int(dlen[peek])
                 if ll == 0:
                     raise ValueError("bad DC Huffman code")
                 reader.pos += ll
-                diff = _extend(reader.receive(size), size) if size else 0
-                pred[ci] += diff
-                blk[0] = pred[ci]
-                k = 1
-                while k < 64:
-                    peek = reader.peek16[reader.pos]
-                    rs = int(asym[peek])
-                    ll = int(alen[peek])
-                    if ll == 0:
-                        raise ValueError("bad AC Huffman code")
-                    reader.pos += ll
-                    run, size = rs >> 4, rs & 0xF
-                    if size == 0:
-                        if run == 15:  # ZRL
-                            k += 16
-                            continue
-                        break  # EOB
-                    k += run
-                    if k > 63:
-                        raise ValueError("AC run overflows block")
-                    blk[k] = _extend(reader.receive(size), size)
-                    k += 1
+                if size:
+                    pred[ci] += _extend(reader.receive(size), size)
+                blk[0] = pred[ci] << Al
+        if band:
+            asym, alen = ac[ci]
+            eobrun = ac_block(blk, reader, asym, alen, band, Se, Al, eobrun)
+            if eobrun and sequential:
+                raise ValueError("EOB run in a sequential scan")
+    return end
 
-    # scan order -> raster order within each component's padded grid
-    rasters = []
-    for ci, c in enumerate(comps):
-        raster = np.empty_like(coefs[ci])
-        raster[_mcu_raster_order(mcuy, mcux, c["vi"], c["hi"])] = coefs[ci]
-        rasters.append(raster)
-    return _reconstruct(rasters, frame), end
+
+def _ac_first(blk, reader, asym, alen, Ss, Se, Al, eobrun) -> int:
+    """Band Ss..Se of one block, first pass (G.1.2.2; the sequential
+    AC of F.2.2.2 is Ss=1, Se=63, Al=0). Returns the EOB run left."""
+    if eobrun:
+        return eobrun - 1
+    peek16, pos, k = reader.peek16, reader.pos, Ss
+    while k <= Se:
+        peek = peek16[pos]
+        rs = int(asym[peek])
+        ll = int(alen[peek])
+        if ll == 0:
+            raise ValueError("bad AC Huffman code")
+        pos += ll
+        r, s = rs >> 4, rs & 0xF
+        if s == 0:
+            if r == 15:  # ZRL
+                k += 16
+                continue
+            eobrun = (1 << r) - 1  # EOBr: this block and the run after
+            if r:
+                eobrun += int(peek16[pos]) >> (16 - r)
+                pos += r
+            break
+        k += r
+        if k > Se:
+            raise ValueError("AC run overflows band")
+        v = int(peek16[pos]) >> (16 - s)
+        pos += s
+        blk[k] = (v if v >= 1 << (s - 1) else v - (1 << s) + 1) << Al
+        k += 1
+    reader.pos = pos
+    return eobrun
+
+
+def _ac_refine(blk, reader, asym, alen, Ss, Se, Al, eobrun) -> int:
+    """Figure G.7: insert newly-nonzero +-1<<Al coefficients, append a
+    correction bit to every already-nonzero coefficient crossed."""
+    p1 = 1 << Al
+    m1 = -p1
+    peek16, pos, k = reader.peek16, reader.pos, Ss
+    if eobrun == 0:
+        while k <= Se:
+            peek = peek16[pos]
+            rs = int(asym[peek])
+            ll = int(alen[peek])
+            if ll == 0:
+                raise ValueError("bad AC Huffman code")
+            pos += ll
+            r, s = rs >> 4, rs & 0xF
+            if s == 0:
+                if r != 15:
+                    eobrun = 1 << r
+                    if r:
+                        eobrun += int(peek16[pos]) >> (16 - r)
+                        pos += r
+                    break
+                val = 0  # ZRL: advance over 16 zero-history positions
+            else:
+                # s must be 1 in a refinement scan
+                val = p1 if int(peek16[pos]) >> 15 else m1
+                pos += 1
+            while k <= Se:
+                cur = int(blk[k])
+                if cur != 0:
+                    bit = int(peek16[pos]) >> 15
+                    pos += 1
+                    if bit and (cur & p1) == 0:
+                        blk[k] = cur + (p1 if cur >= 0 else m1)
+                else:
+                    if r == 0:
+                        break
+                    r -= 1
+                k += 1
+            if k <= Se and val:
+                blk[k] = val
+            k += 1
+    if eobrun > 0:
+        # EOB span covers this block: correction bits only, from k on
+        while k <= Se:
+            cur = int(blk[k])
+            if cur != 0:
+                bit = int(peek16[pos]) >> 15
+                pos += 1
+                if bit and (cur & p1) == 0:
+                    blk[k] = cur + (p1 if cur >= 0 else m1)
+            k += 1
+        eobrun -= 1
+    reader.pos = pos
+    return eobrun
 
 
 def _reconstruct(coefs: list[np.ndarray], frame: _Frame) -> np.ndarray:
     """Quantized zigzag coefficients (raster block order per component,
     full MCU-padded grid) -> pixels: dequantize + IDCT + reassemble +
-    chroma upsample + color. Shared by the sequential and progressive
-    decoders — they differ only in how the coefficients arrive."""
+    chroma upsample + color: the frame loop's last step, whichever
+    scans delivered the coefficients."""
     comps, h, w = frame.comps, frame.h, frame.w
     hmax, vmax, mcux, mcuy = frame.grid()
     planes = []

@@ -3,16 +3,16 @@
 Roughly one in ten JPEGs on the real web is progressive (large CDNs
 re-encode to it: the first scans paint a preview), so an image crawl
 that hard-errors on SOF2 silently drops a meaningful slice of the
-corpus. This module adds the progressive process on top of the
-sequential codec in `webcollector_spark.jpeg`, sharing its front end
-(the marker walk, the `_Frame` header parse with DHT/DRI segments
-folded in between scans, the `_entropy` unstuffing), its DCT /
-quantization / Huffman primitives and its `_reconstruct` back end:
+corpus. This module holds the progressive ENCODER and the preview
+API; decoding is `webcollector_spark.jpeg`'s one frame loop and scan
+decoder, which serve SOF0 and SOF2 alike (spectral selection,
+successive approximation, EOB runs, AC refinement with inline
+correction bits per T.81 G.1.2.3 / figure G.7, restarts per scan).
+The encoder shares the sequential encoder's front half (`_quantize`:
+colour, subsampling, padding, DCT, quantization), its DQT/SOF writer
+(`_frame_head`), its scan order (`_scan_blocks`) and its Huffman
+primitives:
 
-* decode: spectral selection + successive approximation, both scan
-  kinds (interleaved DC, single-component AC), EOB-run symbols, AC
-  refinement with inline correction bits (T.81 G.1.2.3 / figure G.7),
-  restart markers per scan;
 * encode: libjpeg's standard 10-scan script for color (DC of all
   components at Al=1 -> luma low band -> chroma -> refinements), the
   4-scan reduction for grayscale, with PER-SCAN OPTIMAL Huffman
@@ -33,32 +33,20 @@ wire format after baseline 4:2:0.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 from webcollector_spark.jpeg import (
-    STD_CHROMA_Q,
-    STD_LUMA_Q,
-    ZIGZAG,
-    _BitReader,
-    _BitWriter,
-    _C,
-    _EOI,
-    _Frame,
-    _SAMP_FACTORS,
+    _DHT,
     _SOS,
-    _box_down,
-    _decode_lut,
-    _entropy,
-    _extend,
+    _BitWriter,
+    _decode_frame,
+    _frame_head,
     _huff_codes,
     _magnitude,
-    _mcu_raster_order,
-    _quality_scale,
-    _reconstruct,
-    _to_blocks,
-    rgb_to_ycbcr,
+    _quantize,
+    _scan_blocks,
+    _seg,
+    sof_marker,
 )
 
 # ---------------------------------------------------------------------------
@@ -171,26 +159,30 @@ class _BitSink:
 # per-scan emitters (run twice: counting pass, then writing pass)
 
 
-def _emit_dc_first(sink, units, Al: int) -> None:
-    """`units` is the scan-ordered sequence of (ci, tid, block). The DC
-    point transform is an arithmetic shift of the SIGNED value
-    (G.1.2.1), unlike AC's magnitude shift."""
+# Each takes the scan's blocks in scan order as (component, block) and
+# codes component ci with table min(ci, 1).
+
+
+def _emit_dc_first(sink, blocks, Al: int) -> None:
+    """The DC point transform is an arithmetic shift of the SIGNED
+    value (G.1.2.1), unlike AC's magnitude shift."""
     pred: dict[int, int] = {}
-    for ci, tid, blk in units:
+    for ci, blk in blocks:
         v = int(blk[0]) >> Al
         diff = v - pred.get(ci, 0)
         pred[ci] = v
         size, bits = _magnitude(diff)
-        sink.symbol(tid, size)
+        sink.symbol(min(ci, 1), size)
         sink.bits(bits, size)
 
 
-def _emit_dc_refine(sink, units, Al: int) -> None:
-    for _, _, blk in units:
+def _emit_dc_refine(sink, blocks, Al: int) -> None:
+    for _, blk in blocks:
         sink.bits((int(blk[0]) >> Al) & 1, 1)
 
 
-def _emit_ac_first(sink, blocks, tid: int, Ss: int, Se: int, Al: int) -> None:
+def _emit_ac_first(sink, blocks, Ss: int, Se: int, Al: int) -> None:
+    tid = min(blocks[0][0], 1)
     eobrun = 0
 
     def flush_eob() -> None:
@@ -201,7 +193,7 @@ def _emit_ac_first(sink, blocks, tid: int, Ss: int, Se: int, Al: int) -> None:
             sink.bits(eobrun, nbits)
             eobrun = 0
 
-    for blk in blocks:
+    for _, blk in blocks:
         r = 0
         for k in range(Ss, Se + 1):
             v = int(blk[k])
@@ -229,7 +221,8 @@ def _emit_ac_first(sink, blocks, tid: int, Ss: int, Se: int, Al: int) -> None:
     flush_eob()
 
 
-def _emit_ac_refine(sink, blocks, tid: int, Ss: int, Se: int, Al: int) -> None:
+def _emit_ac_refine(sink, blocks, Ss: int, Se: int, Al: int) -> None:
+    tid = min(blocks[0][0], 1)
     eobrun = 0
     pending: list[int] = []  # correction bits buffered across an EOB run
 
@@ -244,7 +237,7 @@ def _emit_ac_refine(sink, blocks, tid: int, Ss: int, Se: int, Al: int) -> None:
             sink.bits(b, 1)
         pending.clear()
 
-    for blk in blocks:
+    for _, blk in blocks:
         absv = [0] * (Se + 1)
         eob = Ss - 1  # index AFTER which only zero-history zeros remain
         for k in range(Ss, Se + 1):
@@ -325,135 +318,48 @@ def encode_progressive(
     """RGB8 HxWx3 (or HxW grayscale) -> progressive JPEG bytes.
     Quantized coefficients are IDENTICAL to encode_baseline at the
     same (quality, subsampling); only the transport differs."""
-    gray = pixels.ndim == 2
+    comp_coefs, samps, qtabs = _quantize(pixels, quality, subsampling)
     h, w = pixels.shape[:2]
-    if gray:
-        planes = [pixels.astype(np.float64)]
-        samps = ((1, 1),)
-    else:
-        ycc = rgb_to_ycbcr(pixels)
-        planes = [ycc[..., i] for i in range(3)]
-        samps = _SAMP_FACTORS[subsampling]
-    hmax = max(s[0] for s in samps)
-    vmax = max(s[1] for s in samps)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-
-    qluma = _quality_scale(STD_LUMA_Q, quality)
-    qchroma = _quality_scale(STD_CHROMA_Q, quality)
-    qtabs = [qluma] if gray else [qluma, qchroma]
-
-    # quantized zigzag coefficients, RASTER block order per component
-    # over the full MCU-padded grid (same math as the baseline encoder)
-    comp_coefs, comp_nb = [], []
-    for ci, plane in enumerate(planes):
-        hi, vi = samps[ci]
-        plane = _box_down(plane, vmax // vi, hmax // hi)
-        gh, gw = mcuy * vi * 8, mcux * hi * 8
-        ph, pw = gh - plane.shape[0], gw - plane.shape[1]
-        if ph or pw:
-            plane = np.pad(plane, ((0, ph), (0, pw)), mode="edge")
-        blocks, _, _ = _to_blocks(plane - 128.0)
-        coefs = np.einsum("ij,njk,lk->nil", _C, blocks, _C)
-        q = qtabs[min(ci, 1)].reshape(8, 8)
-        quant = np.round(coefs / q).astype(np.int64)
-        comp_coefs.append(quant.reshape(-1, 64)[:, ZIGZAG])
-        ch, cw = -(-(h * vi) // vmax), -(-(w * hi) // hmax)
-        comp_nb.append((-(-ch // 8), -(-cw // 8)))
-
-    def noninterleaved_blocks(ci: int) -> list[np.ndarray]:
-        # single-component scans cover only the component's OWN ceil
-        # grid (A.2.2), not the MCU padding
-        hi = samps[ci][0]
-        nby, nbx = comp_nb[ci]
-        gw_blocks = mcux * hi
-        return [
-            comp_coefs[ci][r * gw_blocks + col]
-            for r in range(nby)
-            for col in range(nbx)
-        ]
-
-    def dc_scan_units(sc: list[int]) -> list[tuple[int, int, np.ndarray]]:
-        # scan-ordered (ci, tid, block): interleaved iff several comps
-        if len(sc) == 1:
-            ci = sc[0]
-            return [(ci, min(ci, 1), b) for b in noninterleaved_blocks(ci)]
-        units = []
-        orders = {
-            ci: _mcu_raster_order(mcuy, mcux, samps[ci][1], samps[ci][0])
-            for ci in sc
-        }
-        for m in range(mcuy * mcux):
-            for ci in sc:
-                nb = samps[ci][0] * samps[ci][1]
-                for b in range(nb):
-                    units.append(
-                        (ci, min(ci, 1), comp_coefs[ci][orders[ci][m * nb + b]])
-                    )
-        return units
-
-    out = bytearray(b"\xff\xd8")
-
-    def seg(marker: int, payload: bytes) -> None:
-        out.extend(struct.pack(">BBH", 0xFF, marker, len(payload) + 2))
-        out.extend(payload)
-
-    for tid, q in enumerate(qtabs):
-        seg(0xDB, bytes([tid]) + bytes(int(x) for x in q[ZIGZAG]))
-    ncomp = len(planes)
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for ci in range(ncomp):
-        hi, vi = samps[ci]
-        sof += bytes([ci + 1, (hi << 4) | vi, min(ci, 1)])
-    seg(0xC2, sof)  # SOF2: progressive, Huffman
-
-    for scan in _scan_script(ncomp):
+    out = _frame_head(0xC2, qtabs, h, w, samps)  # SOF2: progressive, Huffman
+    for scan in _scan_script(len(samps)):
         sc, Ss, Se = scan["comps"], scan["Ss"], scan["Se"]
         Ah, Al = scan["Ah"], scan["Al"]
-        is_dc = Ss == 0
-
-        if is_dc:
-            units = dc_scan_units(sc)
-            run = (
-                (lambda s: _emit_dc_first(s, units, Al))
-                if Ah == 0
-                else (lambda s: _emit_dc_refine(s, units, Al))
-            )
+        blocks = [
+            (ci, comp_coefs[ci][idx])
+            for ci, idx in _scan_blocks(samps, h, w, sc)[2]
+        ]
+        if Ss == 0:
+            emit = _emit_dc_refine if Ah else _emit_dc_first
+            args = (blocks, Al)
         else:
-            blocks = noninterleaved_blocks(sc[0])
-            tid = min(sc[0], 1)
-            run = (
-                (lambda s: _emit_ac_first(s, blocks, tid, Ss, Se, Al))
-                if Ah == 0
-                else (lambda s: _emit_ac_refine(s, blocks, tid, Ss, Se, Al))
-            )
+            emit = _emit_ac_refine if Ah else _emit_ac_first
+            args = (blocks, Ss, Se, Al)
 
         # pass 1: frequencies -> per-scan optimal tables -> pass 2: bits
         counter = _FreqCounter()
-        run(counter)
+        emit(counter, *args)
         tables = {}
+        tclass = 0 if Ss == 0 else 1
         for t in sorted(counter.freq):
             bits, values = gen_optimal_table(counter.freq[t])
-            tclass = 0 if is_dc else 1
-            seg(0xC4, bytes([(tclass << 4) | t]) + bytes(bits) + bytes(values))
+            dht = bytes([(tclass << 4) | t]) + bytes(bits) + bytes(values)
+            out += _seg(_DHT, dht)
             tables[t] = _huff_codes(bits, values)
         sink = _BitSink(tables)
-        run(sink)
-        scan_bytes = sink.flush()
+        emit(sink, *args)
 
         sos = bytes([len(sc)])
         for ci in sc:
             t = min(ci, 1)
-            sos += bytes([ci + 1, (t << 4) if is_dc else t])
-        sos += bytes([Ss, Se, (Ah << 4) | Al])
-        seg(0xDA, sos)
-        out.extend(scan_bytes)
+            sos += bytes([ci + 1, (t << 4) if Ss == 0 else t])
+        out += _seg(_SOS, sos + bytes([Ss, Se, (Ah << 4) | Al])) + sink.flush()
 
-    out.extend(b"\xff\xd9")
+    out += b"\xff\xd9"
     return bytes(out)
 
 
 # ---------------------------------------------------------------------------
-# decoder
+# decoder: the frame loop in webcollector_spark.jpeg, tolerant mode
 
 
 def decode_progressive_prefix(
@@ -464,222 +370,11 @@ def decode_progressive_prefix(
     whatever precision earlier scans established — exactly what a
     browser paints mid-download. Returns (pixels, scans_completed,
     complete). This is the scale payoff of SOF2 for a crawler: a
-    byte-capped fetch (operators/fetch.py's max_bytes) of a progressive
-    image still yields a usable low-frequency preview — the content
-    phash keys on — so dedup/triage can run BEFORE paying the full
-    transfer. Raises ValueError if no SOF2 frame fits in the prefix."""
-    return _decode_progressive(data, start, tolerate_truncation=True)[:3]
-
-
-def decode_progressive_at(data: bytes, start: int) -> tuple[np.ndarray, int]:
-    """Decode one progressive JPEG beginning at byte `start`; returns
-    (pixels, offset one past its EOI). Dispatched to automatically by
-    jpeg.decode_baseline_at on SOF2. A frame without a scan or cut
-    before its EOI raises ValueError, as a cut baseline frame does:
-    a truncated body is a failure here, and decode_progressive_prefix
-    is the API that renders what arrived."""
-    pixels, _, _, pos = _decode_progressive(
-        data, start, tolerate_truncation=False
-    )
-    return pixels, pos
-
-
-def _decode_progressive(
-    data: bytes, start: int, tolerate_truncation: bool
-) -> tuple[np.ndarray, int, bool, int]:
-    """Shared scan loop. Returns (pixels, scans_completed, complete,
-    pos-after-EOI)."""
-    if data[start : start + 2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    frame = _Frame()
-    pos = start + 2
-    coefs: list[np.ndarray] | None = None
-    scans_done = 0
-    while True:
-        marker, pos, sos = frame.read(data, pos, strict=not tolerate_truncation)
-        if frame.sof == 0xC0:
-            raise ValueError("expected a progressive (SOF2) frame")
-        if coefs is None and frame.comps:
-            _, _, mcux, mcuy = frame.grid()
-            coefs = [
-                np.zeros(
-                    ((mcuy * c["vi"]) * (mcux * c["hi"]), 64), dtype=np.int64
-                )
-                for c in frame.comps
-            ]
-        if marker != _SOS:  # EOI, or the bytes ran out
-            break
-        if coefs is None:
-            raise ValueError("SOS before SOF2")
-        scan = frame.scan(sos)
-        try:
-            pos = _decode_scan(data, pos, coefs, frame, *scan)
-        except (ValueError, IndexError):
-            if not tolerate_truncation:
-                raise
-            # entropy data cut mid-scan: keep every unit that landed
-            # before the cut, stop here
-            pos = len(data)
-            break
-        scans_done += 1
-
-    if coefs is None:
-        raise ValueError("no frame found")
-    if not tolerate_truncation and (marker != _EOI or not scans_done):
-        raise ValueError("progressive frame without a scan or an EOI")
-    return _reconstruct(coefs, frame), scans_done, marker == _EOI, pos
-
-
-def _decode_scan(data, pos, coefs, frame, scomps, Ss, Se, Ah, Al) -> int:
-    """Entropy-decode one scan in place; returns the offset where its
-    entropy-coded segment ends — EOB runs never cross scans."""
-    raw, restarts, p = _entropy(data, pos)
-    reader = _BitReader(raw)
-    comps, restart_interval = frame.comps, frame.restart_interval
-    hmax, vmax, mcux, mcuy = frame.grid()
-    is_dc = Ss == 0
-    interleaved = len(scomps) > 1
-    if not is_dc and interleaved:
-        raise ValueError("AC scans must be single-component (A.2.2)")
-    luts = {key: _decode_lut(spec) for key, spec in frame.huff.items()}
-    eobrun = 0
-    ri = 0
-    pred = {ci: 0 for ci, _, _ in scomps}
-
-    if interleaved:
-        orders = {
-            ci: _mcu_raster_order(mcuy, mcux, comps[ci]["vi"], comps[ci]["hi"])
-            for ci, _, _ in scomps
-        }
-        n_units = mcuy * mcux
-    else:
-        ci0 = scomps[0][0]
-        c = comps[ci0]
-        ch, cw = -(-(frame.h * c["vi"]) // vmax), -(-(frame.w * c["hi"]) // hmax)
-        nby, nbx = -(-ch // 8), -(-cw // 8)
-        gw_blocks = mcux * c["hi"]
-        n_units = nby * nbx
-
-    for u in range(n_units):
-        if restart_interval and u and u % restart_interval == 0:
-            reader.pos = restarts[ri]
-            ri += 1
-            pred = {ci: 0 for ci, _, _ in scomps}
-            eobrun = 0
-
-        if is_dc:
-            for ci, td, _ in scomps:
-                if interleaved:
-                    c = comps[ci]
-                    nb = c["hi"] * c["vi"]
-                    idxs = [orders[ci][u * nb + b] for b in range(nb)]
-                else:
-                    idxs = [(u // nbx) * gw_blocks + (u % nbx)]
-                for idx in idxs:
-                    blk = coefs[ci][idx]
-                    if Ah == 0:
-                        dsym, dlen = luts[(0, td)]
-                        peek = reader.peek16[reader.pos]
-                        size = int(dsym[peek])
-                        ll = int(dlen[peek])
-                        if ll == 0:
-                            raise ValueError("bad DC Huffman code")
-                        reader.pos += ll
-                        diff = (
-                            _extend(reader.receive(size), size) if size else 0
-                        )
-                        pred[ci] += diff
-                        blk[0] = pred[ci] << Al
-                    else:
-                        blk[0] |= reader.receive(1) << Al
-        else:
-            _, _, ta = scomps[0]
-            asym, alen = luts[(1, ta)]
-            blk = coefs[ci0][(u // nbx) * gw_blocks + (u % nbx)]
-            if Ah == 0:
-                eobrun = _ac_first_block(
-                    blk, reader, asym, alen, Ss, Se, Al, eobrun
-                )
-            else:
-                eobrun = _ac_refine_block(
-                    blk, reader, asym, alen, Ss, Se, Al, eobrun
-                )
-    return p
-
-
-def _ac_decode_symbol(reader, asym, alen) -> int:
-    peek = reader.peek16[reader.pos]
-    rs = int(asym[peek])
-    ll = int(alen[peek])
-    if ll == 0:
-        raise ValueError("bad AC Huffman code")
-    reader.pos += ll
-    return rs
-
-
-def _ac_first_block(blk, reader, asym, alen, Ss, Se, Al, eobrun) -> int:
-    if eobrun > 0:
-        return eobrun - 1
-    k = Ss
-    while k <= Se:
-        rs = _ac_decode_symbol(reader, asym, alen)
-        r, s = rs >> 4, rs & 0xF
-        if s == 0:
-            if r == 15:  # ZRL
-                k += 16
-                continue
-            eobrun = (1 << r) - 1
-            if r:
-                eobrun += reader.receive(r)
-            break
-        k += r
-        if k > Se:
-            raise ValueError("AC run overflows band")
-        blk[k] = _extend(reader.receive(s), s) << Al
-        k += 1
-    return eobrun
-
-
-def _ac_refine_block(blk, reader, asym, alen, Ss, Se, Al, eobrun) -> int:
-    """Figure G.7: insert newly-nonzero +-1<<Al coefficients, append a
-    correction bit to every already-nonzero coefficient crossed."""
-    p1 = 1 << Al
-    m1 = -p1
-    k = Ss
-    if eobrun == 0:
-        while k <= Se:
-            rs = _ac_decode_symbol(reader, asym, alen)
-            r, s = rs >> 4, rs & 0xF
-            if s == 0:
-                if r != 15:
-                    eobrun = 1 << r
-                    if r:
-                        eobrun += reader.receive(r)
-                    break
-                val = 0  # ZRL: advance over 16 zero-history positions
-            else:
-                # s must be 1 in a refinement scan
-                val = p1 if reader.receive(1) else m1
-            while k <= Se:
-                cur = int(blk[k])
-                if cur != 0:
-                    if reader.receive(1) and (cur & p1) == 0:
-                        blk[k] = cur + (p1 if cur >= 0 else m1)
-                else:
-                    if r == 0:
-                        break
-                    r -= 1
-                k += 1
-            if k <= Se and val:
-                blk[k] = val
-            k += 1
-    if eobrun > 0:
-        # EOB span covers this block: correction bits only, from k on
-        while k <= Se:
-            cur = int(blk[k])
-            if cur != 0:
-                if reader.receive(1) and (cur & p1) == 0:
-                    blk[k] = cur + (p1 if cur >= 0 else m1)
-            k += 1
-        eobrun -= 1
-    return eobrun
+    byte-capped fetch (CrawlerConfig.max_receive_size) of a
+    progressive image still yields a usable low-frequency preview — the
+    content phash keys on — so dedup/triage can run BEFORE paying the
+    full transfer. Raises ValueError if no SOF2 frame fits in the
+    prefix."""
+    if sof_marker(data, start) != 0xC2:
+        raise ValueError("no progressive (SOF2) frame in the prefix")
+    return _decode_frame(data, start, strict=False)[:3]

@@ -78,6 +78,24 @@ class _HostBucket:
         self.last[host] = now
 
 
+def _with_validators(row_meta: dict, resp) -> dict:
+    """A copy of `row_meta` with the response's cache validators (ETag,
+    Last-Modified) where the response carries them."""
+    meta = dict(row_meta)
+    if resp.etag:
+        meta["etag"] = resp.etag
+    if resp.last_modified:
+        meta["last_modified"] = resp.last_modified
+    return meta
+
+
+def _is_sitemap(body: bytes) -> bool:
+    """A sitemap (or sitemap index) opens its root element within the
+    first 4 KiB."""
+    head = body[:4096]
+    return b"<urlset" in head or b"<sitemapindex" in head
+
+
 def _fetch_one(
     row: dict,
     requester: Requester,
@@ -119,13 +137,7 @@ def _fetch_one(
         # bytes. Prior harvest (caption/phash) stays authoritative in
         # the fetched history; meta records the reuse so curation can
         # route it like a WARC revisit record.
-        meta = dict(row_meta)
-        meta["not_modified"] = "1"
-        if resp.etag:
-            meta["etag"] = resp.etag
-        if resp.last_modified:
-            meta["last_modified"] = resp.last_modified
-        out["meta"] = meta
+        out["meta"] = _with_validators({**row_meta, "not_modified": "1"}, resp)
         out["status"] = STATUS_DB_SUCCESS
         return out
     if resp.code not in SUCCESS_CODES:
@@ -134,13 +146,8 @@ def _fetch_one(
 
     out["status"] = STATUS_DB_SUCCESS
     if cfg.revalidate and (resp.etag or resp.last_modified):
-        meta = dict(row_meta)
-        if resp.etag:
-            meta["etag"] = resp.etag
-        if resp.last_modified:
-            meta["last_modified"] = resp.last_modified
-        meta.pop("not_modified", None)
-        out["meta"] = meta
+        out["meta"] = _with_validators(row_meta, resp)
+        out["meta"].pop("not_modified", None)
     if resp.content_encoding not in (None, "identity"):
         # remove wire compression (gzip/deflate) BEFORE every parse
         # below; a broken encoded body is a transport failure, not a
@@ -174,18 +181,11 @@ def _fetch_one(
             inflated = capped_inflate(
                 content, "gzip", cfg.max_receive_size, partial=True
             )
-            if (
-                b"<urlset" in inflated[:4096]
-                or b"<sitemapindex" in inflated[:4096]
-            ):
+            if _is_sitemap(inflated):
                 content = inflated
         except Exception:
             pass  # not a sitemap archive after all; keep raw bytes
-    if cfg.keep_content or (
-        cfg.parse_sitemaps
-        and content
-        and (b"<urlset" in content[:4096] or b"<sitemapindex" in content[:4096])
-    ):
+    if cfg.keep_content or (cfg.parse_sitemaps and content and _is_sitemap(content)):
         # sitemap bodies must survive to the JVM-side XML parse
         # (operators/sitemap.py) even when page content is dropped;
         # bounded by the protocol's 50k-URL/10MB per-file limits.

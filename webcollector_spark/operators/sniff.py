@@ -195,7 +195,7 @@ def progressive_preview(corpus: DataFrame, prefix: int = 1024) -> DataFrame:
     stored full-image phash. The crawl-scale payoff of SOF2: the DC
     scan lands in the first few hundred bytes and already carries the
     low-frequency content phash keys on, so a byte-capped fetch
-    (operators/fetch.py max_bytes) can dedup/triage progressive images
+    (CrawlerConfig.max_receive_size) can dedup/triage progressive images
     BEFORE paying the full transfer. `preview_ok` gates on at least
     one complete scan — a mid-DC-scan cut paints garbage and must not
     feed dedup.

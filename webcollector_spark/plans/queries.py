@@ -2276,20 +2276,15 @@ _TRAP_PATH_SQL = """
     """,
 )
 def q_url_trap_templates(spark, sf):
-    u = trap_url_rows(_t(spark, sf, "documents"))
-    n_urls = F.countDistinct("url")
-    return u.groupBy("host", "template").agg(
-        F.count("*").alias("n_docs"),
-        n_urls.alias("n_urls"),
-        ((n_urls >= 5) & (n_urls * 10 >= 9 * F.count("*"))).alias("is_trap"),
-    )
+    from webcollector_spark.operators.traps import detect_traps
+
+    return detect_traps(trap_url_rows(_t(spark, sf, "documents")), min_urls=5)
 
 
 def trap_url_rows(docs):
-    """(host, url, template) synthetic fetch-log rows from a documents
-    table — ONE definition shared by the trap queries, so the exact
-    and the register formulations can never drift on the URL
-    synthesis."""
+    """(host, url) synthetic fetch-log rows from a documents table — ONE
+    definition shared by the trap queries, so the exact and the register
+    formulations can never drift on the URL synthesis."""
     did = F.col("doc_id")
     path = F.when(
         did % 3 == 0,
@@ -2304,13 +2299,7 @@ def trap_url_rows(docs):
     ).otherwise(F.concat(F.lit("/page/"), (did % 5).cast("string")))
     host = F.concat(F.col("source"), F.lit(".com"))
     return docs.select(
-        host.alias("host"),
-        F.concat(F.lit("http://"), host, path).alias("url"),
-        F.regexp_replace(
-            F.regexp_replace(path, r"[0-9a-f]{16,}", "{H}"),
-            r"[0-9]+",
-            "{D}",
-        ).alias("template"),
+        host.alias("host"), F.concat(F.lit("http://"), host, path).alias("url")
     )
 
 
@@ -2415,9 +2404,12 @@ def q_recrawl_intervals(spark, sf):
     """,
 )
 def q_url_trap_hll(spark, sf):
+    from webcollector_spark.functions.urls import url_template_col
     from webcollector_spark.operators.sketch import hll_registers
 
-    u = trap_url_rows(_t(spark, sf, "documents"))
+    u = trap_url_rows(_t(spark, sf, "documents")).withColumn(
+        "template", url_template_col(F.col("url"))
+    )
     return hll_registers(u, col="url", b=10, by=["host", "template"])
 
 
