@@ -7,10 +7,12 @@ RamFrontierStore/ParquetFrontierStore."""
 
 from __future__ import annotations
 
+import inspect
+
 import pytest
 
 from webcollector_spark.iceberg_store import IcebergFrontierStore, iceberg_available
-from webcollector_spark.store import ParquetFrontierStore
+from webcollector_spark.store import ParquetFrontierStore, RamFrontierStore
 
 
 def test_guard_refuses_without_iceberg(spark):
@@ -20,12 +22,17 @@ def test_guard_refuses_without_iceberg(spark):
 
 
 def test_contract_surface_matches_parquet_backend():
-    for name in (
-        "inject", "merge", "load", "is_empty", "count",
-        "log_round", "last_round", "rounds_df", "destroy",
-    ):
-        assert hasattr(IcebergFrontierStore, name), name
-        assert hasattr(ParquetFrontierStore, name), name
+    """Every public method of the RAM store, the contract, has the same
+    signature on the parquet and Iceberg stores."""
+    contract = {
+        name: inspect.signature(fn)
+        for name, fn in inspect.getmembers(RamFrontierStore, inspect.isfunction)
+        if not name.startswith("_")
+    }
+    assert {"inject", "merge", "log_round", "last_round"} <= set(contract)
+    for store in (ParquetFrontierStore, IcebergFrontierStore):
+        for name, sig in contract.items():
+            assert inspect.signature(getattr(store, name)) == sig, (store, name)
 
 
 def _frontier_rows(spark, rows):

@@ -266,3 +266,12 @@ def test_progressive_411_440_match_sequential():
             jpeg.encode_baseline(px, quality=92, subsampling=sub)
         )
         assert np.array_equal(prog, seq), sub
+
+
+def test_progressive_noise_at_high_quality_limits_code_lengths():
+    # 256x256 noise at q98 gives some table code sizes above 16: the
+    # length limit moves them, and their symbols must still be listed
+    px = _noise(256, 256, seed=98)
+    data = encode_progressive(px, quality=98)
+    base = jpeg.decode_baseline(jpeg.encode_baseline(px, quality=98))
+    assert np.array_equal(jpeg.decode_baseline(data), base)

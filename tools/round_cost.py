@@ -144,7 +144,7 @@ def instrument(meter: Meter) -> None:
     count_sends(meter)
     for attr in ("inject", "merge", "load", "count", "_set", "log_round"):
         meter.wrap(store.RamFrontierStore, attr, f"store.{attr}")
-    for attr in ("__init__", "_set", "log_round"):
+    for attr in ("__init__", "_write", "_commit"):
         meter.wrap(store.ParquetFrontierStore, attr, f"parquet.{attr}")
     for attr in ("__post_init__", "start"):
         meter.wrap(crawler.BreadthCrawler, attr, f"crawler.{attr}")

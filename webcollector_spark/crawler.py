@@ -7,15 +7,17 @@ One crawl round = one Spark job chain:
       -> repartition(host) -> fetch mapInPandas (O3/O4/O5/O12)
       -> discovered links explode + dedup (O5/O8)
       -> bloom + anti-join seen filter (O6)
-      -> merge: fetch last-wins, links first-wins (O9, new snapshot)
-      -> rounds manifest append (lineage; resume reads max round)
+      -> merge: fetch last-wins, links first-wins (O9, new snapshot
+         committed with the round's record; resume reads its max round)
 
 Differences from the reference, on purpose:
   * the reference folds segments at the START of the next round
     (Fetcher.java:310), leaving unmerged trailing segments after the
     final round until a resume; we commit the merge at the END of each
-    round — an atomic snapshot per round, same visited set at every
-    round boundary, and resume never sees partial state.
+    round — one atomic commit of the snapshot and the round's record,
+    same visited set at every round boundary, and resume never sees
+    partial state (history partitions are replaced if a round reruns;
+    the rank re-prioritization after a commit is redone on resume).
   * break-on-zero-generate matches Crawler.java:142-144.
 """
 
@@ -187,41 +189,6 @@ class BreadthCrawler:
         self.config.regex_rules.append(rule)
         return self
 
-    # -- reference-style knob setters (crawler/Crawler.java:337-457:
-    # setResumable :355, setThreads :373, setMaxExecuteCount :387) -----
-    # thin sugar over CrawlerConfig, so reference users can port demos
-    # line-for-line; each returns self for chaining.
-    def set_top_n(self, n: int) -> "BreadthCrawler":
-        self.config.top_n = n
-        return self
-
-    def set_threads(self, n: int) -> "BreadthCrawler":
-        self.config.threads = n
-        return self
-
-    def set_max_execute_count(self, n: int) -> "BreadthCrawler":
-        self.config.max_execute_count = n
-        return self
-
-    def set_execute_interval(self, ms: int) -> "BreadthCrawler":
-        self.config.execute_interval_ms = ms
-        return self
-
-    def set_resumable(self, resumable: bool = True) -> "BreadthCrawler":
-        self.config.resumable = resumable
-        return self
-
-    def set_auto_parse(self, auto: bool = True) -> "BreadthCrawler":
-        self.config.auto_parse = auto
-        return self
-
-    def set_visitor(self, visitor) -> "BreadthCrawler":
-        """Attach a Visitor whose annotated handlers drive the crawl
-        (the reference's flagship usage: a BreadthCrawler subclass
-        overriding visit, crawler/AutoParseCrawler.java:52-57)."""
-        self.visitor = visitor
-        return self
-
     # -- the crawl loop -------------------------------------------------
     def start(self, max_depth: int) -> list[RoundMetrics]:
         cfg = self.config
@@ -261,6 +228,10 @@ class BreadthCrawler:
         if self.store.is_empty():
             return self.metrics  # nothing injected -> zero-generate, done
         start_round = self.store.last_round() + 1  # resume point
+        if self._rank_due(start_round - 1):
+            # a crash may have cut the re-prioritization off its round's
+            # commit; redoing it yields the same priorities
+            self._reprioritize_from_ranks(start_round - 1)
 
         # One broadcast of the requester for the whole crawl (re-shipping
         # it per round re-unpickles its state in every Python worker).
@@ -388,22 +359,18 @@ class BreadthCrawler:
                 if learn:
                     self._fold_host_state(per_host)
 
-            # O9 merge: one snapshot commit; inserted-links count derived
-            # from the frontier row-count delta (no extra count job).
-            n_links = self.store.merge(fetched.select(*_CORE_COLS), fresh)
+            # O9 merge: one commit of the snapshot and the round's record;
+            # inserted-links count from the row-count delta (no job).
+            record = dict(round=r, generated=n_gen, fetched=n_gen - n_failed,
+                          failed=n_failed,
+                          wall_ms=int((time.monotonic() - t0) * 1000))
+            n_links = self.store.merge(fetched.select(*_CORE_COLS), fresh, record)
             fetched.unpersist()
             gen.unpersist()
-
-            m = RoundMetrics(
-                round=r,
-                generated=n_gen,
-                fetched=n_gen - n_failed,
-                failed=n_failed,
-                new_links=n_links,
-                wall_ms=int((time.monotonic() - t0) * 1000),
-            )
-            self.metrics.append(m)
-            self.store.log_round(**m.__dict__)
+            self.metrics.append(RoundMetrics(
+                **{**record, "new_links": n_links,
+                   "wall_ms": int((time.monotonic() - t0) * 1000)}
+            ))
 
             # Importance-ordered scheduling: every k rounds, rank the
             # observed link graph and fold -rank into the pending
@@ -411,11 +378,8 @@ class BreadthCrawler:
             # with the most-linked-to pages. O(|E|) shuffle per
             # PageRank iteration + one merge — a per-k-rounds cost, not
             # per-round.
-            if (
-                cfg.rank_priorities_every > 0
-                and (r + 1) % cfg.rank_priorities_every == 0
-            ):
-                self._reprioritize_from_ranks()
+            if self._rank_due(r):
+                self._reprioritize_from_ranks(r)
         return self.metrics
 
     def _seed_df(self, seeds: list) -> DataFrame:
@@ -510,7 +474,14 @@ class BreadthCrawler:
             )
         self._host_state = d.localCheckpoint(eager=True)
 
-    def _reprioritize_from_ranks(self) -> None:
+    def _rank_due(self, r: int) -> bool:
+        """Whether committed round `r` is followed by a re-prioritization."""
+        every = self.config.rank_priorities_every
+        return every > 0 and r >= 0 and (r + 1) % every == 0
+
+    def _reprioritize_from_ranks(self, r: int) -> None:
+        """Fold -rank over the links of rounds 0..r into the priorities;
+        idempotent, and blind to a crashed later round's history."""
         from webcollector_spark.operators.rank import (
             edges_from_history,
             pagerank,
@@ -519,9 +490,8 @@ class BreadthCrawler:
 
         cfg = self.config
         hist = self.spark.read.parquet(cfg.fetched_history_path)
-        edges = edges_from_history(
-            hist, canonical=cfg.canonicalize_link_keys
-        )
+        edges = edges_from_history(hist.filter(F.col("round") <= r),
+                                   canonical=cfg.canonicalize_link_keys)
         seeds = None
         if cfg.rank_trusted_only:
             # the crawl's seed keys, under the same canonicalization the

@@ -19,7 +19,9 @@ Semantic mapping (identical to store.py, SURVEY §2.1):
                   (last-wins), link rows insert only when absent
                   (first-wins across rounds)
   snapshots    -> Iceberg snapshot per MERGE commit; resume reads the
-                  current table state; rounds manifest -> rounds table
+                  current table state; round records -> rounds table
+  round commit -> the MERGE, then an INSERT into the rounds table: two
+                  steps, where the parquet store has one marker
   per-partition lineage -> Iceberg file-level manifests (free)
 
 Bucket-partitioning by host keeps a host's frontier rows co-located so
@@ -156,15 +158,18 @@ class IcebergFrontierStore(RamFrontierStore):
         self._count = None
 
     # -- O9 -------------------------------------------------------------
-    def merge(self, fetched: DataFrame | None, links: DataFrame | None) -> int:
+    def merge(self, fetched: DataFrame | None, links: DataFrame | None,
+              record: dict | None = None) -> int:
         before = self.count()
         merged = build_merge_source(fetched, links)
-        if merged is None:
-            return 0
-        merged.createOrReplaceTempView("__segments")
-        self.spark.sql(merge_sql(self.table))
-        self._count = None
-        return self.count() - before
+        if merged is not None:
+            merged.createOrReplaceTempView("__segments")
+            self.spark.sql(merge_sql(self.table))
+            self._count = None
+        n_new = self.count() - before
+        if record is not None:
+            self.log_round(**{**record, "new_links": n_new})
+        return n_new
 
     # -- state ----------------------------------------------------------
     def load(self) -> DataFrame:
@@ -185,10 +190,10 @@ class IcebergFrontierStore(RamFrontierStore):
         ).collect()
         return int(row[0][0]) if row else -1
 
-    def log_round(self, **m) -> None:
-        m.setdefault("snapshot_id", self._current_snapshot_id())
-        super().log_round(**m)
-        vals = ", ".join(str(m[f.name]) for f in ROUNDS_SCHEMA.fields)
+    def log_round(self, **metrics) -> None:
+        metrics.setdefault("snapshot_id", self._current_snapshot_id())
+        super().log_round(**metrics)
+        vals = ", ".join(str(metrics[f.name]) for f in ROUNDS_SCHEMA.fields)
         self.spark.sql(f"INSERT INTO {self.rounds_table} VALUES ({vals})")
 
     def last_round(self) -> int:

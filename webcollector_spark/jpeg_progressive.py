@@ -109,11 +109,10 @@ def gen_optimal_table(freq_in: np.ndarray) -> tuple[list[int], list[int]]:
             bits[length] -= 1
             break
 
-    values = []
-    for length in range(1, 17):
-        for sym in range(256):
-            if codesize[sym] == length:
-                values.append(sym)
+    # values by original code size, then symbol (Annex K.2, figure K.4):
+    # every counted symbol, including those whose size the limit moved
+    used = np.flatnonzero(codesize[:256])
+    values = used[np.argsort(codesize[used], kind="stable")].tolist()
     return [int(b) for b in bits[1:17]], values
 
 

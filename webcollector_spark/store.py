@@ -2,14 +2,17 @@
 RocksDB impl plugin/rocks/RocksDBManager.java:40-220).
 
 Two stores behind one semantic contract (O1 inject / O9 merge / resume),
-sharing one merge implementation:
+sharing one merge implementation that every frontier write goes through
+(`inject` is a `merge`):
 
 * `RamFrontierStore` — in-memory DataFrame with localCheckpoint() per
   merge (truncates the iterative plan lineage), mirroring the reference's
   RamDB (plugin/ram/RamDB.java:30-36) for one-shot crawls and tests.
 * `ParquetFrontierStore` — the persistent store: copy-on-write, one
-  parquet snapshot per round (`<path>/frontier_v{N}/`, committed by its
-  `_SUCCESS` marker) plus a JSON-lines rounds manifest. Each snapshot
+  parquet snapshot per write (`<path>/frontier_v{N}/`), committed by the
+  `_SUCCESS` marker the store writes after the data files. The marker
+  holds the round records, so a round's fold and record commit as one
+  and resume reads both from the newest committed snapshot. Each snapshot
   corresponds to an Iceberg snapshot id; the Iceberg form of the same
   fold is one `MERGE INTO frontier` (iceberg_store.py), which is also
   the merge-on-read path for frontiers too large to rewrite per round.
@@ -115,6 +118,8 @@ def _dedup_seeds(seeds: DataFrame, force: bool) -> DataFrame:
 class RamFrontierStore:
     """In-memory frontier (reference RamDBManager). Not persistent."""
 
+    _version = -1  # the committed snapshot id; a RAM frontier has none
+
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._df: DataFrame | None = None
@@ -124,32 +129,23 @@ class RamFrontierStore:
     # -- O1: inject ----------------------------------------------------
     def inject(self, seeds: DataFrame, force: bool = False) -> None:
         """Insert seeds; skip keys already present unless `force`
-        (DBManager.inject contract, RocksDBManager.java:72-100)."""
-        seeds = _dedup_seeds(seeds, force)
-        if self._df is None:
-            self._set(seeds)
-            return
-        if force:
-            # forced seeds overwrite matched rows (Crawler.java:72-78)
-            kept = self._df.join(seeds.select("key"), "key", "left_anti")
-            self._set(_core(kept).unionByName(seeds))
-        else:
-            fresh = seeds.join(self._df.select("key"), "key", "left_anti")
-            self._set(self._df.unionByName(fresh))
+        (DBManager.inject contract, RocksDBManager.java:72-100). One
+        fold: forced seeds take the fetch slot and overwrite matched
+        rows (Crawler.java:72-78), plain seeds the link slot."""
+        self.merge(seeds if force else None, None if force else seeds)
 
     # -- O9: merge -----------------------------------------------------
-    def merge(self, fetched: DataFrame | None, links: DataFrame | None) -> int:
+    def merge(self, fetched: DataFrame | None, links: DataFrame | None,
+              record: dict | None = None) -> int:
         """Fold a round's segments into the frontier with `_fold`: fetch
         last-wins, link first-wins. Returns the number of newly inserted
         link rows (frontier row-count delta: the fetch side only updates
-        in place)."""
-        assert self._df is not None, "inject before merge"
-        before = self.count()
+        in place). `record`, the round's metrics, commits with the fold
+        (`_set`)."""
         tagged = _union_tagged(
             (fetched, SRC_FETCH), (self._df, SRC_FRONTIER), (links, SRC_LINK)
         )
-        self._set(_core(_fold(tagged)))
-        return self.count() - before
+        return self._set(_core(_fold(tagged)), record)
 
     def load(self) -> DataFrame:
         assert self._df is not None, "store is empty"
@@ -158,13 +154,39 @@ class RamFrontierStore:
     def is_empty(self) -> bool:
         return self._df is None
 
-    def _set(self, df: DataFrame) -> None:
+    def _set(self, df: DataFrame, record: dict | None = None) -> int:
+        """Write `df` as the frontier, then commit it with `record`, if
+        given, appended to `rounds` with its new_links (the row-count
+        growth, returned), snapshot_id and wall_ts filled in and the
+        write's time added to its wall_ms."""
+        t0, before = time.monotonic(), self.count()
+        n = self._write(df)
+        rounds = self.rounds
+        if record is not None:
+            ms = record.get("wall_ms", 0) + int((time.monotonic() - t0) * 1000)
+            rounds = [*rounds, self._stamp(
+                {**record, "new_links": n - before, "wall_ms": ms})]
+        self._commit(rounds)
+        self._count = n
+        return n - before
+
+    def _write(self, df: DataFrame) -> int:
+        """The frontier's data, uncommitted; returns its row count."""
         # localCheckpoint truncates the iterative-loop lineage; eager so
         # each round's plan is materialized once (the reference's
         # per-round segment fold is likewise eager, Fetcher.java:310).
         df, obs = _observed(df)
         self._df = df.localCheckpoint(eager=True)
-        self._count = obs.get["n"]
+        return obs.get["n"]
+
+    def _commit(self, rounds: list[dict]) -> None:
+        """Commit the written frontier with its round records."""
+        self.rounds = rounds
+
+    def _stamp(self, record: dict) -> dict:
+        record.setdefault("snapshot_id", self._version)
+        record.setdefault("wall_ts", int(time.time() * 1000))
+        return record
 
     def count(self) -> int:
         """Frontier row count: the last commit's observed count, or one
@@ -180,13 +202,15 @@ class RamFrontierStore:
 
     # -- lineage -------------------------------------------------------
     def log_round(self, **metrics) -> None:
-        self.rounds.append(metrics)
+        """Record a round after its merge: append it to the current
+        snapshot's rounds and re-commit that snapshot."""
+        self._commit([*self.rounds, self._stamp(metrics)])
 
     def last_round(self) -> int:
         return max((r["round"] for r in self.rounds), default=-1)
 
     def rounds_df(self) -> DataFrame:
-        """The rounds manifest as a typed DataFrame (per-round lineage +
+        """The round records as a typed DataFrame (per-round lineage +
         metrics; ROUNDS_SCHEMA columns, snapshot_id -1 for RAM mode)."""
         from webcollector_spark.schema import ROUNDS_SCHEMA
 
@@ -203,30 +227,24 @@ class RamFrontierStore:
 
 
 class ParquetFrontierStore(RamFrontierStore):
-    """Persistent frontier: one parquet snapshot per committed version +
-    a JSON-lines rounds manifest. Resume = read latest committed version
-    (reference resumable mode, Crawler.java:101-110)."""
+    """Persistent frontier: one parquet snapshot per write, committed by
+    a `_SUCCESS` marker holding the round records. Resume = read the
+    newest committed one (reference resumable mode, Crawler.java:101-110)."""
 
     def __init__(self, spark: SparkSession, path: str, resumable: bool = False):
         super().__init__(spark)
         self.path = path
-        self._version = -1
         if not resumable and os.path.exists(path):
             shutil.rmtree(path)  # non-resumable start wipes the db (Crawler.java:104-110)
         os.makedirs(path, exist_ok=True)
-        versions = sorted(
-            int(d.split("_v")[1])
-            for d in os.listdir(path)
-            if d.startswith("frontier_v")
-            and os.path.exists(os.path.join(path, d, "_SUCCESS"))
-        )
-        if versions:
-            self._version = versions[-1]
+        committed = [int(d.split("_v")[1]) for d in os.listdir(path)
+                     if d.startswith("frontier_v")
+                     and os.path.exists(os.path.join(path, d, "_SUCCESS"))]
+        if committed:
+            self._version = max(committed)
             self._df = self._read(self._version)
-        manifest = os.path.join(path, "rounds.jsonl")
-        if os.path.exists(manifest):
-            with open(manifest) as fh:
-                self.rounds = [json.loads(line) for line in fh]
+            with open(os.path.join(self._vdir(self._version), "_SUCCESS")) as fh:
+                self.rounds = json.load(fh)
 
     def _vdir(self, v: int) -> str:
         return os.path.join(self.path, f"frontier_v{v}")
@@ -234,7 +252,7 @@ class ParquetFrontierStore(RamFrontierStore):
     def _read(self, v: int) -> DataFrame:
         return self.spark.read.schema(FRONTIER_SCHEMA).parquet(self._vdir(v))
 
-    def _set(self, df: DataFrame) -> None:
+    def _write(self, df: DataFrame) -> int:
         v = self._version + 1
         # Plain-parquet snapshot; _SUCCESS marker = commit. No clustered
         # write here on purpose: a parquet scan gives Catalyst no sort
@@ -244,21 +262,26 @@ class ParquetFrontierStore(RamFrontierStore):
         # Iceberg DDL (iceberg_store.py) where the layout IS visible to
         # the per-host generate window and the politeness co-location.
         df, obs = _observed(_core(df))
-        df.write.mode("overwrite").parquet(self._vdir(v))
+        df.write.mode("overwrite").option(  # the marker is _commit's
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+        ).parquet(self._vdir(v))
         self._version = v
         self._df = self._read(v)
-        self._count = obs.get["n"]
-        # retain last 2 snapshots (resume needs only the latest)
-        old = self._vdir(v - 2)
-        if v >= 2 and os.path.exists(old):
-            shutil.rmtree(old)
+        return obs.get["n"]
 
-    def log_round(self, **metrics) -> None:
-        metrics.setdefault("snapshot_id", self._version)
-        metrics.setdefault("wall_ts", int(time.time() * 1000))
-        super().log_round(**metrics)
-        with open(os.path.join(self.path, "rounds.jsonl"), "a") as fh:
-            fh.write(json.dumps(metrics) + "\n")
+    def _commit(self, rounds: list[dict]) -> None:
+        """Commit the current snapshot: its marker holding `rounds`, via
+        a temp file and `os.replace`, so no crash leaves a torn marker."""
+        marker = os.path.join(self._vdir(self._version), "_SUCCESS")
+        tmp = marker + ".inprogress"
+        with open(tmp, "w") as fh:
+            fh.write(json.dumps(rounds))
+        os.replace(tmp, marker)
+        super()._commit(rounds)
+        # retain last 2 snapshots (resume needs only the latest)
+        old = self._vdir(self._version - 2)
+        if os.path.exists(old):
+            shutil.rmtree(old)
 
     def destroy(self) -> None:
         super().destroy()
